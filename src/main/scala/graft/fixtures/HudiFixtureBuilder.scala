@@ -33,6 +33,13 @@ object HudiFixtureBuilder {
   private val meta = Seq("_hoodie_commit_time", "_hoodie_commit_seqno",
     "_hoodie_record_key", "_hoodie_partition_path", "_hoodie_file_name")
 
+  /** Absolute path of `rel` under the build's `target/` directory,
+    * resolved against the working directory (sbt runs tests and mains
+    * from the checkout root), so each checkout writes its fixtures into
+    * its own tree.
+    */
+  def targetPath(rel: String): String = new java.io.File("target", rel).getAbsolutePath
+
   def root(sfDir: String): String = {
     val abs = new java.io.File(sfDir).getAbsolutePath
     val sf = new java.io.File(sfDir).getName
@@ -42,7 +49,7 @@ object HudiFixtureBuilder {
     // first dir's data while its oracle reads the second's
     val h = java.security.MessageDigest.getInstance("MD5")
       .digest(abs.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
-    s"/root/repo/target/hudi-fixtures/$sf-$h"
+    targetPath(s"hudi-fixtures/$sf-$h")
   }
 
   def cowPath(sfDir: String): String = s"${root(sfDir)}/cow_orders"
@@ -113,7 +120,7 @@ object HudiFixtureBuilder {
     // lock-free); a holder only ever deletes the lock it created (token
     // compare), so a crashed build can't cascade into a waiter deleting
     // a lock a third process just acquired.
-    val lock = new Path("/root/repo/target/hudi-fixtures", s"${new Path(root(sfDir)).getName}.lock")
+    val lock = new Path(targetPath("hudi-fixtures"), s"${new Path(root(sfDir)).getName}.lock")
     fs.mkdirs(lock.getParent)
     val token = java.util.UUID.randomUUID().toString
     def lockContent(): Option[String] =

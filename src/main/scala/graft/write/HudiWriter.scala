@@ -36,19 +36,24 @@ import org.apache.spark.sql.types.StringType
   * fileId/path/partitionPath/prevCommit/numWrites/numUpdateWrites/
   * fileSizeInBytes and `extraMetadata.schema` (the writer's data schema).
   *
-  * Scale shape: ONE shuffle per commit — rows route to their target file
-  * group (hash-bucketed for fresh groups, the matched group for upserts)
-  * and each (partition, fileGroup) writes exactly one parquet file from
-  * one task via `partitionBy` staging; the driver then RENAMES files into
-  * Hudi names and writes metadata, O(#files) namenode ops (the standard
-  * committer cost, never data movement). The upsert index probe is a
-  * key-column join against the current snapshot pruned to
-  * (key, partition, file name) — column-pruned scan, shuffle bounded by
-  * table keys + batch keys. At 100 TB the MDT record-level index would
-  * replace that probe (the read side already consumes it; wiring it into
-  * the writer is surfacing, not capability). The touched-fileId collect
-  * is bounded by DISTINCT matched file groups — table file count, never
-  * key count (the same bound AggMaintenance documents).
+  * Scale shape: ONE shuffle per staged commit — rows route to their
+  * target file group (hash-bucketed for fresh groups, the matched group
+  * for COW upserts) and each (partition, fileGroup) writes exactly one
+  * parquet file from one task via `partitionBy` staging; the driver then
+  * RENAMES files into Hudi names and writes metadata, O(#files) namenode
+  * ops (the standard committer cost, never data movement). MOR upserts
+  * and deletes append log blocks instead: updates onto the matched
+  * group, new keys onto the partition's SMALL groups (latest slice below
+  * `hoodie.parquet.max.file.size`; capacity = remaining bytes / the
+  * latest commit's bytes per record) by key hash weighted by remaining
+  * capacity. Only overflow past capacity stages fresh base files, and a
+  * commit whose driver-side insert count leaves nothing to stage skips
+  * the staging job entirely. The upsert probe is the MDT record index
+  * where the table advertises one, else a key-column join against the
+  * current snapshot pruned to (key, partition, file name) — column-pruned
+  * scan, shuffle bounded by table keys + batch keys. Driver collects are
+  * bounded by file groups or partitions — table file count, never key
+  * count (the same bound AggMaintenance documents).
   *
   * Incoming rows are deduplicated per (key, partition) by the precombine
   * field (greatest wins; ties and no-precombine keep one row
@@ -220,11 +225,12 @@ object HudiWriter {
     }
 
     // MOR targets take every data write as a DELTACOMMIT (real Hudi's
-    // convention): inserts still produce parquet base files (new file
-    // groups), while upsert/delete land as avro-data/delete LOG blocks on
-    // the matched group's latest slice — compaction stays a separate,
-    // unimplemented table service, exactly like a real Hudi deltastreamer
-    // between compactions
+    // convention): insert/bulk_insert still produce parquet base files
+    // (new file groups), while upsert/delete land as avro-data/delete LOG
+    // blocks on the matched group's latest slice (an upsert's new keys on
+    // a small group's) — compaction stays a separate table service
+    // (HudiCompaction), exactly like a real Hudi deltastreamer between
+    // compactions
     val isMor = existing.map(_.config.isMor)
       .getOrElse(opts.tableType.equalsIgnoreCase("MERGE_ON_READ"))
 
@@ -370,17 +376,17 @@ object HudiWriter {
       val routed = operation match {
         case "insert" | "bulk_insert" =>
           val staged = routeFresh(keyed, instant, opts)
-          Routed(staged, newKeys = Some(staged))
+          Routed(Some(staged), newKeys = Some(staged))
         case "insert_overwrite_table" =>
           val rep = existing.map(_.fsView.slicesAsOf(instant)
             .groupBy(_.partitionPath).view.mapValues(_.map(_.fileId).toSet).toMap)
             .getOrElse(Map.empty[String, Set[String]])
-          Routed(routeFresh(keyed, instant, opts), replaced = rep)
+          Routed(Some(routeFresh(keyed, instant, opts)), replaced = rep)
         case "upsert" =>
           existing match {
             case None =>
               val staged = routeFresh(keyed, instant, opts)
-              Routed(staged, newKeys = Some(staged))
+              Routed(Some(staged), newKeys = Some(staged))
             case Some(t) if t.config.isMor =>
               routeMorUpsert(spark, basePath, t, keyed, instant, opts)
             case Some(t) => routeUpsert(spark, basePath, t, keyed, instant, opts, cdcMode)
@@ -407,10 +413,15 @@ object HudiWriter {
       // view lists lazily) — "was this partition new to this commit?"
       val priorPartitions: Set[String] =
         if (maintainsPartStats) existing.get.fsView.partitionPaths.toSet else Set.empty
-      val (files, fileStats) = writeStagedWithStats(spark, fs, base, routed.staged,
-        instant, routed.requiredGroups,
-        if (maintainsColStats || maintainsPartStats) statColumnsOf(routed.staged.schema)
-        else Nil)
+      // routing already knows when nothing is left to stage (a MOR delete,
+      // an upsert whose inserts all went to logs, a delete matching no
+      // key): skip the staging job and its .temp listing outright
+      val (files, fileStats) = routed.staged match {
+        case None => (Nil, Map.empty[(String, String), Seq[(String, Any, Any, Long)]])
+        case Some(staged) =>
+          writeStagedWithStats(spark, fs, base, staged, instant, routed.requiredGroups,
+            if (maintainsColStats || maintainsPartStats) statColumnsOf(staged.schema) else Nil)
+      }
       // the commit's recorded schema is the TABLE's data schema — a
       // keys-only delete input must not shrink it (readers resolve the
       // table schema commit-metadata-first)
@@ -440,35 +451,40 @@ object HudiWriter {
           routed.newKeys, routed.deletedKeys, timelineTz)
       // column_stats maintenance: exact per-(file, column) bounds from
       // the staging pass, appended before the data commit
-      lazy val statEntries = colStatsEntries(files, fileStats, routed.staged.schema)
+      lazy val statEntries = routed.staged
+        .map(s => colStatsEntries(files, fileStats, s.schema)).getOrElse(Nil)
       if (maintainsColStats && fileStats.nonEmpty)
         ColumnStatsMaintenance.append(basePath, spark.sessionState.newHadoopConf(),
           instant, statEntries)
-      // partition_stats maintenance: partition-level bounds UNIONED with
-      // the existing entry (the record must stay a superset of the
-      // truth). A pre-existing partition with NO entry stays uncovered
-      // (fail-open at the pruner) rather than getting a bound that
-      // excludes its old files; brand-new partitions get fresh bounds
-      if (maintainsPartStats && fileStats.nonEmpty) {
+      // partition_stats maintenance: partition-level bounds of every row
+      // this commit made visible — staged base files AND MOR log appends
+      // (a log update can move a value past its partition's bound) —
+      // UNIONED with the existing entry (the record must stay a superset
+      // of the truth). A pre-existing partition with NO entry stays
+      // uncovered (fail-open at the pruner) rather than getting a bound
+      // that excludes its old files; brand-new partitions get fresh bounds
+      lazy val newBounds = statEntries.map(e => (e.partition, e.column, e.wrapper, e.min, e.max)) ++
+        routed.logRows.toSeq.flatMap(partitionBounds)
+      if (maintainsPartStats && newBounds.nonEmpty) {
         val conf = spark.sessionState.newHadoopConf()
         val existingBounds = graft.table.PartitionStatsIndex.load(basePath, conf)
         def lo(a: Any, b: Any) =
           if (a.asInstanceOf[Comparable[Any]].compareTo(b) <= 0) a else b
         def hi(a: Any, b: Any) =
           if (a.asInstanceOf[Comparable[Any]].compareTo(b) >= 0) a else b
-        val merged = statEntries.groupBy(e => (e.partition, e.column)).toSeq
+        val merged = newBounds.groupBy(e => (e._1, e._2)).toSeq
           .sortBy(_._1).flatMap { case ((p, c), es) =>
-            val newMn = es.map(_.min).reduce(lo)
-            val newMx = es.map(_.max).reduce(hi)
+            val newMn = es.map(_._4).reduce(lo)
+            val newMx = es.map(_._5).reduce(hi)
             existingBounds.get(p).flatMap(_.get(c)) match {
               case Some((omn, omx)) if omn.getClass == newMn.getClass =>
-                Some((p, c, es.head.wrapper, lo(omn, newMn), hi(omx, newMx)))
+                Some((p, c, es.head._3, lo(omn, newMn), hi(omx, newMx)))
               case Some(_) =>
                 throw new UnsupportedOperationException(
                   s"hudi-graft: partition_stats entry for ($p, $c) carries a different " +
                     "value type than this write — merging would corrupt the bound")
               case None if !priorPartitions.contains(p) =>
-                Some((p, c, es.head.wrapper, newMn, newMx))
+                Some((p, c, es.head._3, newMn, newMx))
               case None => None
             }
           }
@@ -548,7 +564,8 @@ object HudiWriter {
     * slice would stay visible and the deleted rows resurrect).
     */
   private final case class Routed(
-      staged: DataFrame,
+      // None = nothing to stage as base files (the staging job is skipped)
+      staged: Option[DataFrame],
       updateCounts: Map[String, Long] = Map.empty,
       deleteCounts: Map[String, Long] = Map.empty,
       replaced: Map[String, Set[String]] = Map.empty,
@@ -556,8 +573,11 @@ object HudiWriter {
       cdcFiles: Map[String, (String, Long)] = Map.empty,
       requiredGroups: Map[String, String] = Map.empty,
       logWrites: Seq[LogWrite] = Nil,
+      // the rows the MOR upsert appended as log data (partition_stats
+      // maintenance widens bounds from them)
+      logRows: Option[DataFrame] = None,
       // record-index maintenance inputs: locations of keys this commit
-      // CREATED (fresh routing output) and keys it REMOVED
+      // CREATED (fresh groups or log-routed inserts) and keys it REMOVED
       newKeys: Option[DataFrame] = None,
       deletedKeys: Option[DataFrame] = None,
       // persisted frames the MAINTENANCE passes still consume — routing
@@ -566,14 +586,16 @@ object HudiWriter {
       retained: Seq[DataFrame] = Nil)
 
   /** One MOR log file this commit appended: becomes a write-stats entry
-    * (numUpdateWrites or numDeletes = rows) alongside the base files.
+    * (numInserts = `inserts`, numUpdateWrites = the rest of `rows`, or
+    * numDeletes = rows) alongside the base files.
     */
   private[write] final case class LogWrite(
       partition: String,
       fileId: String,
       relPath: String,
       rows: Long,
-      bytes: Long)
+      bytes: Long,
+      inserts: Long)
 
   /** Fresh-group routing: hash-bucket keys into N new file groups per
     * partition, N from the PLANNED input size (Catalyst's estimate — no
@@ -689,28 +711,48 @@ object HudiWriter {
       files: Seq[(String, String, String, Long, Long)],
       fileStats: Map[(String, String), Seq[(String, Any, Any, Long)]],
       stagedSchema: org.apache.spark.sql.types.StructType)
-      : Seq[ColumnStatsMaintenance.FileColStats] = {
-    import org.apache.spark.sql.types._
-    def dateDays(v: Any): Any = v match {
-      case d: java.sql.Date => Int.box(d.toLocalDate.toEpochDay.toInt)
-      case ld: java.time.LocalDate => Int.box(ld.toEpochDay.toInt)
-      case other => other
-    }
+      : Seq[ColumnStatsMaintenance.FileColStats] =
     for {
       (p, fid, rel, rows, _) <- files
       stats <- fileStats.get((p, fid)).toSeq
       (colName, mn, mx, nc) <- stats
       if mn != null && mx != null
-    } yield {
-      val wrapper = stagedSchema(colName).dataType match {
-        case LongType => "LongWrapper"
-        case DateType => "DateWrapper"
-        case StringType => "StringWrapper"
-        case other => throw new IllegalStateException(s"unexpected stat type $other")
+    } yield ColumnStatsMaintenance.FileColStats(p, rel.substring(rel.lastIndexOf('/') + 1),
+      colName, statWrapper(stagedSchema(colName).dataType), statValue(mn), statValue(mx),
+      rows, nc)
+
+  /** Per-(partition, column) (wrapper, min, max) of `rows` — the
+    * partition_stats input for rows that reach no staged base file (MOR
+    * log appends). One aggregation over the persisted routing frame.
+    */
+  private def partitionBounds(rows: DataFrame): Seq[(String, String, String, Any, Any)] = {
+    val cols = statColumnsOf(rows.schema)
+    if (cols.isEmpty) return Nil
+    val aggs = cols.flatMap(f => Seq(min(col(f.name)), max(col(f.name))))
+    rows.groupBy("__part").agg(aggs.head, aggs.tail: _*).collect().toSeq.flatMap { r =>
+      cols.zipWithIndex.collect {
+        case (f, i) if !r.isNullAt(1 + 2 * i) =>
+          (r.getString(0), f.name, statWrapper(f.dataType),
+            statValue(r.get(1 + 2 * i)), statValue(r.get(2 + 2 * i)))
       }
-      ColumnStatsMaintenance.FileColStats(p, rel.substring(rel.lastIndexOf('/') + 1),
-        colName, wrapper, dateDays(mn), dateDays(mx), rows, nc)
     }
+  }
+
+  private def statWrapper(dt: org.apache.spark.sql.types.DataType): String = {
+    import org.apache.spark.sql.types._
+    dt match {
+      case LongType => "LongWrapper"
+      case DateType => "DateWrapper"
+      case StringType => "StringWrapper"
+      case other => throw new IllegalStateException(s"unexpected stat type $other")
+    }
+  }
+
+  /** Stats values as the MDT records them: dates as epoch days. */
+  private def statValue(v: Any): Any = v match {
+    case d: java.sql.Date => Int.box(d.toLocalDate.toEpochDay.toInt)
+    case ld: java.time.LocalDate => Int.box(ld.toEpochDay.toInt)
+    case other => other
   }
 
   /** Supported type widenings on write (the pairs the read side upcasts
@@ -792,7 +834,7 @@ object HudiWriter {
       val freshPart = routeFresh(routed.filter(col("__fid").isNull).drop("__fid"),
         instant, opts)
       if (touched.isEmpty)
-        return Routed(freshPart, newKeys = Some(freshPart), retained = Seq(routed))
+        return Routed(Some(freshPart), newKeys = Some(freshPart), retained = Seq(routed))
 
       // prevCommit per rewritten group = the base instant of the slice
       // being rewritten (the metadata CDC's savepoint guard verifies)
@@ -830,7 +872,7 @@ object HudiWriter {
         case Some(m) => writeCdcSidecars(spark, basePath, stored, matched, dataCols,
           instant, t.config.timelineTimezone, deletes = false, mode = m)
       }
-      Routed(carried.unionByName(updated).unionByName(fresh),
+      Routed(Some(carried.unionByName(updated).unionByName(fresh)),
         updateCounts = perFid, prevCommits = prevCommits, cdcFiles = sidecars,
         newKeys = Some(freshPart), retained = Seq(routed))
     }
@@ -852,7 +894,6 @@ object HudiWriter {
       instant: String,
       cdcMode: Option[String]
   ): Routed = {
-    val snap = spark.read.format("hudi-graft").load(basePath)
     val (index, global) = probeLocations(spark, basePath, t, keyed)
     val matched = (if (global)
       keyed.select("__key").distinct().join(index, Seq("__key"), "inner")
@@ -862,10 +903,8 @@ object HudiWriter {
       val perFid = matched.groupBy("__fid").count().collect()
         .map(r => r.getString(0) -> r.getLong(1)).toMap
       val touched = perFid.keySet
-      val dataColsAll = snap.columns.filterNot(MetaField.all.contains)
-      if (touched.isEmpty)
-        return Routed(LogScanEmpty.staged(spark, snap, dataColsAll),
-          retained = Seq(matched))
+      if (touched.isEmpty) return Routed(None, retained = Seq(matched))
+      val dataColsAll = t.tableSchema.fieldNames.filterNot(MetaField.all.contains)
       val slices = t.fsView.slicesAsOf(instant).filter(sl => touched.contains(sl.fileId))
       val prevCommits = slices.map(sl => sl.fileId -> sl.commitTimestamp).toMap
       val required = slices.map(sl => sl.fileId -> sl.partitionPath).toMap
@@ -884,7 +923,7 @@ object HudiWriter {
         case Some(m) => writeCdcSidecars(spark, basePath, stored, matched, dataColsAll,
           instant, t.config.timelineTimezone, deletes = true, mode = m)
       }
-      Routed(survivors, deleteCounts = perFid, prevCommits = prevCommits,
+      Routed(Some(survivors), deleteCounts = perFid, prevCommits = prevCommits,
         cdcFiles = sidecars, requiredGroups = required,
         deletedKeys = Some(matched.select("__key")), retained = Seq(matched))
     }
@@ -893,15 +932,24 @@ object HudiWriter {
   /** MOR upsert routing (deltacommit): matched keys append as ONE avro
     * data block per touched file group onto the group's latest slice —
     * full meta-prefixed rows stamped with the new instant, so the MOR
-    * merge's overwrite-with-latest picks them over the base rows —
-    * while unmatched keys route to fresh parquet base-file groups
-    * (upstream writes MOR inserts as base files too). Log naming follows
-    * the read side's association rule: v6 names carry the target slice's
-    * BASE instant, v8+ the delta's own instant (completion from the
-    * timeline). Scale shape: the probe is the same column-pruned key
-    * join as COW, the log emission repartitions change rows by file
-    * group (each task buffers at most its groups' change volume), and
-    * the driver collects only (fileId → path, bytes) for write stats.
+    * merge's overwrite-with-latest picks them over the base rows.
+    * Unmatched keys (inserts) go to SMALL existing groups first —
+    * upstream's small-file handling for an index that finds records in
+    * log files: one job counts them per partition, [[smallFileTargets]]
+    * spreads each partition's count over its groups whose latest slice
+    * is below `hoodie.parquet.max.file.size` by remaining capacity, and
+    * the routed inserts ride the SAME log pass as the updates (the
+    * reader merges log-only keys; the record index gets their (partition,
+    * group) entries). Only overflow past capacity, and partitions with no
+    * small group, route to fresh parquet base-file groups; when the count
+    * shows no overflow the commit stages no base file at all. Log naming
+    * follows the read side's association rule: v6 names carry the target
+    * slice's BASE instant, v8+ the delta's own instant (completion from
+    * the timeline). Scale shape: the probe is the same column-pruned key
+    * join as COW, the insert count collects one row per partition, the
+    * log emission repartitions change rows by file group (each task
+    * buffers at most its groups' change volume), and the driver collects
+    * only (fileId → path, rows, bytes) for write stats.
     */
   private def routeMorUpsert(
       spark: SparkSession,
@@ -913,22 +961,84 @@ object HudiWriter {
   ): Routed = {
     val (index, global) = probeLocations(spark, basePath, t, keyed)
     val routed = joinLocations(keyed, index, global).persist()
-    locally {
-      val matched = routed.filter(col("__fid").isNotNull)
-      val fresh = routeFresh(routed.filter(col("__fid").isNull).drop("__fid"), instant, opts)
-      val dataCols = keyed.columns.filterNot(Set("__key", "__part").contains)
-      val logs = writeMorLogs(spark, basePath, t, matched, dataCols, instant, deletes = false)
-      if (logs.isEmpty)
-        return Routed(fresh, newKeys = Some(fresh), retained = Seq(routed))
-      val touched = logs.map(_.fileId).toSet
-      val prevCommits = t.fsView.slicesAsOf(instant)
-        .filter(sl => touched.contains(sl.fileId))
-        .map(sl => sl.fileId -> sl.commitTimestamp).toMap
-      Routed(fresh,
-        updateCounts = logs.map(l => l.fileId -> l.rows).toMap,
-        prevCommits = prevCommits, logWrites = logs, newKeys = Some(fresh),
-        retained = Seq(routed))
+    val unmatched = routed.filter(col("__fid").isNull)
+    // one job (a DataFrame groupBy would cost a second, AQE's stage job)
+    val inserts = unmatched.select("__part").rdd.map(_.getString(0)).countByValue().toMap
+    val targets = smallFileTargets(t.fsView.slicesAsOf(instant), inserts,
+      opts.maxFileBytes, averageBytesPerRecord(t))
+    val pick = udf { (part: String, hash: Long) =>
+      targets.get(part).flatMap { case (n, buckets) =>
+        val slot = Math.floorMod(hash, n)
+        buckets.find(_._1 > slot).flatMap(_._2)
+      }.orNull
     }
+    val assigned = unmatched.withColumn("__fid", pick(col("__part"), xxhash64(col("__key"))))
+    val logInserts = assigned.filter(col("__fid").isNotNull)
+    val logRows = routed.filter(col("__fid").isNotNull).withColumn("__ins", lit(false))
+      .unionByName(logInserts.withColumn("__ins", lit(true)))
+    val dataCols = keyed.columns.filterNot(Set("__key", "__part").contains)
+    val logs = writeMorLogs(spark, basePath, t, logRows, dataCols, instant, deletes = false)
+    val overflows = targets.valuesIterator.exists(_._2.exists(_._2.isEmpty))
+    val fresh =
+      if (!overflows) None
+      else Some(routeFresh(assigned.filter(col("__fid").isNull).drop("__fid"), instant, opts))
+    val created = (fresh.toSeq :+ logInserts)
+      .map(_.select("__key", "__part", "__fid")).reduce(_ unionByName _)
+    val touched = logs.map(_.fileId).toSet
+    val prevCommits = t.fsView.slicesAsOf(instant)
+      .filter(sl => touched.contains(sl.fileId))
+      .map(sl => sl.fileId -> sl.commitTimestamp).toMap
+    Routed(fresh,
+      updateCounts = logs.map(l => l.fileId -> (l.rows - l.inserts)).toMap,
+      prevCommits = prevCommits, logWrites = logs,
+      logRows = if (logs.isEmpty) None else Some(logRows),
+      newKeys = Some(created),
+      retained = Seq(routed))
+  }
+
+  /** Small-file insert plan per partition: `inserts` (partition → count
+    * of unmatched keys) over the partition's latest slices whose
+    * `totalSize` is below `maxFileBytes`. A group's capacity is
+    * (maxFileBytes − totalSize) / bytesPerRecord records; a partition's
+    * inserts spread over its small groups in proportion to remaining
+    * capacity, and only the part past total capacity overflows. Returns
+    * partition → (count, ascending exclusive upper bounds over
+    * [0, count) with their target: Some(fileId), or None = overflow to
+    * fresh groups). A key goes to the first bucket above
+    * floorMod(hash(key), count) — upstream's weighted insert buckets.
+    */
+  private[write] def smallFileTargets(
+      slices: Seq[graft.fs.FileSlice],
+      inserts: Map[String, Long],
+      maxFileBytes: Long,
+      bytesPerRecord: Long): Map[String, (Long, Vector[(Double, Option[String])])] = {
+    val byPart = slices.groupBy(_.partitionPath)
+    inserts.map { case (part, n) =>
+      val caps = byPart.getOrElse(part, Nil).sortBy(_.fileId)
+        .map(sl => sl.fileId -> (maxFileBytes - sl.totalSize) / bytesPerRecord)
+        .filter(_._2 > 0)
+      val capacity = caps.map(_._2).sum
+      // cumulative capacities, scaled down to `n` when the groups hold more
+      val scale = if (capacity > n) n.toDouble / capacity else 1.0
+      val buckets = caps.map(_._1).zip(caps.scanLeft(0L)(_ + _._2).tail)
+        .map { case (fid, upTo) => (upTo * scale, Option(fid)) }.toVector
+      part -> (n, if (capacity < n) buckets :+ (n.toDouble -> None) else buckets)
+    }
+  }
+
+  /** Bytes per record of the latest commit whose write stats record
+    * any (upstream's insert-sizing estimate); 1024 when none does.
+    */
+  private[write] def averageBytesPerRecord(t: HudiTable): Long = {
+    import scala.jdk.CollectionConverters._
+    t.timeline.completedInstants.reverseIterator.map { i =>
+      val stats = t.timeline.commitMetadata(i).path("partitionToWriteStats")
+      val ws = if (stats.isObject) stats.elements().asScala.flatMap(_.elements().asScala).toSeq
+        else Nil
+      (ws.map(_.path("fileSizeInBytes").asLong(0L)).sum,
+        ws.map(_.path("numWrites").asLong(0L)).sum)
+    }.collectFirst { case (bytes, rows) if bytes > 0 && rows > 0 => (bytes / rows).max(1L) }
+      .getOrElse(1024L)
   }
 
   /** MOR delete routing (deltacommit): matched keys append as ONE delete
@@ -944,39 +1054,38 @@ object HudiWriter {
       keyed: DataFrame,
       instant: String
   ): Routed = {
-    val snap = spark.read.format("hudi-graft").load(basePath)
     val (index, global) = probeLocations(spark, basePath, t, keyed)
     val matched = (if (global)
       keyed.select("__key").distinct().join(index, Seq("__key"), "inner")
     else keyed.select("__key", "__part")
       .join(index, Seq("__key", "__part"), "inner")).persist()
-    val dataColsAll = snap.columns.filterNot(MetaField.all.contains)
-    val logs = writeMorLogs(spark, basePath, t, matched, dataColsAll, instant, deletes = true)
-    val empty = LogScanEmpty.staged(spark, snap, dataColsAll)
-    if (logs.isEmpty) return Routed(empty, retained = Seq(matched))
+    // delete blocks carry keys only — no data columns
+    val logs = writeMorLogs(spark, basePath, t, matched, Array.empty, instant, deletes = true)
+    if (logs.isEmpty) return Routed(None, retained = Seq(matched))
     val touched = logs.map(_.fileId).toSet
     val prevCommits = t.fsView.slicesAsOf(instant)
       .filter(sl => touched.contains(sl.fileId))
       .map(sl => sl.fileId -> sl.commitTimestamp).toMap
-    Routed(empty,
+    Routed(None,
       deleteCounts = logs.map(l => l.fileId -> l.rows).toMap,
       prevCommits = prevCommits, logWrites = logs,
       deletedKeys = Some(matched.select("__key")), retained = Seq(matched))
   }
 
-  /** Distributed MOR log emission: `rows` (carrying __key/__part/__fid)
-    * repartition by file group; each task writes one log file per group
-    * it holds — an avro data block of full meta-prefixed records
-    * (upserts) or a delete block of (key, partition, null) triples — and
-    * the driver collects only per-file stats. The per-group name/version
-    * map is driver-computed from the fs view (bounded by table file
-    * count) and broadcast.
+  /** Distributed MOR log emission: `rows` (carrying __key/__part/__fid,
+    * and for upserts `__ins` marking routed inserts) repartition by file
+    * group; each task writes one log file per group it holds — an avro
+    * data block of full meta-prefixed records (upserts) or a delete
+    * block of (key, partition, null) triples — and the driver collects
+    * only per-file stats. The per-group name/version map is
+    * driver-computed from the fs view (bounded by table file count) and
+    * broadcast.
     */
   private def writeMorLogs(
       spark: SparkSession,
       basePath: String,
       t: HudiTable,
-      matched: DataFrame,
+      rows: DataFrame,
       dataCols: Array[String],
       instant: String,
       deletes: Boolean): Seq[LogWrite] = {
@@ -993,8 +1102,9 @@ object HudiWriter {
     val conf = new graft.util.SerializableConf(spark.sessionState.newHadoopConf())
     val bcNaming = spark.sparkContext.broadcast(naming)
 
-    val entries: Array[(String, String, Long, Long)] = if (deletes) {
-      matched.select(col("__fid"), col("__part"), col("__key"))
+    // (fid, rel path, rows, bytes, inserts) per written log file
+    val entries: Array[(String, String, Long, Long, Long)] = if (deletes) {
+      rows.select(col("__fid"), col("__part"), col("__key"))
         .repartition(col("__fid")).rdd.mapPartitions { it =>
           val byFid = it.toVector.groupBy(_.getString(0))
           byFid.iterator.map { case (fid, rs) =>
@@ -1018,13 +1128,13 @@ object HudiWriter {
             try graft.log.LogFileWriter.deleteBlock(out, instant, header, triples)
             finally out.close()
             val rel = if (part.isEmpty) name else s"$part/$name"
-            (fid, rel, rs.size.toLong, fs.getFileStatus(new Path(dir, name)).getLen)
+            (fid, rel, rs.size.toLong, fs.getFileStatus(new Path(dir, name)).getLen, 0L)
           }
         }.collect()
     } else {
       // full meta-prefixed record rows, stamped with the NEW instant so
       // the MOR merge's (ordering, commit-time) comparison picks them
-      val metaRows = matched.select(
+      val metaRows = rows.select(
         col("__fid"),
         col("__part"),
         struct(
@@ -1034,7 +1144,8 @@ object HudiWriter {
             col("__key").as(MetaField.RecordKey) +:
             col("__part").as(MetaField.PartitionPath) +:
             lit("").as(MetaField.FileName) +:
-            dataCols.map(col).toIndexedSeq: _*).as("__row"))
+            dataCols.map(col).toIndexedSeq: _*).as("__row"),
+        col("__ins"))
       val rowStruct = metaRows.schema("__row").dataType
         .asInstanceOf[org.apache.spark.sql.types.StructType]
       // fail on the DRIVER with a clear message — the avro log-block
@@ -1073,27 +1184,14 @@ object HudiWriter {
           try graft.log.LogFileWriter.avroDataBlock(out, instant, avro, recs)
           finally out.close()
           val rel = if (part.isEmpty) name else s"$part/$name"
-          (fid, rel, rs.size.toLong, fs.getFileStatus(new Path(dir, name)).getLen)
+          (fid, rel, rs.size.toLong, fs.getFileStatus(new Path(dir, name)).getLen,
+            rs.count(_.getBoolean(3)).toLong)
         }
       }.collect()
     }
-    entries.toSeq.sortBy(_._1).map { case (fid, rel, rows, bytes) =>
+    entries.toSeq.sortBy(_._1).map { case (fid, rel, n, bytes, inserts) =>
       val (part, _, _) = naming(fid)
-      LogWrite(part, fid, rel, rows, bytes)
-    }
-  }
-
-  /** Zero-row staged frame with the routing columns (delete of only
-    * unmatched keys = an empty commit).
-    */
-  private object LogScanEmpty {
-    def staged(spark: SparkSession, snap: DataFrame, dataCols: Array[String]): DataFrame = {
-      import org.apache.spark.sql.types._
-      val schema = StructType(
-        dataCols.map(c => snap.schema(c)) ++ Seq(
-          StructField("__key", StringType), StructField("__part", StringType),
-          StructField("__fid", StringType), StructField(MetaField.CommitTime, StringType)))
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+      LogWrite(part, fid, rel, n, bytes, inserts)
     }
   }
 
@@ -1410,7 +1508,7 @@ object HudiWriter {
       (lw.partition, lw.fileId,
         s"""{"fileId":"${lw.fileId}","path":"${escape(lw.relPath)}","partitionPath":"${escape(lw.partition)}",""" +
           s""""prevCommit":"$prev","numWrites":${lw.rows},"numUpdateWrites":$upd,""" +
-          s""""numInserts":0,"numDeletes":$del,"fileSizeInBytes":${lw.bytes},""" +
+          s""""numInserts":${lw.inserts},"numDeletes":$del,"fileSizeInBytes":${lw.bytes},""" +
           s""""totalWriteBytes":${lw.bytes}}""")
     }
     val stats = (baseEntries ++ logEntries).groupBy(_._1).toSeq.sortBy(_._1).map {

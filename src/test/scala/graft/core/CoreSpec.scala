@@ -158,7 +158,7 @@ class CoreSpec extends AnyFunSuite {
   }
 
   test("archived instants load from the archive folder, double-gated (timeline/mod.rs:100-135)") {
-    val base = "/root/repo/target/fixtures/archived_v6"
+    val base = graft.fixtures.HudiFixtureBuilder.targetPath("fixtures/archived_v6")
     val props =
       """hoodie.table.name=a
         |hoodie.table.type=COPY_ON_WRITE
@@ -177,7 +177,7 @@ class CoreSpec extends AnyFunSuite {
   }
 
   test("archived read disabled by default (gate 2, config/internal.rs:84)") {
-    val base = "/root/repo/target/fixtures/archived_v6_off"
+    val base = graft.fixtures.HudiFixtureBuilder.targetPath("fixtures/archived_v6_off")
     val props =
       """hoodie.table.name=a
         |hoodie.table.type=COPY_ON_WRITE
@@ -189,7 +189,7 @@ class CoreSpec extends AnyFunSuite {
   }
 
   test("LSM history manifest reads _version_ then manifest_<v> (lsm_tree.rs:93-109)") {
-    val base = "/root/repo/target/fixtures/lsm_manifest"
+    val base = graft.fixtures.HudiFixtureBuilder.targetPath("fixtures/lsm_manifest")
     val props =
       """hoodie.table.name=a
         |hoodie.table.type=COPY_ON_WRITE
@@ -236,7 +236,7 @@ class CoreSpec extends AnyFunSuite {
   }
 
   test("v8 LSM archived instants load from manifest data files (beyond loader.rs:256)") {
-    val base = "/root/repo/target/fixtures/lsm_data"
+    val base = graft.fixtures.HudiFixtureBuilder.targetPath("fixtures/lsm_data")
     val props =
       """hoodie.table.name=a
         |hoodie.table.type=COPY_ON_WRITE
@@ -282,7 +282,7 @@ class CoreSpec extends AnyFunSuite {
     // pre-memoization `completedInstants.find(...)` behavior — not the
     // last entry a plain .toMap would keep
     import org.apache.hadoop.fs.{FileSystem, Path}
-    val base = "/root/repo/target/fixtures/dup_request_ts"
+    val base = graft.fixtures.HudiFixtureBuilder.targetPath("fixtures/dup_request_ts")
     val fs = FileSystem.get(conf)
     val b = new Path(base)
     fs.delete(b, true)

@@ -15,7 +15,7 @@ class FsViewSpec extends AnyFunSuite {
   private val conf = new Configuration()
 
   test("parallel walk discovers a two-level partition tree deterministically") {
-    val base = new Path("/root/repo/target/fixtures/fsview_parallel")
+    val base = new Path(graft.fixtures.HudiFixtureBuilder.targetPath("fixtures/fsview_parallel"))
     val fs = FileSystem.get(conf)
     fs.delete(base, true)
     fs.mkdirs(new Path(base, ".hoodie"))

@@ -46,7 +46,8 @@ class PlanningStress100kSpec extends SparkTestBase {
     f"00000000-0000-0000-${n / FilesPerPartition}%04d-${n % FilesPerPartition}%012d-0_0-0-0_$T1.parquet"
 
   private def buildOnce(): String = {
-    val base = new Path("/root/repo/target/hudi-fixtures/stress_plan_100k")
+    val base = new Path(
+      graft.fixtures.HudiFixtureBuilder.targetPath("hudi-fixtures/stress_plan_100k"))
     val fs = FileSystem.get(spark.sessionState.newHadoopConf())
     val marker = new Path(base, "_READY_v1")
     if (fs.exists(marker)) return base.toString
@@ -155,7 +156,8 @@ class PlanningStress100kSpec extends SparkTestBase {
 
   private def buildMdtVariantOnce(): String = {
     val primary = buildOnce()
-    val base = new Path("/root/repo/target/hudi-fixtures/stress_plan_100k_mdt")
+    val base = new Path(
+      graft.fixtures.HudiFixtureBuilder.targetPath("hudi-fixtures/stress_plan_100k_mdt"))
     val fs = FileSystem.get(spark.sessionState.newHadoopConf())
     val marker = new Path(base, "_READY_v1")
     if (fs.exists(marker)) return base.toString

@@ -21,7 +21,7 @@ class PlanningStressSpec extends SparkTestBase {
   private lazy val path: String = buildOnce()
 
   private def buildOnce(): String = {
-    val base = new Path("/root/repo/target/hudi-fixtures/stress_plan")
+    val base = new Path(graft.fixtures.HudiFixtureBuilder.targetPath("hudi-fixtures/stress_plan"))
     val fs = FileSystem.get(spark.sessionState.newHadoopConf())
     val marker = new Path(base, "_READY_v1")
     if (fs.exists(marker)) return base.toString

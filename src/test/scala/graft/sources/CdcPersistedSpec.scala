@@ -96,7 +96,8 @@ class CdcPersistedSpec extends SparkTestBase {
     // hand-built: T1 creates f0; T2 rewrites f0 (sidecar, prevCommit=T1)
     // AND creates fresh f1 with NO sidecar — the add-base-file case. The
     // feed must join nothing: f0 from blocks, f1 one-sided as 'i'.
-    val dir = new org.apache.hadoop.fs.Path("/root/repo/target/hudi-fixtures/cdc_mixed")
+    val dir = new org.apache.hadoop.fs.Path(
+      graft.fixtures.HudiFixtureBuilder.targetPath("hudi-fixtures/cdc_mixed"))
     val fs = org.apache.hadoop.fs.FileSystem.get(spark.sessionState.newHadoopConf())
     fs.delete(dir, true)
     fs.mkdirs(new org.apache.hadoop.fs.Path(dir, ".hoodie"))

@@ -23,7 +23,8 @@ class CdcReadSpec extends SparkTestBase {
     */
   private def freshMetaTable(name: String): (org.apache.hadoop.fs.Path,
       org.apache.hadoop.fs.FileSystem, (String, String) => Unit) = {
-    val base = new org.apache.hadoop.fs.Path(s"/root/repo/target/hudi-fixtures/$name")
+    val base = new org.apache.hadoop.fs.Path(
+      graft.fixtures.HudiFixtureBuilder.targetPath(s"hudi-fixtures/$name"))
     val fs = org.apache.hadoop.fs.FileSystem.get(spark.sessionState.newHadoopConf())
     fs.delete(base, true)
     fs.mkdirs(new org.apache.hadoop.fs.Path(base, ".hoodie"))
@@ -714,7 +715,8 @@ class CdcReadSpec extends SparkTestBase {
   }
 
   test("populate.meta.fields=false refuses: the inference keys on meta columns") {
-    val base = new org.apache.hadoop.fs.Path("/root/repo/target/hudi-fixtures/cdc_nometa")
+    val base = new org.apache.hadoop.fs.Path(
+      graft.fixtures.HudiFixtureBuilder.targetPath("hudi-fixtures/cdc_nometa"))
     val fs = org.apache.hadoop.fs.FileSystem.get(spark.sessionState.newHadoopConf())
     fs.delete(base, true)
     fs.mkdirs(new org.apache.hadoop.fs.Path(base, ".hoodie"))

@@ -311,7 +311,7 @@ class DataSourceV2Spec extends SparkTestBase {
   test("dsv2 append-only MOR keeps every log version (no-metafields)") {
     import org.apache.hadoop.fs.{FileSystem, Path}
     import java.io.DataOutputStream
-    val base = new Path("/root/repo/target/fixtures/append_only_mor")
+    val base = new Path(graft.fixtures.HudiFixtureBuilder.targetPath("fixtures/append_only_mor"))
     val fs = FileSystem.get(spark.sessionState.newHadoopConf())
     fs.delete(base, true)
     fs.mkdirs(new Path(base, ".hoodie"))
@@ -1047,7 +1047,7 @@ class DataSourceV2Spec extends SparkTestBase {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.functions.{col, max, min}
     import org.apache.spark.sql.types._
-    val base = new Path("/root/repo/target/fixtures/minmax_dec_ts")
+    val base = new Path(graft.fixtures.HudiFixtureBuilder.targetPath("fixtures/minmax_dec_ts"))
     val fs = FileSystem.get(spark.sessionState.newHadoopConf())
     fs.delete(base, true)
     fs.mkdirs(new Path(base, ".hoodie"))

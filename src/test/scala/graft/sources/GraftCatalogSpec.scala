@@ -331,7 +331,7 @@ class GraftCatalogSpec extends SparkTestBase {
 
   test("show_archived_commits lists the archive folder, ungated") {
     import org.apache.hadoop.fs.{FileSystem, Path}
-    val base = "/root/repo/target/fixtures/proc_archived_v6"
+    val base = graft.fixtures.HudiFixtureBuilder.targetPath("fixtures/proc_archived_v6")
     val fs = FileSystem.get(new org.apache.hadoop.conf.Configuration())
     val b = new Path(base)
     fs.delete(b, true)

@@ -52,7 +52,7 @@ class GraftCdcStreamSpec extends SparkTestBase {
   test("checkpoint replay: a restarted drain emits nothing new") {
     HudiFixtureBuilder.ensure(spark, sfDir)
     val p = HudiFixtureBuilder.morPath(sfDir)
-    val ckpt = s"/root/repo/target/cdc_stream_ckpt_${System.nanoTime()}"
+    val ckpt = graft.fixtures.HudiFixtureBuilder.targetPath(s"cdc_stream_ckpt_${System.nanoTime()}")
     // foreachBatch, not the memory sink: memory refuses checkpoint
     // recovery (not fault-tolerant), and recovery is exactly what this
     // test drives
@@ -196,7 +196,7 @@ class GraftCdcStreamSpec extends SparkTestBase {
     // end-to-end composition: the write path's supplemental logging feeds
     // the streaming CDC source through the persisted reader — no
     // per-commit snapshot-diff joins anywhere in the drain
-    val dir = "/root/repo/target/hudi-fixtures/stream_cdc_persisted"
+    val dir = graft.fixtures.HudiFixtureBuilder.targetPath("hudi-fixtures/stream_cdc_persisted")
     val fs = org.apache.hadoop.fs.FileSystem.get(spark.sessionState.newHadoopConf())
     fs.delete(new org.apache.hadoop.fs.Path(dir), true)
     import org.apache.spark.sql.functions._
@@ -221,7 +221,7 @@ class GraftCdcStreamSpec extends SparkTestBase {
   }
 
   test("a mid-stream schema change refuses descriptively, not as an opaque assert") {
-    val dir = "/root/repo/target/hudi-fixtures/cdc_schema_change"
+    val dir = graft.fixtures.HudiFixtureBuilder.targetPath("hudi-fixtures/cdc_schema_change")
     val fs = org.apache.hadoop.fs.FileSystem.get(spark.sessionState.newHadoopConf())
     fs.delete(new org.apache.hadoop.fs.Path(dir), true)
     import org.apache.spark.sql.functions._

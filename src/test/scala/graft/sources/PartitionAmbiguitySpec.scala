@@ -29,7 +29,7 @@ class PartitionAmbiguitySpec extends SparkTestBase {
     */
   private def buildTable(
       name: String, parts: Seq[(String, Any, Seq[Long])], dropK: Boolean = false): String = {
-    val base = new Path(s"/root/repo/target/hudi-fixtures/$name")
+    val base = new Path(graft.fixtures.HudiFixtureBuilder.targetPath(s"hudi-fixtures/$name"))
     val fs = FileSystem.get(spark.sessionState.newHadoopConf())
     val marker = new Path(base, "_READY_v1")
     if (fs.exists(marker)) return base.toString

@@ -14,7 +14,7 @@ import scala.sys.process._
   */
 object Fixtures {
   private val refData = "/root/reference/crates/test/data"
-  private val outRoot = "/root/repo/target/fixtures"
+  private val outRoot = graft.fixtures.HudiFixtureBuilder.targetPath("fixtures")
 
   /** Unzip (once) and return the table path; None when unavailable. */
   def table(zipRel: String, tableName: String): Option[String] =
@@ -346,7 +346,7 @@ class HudiTableSpec extends SparkTestBase {
   test("mor merge re-injects dropped partition columns into log records") {
     import org.apache.hadoop.fs.{FileSystem, Path}
     import java.io.DataOutputStream
-    val base = new Path("/root/repo/target/fixtures/mor_dropped")
+    val base = new Path(graft.fixtures.HudiFixtureBuilder.targetPath("fixtures/mor_dropped"))
     val fs = FileSystem.get(spark.sessionState.newHadoopConf())
     fs.delete(base, true)
     fs.mkdirs(new Path(base, ".hoodie"))
@@ -415,7 +415,7 @@ class HudiTableSpec extends SparkTestBase {
     import org.apache.hadoop.fs.{FileSystem, Path}
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
-    val base = new Path("/root/repo/target/fixtures/schema_evolved")
+    val base = new Path(graft.fixtures.HudiFixtureBuilder.targetPath("fixtures/schema_evolved"))
     val fs = FileSystem.get(spark.sessionState.newHadoopConf())
     fs.delete(base, true)
     fs.mkdirs(new Path(base, ".hoodie"))
@@ -474,7 +474,8 @@ class HudiTableSpec extends SparkTestBase {
     import org.apache.hadoop.fs.{FileSystem, Path}
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
-    val base = new Path("/root/repo/target/fixtures/keygen_string_epoch")
+    val base = new Path(
+      graft.fixtures.HudiFixtureBuilder.targetPath("fixtures/keygen_string_epoch"))
     val fs = FileSystem.get(spark.sessionState.newHadoopConf())
     fs.delete(base, true)
     fs.mkdirs(new Path(base, ".hoodie"))

@@ -60,7 +60,7 @@ class MultiWriterSpec extends SparkTestBase {
   }
 
   private lazy val basePath: String = {
-    val dir = "/root/repo/target/fixtures/multiwriter_v8"
+    val dir = graft.fixtures.HudiFixtureBuilder.targetPath("fixtures/multiwriter_v8")
     val fs = FileSystem.get(spark.sessionState.newHadoopConf())
     val b = new Path(dir)
     fs.delete(b, true)

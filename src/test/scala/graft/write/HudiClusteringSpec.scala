@@ -17,7 +17,7 @@ class HudiClusteringSpec extends SparkTestBase {
   private def orders() = spark.read.parquet(s"$sfDir/orders.parquet")
 
   private def fresh(name: String): String = {
-    val p = new Path(s"/root/repo/target/hudi-fixtures/$name")
+    val p = new Path(graft.fixtures.HudiFixtureBuilder.targetPath(s"hudi-fixtures/$name"))
     FileSystem.get(spark.sessionState.newHadoopConf()).delete(p, true)
     p.toString
   }

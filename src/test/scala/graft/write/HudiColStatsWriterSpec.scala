@@ -19,7 +19,7 @@ class HudiColStatsWriterSpec extends SparkTestBase {
   private def copyFixture(name: String): String = {
     graft.fixtures.HudiFixtureBuilder.ensure(spark, sfDir)
     val fs = FileSystem.get(spark.sessionState.newHadoopConf())
-    val dst = new Path(s"/root/repo/target/hudi-fixtures/$name")
+    val dst = new Path(graft.fixtures.HudiFixtureBuilder.targetPath(s"hudi-fixtures/$name"))
     fs.delete(dst, true)
     org.apache.hadoop.fs.FileUtil.copy(fs,
       new Path(graft.fixtures.HudiFixtureBuilder.rangePath(sfDir)), fs, dst, false,
@@ -78,7 +78,7 @@ class HudiColStatsWriterSpec extends SparkTestBase {
   test("inserts WIDEN partition_stats bounds; new partitions get fresh entries") {
     graft.fixtures.HudiFixtureBuilder.ensure(spark, sfDir)
     val fs = FileSystem.get(spark.sessionState.newHadoopConf())
-    val path = new Path("/root/repo/target/hudi-fixtures/writer_pstats")
+    val path = new Path(graft.fixtures.HudiFixtureBuilder.targetPath("hudi-fixtures/writer_pstats"))
     fs.delete(path, true)
     org.apache.hadoop.fs.FileUtil.copy(fs,
       new Path(graft.fixtures.HudiFixtureBuilder.pstatsPath(sfDir)), fs, path, false,
@@ -112,10 +112,61 @@ class HudiColStatsWriterSpec extends SparkTestBase {
     assert(got == Set(maxKey + 10, maxKey + 20), got.toString)
   }
 
+  test("MOR log updates and log-routed inserts WIDEN partition_stats bounds") {
+    graft.fixtures.HudiFixtureBuilder.ensure(spark, sfDir)
+    val conf = spark.sessionState.newHadoopConf()
+    val fs = FileSystem.get(conf)
+    val path = new Path(
+      graft.fixtures.HudiFixtureBuilder.targetPath("hudi-fixtures/writer_pstats_mor"))
+    fs.delete(path, true)
+    org.apache.hadoop.fs.FileUtil.copy(fs,
+      new Path(graft.fixtures.HudiFixtureBuilder.pstatsPath(sfDir)), fs, path, false, conf)
+    // the cow_pstats_orders layout as a MERGE_ON_READ table, with o_custkey
+    // bounded too so an update can move a value past its partition's bound
+    val props = new Path(path, ".hoodie/hoodie.properties")
+    val text = new String(graft.util.ReadFully(fs, props), "UTF-8")
+      .replace("hoodie.table.type=COPY_ON_WRITE", "hoodie.table.type=MERGE_ON_READ")
+    val out = fs.create(props, true)
+    try out.write(text.getBytes("UTF-8")) finally out.close()
+    val rows = spark.read.format("hudi-graft").load(path.toString)
+      .drop(graft.core.MetaField.all: _*)
+    val ranges = rows.groupBy("g").agg(min("o_orderkey"), max("o_orderkey"),
+      min("o_custkey"), max("o_custkey")).collect()
+    graft.fixtures.HudiFixtureBuilder.writePartitionStatsFile(fs, path, ranges.toSeq.flatMap { r =>
+      Seq((s"g=${r.getInt(0)}", "o_orderkey", r.getLong(1), r.getLong(2)),
+        (s"g=${r.getInt(0)}", "o_custkey", r.getLong(3), r.getLong(4)))
+    }, graft.fixtures.HudiFixtureBuilder.T1)
+    val maxKey = rows.agg(max("o_orderkey")).head.getLong(0)
+    val maxCust = rows.agg(max("o_custkey")).head.getLong(0)
+    val k0 = rows.filter(col("g") === 0).agg(min("o_orderkey")).head.getLong(0)
+    def upsert(df: org.apache.spark.sql.DataFrame): Unit = df.write.format("hudi-graft")
+      .option("hoodie.datasource.write.recordkey.field", "o_orderkey")
+      .option("hoodie.datasource.write.partitionpath.field", "g")
+      .mode(SaveMode.Append).save(path.toString)
+    def bound(column: String) = graft.table.PartitionStatsIndex.load(path.toString, conf)(
+      "g=0")(column)._2
+    def found(filter: org.apache.spark.sql.Column) = spark.read.format("hudi-graft")
+      .load(path.toString).filter(filter).select("o_orderkey").collect().map(_.getLong(0)).toSet
+
+    // an UPDATE of a g=0 row to a custkey above every bound lands in a log
+    upsert(rows.filter(col("o_orderkey") === k0).withColumn("o_custkey", lit(maxCust + 1000)))
+    assert(bound("o_custkey") == maxCust + 1000, "a log update must widen its partition's bound")
+    assert(found(col("o_custkey") > maxCust) == Set(k0))
+
+    // a new key above g=0's max is routed into g=0's log, and widens too
+    upsert(rows.filter(col("o_orderkey") === k0).withColumn("o_orderkey", lit(maxKey + 10)))
+    val name = spark.read.format("hudi-graft").load(path.toString)
+      .filter(col("o_orderkey") === maxKey + 10).head.getAs[String]("_hoodie_file_name")
+    assert(name.startsWith(".") && name.contains(".log."),
+      s"routed insert must sit in a log: $name")
+    assert(bound("o_orderkey") == maxKey + 10)
+    assert(found(col("o_orderkey") > maxKey) == Set(maxKey + 10))
+  }
+
   test("upsert maintains bloom_filters: new files probe correctly") {
     graft.fixtures.HudiFixtureBuilder.ensure(spark, sfDir)
     val fs = FileSystem.get(spark.sessionState.newHadoopConf())
-    val path = new Path("/root/repo/target/hudi-fixtures/writer_bloom")
+    val path = new Path(graft.fixtures.HudiFixtureBuilder.targetPath("hudi-fixtures/writer_bloom"))
     fs.delete(path, true)
     org.apache.hadoop.fs.FileUtil.copy(fs,
       new Path(graft.fixtures.HudiFixtureBuilder.bloomPath(sfDir)), fs, path, false,

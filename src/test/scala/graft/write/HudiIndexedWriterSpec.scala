@@ -24,7 +24,7 @@ class HudiIndexedWriterSpec extends SparkTestBase {
   private def copyFixture(name: String): String = {
     graft.fixtures.HudiFixtureBuilder.ensure(spark, sfDir)
     val fs = FileSystem.get(spark.sessionState.newHadoopConf())
-    val dst = new Path(s"/root/repo/target/hudi-fixtures/$name")
+    val dst = new Path(graft.fixtures.HudiFixtureBuilder.targetPath(s"hudi-fixtures/$name"))
     fs.delete(dst, true)
     org.apache.hadoop.fs.FileUtil.copy(fs,
       new Path(graft.fixtures.HudiFixtureBuilder.morPath(sfDir)), fs, dst, false,
@@ -72,18 +72,22 @@ class HudiIndexedWriterSpec extends SparkTestBase {
     assert(after.filter(col("o_orderkey") % 11 === 0 && col("o_orderkey") < 20000000L)
       .select("o_orderstatus").distinct().collect().map(_.getString(0)).toSet == Set("X"))
 
-    // post-commit index consistency: the NEW keys resolve to their fresh
-    // group, an updated key still resolves to its original group
+    // post-commit index consistency: the NEW keys resolve to the existing
+    // small group whose c2 log received them (no fresh group is created)
     val t = HudiTable(spark, path)
-    val c2 = t.timeline.latestCommitTimestamp.get
+    val c2i = t.timeline.completedInstants.last
+    val c2 = c2i.timestamp
     val newKeys = fresh.select(col("o_orderkey").cast("string")).collect().map(_.getString(0))
     val found = RecordIndex.lookup(path, newKeys.toSeq,
       spark.sessionState.newHadoopConf())
     assert(found.entries.keySet == newKeys.toSet, s"new keys must be indexed: $found")
+    val written = t.timeline.touchedFileGroups(c2i)
     found.entries.values.foreach { e =>
-      assert(t.fsView.slicesAsOf(c2).exists(sl =>
-        sl.fileId == e.fileId && sl.commitTimestamp == c2),
-        s"entry must point at the fresh c2 group: $e")
+      assert(t.fsView.slicesAsOf(c2).exists(sl => sl.fileId == e.fileId &&
+        sl.partitionPath == e.partitionPath && sl.commitTimestamp < c2),
+        s"entry must point at an existing group of its partition: $e")
+      assert(written.getOrElse(e.partitionPath, Set.empty).contains(e.fileId),
+        s"entry must name the group whose c2 log received the key: $e")
     }
     // read-side point lookup over the maintained index
     val point = spark.read.format("hudi-graft").load(path)

@@ -8,7 +8,8 @@ import org.apache.spark.sql.functions._
 
 /** The MOR write path: upserts/deletes land as deltacommit LOG appends
   * (avro data blocks / delete blocks) on the matched group's latest
-  * slice, inserts produce base files, read-optimized mode sees only the
+  * slice (an upsert's new keys on a small group's), inserts produce base
+  * files, read-optimized mode sees only the
   * bases, and the written layout holds the v6 (base-instant log names)
   * and v8 (own-instant names, timeline/ completions) conventions the
   * read side associates by.
@@ -18,7 +19,7 @@ class HudiMorWriterSpec extends SparkTestBase {
   private def orders() = spark.read.parquet(s"$sfDir/orders.parquet")
 
   private def fresh(name: String): String = {
-    val p = new Path(s"/root/repo/target/hudi-fixtures/$name")
+    val p = new Path(graft.fixtures.HudiFixtureBuilder.targetPath(s"hudi-fixtures/$name"))
     val fs = FileSystem.get(spark.sessionState.newHadoopConf())
     fs.delete(p, true)
     p.toString
@@ -99,8 +100,8 @@ class HudiMorWriterSpec extends SparkTestBase {
     assert(inc.select("o_orderstatus").distinct().collect()
       .map(_.getString(0)).toSet == Set("U"))
 
-    // commit metadata: log entries carry numUpdateWrites / numDeletes and
-    // prevCommit = the base instant
+    // commit metadata: log entries carry numUpdateWrites / numInserts /
+    // numDeletes and prevCommit = the base instant
     import scala.jdk.CollectionConverters._
     val i2 = instants.find(_.timestamp == c2).get
     val md2 = t.timeline.commitMetadata(i2)
@@ -108,6 +109,8 @@ class HudiMorWriterSpec extends SparkTestBase {
       .flatMap(_.getValue.elements().asScala)
     assert(e2.map(_.path("numUpdateWrites").asLong(0)).sum ==
       orders().filter(col("o_orderkey") % 7 === 0).count())
+    assert(e2.map(_.path("numInserts").asLong(-1)).sum == 0,
+      "an update-only upsert inserts nothing")
     assert(e2.forall(_.path("prevCommit").asText() == c1))
     assert(e2.forall(_.path("path").asText().contains(".log.")))
     val i3 = instants.find(_.timestamp == c3).get
@@ -121,7 +124,7 @@ class HudiMorWriterSpec extends SparkTestBase {
     assert(cdc == Map("u" -> orders().filter(col("o_orderkey") % 7 === 0).count()), cdc.toString)
   }
 
-  test("MOR upsert routes unmatched keys to fresh base-file groups") {
+  test("MOR upsert routes unmatched keys into small groups' logs") {
     val path = fresh("writer_mor_mixed")
     // deterministic subsets (limit() re-evaluates nondeterministically):
     // insert %4 in {0,1,2}; upsert = %4==0 updated + %4==1 key-shifted new
@@ -139,16 +142,32 @@ class HudiMorWriterSpec extends SparkTestBase {
     val back = spark.read.format("hudi-graft").load(path)
     val nShift = orders().filter(col("o_orderkey") % 4 === 1).count()
     assert(back.count() == base.count() + nShift)
-    // new keys sit in NEW base-file groups stamped c2; matched keys merged
-    // from logs
+    // every group is far below the default max file size, so the new keys
+    // ride the c2 logs of the c1 groups of their partition: no base file is
+    // written at c2, and matched keys merge from the same logs
+    val c1Groups = t.fsView.slicesAsOf(c2).map(sl => sl.fileId -> sl.partitionPath).toMap
+    assert(t.fsView.slicesAsOf(c2).forall(_.commitTimestamp == c1), "no fresh base group at c2")
     val newRows = back.filter(col("o_orderkey") > 10000000L)
     assert(newRows.count() == nShift)
-    newRows.select("_hoodie_file_name").distinct().collect().foreach { r =>
-      assert(r.getString(0).contains(c2), s"fresh keys must land in c2 base files: $r")
-    }
+    newRows.select("_hoodie_file_name", "_hoodie_partition_path").distinct().collect()
+      .foreach { r =>
+        val name = r.getString(0)
+        assert(name.startsWith(".") && name.contains(".log."), s"new keys must sit in logs: $r")
+        assert(c1Groups.get(name.drop(1).takeWhile(_ != '_')).contains(r.getString(1)),
+          s"a new key's log must belong to an existing group of its partition: $r")
+      }
     assert(back.filter(col("o_orderkey") % 4 === 0 && col("o_orderkey") < 10000000L)
       .select("o_orderstatus").distinct().collect()
       .map(_.getString(0)).toSet == Set("U"))
+    // write stats split the log rows into updates and inserts
+    import scala.jdk.CollectionConverters._
+    val e2 = t.timeline.commitMetadata(t.timeline.completedInstants.last)
+      .path("partitionToWriteStats").properties().asScala.toSeq
+      .flatMap(_.getValue.elements().asScala)
+    assert(e2.map(_.path("numInserts").asLong(0)).sum == nShift)
+    assert(e2.map(_.path("numUpdateWrites").asLong(0)).sum ==
+      orders().filter(col("o_orderkey") % 4 === 0).count())
+    assert(e2.forall(_.path("path").asText().contains(".log.")))
   }
 
   test("v8 MOR target: logs carry their OWN instant; completion lands under timeline/") {

@@ -46,7 +46,7 @@ class HudiSecondaryIndexWriterSpec extends SparkTestBase {
     * current rows + index.json + the advertised partition).
     */
   private def buildIndexed(name: String, column: String): String = {
-    val path = s"/root/repo/target/hudi-fixtures/$name"
+    val path = graft.fixtures.HudiFixtureBuilder.targetPath(s"hudi-fixtures/$name")
     val fs = FileSystem.get(spark.sessionState.newHadoopConf())
     fs.delete(new Path(path), true)
     orders().limit(300).write.format("hudi-graft")

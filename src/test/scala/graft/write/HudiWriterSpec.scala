@@ -16,7 +16,8 @@ class HudiWriterSpec extends SparkTestBase {
   private def orders() = spark.read.parquet(s"$sfDir/orders.parquet")
 
   private def fresh(name: String): String = {
-    val p = new org.apache.hadoop.fs.Path(s"/root/repo/target/hudi-fixtures/$name")
+    val p = new org.apache.hadoop.fs.Path(
+      graft.fixtures.HudiFixtureBuilder.targetPath(s"hudi-fixtures/$name"))
     val fs = org.apache.hadoop.fs.FileSystem.get(spark.sessionState.newHadoopConf())
     fs.delete(p, true)
     p.toString
@@ -336,7 +337,8 @@ class HudiWriterSpec extends SparkTestBase {
     graft.fixtures.HudiFixtureBuilder.ensure(spark, sfDir)
     val srcPath = new org.apache.hadoop.fs.Path(
       graft.fixtures.HudiFixtureBuilder.mdtPath(sfDir))
-    val path = new org.apache.hadoop.fs.Path("/root/repo/target/hudi-fixtures/writer_mdt")
+    val path = new org.apache.hadoop.fs.Path(
+      graft.fixtures.HudiFixtureBuilder.targetPath("hudi-fixtures/writer_mdt"))
     val fs = org.apache.hadoop.fs.FileSystem.get(spark.sessionState.newHadoopConf())
     fs.delete(path, true)
     org.apache.hadoop.fs.FileUtil.copy(fs, srcPath, fs, path, false,
