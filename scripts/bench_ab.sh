@@ -1,7 +1,7 @@
 #!/usr/bin/env bash
 # A/B bench-noise adjudicator: re-runs a named query set ISOLATED
-# (SPARK_GRAFT_ONLY) against a git worktree of a previous commit and the
-# current tree, then emits a per-query verdict JSON. This machine-checks
+# (SPARK_GRAFT_ONLY) against an exported copy of a previous commit and
+# the current tree, then emits a per-query verdict JSON. This machine-checks
 # the "full-suite deltas of +/-0.3-0.8s are contention noise" judgment
 # instead of leaving it to memory: a query is a REGRESSION only when its
 # isolated min-of-N is >15% AND >0.2s slower than the baseline's.
@@ -12,10 +12,12 @@
 #   sf_dir        testdata dir (default /root/testdata/sf0.1 - the bench SF)
 # Env: SPARK_GRAFT_CPUS (default 32), SPARK_GRAFT_RUNS (default 3)
 #
-# Note: both trees share the marker-guarded fixture dir under
-# /root/repo/target/hudi-fixtures; a fixture-version difference between
-# the refs rebuilds it once per side (baseline runs first, current last,
-# leaving the tree at the current version).
+# Note: fixtures live under each tree's own target/ (paths resolve
+# against the working directory), so the baseline copy builds its own
+# fixture set at the chosen SF on its first run and the current tree's
+# fixtures are never touched. The copy is a `git archive` export under
+# ${TMPDIR:-/tmp}, removed on exit; it leaves no worktree registered in
+# the repository.
 set -euo pipefail
 
 BASE_REF=${1:?usage: bench_ab.sh <baseline-ref> <q1,q2,...> [sf_dir]}
@@ -25,14 +27,9 @@ CPUS=${SPARK_GRAFT_CPUS:-32}
 RUNS=${SPARK_GRAFT_RUNS:-3}
 REPO=$(cd "$(dirname "$0")/.." && pwd)
 
-WT_PARENT=$(mktemp -d "$REPO/target/bench_ab.XXXXXX")
-WT="$WT_PARENT/tree"
-cleanup() {
-  git -C "$REPO" worktree remove --force "$WT" >/dev/null 2>&1 || true
-  rm -rf "$WT_PARENT"
-}
-trap cleanup EXIT
-git -C "$REPO" worktree add --detach "$WT" "$BASE_REF" >/dev/null
+WT=$(mktemp -d "${TMPDIR:-/tmp}/bench_ab.XXXXXX")
+trap 'rm -rf "$WT"' EXIT
+git -C "$REPO" archive "$BASE_REF" | tar -x -C "$WT"
 
 run_bench() (
   cd "$1"

@@ -125,8 +125,8 @@ object HudiQueries {
     // file group 1 exists only as log files — T2 inserts (% 3 = 1), T3
     // updates (% 5 = 0) and deletes (% 11 = 0, except ties with a T3
     // update, which the record survives). Snapshot = base group ∪ merged
-    // base-less group; both engine paths (DataFrame merge and DSv2
-    // streamed per-slice merge) feed the same oracle.
+    // base-less group; both surfaces (the Table API and the DSv2
+    // format) feed the same oracle.
     "hudi_mor_log_only" -> QueryDef(
       (s, d) => {
         HudiFixtureBuilder.ensure(s, d)

@@ -3,7 +3,7 @@ package graft.sources
 import graft.core.{MetaField, Timestamps}
 import graft.core.HoodieInstant
 import graft.log.{InstantRange, LogFileParser, LogFormat, RowAlign}
-import graft.table.{HudiTable, LogScan}
+import graft.table.HudiTable
 import graft.util.SerializableConf
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
@@ -239,7 +239,7 @@ object CdcRead {
     val commits = inRange.filterNot(noOp)
       .groupBy(_.timestamp).toSeq.sortBy(_._1)
     if (commits.isEmpty)
-      return LogScan.emptyDf(spark, schema)
+      return HudiTable.emptyDf(spark, schema)
 
     def readAsOf(ts: String, groups: Seq[String]): DataFrame =
       spark.read.format("hudi-graft")
@@ -473,10 +473,10 @@ object CdcRead {
           // resolve as of prev, so over-inclusion costs nothing
           val after =
             if (written.nonEmpty) readAsOf(c, written)
-            else LogScan.emptyDf(spark, hudi.tableSchema)
+            else HudiTable.emptyDf(spark, hudi.tableSchema)
           val beforeGroups = (written ++ replaced).distinct.sorted
           val before = prev.map(readAsOf(_, beforeGroups))
-            .getOrElse(LogScan.emptyDf(spark, after.schema))
+            .getOrElse(HudiTable.emptyDf(spark, after.schema))
           val bAll = before.select(col(MetaField.RecordKey).as("__bk"),
             col(MetaField.PartitionPath).as("__bp"),
             struct(dataCols.toIndexedSeq: _*).as("before"))
@@ -506,7 +506,7 @@ object CdcRead {
       if (sidecars.isEmpty) Nil
       else Seq(persistedBlocksDf(spark, basePath, sidecars, persistedTs.result(), schema))
     val parts = persisted ++ perCommit
-    if (parts.isEmpty) LogScan.emptyDf(spark, schema)
+    if (parts.isEmpty) HudiTable.emptyDf(spark, schema)
     // balanced tree, not a left-deep reduce: a long commit range (backfill
     // replay) must not hand the analyzer an O(commits)-deep plan
     else graft.util.BalancedUnion(parts)

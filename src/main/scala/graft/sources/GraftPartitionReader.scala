@@ -20,8 +20,8 @@ import scala.collection.mutable
   * the base file STREAMS against it, so memory is proportional to the
   * delta, not the file group, and the merge needs no shuffle at all. This
   * mirrors the reference's per-slice FileGroupReader execution
-  * (crates/core/src/file_group/reader.rs:205-279) and is the no-shuffle
-  * complement to the DataFrame-level [[graft.table.MorMerge]].
+  * (crates/core/src/file_group/reader.rs:205-279); [[SliceMergeState]]
+  * is the engine's only MOR merge implementation.
   */
 class GraftReaderFactory(
     readFn: PartitionedFile => Iterator[InternalRow],
@@ -442,8 +442,7 @@ private[sources] final class SliceMergeState(
     // P6 for LOG records: dropped partition columns are absent from the
     // writer schema too, so the decode re-injects the slice's parsed
     // typed values (the parquet delegate does the same for base rows
-    // via partitionValues; the DataFrame-level path's logPartValues is
-    // the same contract)
+    // via partitionValues)
     partitionSchemaJson: Option[String] = None,
     hiveStyle: Boolean = false,
     urlEncoded: Boolean = false,

@@ -390,18 +390,10 @@ class GraftTable(
     // a snapshot; the short form wins when both are present.
     val merged = GraftTable.translateOptions(merged0)
     // read options may supplement table configs (e.g. keygen settings the
-    // writer didn't persist) — rebuild the table handle when present.
-    // `hoodie.read.*` and `hoodie.datasource.{query,read}.*` keys are
-    // call-scoped read options (translated above), never table-config
-    // supplements (`hoodie.datasource.write.*` ARE legit supplements and
-    // keep flowing).
+    // writer didn't persist) — rebuild the table handle when present
+    // (`hoodie.datasource.write.*` ARE legit supplements and keep flowing)
     val extra = merged.asCaseSensitiveMap().asScala
-      .filter { case (k, _) =>
-        val lk = k.toLowerCase(java.util.Locale.ROOT)
-        lk.startsWith("hoodie.") && !lk.startsWith("hoodie.read.") &&
-          !lk.startsWith("hoodie.datasource.query.") &&
-          !lk.startsWith("hoodie.datasource.read.")
-      }.toMap
+      .filter { case (k, _) => HudiTable.isConfigSupplement(k) }.toMap
     val table = if (extra.isEmpty) hudi else HudiTable(SparkSession.active, path, extra)
     // the reference's QueryType::from_str rejects unknown values
     // (config/read.rs InvalidValue); silently defaulting `query.type=
@@ -2312,7 +2304,7 @@ class GraftScan(
       mergeColumnar = columnarMerge,
       // version-gated sentinel renderings for P6 value injection
       // (string-typed dropped partition fields must surface NULL for a
-      // sentinel dir, never the literal — the logPartValues contract)
+      // sentinel dir, never the literal)
       nullSentinels = Seq("__HIVE_DEFAULT_PARTITION__", "", "default")
         .filter(hudi.config.isPartitionNullSentinel))
   }

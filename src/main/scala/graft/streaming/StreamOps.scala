@@ -11,7 +11,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * state; custom `flatMapGroupsWithState` appears only for latest-wins
   * upsert views, which no built-in expresses (stream-side
   * overwrite-with-latest needs per-key ordering state, the streaming
-  * analog of the MOR merge in [[graft.table.MorMerge]]).
+  * analog of the per-slice MOR merge in
+  * [[graft.sources.GraftPartitionReader]]).
   */
 object StreamOps {
 
@@ -69,7 +70,7 @@ object StreamOps {
     // same-class Comparable comparison: lossless for Long orderings (a
     // doubleValue round-trip collapses distinct values past 2^53) and
     // works for any Comparable ordering column (Timestamp, String,
-    // Decimal), null lowest — the MorMerge null-ordering convention
+    // Decimal), null lowest — the MOR merge's null-ordering convention
     def cmpOrdering(a: Any, b: Any): Int = (a, b) match {
       case (null, null) => 0
       case (null, _) => -1

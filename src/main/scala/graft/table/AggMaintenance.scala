@@ -291,7 +291,7 @@ object AggMaintenance {
     // group plans no start-time slice, correctly landing it in the
     // insert branch alongside the absent keys
     val preImages =
-      if (groups.isEmpty) LogScan.emptyDf(t.spark, t.tableSchema)
+      if (groups.isEmpty) HudiTable.emptyDf(t.spark, t.tableSchema)
       else t.snapshotForFileGroups(start, groups)
 
     val prior = priorAgg.getOrElse {

@@ -1,9 +1,8 @@
 package graft.table
 
 import graft.core.{HoodieConfig, MetaField, Timeline, Timestamps}
-import graft.fs.{FileSlice, FsView, PartitionFilter, PartitionPruner}
-import graft.log.{AvroConvert, InstantRange}
-import graft.util.SerializableConf
+import graft.fs.{FsView, PartitionFilter, PartitionPruner}
+import graft.log.AvroConvert
 import org.apache.avro.{Schema => AvroSchema}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -13,9 +12,12 @@ import org.apache.spark.sql.types._
   * reference's `Table` (crates/core/src/table/mod.rs:130-143).
   *
   * Steps 1-3 of the read lifecycle (configs, timeline, slice planning) run
-  * on the driver over metadata only; execution is Spark's vectorized
-  * parquet scan over the planned base files plus a distributed log decode,
-  * so data volume scales with executors, never with the driver.
+  * on the driver over metadata only. Every data read — snapshot, time
+  * travel, incremental, file-group restricted — is served by the
+  * `hudi-graft` DSv2 relation, whose per-slice reader merges each file
+  * group against its own logs (the one MOR merge implementation, as
+  * hudi-rs serves its table API and DataFusion provider from one
+  * file-group reader).
   */
 final class HudiTable(
     val spark: SparkSession,
@@ -25,17 +27,19 @@ final class HudiTable(
 
   val hadoopConf = spark.sessionState.newHadoopConf()
 
-  /** Table configs from hoodie.properties, SUPPLEMENTED (never overridden)
-    * by call-scoped read options — e.g. the keygen settings Hudi writers
-    * don't persist (the reference's OptionResolver merge).
+  private val storedConfig = HoodieConfig.load(basePath, hadoopConf)
+
+  /** Call-scoped read options that supplement table configs — e.g. the
+    * keygen settings Hudi writers don't persist (the reference's
+    * OptionResolver merge). Stored configs are never overridden.
     */
-  val config: HoodieConfig = {
-    val stored = HoodieConfig.load(basePath, hadoopConf)
-    val extra = readOptions.filter { case (k, _) =>
-      k.startsWith("hoodie.") && !stored.props.contains(k)
-    }
-    if (extra.isEmpty) stored else HoodieConfig(stored.props ++ extra)
+  private val configSupplements: Map[String, String] = readOptions.filter { case (k, _) =>
+    HudiTable.isConfigSupplement(k) && !storedConfig.props.contains(k)
   }
+
+  val config: HoodieConfig =
+    if (configSupplements.isEmpty) storedConfig
+    else HoodieConfig(storedConfig.props ++ configSupplements)
   // Base-file format contract, checked at open so a wrong format fails
   // here instead of deep in a decode (the reference dispatches per format
   // in base_file/reader.rs:152-167; its Lance reader is
@@ -132,8 +136,6 @@ final class HudiTable(
     else
       try PartitionStatsIndex.load(basePath, hadoopConf)
       catch { case scala.util.control.NonFatal(_) => Map.empty }
-
-  private def serConf = new SerializableConf(hadoopConf)
 
   def tableType: String = config.tableType
   def isMor: Boolean = config.isMor
@@ -260,42 +262,22 @@ final class HudiTable(
       paths.iterator.filter(p => longWidenCache.get(p) == java.lang.Boolean.TRUE).toSet
     }
 
-  /** Base-file DataFrame read with the per-file long→string widening
-    * applied when the table qualifies (one extra union branch; identical
-    * plans for every other table).
-    */
-  private def readBaseDf(schemaToRead: StructType, paths: Seq[String]): DataFrame = {
-    val cand = longWidenFields.filter(schemaToRead.fieldNames.contains)
-    val widen = if (cand.isEmpty) Set.empty[String] else longWidenPaths(paths)
-    if (widen.isEmpty) spark.read.schema(schemaToRead).parquet(paths: _*)
-    else {
-      val longSchema = StructType(schemaToRead.fields.map(f =>
-        if (cand.contains(f.name)) f.copy(dataType = org.apache.spark.sql.types.LongType) else f))
-      // LONG → decimal string: the exact rendering the writer's own
-      // string-physical files store
-      val widened = spark.read.schema(longSchema).parquet(widen.toSeq.sorted: _*)
-        .select(schemaToRead.fields.map(f =>
-          if (cand.contains(f.name)) col(f.name).cast(org.apache.spark.sql.types.StringType).as(f.name)
-          else col(f.name)).toIndexedSeq: _*)
-      val rest = paths.filterNot(widen)
-      if (rest.isEmpty) widened
-      else widened.unionByName(spark.read.schema(schemaToRead).parquet(rest: _*))
-    }
-  }
-
   lazy val tableSchema: StructType = resolvedSchemas._1
 
   /** Partition fields physically absent from the data files (P6). */
   lazy val droppedPartitionFields: Seq[String] = resolvedSchemas._2
 
-  private def orderingField: Option[String] = config.orderingFields.headOption
+  /** P3: strict validation — filters naming unknown columns are an error
+    * (reference validate_fields_against_schemas, expr/filter.rs:204-222).
+    */
+  private def requireKnownFields(filters: Seq[PartitionFilter]): Unit = {
+    val known = tableSchema.fieldNames.toSet
+    val bad = filters.map(_.field).filterNot(known.contains)
+    require(bad.isEmpty, s"Filter fields not in table schema: ${bad.mkString(", ")}")
+  }
 
   private[graft] def prunerFor(filters0: Seq[PartitionFilter]): PartitionPruner = {
-    // P3: strict validation — filters naming unknown columns are an error
-    // (reference validate_fields_against_schemas, expr/filter.rs:204-222)
-    val known = tableSchema.fieldNames.toSet
-    val bad = filters0.map(_.field).filterNot(known.contains)
-    require(bad.isEmpty, s"Filter fields not in table schema: ${bad.mkString(", ")}")
+    requireKnownFields(filters0)
     // R3: timestamp-keygen tables rewrite source-field filters into
     // partition-path filters (keygen/timestamp_based.rs)
     val filters = graft.fs.TimestampKeyGen.fromConfig(config) match {
@@ -390,42 +372,10 @@ final class HudiTable(
       .map(Timestamps.normalize(_, config.timelineTimezone))
       .orElse(timeline.latestCommitTimestamp)
     endOpt match {
-      case None => LogScan.emptyDf(spark, tableSchema)
+      case None => HudiTable.emptyDf(spark, tableSchema)
       case Some(end) =>
-        // The UNFILTERED shapes delegate to the DSv2 relation (r12):
-        // its per-slice merge reader — columnar for eligible schemas —
-        // merges each file group against its own logs with NO shuffle,
-        // where this method's legacy readSlices path union+window+
-        // anti-joined the WHOLE table on the record key (a table-wide
-        // shuffle that exists only to recover per-group locality the
-        // slices already have; measured 1.23s vs 0.48s warm at sf0.1,
-        // and at 100 TB the difference between a network-bound and a
-        // local merge). Row-for-row equality is pinned by the DSv2
-        // row-vs-columnar differential plus the 55 call sites of this
-        // method across the suites. Partition-filtered reads keep the
-        // legacy path: PartitionFilter is this API's own pre-parsed
-        // form, and mapping it back through Catalyst predicates would
-        // re-derive what prunerFor consumes directly.
-        // readOptions supplement configs Hudi writers do not persist
-        // (timestamp-keygen type, ordering field) — the DSv2 path
-        // rebuilds its table WITHOUT them, so an optioned handle keeps
-        // the legacy path rather than silently dropping semantics.
-        // `as.of.timestamp` is pinned to THIS handle's resolved end
-        // even for latest-reads: the delegated relation re-opens table
-        // state, and without the pin one handle could serve newer data
-        // than its own fileSlicesDf/timelineDf report.
-        if (partitionFilters.isEmpty && readOptions.isEmpty) {
-          var r = spark.read.format("hudi-graft").option("as.of.timestamp", end)
-          if (readOptimized) r = r.option("read.optimized", "true")
-          r.load(basePath)
-        } else {
-          val slices0 = fsView.slicesAsOf(end, prunerFor(partitionFilters))
-          // RO strips logs; a log-only slice then has nothing to read
-          val slices =
-            if (readOptimized) slices0.map(_.withoutLogs).filter(_.baseFile.isDefined)
-            else slices0
-          readSlices(slices, InstantRange.upTo(end), commitRange = None)
-        }
+        val ro = if (readOptimized) Seq("read.optimized" -> "true") else Nil
+        withFilters(load(("as.of.timestamp" -> end) +: ro: _*), partitionFilters)
     }
   }
 
@@ -434,15 +384,50 @@ final class HudiTable(
     * callers that know WHICH groups hold their keys (via
     * [[RecordIndex.lookup]]) read just those slices as of `asOf` instead
     * of the whole table. Groups born after `asOf` simply plan no slice.
+    * The restriction is by fileId alone (`cdc.file.groups`): file ids are
+    * unique across a table's partitions.
     */
   private[graft] def snapshotForFileGroups(
       asOf: String,
       groups: Map[String, Set[String]]
-  ): DataFrame = {
-    val end = Timestamps.normalize(asOf, config.timelineTimezone)
-    val slices = fsView.slicesAsOf(end, prunerFor(Nil))
-      .filter(sl => groups.get(sl.partitionPath).exists(_.contains(sl.fileId)))
-    readSlices(slices, InstantRange.upTo(end), commitRange = None)
+  ): DataFrame =
+    load(
+      "as.of.timestamp" -> Timestamps.normalize(asOf, config.timelineTimezone),
+      "cdc.file.groups" -> groups.values.flatten.toSeq.sorted.mkString(","))
+
+  /** The `hudi-graft` relation over this table with this handle's config
+    * supplements. The resolved end instant always rides along (an
+    * `as.of.timestamp` pin even for latest reads): the relation re-opens
+    * table state, and without the pin one handle could serve newer data
+    * than its own fileSlicesDf/timelineDf report.
+    */
+  private def load(opts: (String, String)*): DataFrame =
+    spark.read.format("hudi-graft").options(configSupplements).options(opts.toMap).load(basePath)
+
+  /** `filters` as the equivalent Catalyst predicates, each literal cast
+    * to its field's type. DSv2 pushdown turns them back into
+    * [[prunerFor]] pruning and drops the residual where that pruning is
+    * exact.
+    */
+  private def withFilters(df: DataFrame, filters: Seq[PartitionFilter]): DataFrame = {
+    requireKnownFields(filters)
+    filters.foldLeft(df) { (acc, f) =>
+      val c = col(f.field)
+      val vs = f.values.map(v => lit(v).cast(tableSchema(f.field).dataType))
+      acc.filter(f.op match {
+        case "=" => c === vs.head
+        case "!=" => c =!= vs.head
+        case "<" => c < vs.head
+        case "<=" => c <= vs.head
+        case ">" => c > vs.head
+        case ">=" => c >= vs.head
+        case "in" => c.isin(vs: _*)
+        case "not in" => !c.isin(vs: _*)
+        case "isnull" => c.isNull
+        case "isnotnull" => c.isNotNull
+        case op => throw new IllegalArgumentException(s"Unknown filter operator '$op'")
+      })
+    }
   }
 
   /** Inspection surface (the reference's public `get_file_slices`,
@@ -495,7 +480,10 @@ final class HudiTable(
 
   /** Incremental read of records changed in `(start, end]` (S3): only file
     * groups touched by in-range commits, with the `_hoodie_commit_time` row
-    * filter (P5, file_group/reader.rs:652-701).
+    * filter (P5, file_group/reader.rs:652-701) applied AFTER the merge — a
+    * row is returned only when the version that wins the merge was
+    * committed in range. Partition pruning applies; stats pruning does not
+    * (read_options.rs:75-80).
     */
   def incremental(
       start: Option[String],
@@ -506,130 +494,32 @@ final class HudiTable(
       .map(Timestamps.normalize(_, config.timelineTimezone))
       .orElse(timeline.latestCommitTimestamp)
     endTs match {
-      case None => LogScan.emptyDf(spark, tableSchema)
+      case None => HudiTable.emptyDf(spark, tableSchema)
       case Some(e) =>
         val s = start.map(Timestamps.normalize(_, config.timelineTimezone))
-        // UNFILTERED incremental reads delegate to the DSv2 relation
-        // like snapshot() (r12): identical (start, end] contract —
-        // range-bounded log decode + per-row commit filter — through
-        // the per-slice merge (columnar-eligible) plus the DSv2-only
-        // planning tiers (stats-contained proofs, index-tier
-        // restriction), instead of the DataFrame union+window merge.
-        // same gates as snapshot(): optioned handles keep the legacy
-        // path; the end pin always rides along (resolved from THIS
-        // handle's timeline), keeping the handle self-consistent
-        if (partitionFilters.isEmpty && readOptions.isEmpty) {
-          var r = spark.read.format("hudi-graft").option("query.type", "incremental")
-            .option("end.timestamp", e)
-          s.foreach(ts => r = r.option("start.timestamp", ts))
-          r.load(basePath)
-        } else {
-          // partition pruning applies to incremental too — only stats
-          // pruning is excluded (read_options.rs:75-80)
-          val slices = fsView.slicesBetween(s, e, prunerFor(partitionFilters))
-          readSlices(slices, InstantRange(s, Some(e)), commitRange = Some((s, e)))
-        }
+        val opts = Seq("query.type" -> "incremental", "end.timestamp" -> e) ++
+          s.map("start.timestamp" -> _)
+        withFilters(load(opts: _*), partitionFilters)
     }
-  }
-
-  /** Read + merge a planned set of slices. */
-  private def readSlices(
-      slices: Seq[FileSlice],
-      range: InstantRange,
-      commitRange: Option[(Option[String], String)]
-  ): DataFrame = {
-    // log-only slices (no base yet — pre-first-compaction MOR writes)
-    // contribute through the log branch only
-    val baseBearing = slices.filter(_.baseFile.isDefined)
-    val baseFiles = baseBearing.flatMap(_.baseFile).map(_.path)
-    if (baseFiles.isEmpty && !slices.exists(_.hasLogFiles))
-      return LogScan.emptyDf(spark, tableSchema)
-
-    val schema = tableSchema
-    val baseDf =
-      if (baseFiles.isEmpty) LogScan.emptyDf(spark, schema)
-      else if (droppedPartitionFields.isEmpty)
-        readBaseDf(schema, baseFiles)
-      else {
-        // P6: per-partition scan with the partition values re-injected as
-        // typed literals (the columns are not in the files)
-        val fileSchema = StructType(schema.fields.filterNot(f => droppedPartitionFields.contains(f.name)))
-        val parse = prunerFor(Nil)
-        baseBearing.groupBy(_.partitionPath).toSeq.sortBy(_._1).map { case (p, ss) =>
-          // a null-sentinel segment stands for NULL, not for its own
-          // rendering — dropping it injects NULL below (orNull)
-          val vals = parse.parseSegmentsLenient(p).getOrElse(Map.empty)
-            .filterNot { case (_, v) =>
-              v.isInstanceOf[String] &&
-                config.isPartitionNullSentinel(v.asInstanceOf[String]) }
-          val df = readBaseDf(fileSchema, ss.flatMap(_.baseFile).map(_.path))
-          val withParts = droppedPartitionFields.foldLeft(df) { (acc, f) =>
-            val target = schema.fields.find(_.name == f).get.dataType
-            val v = vals.get(f).map {
-              case d: java.time.LocalDate => java.sql.Date.valueOf(d)
-              case other => other
-            }.orNull
-            acc.withColumn(f, lit(v).cast(target))
-          }
-          withParts.select(schema.fieldNames.map(col).toIndexedSeq: _*)
-        }.reduce(_ unionByName _)
-      }
-    // P6 for log records: the writer schema omits dropped partition
-    // columns too — the log decode re-injects the slice's parsed values
-    val logPartValues: FileSlice => Map[String, Any] =
-      if (droppedPartitionFields.isEmpty) _ => Map.empty
-      else {
-        val parse = prunerFor(Nil)
-        val dropped = droppedPartitionFields
-        sl => {
-          val vals = parse.parseSegmentsLenient(sl.partitionPath).getOrElse(Map.empty)
-            .filterNot { case (_, v) =>
-              v.isInstanceOf[String] &&
-                config.isPartitionNullSentinel(v.asInstanceOf[String]) }
-          dropped.flatMap(f => vals.get(f).map {
-            case d: java.time.LocalDate => f -> java.sql.Date.valueOf(d)
-            case other => f -> other
-          }).toMap
-        }
-      }
-
-    // commit-time row filtering requires meta fields; without them the
-    // incremental read returns every row of every touched file group —
-    // the reference behaves identically (reader.rs:656-661 returns no
-    // mask when populates_meta_fields is false), so this is parity, not
-    // an omission
-    val commitFilter: DataFrame => DataFrame = commitRange match {
-      case Some((s, e)) if config.populatesMetaFields =>
-        df => {
-          val c = col(MetaField.CommitTime)
-          val lower = s.map(c > _).getOrElse(lit(true))
-          df.filter(lower && c <= e)
-        }
-      case _ => identity
-    }
-
-    val hasLogs = slices.exists(_.hasLogFiles)
-    if (!hasLogs) return commitFilter(baseDf)
-
-    val conf = serConf
-    val strategy = config.recordMergeStrategy
-    val needDeletes = strategy == "OVERWRITE_WITH_LATEST" && orderingField.isDefined
-    val (logDf, deletes) =
-      if (needDeletes) {
-        // single pass over the log files for data AND delete blocks
-        val of = orderingField.get
-        val ordType = schema.fields.find(_.name == of).map(_.dataType).getOrElse(LongType)
-        val (d, del) = LogScan.dataFrameOfLogAndDeletes(
-          spark, basePath, slices, schema, of, ordType, range, conf, logPartValues)
-        (d, Some(del))
-      } else
-        (LogScan.dataFrameOfLogRecords(spark, slices, schema, range, conf, logPartValues), None)
-    val data = commitFilter(baseDf.unionByName(logDf))
-    MorMerge.merge(data, deletes, orderingField, strategy)
   }
 }
 
 object HudiTable {
+  /** Read-option keys that supplement table configs: `hoodie.*` minus the
+    * call-scoped read selectors (`hoodie.read.*` and
+    * `hoodie.datasource.{query,read}.*`), which shape one read and never
+    * describe the table.
+    */
+  private[graft] def isConfigSupplement(key: String): Boolean = {
+    val k = key.toLowerCase(java.util.Locale.ROOT)
+    k.startsWith("hoodie.") && !k.startsWith("hoodie.read.") &&
+      !k.startsWith("hoodie.datasource.query.") && !k.startsWith("hoodie.datasource.read.")
+  }
+
+  /** A frame of `schema` with no rows, built without a Spark job. */
+  def emptyDf(spark: SparkSession, schema: StructType): DataFrame =
+    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+
   def apply(spark: SparkSession, basePath: String): HudiTable =
     cached(spark, basePath, Map.empty)
   def apply(spark: SparkSession, basePath: String, readOptions: Map[String, String]): HudiTable =

@@ -69,9 +69,7 @@ object Materialize {
     * defaults).
     */
   private def mode(s: SparkSession): String =
-    s.conf.getOption("spark.graft.materialize.mode")
-      .orElse(sys.env.get("GRAFT_MATERIALIZE_MODE")) // dev A/B hook
-      .getOrElse("checkpoint")
+    s.conf.getOption("spark.graft.materialize.mode").getOrElse("checkpoint")
 
   private def pending(s: SparkSession) = {
     val reg = graft.queries.SessionRegistry.of(s)
@@ -91,10 +89,8 @@ object Materialize {
       df.persist(StorageLevel.MEMORY_AND_DISK)
       // eager: any action over a persisted frame builds the full-row
       // column batches, so downstream references hit the cache; count()
-      // is the cheapest such action and its value feeds the debug gauge
-      val n = df.count()
-      if (sys.env.contains("GRAFT_MATERIALIZE_DEBUG"))
-        System.err.println(s"[materialize] rows=$n cols=${df.schema.length}")
+      // is the cheapest such action
+      df.count()
       val p = pending(s)
       p.synchronized { p += df }
       df
