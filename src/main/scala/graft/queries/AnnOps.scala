@@ -52,7 +52,8 @@ object AnnOps {
     (0 until numPlanes)
       .map(j => s"CASE WHEN ${dot.format("q", planeLiteral(j))} >= 0 THEN 1 ELSE 0 END")
       .mkString("array(", ",\n      ", ")")
-  // Cold-path attribution (GRAFT_PREP_DEBUG + DevAnnProfile, sf-independent):
+  // Cold-path attribution (one-off timing of the prep sub-steps and of
+  // codegen, sf-independent):
   // prep analyze+materialize ≈ 0.7s; ~1.5s is Janino codegen compile of the
   // main query's stages; the remaining ~2.5s is session-first-query
   // machinery (shuffle/cache-scan init), not plan cost. A DataFrame-API
@@ -273,20 +274,6 @@ object AnnOps {
         .selectExpr("vec_id", "bits", s"explode(sequence(0, ${numBands - 1})) AS b")
         .selectExpr("vec_id", "b", s"$bandKey AS band_key")
       val dfs = Seq(qn, banded)
-      if (sys.env.contains("GRAFT_PREP_DEBUG")) {
-        def t[A](label: String)(f: => A): A = {
-          val t0 = System.nanoTime(); val r = f
-          System.err.println(f"[prep] $label%-24s ${(System.nanoTime() - t0) / 1e9}%.3f s"); r
-        }
-        t("qn analyze")(qn.queryExecution.optimizedPlan)
-        t("banded analyze")(banded.queryExecution.optimizedPlan)
-        // persist BEFORE the counts: the profiler attributes CACHE-build
-        // cost — counting unpersisted relations would materialize them
-        // twice and measure a path no query takes
-        dfs.foreach(_.persist())
-        t("qn count (cache build)")(qn.count())
-        t("banded count (cache build)")(banded.count())
-      }
       // ALWAYS persist: the r5 gate skipped the persist at bench scale
       // (cache build > 2-4 recomputes of a 16-dot signature), but the
       // 12-bit re-banding flipped the math — 8 band branches each

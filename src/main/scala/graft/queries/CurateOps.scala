@@ -79,24 +79,21 @@ object CurateOps {
        |ORDER BY c.doc_id""".stripMargin
   }
 
-  private val defaultBenchBroadcastMaxBytes = 256L << 20
-  private def benchBroadcastMaxBytes(s: SparkSession): Long =
-    s.conf.getOption("spark.graft.text.benchBroadcastMaxBytes")
-      .map(_.toLong).getOrElse(defaultBenchBroadcastMaxBytes)
-
-  private def withConf(s: SparkSession, kvs: (String, String)*)(body: => DataFrame): DataFrame =
-    TextOps.withConf(s, kvs: _*)(body)
+  private val BenchBroadcastMaxBytes = 256L << 20
 
   private def prep(s: SparkSession, d: String): Unit =
     Tables.ensureView(s, d, "documents")(Tables.documents(s, d))
 
-  private val defaultBenchBloomMaxItems = 256L << 20 // ~268M grams ≈ 320 MB @ 1%
-  private def benchBloomMaxItems(s: SparkSession): Long =
-    s.conf.getOption("spark.graft.text.benchBloomMaxItems")
-      .map(_.toLong).getOrElse(defaultBenchBloomMaxItems)
-  private def benchBloomFpp(s: SparkSession): Double =
-    s.conf.getOption("spark.graft.text.benchBloomFpp")
-      .map(_.toDouble).getOrElse(0.01)
+  private val BenchBloomMaxItems = 256L << 20 // ~268M grams ≈ 320 MB @ 1%
+  private val BenchBloomFpp = 0.01
+
+  /** The three decontamination joins of [[decontamImpl]]. */
+  private[queries] sealed trait Decontam
+  private[queries] object Decontam {
+    case object Broadcast extends Decontam
+    case object Bloom extends Decontam
+    case object Shuffle extends Decontam
+  }
 
   /** Three regimes, outermost first on the size of the bench gram set
     * (gates driver-side on Catalyst's estimate, like the TextOps gates):
@@ -109,35 +106,36 @@ object CurateOps {
     *     gram stream map-side with the codegen'd `graft_bloom_contains`,
     *     and shuffle-hash join only the probable hits — the exact join
     *     removes bloom false positives, so the result is bit-identical;
-    *  3. bench gram count past `benchBloomMaxItems` (a bloom that big
+    *  3. bench gram count past `BenchBloomMaxItems` (a bloom that big
     *     stops fitting in task memory) -> plain shuffle-hash join (never
     *     sort-merge — gram keys are long strings, hashing beats sorting).
     *
     * All three regimes run under the same DuckDB oracle: the default
-    * entry takes 1, `text_decontaminate_scale` forces 2,
-    * `text_decontaminate_shuffle` forces 3.
+    * entry gates (`forced = None`) and takes 1 at oracle scale,
+    * `text_decontaminate_scale` forces 2, `text_decontaminate_shuffle`
+    * forces 3.
     */
-  private[queries] def decontamImpl(s: SparkSession, d: String): DataFrame = {
+  private[queries] def decontamImpl(s: SparkSession, d: String,
+      forced: Option[Decontam] = None): DataFrame = {
     import org.apache.spark.sql.functions._
     prep(s, d)
     val bg = s.sql(
       s"""SELECT DISTINCT gram FROM (
          |  SELECT explode(${sparkGrams("split(text, ' ')")}) AS gram
          |  FROM documents WHERE $benchPredicate)""".stripMargin)
-    val bytes = bg.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (bytes <= benchBroadcastMaxBytes(s))
+    def bytes = bg.queryExecution.optimizedPlan.stats.sizeInBytes
+    val regime = forced.getOrElse(
+      if (bytes <= BenchBroadcastMaxBytes) Decontam.Broadcast else Decontam.Bloom)
+    if (regime == Decontam.Broadcast)
       s.sql(decontamSql(spark = true, "/*+ BROADCAST(b) */"))
     else {
       // bench gram count: one job over the SMALL side, amortized with the
-      // bloom bytes in the session registry (keyed by dir)
-      // registry key carries the regime confs: a forced-regime twin
-      // (maxItems=0) must not be fed a bloom cached under the default
-      // gates — and alternating twins must not evict each other (each
-      // regime gets its own slot, so ScaleRegimeSpec's back-and-forth
-      // doesn't rebuild the bloom per pass)
+      // bloom bytes in the session registry (keyed by dir; only the bloom
+      // regime reads the slot, and None in it means the count is past the
+      // bloom gate, so the shuffle-hash join runs instead)
       val reg = SessionRegistry.of(s)
-      val key = s"decontam_bloom:$d:${benchBloomMaxItems(s)}:${benchBloomFpp(s)}"
-      val bloomOpt = reg.synchronized {
+      val key = s"decontam_bloom:$d"
+      val bloomOpt = if (regime == Decontam.Shuffle) None else reg.synchronized {
         val cached = reg.get(key).collect {
           case b: Option[Array[Byte]] @unchecked => b
         }
@@ -150,9 +148,9 @@ object CurateOps {
           val b =
             try {
               val n = bg.count()
-              if (n > benchBloomMaxItems(s)) None
+              if (n > BenchBloomMaxItems) None
               else Some(graft.functions.BloomMightContain.buildOverHashes(
-                bg, n, benchBloomFpp(s)))
+                bg, n, BenchBloomFpp))
             } finally bg.unpersist(false)
           reg.put(key, b)
           b
@@ -738,9 +736,9 @@ object CurateOps {
     * prev_k duplicates exponentially in K (~2^K copies of the word-count
     * aggregate at K=6, ~2.5s of pure planning+recompute at ANY scale
     * factor). Gate: the dictionary must fit the driver
-    * (|distinct words| ≤ spark.graft.text.bpeDriverMaxVocab, default 4M
-    * — same driver-regime bound as dedup_groups' union-find); above it
-    * the SQL chain runs unchanged, dictionary-sized per stage.
+    * (|distinct words| ≤ [[BpeDriverMaxVocab]], 4M — same driver-regime
+    * bound as dedup_groups' union-find); above it the SQL chain runs
+    * unchanged, dictionary-sized per stage.
     *
     * The loop mirrors the SQL semantics exactly: every adjacent pair
     * occurrence counts (weighted by word frequency), ties break on the
@@ -748,15 +746,12 @@ object CurateOps {
     * left-to-right — asserted equal to the forced SQL chain by
     * CurateOpsSpec's regime test and to DuckDB by the oracle.
     */
-  private def bpeDriverMaxVocab(s: SparkSession): Int =
-    s.conf.getOption("spark.graft.text.bpeDriverMaxVocab")
-      .map(_.toInt).getOrElse(4000000)
+  private val BpeDriverMaxVocab = 4000000
 
   /** Some((merge table, word → n_symbols)) under the gate; None above. */
-  private def bpeTrained(s: SparkSession, d: String)
+  private def bpeTrained(s: SparkSession, d: String, gate: Int)
       : Option[(Seq[(Int, String, String, String, Long)], Map[String, Int])] = {
     prep(s, d)
-    val gate = bpeDriverMaxVocab(s)
     SessionRegistry.of(s).getOrElseUpdate(s"bpe:$d:$gate", {
       val rows = s.sql(
         s"""SELECT tok, COUNT(1) AS wc
@@ -800,16 +795,18 @@ object CurateOps {
     }).asInstanceOf[Option[(Seq[(Int, String, String, String, Long)], Map[String, Int])]]
   }
 
-  private def bpeTrainImpl(s: SparkSession, d: String): DataFrame =
-    bpeTrained(s, d) match {
+  private[queries] def bpeTrainImpl(s: SparkSession, d: String,
+      gate: Int = BpeDriverMaxVocab): DataFrame =
+    bpeTrained(s, d, gate) match {
       case Some((merges, _)) =>
         import s.implicits._
         merges.toDF("step", "lhs", "rhs", "merged", "pair_count").orderBy("step")
       case None => sq(s, d, bpeSql(spark = true))
     }
 
-  private def bpeTokenizeImpl(s: SparkSession, d: String): DataFrame =
-    bpeTrained(s, d) match {
+  private[queries] def bpeTokenizeImpl(s: SparkSession, d: String,
+      gate: Int = BpeDriverMaxVocab): DataFrame =
+    bpeTrained(s, d, gate) match {
       case Some((_, symLens)) =>
         import org.apache.spark.sql.functions._
         import s.implicits._
@@ -963,19 +960,16 @@ object CurateOps {
     "text_decontaminate" -> QueryDef(
       (s, d) => decontamImpl(s, d),
       Some(decontamSql(spark = false, hint = ""))),
-    // Forced large-benchmark regime: broadcast gate to 0 -> the bloom
-    // prefilter + shuffle-hash branch, proven identical under the same
-    // oracle (ScaleRegimeSpec + Verify).
+    // Forced large-benchmark regime: the bloom prefilter + shuffle-hash
+    // branch, proven identical under the same oracle (ScaleRegimeSpec +
+    // Verify).
     "text_decontaminate_scale" -> QueryDef(
-      (s, d) => withConf(s,
-        "spark.graft.text.benchBroadcastMaxBytes" -> "0")(decontamImpl(s, d)),
+      (s, d) => decontamImpl(s, d, Some(Decontam.Bloom)),
       Some(decontamSql(spark = false, hint = ""))),
-    // Forced giant-benchmark regime: bloom gate ALSO to 0 -> the plain
-    // shuffle-hash branch (a bloom past task memory must not be built).
+    // Forced giant-benchmark regime: the plain shuffle-hash branch (a
+    // bloom past task memory must not be built).
     "text_decontaminate_shuffle" -> QueryDef(
-      (s, d) => withConf(s,
-        "spark.graft.text.benchBroadcastMaxBytes" -> "0",
-        "spark.graft.text.benchBloomMaxItems" -> "0")(decontamImpl(s, d)),
+      (s, d) => decontamImpl(s, d, Some(Decontam.Shuffle)),
       Some(decontamSql(spark = false, hint = ""))),
     "pipeline_train_prep" -> QueryDef(
       trainPrepImpl _,
@@ -1020,10 +1014,10 @@ object CurateOps {
       dsirImpl _,
       Some(dsirSql(spark = false))),
     "text_bpe_train" -> QueryDef(
-      bpeTrainImpl _,
+      bpeTrainImpl(_, _),
       Some(bpeSql(spark = false))),
     "text_bpe_tokenize" -> QueryDef(
-      bpeTokenizeImpl _,
+      bpeTokenizeImpl(_, _),
       Some(bpeTokenizeSql(spark = false))),
     "quality_expectations" -> QueryDef(expectationsImpl _, expectationsSql)
   )

@@ -46,21 +46,20 @@ object GraphOps {
     * alone beats the broadcast limit) the edge relation is hash-
     * partitioned by src ONCE and each iteration shuffles only the
     * node-sized rank relation into a shuffle-hash join — no edge
-    * re-shuffle, no sort. Overridable for the regime-differential test.
+    * re-shuffle, no sort. [[sparkImpl]] takes the gate as a parameter so
+    * the regime-differential test can force the shuffle-hash regime.
     */
-  private def broadcastMaxBytes: Long =
-    sys.props.get("graft.pagerank.broadcast.max.bytes").map(_.toLong).getOrElse(64L << 20)
+  private val BroadcastMaxBytes = 64L << 20
   private val RankRowBytes = 48L // BIGINT node id + long rank + row overhead
   private val EdgeRowBytes = 64L // src, dst, deg BIGINTs + row overhead
   private val TargetPartitionBytes = 32L << 20
 
   /** Smallest per-partition edge slice that justifies occupying a core:
     * the parallelism floor on the iteration relation's partitioning stops
-    * at `edgeBytes / minPartitionBytes` partitions (sys-prop override for
-    * the dev probe; default measured at sf0.1 — see OPTIMIZATION_r16.md).
+    * at `edgeBytes / MinPartitionBytes` partitions (swept at sf0.1 — see
+    * OPTIMIZATION_r16.md, "graph_pagerank anti-scaling").
     */
-  private def minPartitionBytes: Long =
-    sys.props.get("graft.pagerank.min.partition.bytes").map(_.toLong).getOrElse(8L << 20)
+  private val MinPartitionBytes = 8L << 20
 
   /** Session-shared graph prep (the ANN/minhash prep contract): the
     * (edges ⋈ deg) relation and node count build ONCE per (session, dir,
@@ -101,7 +100,7 @@ object GraphOps {
     }
   }
 
-  private def prep(s: SparkSession, d: String): Prep = {
+  private def prep(s: SparkSession, d: String, broadcastMaxBytes: Long): Prep = {
     val reg = SessionRegistry.of(s)
     reg.synchronized {
       // the regime gate is part of the prepared relation's SHAPE
@@ -146,7 +145,7 @@ object GraphOps {
               // partitions to bytes, not cores). At 100 TB the data term
               // dominates and the floor is irrelevant.
               val coreFloor = math.min(s.sparkContext.defaultParallelism.toLong,
-                e * EdgeRowBytes / minPartitionBytes + 1)
+                e * EdgeRowBytes / MinPartitionBytes + 1)
               val parts = math.max(coreFloor,
                 math.min(1L << 18, e * EdgeRowBytes / TargetPartitionBytes + 1)).toInt
               // Broadcast regime: pre-partition the cached edge relation by
@@ -175,8 +174,9 @@ object GraphOps {
     }
   }
 
-  private[queries] def sparkImpl(s: SparkSession, d: String): DataFrame = {
-    val p = prep(s, d)
+  private[queries] def sparkImpl(s: SparkSession, d: String,
+      broadcastMaxBytes: Long = BroadcastMaxBytes): DataFrame = {
+    val p = prep(s, d, broadcastMaxBytes)
     val useBroadcast = p.n * RankRowBytes <= broadcastMaxBytes
     val prInit = Scale / p.n
     val baseQ = ((Scale / p.n) * 15) / 100
@@ -343,7 +343,7 @@ object GraphOps {
        |FROM pernode ORDER BY tri DESC, supp LIMIT $TriTopK""".stripMargin
 
   def queries: Map[String, QueryDef] = Map(
-    "graph_pagerank" -> QueryDef(sparkImpl _, duckSql),
+    "graph_pagerank" -> QueryDef(sparkImpl(_, _), duckSql),
     "graph_triangles" -> QueryDef(trianglesImpl _, trianglesDuck)
   )
 }

@@ -1880,9 +1880,9 @@ object HudiQueries {
     * streaming harness confs pinned for its WHOLE duration (8 shuffle
     * partitions -> 8 state stores instead of 32 pure-overhead tasks;
     * retain 1 checkpoint batch, ~0.6s/entry of snapshot-retention IO
-    * saved -- DevStreamProfile measurements). Confs restore AFTER
-    * termination: the stream thread clones the session asynchronously,
-    * so restoring right after start() raced the clone and the
+    * saved -- measured in BASELINE.md "Streaming bench floor"). Confs
+    * restore AFTER termination: the stream thread clones the session
+    * asynchronously, so restoring right after start() raced the clone and the
     * state-store count nondeterministically followed the restored
     * value. AvailableNow self-terminates instead of idling through an
     * empty trailing micro-batch.

@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.LongType
 
 /** Text-analysis + deduplication operators over the `documents` table —
   * the LLM-training-pipeline surface (BASELINE.json north-star) layered on
@@ -153,19 +154,8 @@ object TextOps {
     *
     * Verification is regime-gated too — see [[verifyJoin]].
     */
-  private val defaultBroadcastMaxBytes = 256L << 20
-
-  /** Regime-gate thresholds, overridable per session so the large-corpus
-    * code paths can be forced at oracle scale (the `*_scale` query
-    * entries) — both regimes are then provably identical under the same
-    * DuckDB oracle, not just argued so in a comment.
-    */
-  private def dictBroadcastMaxBytes(s: SparkSession): Long =
-    s.conf.getOption("spark.graft.text.dictBroadcastMaxBytes")
-      .map(_.toLong).getOrElse(defaultBroadcastMaxBytes)
-  private def verifyBroadcastMaxBytes(s: SparkSession): Long =
-    s.conf.getOption("spark.graft.text.verifyBroadcastMaxBytes")
-      .map(_.toLong).getOrElse(defaultBroadcastMaxBytes)
+  private val DictBroadcastMaxBytes = 256L << 20
+  private val VerifyBroadcastMaxBytes = 256L << 20
 
   /** Gate for broadcasts of relations DERIVED from the corpus whose size
     * Catalyst cannot estimate (post-aggregate plans inherit child-sized
@@ -177,29 +167,23 @@ object TextOps {
     * broadcast when the relation is actually small, shuffle (with skew
     * split) when not — instead of a forced broadcast hard-failing at 8 GB.
     */
-  private def derivedBroadcastMaxBytes(s: SparkSession): Long =
-    s.conf.getOption("spark.graft.text.derivedBroadcastMaxBytes")
-      .map(_.toLong).getOrElse(defaultBroadcastMaxBytes)
+  private val DerivedBroadcastMaxBytes = 256L << 20
+
+  /** A regime gate's threshold: the constant, or 0 when the caller forces
+    * the scale regime. The `*_scale` query entries pass `scale = true` so
+    * the large-corpus code paths run at oracle scale — both regimes are
+    * then provably identical under the same DuckDB oracle, not just argued
+    * so in a comment.
+    */
+  private def gate(max: Long, scale: Boolean): Long = if (scale) 0L else max
 
   private def corpusBytes(s: SparkSession): BigInt =
     s.table("documents").queryExecution.optimizedPlan.stats.sizeInBytes
 
   /** Apply `broadcast()` only below the derived-relation gate. */
-  private def gatedBroadcast(s: SparkSession, df: DataFrame): DataFrame = {
+  private def gatedBroadcast(s: SparkSession, df: DataFrame, scale: Boolean): DataFrame = {
     import org.apache.spark.sql.functions.broadcast
-    if (corpusBytes(s) <= derivedBroadcastMaxBytes(s)) broadcast(df) else df
-  }
-
-  /** Run `body` with session confs set, restoring them afterwards. The
-    * regime gates read their conf eagerly at DataFrame-construction time
-    * (driver-side), so the returned plan keeps the forced regime even
-    * though the conf is restored before execution.
-    */
-  private[queries] def withConf(s: SparkSession, kvs: (String, String)*)(body: => DataFrame): DataFrame = {
-    val saved = kvs.map { case (k, _) => k -> s.conf.getOption(k) }
-    kvs.foreach { case (k, v) => s.conf.set(k, v) }
-    try body
-    finally saved.foreach { case (k, o) => o.fold(s.conf.unset(k))(s.conf.set(k, _)) }
+    if (corpusBytes(s) <= gate(DerivedBroadcastMaxBytes, scale)) broadcast(df) else df
   }
 
   /** Verify-phase join of the candidate-pair relation against the per-doc
@@ -221,12 +205,10 @@ object TextOps {
     *    ReuseExchange computes it once.
     */
   private def verifyJoin(s: SparkSession, cand: DataFrame, docsets: DataFrame,
-      aliasA: String, aliasB: String): DataFrame = {
+      aliasA: String, aliasB: String, scale: Boolean): DataFrame = {
     import org.apache.spark.sql.functions._
     val bytes = docsets.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (sys.env.contains("GRAFT_GATE_DEBUG"))
-      System.err.println(s"[gate] verifyJoin docsets estimate=$bytes max=${verifyBroadcastMaxBytes(s)}")
-    if (bytes <= verifyBroadcastMaxBytes(s))
+    if (bytes <= gate(VerifyBroadcastMaxBytes, scale))
       cand.join(broadcast(docsets.as(aliasA)), col(s"$aliasA.doc_id") === col("doc_a"))
         .join(broadcast(docsets.as(aliasB)), col(s"$aliasB.doc_id") === col("doc_b"))
     else {
@@ -238,7 +220,7 @@ object TextOps {
       // semi-join shuffle-HASHES on doc_id with ids as the build side
       // (a sort-merge semi here would sort the array-laden docsets rows)
       val idsSide =
-        if (corpusBytes(s) <= derivedBroadcastMaxBytes(s)) broadcast(ids)
+        if (corpusBytes(s) <= gate(DerivedBroadcastMaxBytes, scale)) broadcast(ids)
         else ids.hint("shuffle_hash")
       val filtered = docsets.join(idsSide, Seq("doc_id"), "left_semi")
         .hint("shuffle_hash")
@@ -247,7 +229,7 @@ object TextOps {
     }
   }
 
-  private def minhashImpl(s: SparkSession, d: String): DataFrame = {
+  private def minhashImpl(s: SparkSession, d: String, scale: Boolean): DataFrame = {
     import org.apache.spark.sql.functions._
     prep(s, d)
     // docsets + signatures are pure functions of the corpus — build and
@@ -255,7 +237,7 @@ object TextOps {
     // the per-invocation rotation re-materialized the shingling and the
     // 16-way md5 aggregation on every call (~2.5s of the steady state).
     val docBytes = s.table("documents").queryExecution.optimizedPlan.stats.sizeInBytes
-    val useDict = docBytes <= dictBroadcastMaxBytes(s)
+    val useDict = docBytes <= gate(DictBroadcastMaxBytes, scale)
     // docsets is regime-independent; signatures are keyed by regime so the
     // forced-scale oracle entry builds (and caches) its own relation
     // instead of silently reusing the dictionary-regime one.
@@ -287,7 +269,7 @@ object TextOps {
       Seq(sigs, cand)
     }
     val jaccard = col("n_inter").cast("double") / (col("na") + col("nb") - col("n_inter"))
-    verifyJoin(s, cand, ds, "x", "y")
+    verifyJoin(s, cand, ds, "x", "y", scale)
       .select(col("doc_a"), col("doc_b"),
         expr("graft_intersect_count(x.shset, y.shset)").as("n_inter"),
         size(col("x.shset")).as("na"), size(col("y.shset")).as("nb"))
@@ -369,7 +351,7 @@ object TextOps {
     *    corpus-sized broadcast.
     * Only `docsets` persists, rotated via [[rotateCache]].
     */
-  private def ngramImpl(s: SparkSession, d: String): DataFrame = {
+  private def ngramImpl(s: SparkSession, d: String, scale: Boolean): DataFrame = {
     import org.apache.spark.sql.functions._
     prep(s, d)
     // docsets AND the candidate-pair relation are both pure functions of
@@ -384,7 +366,7 @@ object TextOps {
     // flipped by whichever twin ran first. The verify-phase gates remain
     // per-invocation.
     val ngramKey =
-      if (corpusBytes(s) <= derivedBroadcastMaxBytes(s)) "ngram_bc" else "ngram_aqe"
+      if (corpusBytes(s) <= gate(DerivedBroadcastMaxBytes, scale)) "ngram_bc" else "ngram_aqe"
     val Seq(docsets, cand) = sharedPrep(s, d, ngramKey) {
       val docsets = s.sql(sparkDocsetsBlocked)
       val shingles = docsets.selectExpr("doc_id", "lang", "source", "explode(shset) AS shingle")
@@ -396,7 +378,7 @@ object TextOps {
       // broadcast below the corpus gate, AQE-decided above it.
       // jk pre-concatenates the (lang, source, shingle) blocking key so
       // the self-join hashes ONE column per row per side instead of three
-      val rare = shingles.join(gatedBroadcast(s, hot), key, "left_anti")
+      val rare = shingles.join(gatedBroadcast(s, hot, scale), key, "left_anti")
         .withColumn("jk", concat_ws("\u0000", key.map(col): _*))
       // explode+anti-join wreck the size estimate: without the hint Spark
       // broadcasts the whole exploded corpus into the self-join build side
@@ -410,7 +392,7 @@ object TextOps {
           .select(col("sa.doc_id").as("doc_a"), col("sb.doc_id").as("doc_b")).distinct())
     }
     val jaccard = col("n_inter").cast("double") / (col("na") + col("nb") - col("n_inter"))
-    verifyJoin(s, cand, docsets, "a", "b")
+    verifyJoin(s, cand, docsets, "a", "b", scale)
       .select(col("doc_a"), col("doc_b"),
         expr("graft_intersect_count(a.shset, b.shset)").as("n_inter"),
         size(col("a.shset")).as("na"), size(col("b.shset")).as("nb"))
@@ -630,25 +612,22 @@ object TextOps {
     * Members are exposed as an md5 over the sorted id list (portable
     * string, no array-typed oracle columns), plus the count.
     */
-  private val ccLocalMaxEdgesDefault = 4L << 20
-  private def ccLocalMaxEdges(s: SparkSession): Long =
-    s.conf.getOption("spark.graft.text.ccLocalMaxEdges")
-      .map(_.toLong).getOrElse(ccLocalMaxEdgesDefault)
+  private val CcLocalMaxEdges = 4L << 20
 
   /** (doc, lbl) component labels of the simhash near-dup graph —
-    * regime-gated exactly like [[groupsImpl]]; shared with the canonical-
-    * selection entry.
+    * regime-gated exactly like [[groupsImpl]] (`scale` forces the
+    * distributed loop); shared with the canonical-selection entry.
     */
-  private def componentLabels(s: SparkSession, d: String): DataFrame = {
+  private def componentLabels(s: SparkSession, d: String, scale: Boolean): DataFrame = {
     val pairs = simhashPairs(s, d).select("doc_a", "doc_b")
     val nEdges = pairs.count()
-    if (nEdges <= ccLocalMaxEdges(s)) localUnionFind(s, pairs)
+    if (nEdges <= gate(CcLocalMaxEdges, scale)) localUnionFind(s, pairs)
     else distributedComponents(pairs)
   }
 
-  private def groupsImpl(s: SparkSession, d: String): DataFrame = {
+  private def groupsImpl(s: SparkSession, d: String, scale: Boolean): DataFrame = {
     import org.apache.spark.sql.functions._
-    val labels: DataFrame = componentLabels(s, d)
+    val labels: DataFrame = componentLabels(s, d, scale)
     // membership digest: bit_xor of per-doc md5 prefixes — O(1) aggregate
     // state and map-side-combinable, where a sorted collect_list would put
     // a pathological dup cluster (the same boilerplate a million times)
@@ -707,12 +686,18 @@ object TextOps {
   private[queries] def distributedComponents(pairs: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions._
     val sc = pairs.sparkSession.sparkContext
+    val both = pairs.union(pairs.select(col("doc_b"), col("doc_a"))).toDF("doc", "nbr")
+    // labels are doc ids, and the convergence UDF below takes primitive
+    // longs: any other id type would reach it through an implicit cast,
+    // null-skip it, read 0 changes and stop after one round unconverged
+    val idType = both.schema("doc").dataType
+    require(idType == LongType,
+      s"connected components need BIGINT doc ids, got ${idType.simpleString}")
     // pre-partitioned by the probe key ONCE: localCheckpoint preserves the
     // physical partitioning, so every round's propagation join reuses this
     // layout and only the (doc, lbl) labels — never the edge list, the big
     // side at 100 TB — cross an exchange again
-    val edges0 = pairs.union(pairs.select(col("doc_b"), col("doc_a")))
-      .toDF("doc", "nbr").repartition(col("nbr")).localCheckpoint()
+    val edges0 = both.repartition(col("nbr")).localCheckpoint()
     // Data-bounded loop partitioning (the r16 pagerank rule applied here):
     // every round runs ~5 label exchanges, and at the session's core-count
     // shuffle partitioning that is ~160 tiny tasks/round of pure launch
@@ -743,32 +728,31 @@ object TextOps {
     // read of the label set per round. Correctness under task retries:
     // transformation-stage accumulator updates can only OVER-count (a
     // re-run partition re-adds), never turn a real change into zero —
-    // and `changed` gates only on ==0 / >0, with the exact value used
-    // for debug output alone. The UDF is nondeterministic so the
-    // optimizer cannot duplicate or reorder the side-effecting call.
+    // and `changed` gates only on ==0 / >0. The UDF is nondeterministic
+    // so the optimizer cannot duplicate or reorder the side-effecting call.
     val chgAcc = sc.longAccumulator("graft_cc_changed")
     val chgUdf = udf { (l: Long, o: Long) =>
       val c = l < o
       if (c) chgAcc.add(1L)
       c
     }.asNondeterministic()
-    // AQE OFF inside the loop (conf-gated, default off): each round's
+    // AQE OFF inside the loop in the local checkpoint mode: each round's
     // checkpoint action is a ~5-exchange DAG and AQE materializes every
-    // exchange as its OWN job — measured 7-8 jobs/round at sf0.1
-    // (GRAFT_CC_DEBUG) against a ~130 ms/job scheduling floor
-    // (DevFloorProbe); non-AQE runs the round as ONE job whose exchanges
-    // use the loopParts sizing above (AQE coalescing cannot see the
-    // checkpointed relations' stats anyway). The candidate-pair subtree
-    // BEFORE the loop keeps the session's AQE. A deployment with giant
-    // skewed components can re-enable AQE's runtime skew splitting inside
-    // the loop via spark.graft.cc.loop.aqe=true; the loop's own skew
-    // bound is documented in the method scaladoc.
+    // exchange as its OWN job — measured 7-8 jobs/round at sf0.1 against
+    // a ~130 ms/job scheduling floor (OPTIMIZATION_r16.md,
+    // BENCH_AB_r16.json); non-AQE runs the round as ONE job whose
+    // exchanges use the loopParts sizing above (AQE coalescing cannot see
+    // the checkpointed relations' stats anyway). The candidate-pair
+    // subtree BEFORE the loop keeps the session's AQE. The lineage-keeping
+    // cluster mode (`Materialize` mode `persist`) also keeps AQE's runtime
+    // skew splitting inside the loop; the loop's own skew bound is
+    // documented in the method scaladoc.
     val s = pairs.sparkSession
     val aqeKey = "spark.sql.adaptive.enabled"
     val partsKey = "spark.sql.shuffle.partitions"
     val aqeBefore = s.conf.getOption(aqeKey)
     val partsBefore = s.conf.getOption(partsKey)
-    val loopAqe = s.conf.getOption("spark.graft.cc.loop.aqe").getOrElse("false")
+    val loopAqe = (graft.util.Materialize.mode(s) == "persist").toString
     var changed = 1L
     var rounds = 0
     var gen: DataFrame = null
@@ -781,13 +765,11 @@ object TextOps {
     gen = edges.select(col("doc")).distinct()
       .withColumn("lbl", col("doc")).localCheckpoint()
     labels = gen
-    val lblType = gen.schema("lbl").dataType
     while (changed > 0 && rounds < 50) {
       chgAcc.reset()
-      val jobs0 = sc.statusTracker.getJobIdsForGroup(null).length
       val nbrLbl = edges
         .join(labels.select(col("doc").as("nbr"), col("lbl").as("cand")), "nbr")
-        .select(col("doc"), col("cand"), lit(null).cast(lblType).as("old"))
+        .select(col("doc"), col("cand"), lit(null).cast(LongType).as("old"))
       // each doc's PREVIOUS label rides through the aggregate on its own
       // labels row (exactly one per doc, so max() ignores the nbr rows'
       // nulls) — the post-jump re-join with the old generation disappears
@@ -807,19 +789,18 @@ object TextOps {
       // deep label chains — at 100 TB every avoided round is one fewer
       // full shuffle of the label set, and the second jump reuses the
       // first's (doc-keyed) partitioning for its probe side
-      val next = jump(jump(propagated))
+      val marked = jump(jump(propagated))
         .select(col("doc"), col("lbl"), chgUdf(col("lbl"), col("old")).as("chg"))
-        .localCheckpoint()
+      // the change count exists only if the checkpoint computes `chg`: a
+      // frame without it would read 0 and stop after one round unconverged
+      require(marked.columns.contains("chg"), "the checkpointed round must carry chg")
+      val next = marked.localCheckpoint()
       changed = chgAcc.value
       // `next` is materialized — the previous generation's blocks are dead
       freeLocalCheckpoint(gen)
       gen = next
       labels = next.select("doc", "lbl")
       rounds += 1
-      if (sys.env.contains("GRAFT_CC_DEBUG")) {
-        val jobs = sc.statusTracker.getJobIdsForGroup(null).length - jobs0
-        println(s"GRAFT_CC round=$rounds changed=$changed jobs=$jobs")
-      }
     }
     } finally {
       aqeBefore match {
@@ -854,8 +835,8 @@ object TextOps {
        |FROM ranked WHERE rn = 1
        |ORDER BY group_id""".stripMargin
 
-  private def canonicalImpl(s: SparkSession, d: String): DataFrame = {
-    componentLabels(s, d).createOrReplaceTempView("dup_labels")
+  private def canonicalImpl(s: SparkSession, d: String, scale: Boolean): DataFrame = {
+    componentLabels(s, d, scale).createOrReplaceTempView("dup_labels")
     s.sql(
       s"""WITH toks AS (
          |  SELECT doc_id, explode(split(text, ' ')) AS tok FROM documents),
@@ -1273,7 +1254,7 @@ object TextOps {
     ),
 
     // --- blocked exact n-gram Jaccard near-dup ------------------------------
-    "dedup_ngram_jaccard" -> QueryDef(ngramImpl _, Some(ngramOracle)),
+    "dedup_ngram_jaccard" -> QueryDef(ngramImpl(_, _, scale = false), Some(ngramOracle)),
 
     // --- SimHash near-dup: 32-bit token-space fingerprints ------------------
     "dedup_simhash" -> QueryDef(
@@ -1281,7 +1262,7 @@ object TextOps {
       simhashSql("UNNEST(string_split(text, ' ')) AS tok", "xor(%s, %s)")),
 
     // --- near-dup group clustering: components + keeper per group ----------
-    "dedup_groups" -> QueryDef(groupsImpl _, Some(groupsOracle)),
+    "dedup_groups" -> QueryDef(groupsImpl(_, _, scale = false), Some(groupsOracle)),
 
     // --- canonical-document selection: production dedup keeps the BEST
     // group member, not the first — here argmax by integer-exact quality
@@ -1289,41 +1270,31 @@ object TextOps {
     // pick is total and bit-identical cross-engine. One window over the
     // label relation (tiny next to the corpus), quality from one
     // tokenize pass of keyed combinable aggregates.
-    "dedup_canonical" -> QueryDef(canonicalImpl _, Some(canonicalOracle)),
+    "dedup_canonical" -> QueryDef(canonicalImpl(_, _, scale = false), Some(canonicalOracle)),
 
     // --- MinHash + LSH banding near-dup -------------------------------------
-    "dedup_minhash_lsh" -> QueryDef(minhashImpl _, Some(minhashOracle)),
+    "dedup_minhash_lsh" -> QueryDef(minhashImpl(_, _, scale = false), Some(minhashOracle)),
 
     // --- scale-regime twins: same oracles, large-corpus code paths ----------
     // The regime gates choose branches from Catalyst size estimates, so at
     // oracle scale the broadcast/driver branches always win and the 100 TB
     // branches would ship unexercised by the correctness gate. These
     // entries force the scale branches (per-occurrence minhash, semi-join
-    // + shuffle-hash verify, distributed pointer-jumping components) via
-    // session conf and check them against the SAME DuckDB oracles.
+    // + shuffle-hash verify, distributed pointer-jumping components) by
+    // passing `scale = true`, which sets every gate the impl reads to 0,
+    // and check them against the SAME DuckDB oracles.
     "dedup_minhash_lsh_scale" -> QueryDef(
-      (s, d) => withConf(s,
-        "spark.graft.text.dictBroadcastMaxBytes" -> "0",
-        "spark.graft.text.verifyBroadcastMaxBytes" -> "0",
-        "spark.graft.text.derivedBroadcastMaxBytes" -> "0")(minhashImpl(s, d)),
-      Some(minhashOracle)),
+      minhashImpl(_, _, scale = true), Some(minhashOracle)),
     "dedup_ngram_jaccard_scale" -> QueryDef(
-      (s, d) => withConf(s,
-        "spark.graft.text.verifyBroadcastMaxBytes" -> "0",
-        "spark.graft.text.derivedBroadcastMaxBytes" -> "0")(ngramImpl(s, d)),
-      Some(ngramOracle)),
+      ngramImpl(_, _, scale = true), Some(ngramOracle)),
     "dedup_groups_distributed" -> QueryDef(
-      (s, d) => withConf(s,
-        "spark.graft.text.ccLocalMaxEdges" -> "0")(groupsImpl(s, d)),
-      Some(groupsOracle)),
+      groupsImpl(_, _, scale = true), Some(groupsOracle)),
 
     // canonical selection over the FORCED distributed-components branch —
     // the same oracle hashes, so the pointer-jumping labels must agree
     // with the recursive-CTE closure exactly like the keeper entry does
     "dedup_canonical_distributed" -> QueryDef(
-      (s, d) => withConf(s,
-        "spark.graft.text.ccLocalMaxEdges" -> "0")(canonicalImpl(s, d)),
-      Some(canonicalOracle))
+      canonicalImpl(_, _, scale = true), Some(canonicalOracle))
   )
 
   def queries: Map[String, QueryDef] = qs

@@ -146,8 +146,7 @@ object ColumnStatsIndex {
     new java.util.LinkedHashMap[(String, String, String), ColumnStatsLookup](16, 0.75f, true) {
       override def removeEldestEntry(
           e: java.util.Map.Entry[(String, String, String), ColumnStatsLookup]): Boolean =
-        size > sys.props.get("graft.colstats.lookup.cache.entries")
-          .flatMap(_.toIntOption).getOrElse(8)
+        size > 8
     }
 
   /** All column-stat entries as of the MDT's latest commit, HFile log

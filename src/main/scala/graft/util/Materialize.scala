@@ -68,7 +68,7 @@ object Materialize {
     * scale-dependent settings ride conf with bench-comparable local
     * defaults).
     */
-  private def mode(s: SparkSession): String =
+  private[graft] def mode(s: SparkSession): String =
     s.conf.getOption("spark.graft.materialize.mode").getOrElse("checkpoint")
 
   private def pending(s: SparkSession) = {

@@ -200,13 +200,10 @@ class CurateOpsSpec extends SparkTestBase {
   test("bpe driver regime equals the forced distributed SQL chain") {
     // gate to 0 -> the unrolled SQL chain; both regimes must be
     // row-identical for train AND tokenize
-    def forced(name: String): Seq[String] = {
-      spark.conf.set("spark.graft.text.bpeDriverMaxVocab", "0")
-      try run(name).collect().map(_.toString).toSeq
-      finally spark.conf.unset("spark.graft.text.bpeDriverMaxVocab")
-    }
-    assert(run("text_bpe_train").collect().map(_.toString).toSeq == forced("text_bpe_train"))
-    assert(run("text_bpe_tokenize").collect().map(_.toString).toSeq == forced("text_bpe_tokenize"))
+    def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq
+    assert(rows(run("text_bpe_train")) == rows(CurateOps.bpeTrainImpl(spark, sfDir, gate = 0)))
+    assert(rows(run("text_bpe_tokenize")) ==
+      rows(CurateOps.bpeTokenizeImpl(spark, sfDir, gate = 0)))
   }
 
   test("bpe tokenize counts match the reference symbolization per document") {

@@ -65,17 +65,27 @@ class DedupGroupsSpec extends SparkTestBase {
         Map(1L -> 1L, 2L -> 1L, 3L -> 3L, 4L -> 3L))
       assert(spark.conf.get(aqeKey) == "true")
       assert(spark.conf.get(partsKey) == "17")
-      // and the opt-in: loop AQE follows spark.graft.cc.loop.aqe
-      spark.conf.set("spark.graft.cc.loop.aqe", "true")
+      // and the lineage-keeping materialize mode, which keeps AQE on
+      // inside the loop
+      spark.conf.set("spark.graft.materialize.mode", "persist")
       assert(labelsOf(TextOps.distributedComponents(pairs)) ==
         Map(1L -> 1L, 2L -> 1L, 3L -> 3L, 4L -> 3L))
       assert(spark.conf.get(aqeKey) == "true")
       assert(spark.conf.get(partsKey) == "17")
     } finally {
-      spark.conf.unset("spark.graft.cc.loop.aqe")
+      spark.conf.unset("spark.graft.materialize.mode")
       def restore(k: String, v: Option[String]): Unit =
         v.fold(spark.conf.unset(k))(spark.conf.set(k, _))
       restore(aqeKey, aqe0); restore(partsKey, parts0)
     }
+  }
+
+  test("non-BIGINT ids fail loudly instead of returning unconverged labels") {
+    // the convergence UDF takes primitive longs: string ids would reach
+    // it through a cast, count no change and stop after one round
+    import spark.implicits._
+    val pairs = Seq("1" -> "2", "2" -> "3", "3" -> "4").toDF("doc_a", "doc_b")
+    val e = intercept[IllegalArgumentException](TextOps.distributedComponents(pairs))
+    assert(e.getMessage.contains("connected components need BIGINT doc ids, got string"))
   }
 }

@@ -23,14 +23,12 @@ class GraphOpsSpec extends SparkTestBase {
   }
 
   test("the shuffle-hash regime (node set too big to broadcast) is bit-identical") {
-    val key = "graft.pagerank.broadcast.max.bytes"
     val viaBroadcast = result.collect()
-    sys.props(key) = "0" // force the co-partitioned shuffle-hash path
     try {
-      val viaShuffle = GraphOps.sparkImpl(spark, sfDir).collect()
+      // gate 0 forces the co-partitioned shuffle-hash path
+      val viaShuffle = GraphOps.sparkImpl(spark, sfDir, broadcastMaxBytes = 0L).collect()
       assert(viaShuffle.toSeq == viaBroadcast.toSeq)
     } finally {
-      sys.props.remove(key)
       // the forced-gate prep must not stay pinned for the shared session
       GraphOps.dropPrep(spark, "pagerank_prep:0")
     }

@@ -114,10 +114,10 @@ class PlanShapeSpec extends SparkTestBase {
     }
 
   test("minhash scale regime never broadcasts or sort-merges the array relation") {
-    // the forced large-corpus regime (dedup_minhash_lsh_scale sets the
-    // gate confs to 0): the corpus-sized docset relation must NOT be a
-    // broadcast build side anywhere — the candidate-id semi-join plus a
-    // shuffle-hash join replaces it
+    // the forced large-corpus regime (dedup_minhash_lsh_scale passes
+    // scale = true, every gate at 0): the corpus-sized docset relation
+    // must NOT be a broadcast build side anywhere — the candidate-id
+    // semi-join plus a shuffle-hash join replaces it
     val nodes = allNodes(df("dedup_minhash_lsh_scale"))
     assert(arrayBroadcasts(nodes).isEmpty,
       "above the gate the doc-set array relation must never be broadcast")

@@ -5,7 +5,8 @@ import graft.{SparkEntry, SparkTestBase}
 /** Differential tests for the regime-gated scale twins: each `*_scale` /
   * `*_distributed` entry forces the large-corpus branch (per-occurrence
   * minhash, semi-join + shuffle-hash verify, distributed pointer-jumping
-  * components) via session conf and must return row-for-row the same
+  * components, bloom or plain shuffle-hash decontamination) by passing
+  * the forced regime to the impl, and must return row-for-row the same
   * result as its small-regime base entry — the two branches of every gate
   * are interchangeable by construction, and the oracle harness re-proves
   * both against the same DuckDB SQL at sf0.01.
@@ -31,6 +32,10 @@ class ScaleRegimeSpec extends SparkTestBase {
 
   test("distributed components match the driver union-find") {
     assertTwin("dedup_groups", "dedup_groups_distributed")
+  }
+
+  test("canonical selection over distributed components matches the driver union-find") {
+    assertTwin("dedup_canonical", "dedup_canonical_distributed")
   }
 
   test("decontaminate bloom-prefilter regime matches the broadcast regime") {
