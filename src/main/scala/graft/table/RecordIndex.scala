@@ -109,7 +109,7 @@ object RecordIndex {
 
   /** Probe ONE index slice for `keys` — the per-slice unit shared by
     * the driver-side [[lookup]] and the executor-side
-    * [[lookupDistributed]], delegating the base+log overlay walk to
+    * [[probeDistributed]], delegating the base+log overlay walk to
     * [[MdtSliceProbe]]. Throws on structural problems (callers translate
     * to their fallback).
     */
@@ -161,50 +161,86 @@ object RecordIndex {
     RecordIndexLookup(latest, out.collect { case (k, Some(e)) => k -> e }.toMap)
   }
 
-  /** Distributed lookup for planning-oversized key sets: `keys` shuffle
-    * by their mapped group, one executor task probes one index file
-    * group, and each group's HFiles are read ONCE cluster-wide — no
-    * driver collect of the key set (the 4M-key driver cap this lifts
-    * lives in [[AggMaintenance.maintainCountSumIndexed]]). Requires a
-    * provably hash-aligned slice set; throws otherwise (callers fall
-    * back, same contract as [[lookup]]). Returns the MDT as-of commit
-    * and a Dataset of found entries.
+  /** An opened `record_index` partition whose slices provably align with
+    * [[fileGroupIndex]]: the MDT commit it was read at, its slices (the
+    * write side names its log appends from them) and each group
+    * ordinal's probe files. One open serves a whole commit — the
+    * writer's probe and its index maintenance read the same slice set.
     */
+  final case class Groups(asOf: String, slices: Vector[graft.fs.FileSlice],
+      files: Map[Int, SliceFiles]) {
+    def n: Int = files.size
+  }
+
+  /** Open the partition at the MDT's latest commit. Throws when the slice
+    * set is not hash-aligned: a gap would shrink the modulus, so a probe
+    * would miss keys and an append would misroute them.
+    */
+  def openGroups(dataTableBase: String, hadoopConf: Configuration): Groups = {
+    val (latest, slices) = MetadataTable.openPartition(dataTableBase, PartitionName, hadoopConf)
+    val files = alignedGroups(slices).getOrElse(throw new IllegalStateException(
+      s"$PartitionName slices are not hash-aligned (${slices.map(_.fileId)}); " +
+        "a distributed lookup or append would misroute keys"))
+    Groups(latest, slices, files)
+  }
+
   /** Observability: number of distributed lookups planned (driver-side,
     * monotonic) — regime tests assert which path served a maintenance
     * run.
     */
   val distributedLookups = new java.util.concurrent.atomic.AtomicLong(0L)
 
+  /** Keys per probe batch: a group holding many millions of keys never
+    * materializes as one set (each batch re-reads the group's HFiles —
+    * the IO-for-memory trade the distributed path exists to make).
+    */
+  private val ProbeBatch = 256 * 1024
+
+  /** The distributed probe: `rows` shuffle by their key's group
+    * (`HashPartitioner(groups.n)` over [[fileGroupIndex]], so partition
+    * `g` holds exactly group `g`'s rows), one task probes one index
+    * group, and each group's HFiles are read ONCE cluster-wide — no
+    * driver collect of the key set. Every row comes back with its entry
+    * (None = absent or tombstoned), keyed by its group ordinal and still
+    * partitioned by it, so a caller's later per-group pass over the
+    * result needs no second shuffle.
+    */
+  def probeDistributed[T: scala.reflect.ClassTag](
+      rows: org.apache.spark.rdd.RDD[T],
+      groups: Groups,
+      conf: org.apache.spark.broadcast.Broadcast[graft.util.SerializableConf])(
+      key: T => String): org.apache.spark.rdd.RDD[(Int, (T, Option[RecordIndexEntry]))] = {
+    distributedLookups.incrementAndGet()
+    val (n, files, asOf) = (groups.n, groups.files, groups.asOf)
+    rows.map(r => (fileGroupIndex(key(r), n), r))
+      .partitionBy(new org.apache.spark.HashPartitioner(n))
+      .mapPartitionsWithIndex({ (g, it) =>
+        it.map(_._2).grouped(ProbeBatch).flatMap { batch =>
+          val found = probeSlice(files(g), asOf, batch.map(key).distinct, conf.value.value)
+            .collect { case (k, Some(e)) => k -> e }.toMap
+          batch.iterator.map(r => (g, (r, found.get(key(r)))))
+        }
+      }, preservesPartitioning = true)
+  }
+
+  /** Distributed lookup for planning-oversized key sets (the 4M-key
+    * driver cap this lifts lives in [[AggMaintenance
+    * .maintainCountSumIndexed]]): [[probeDistributed]] over `keys`.
+    * Requires a provably hash-aligned slice set; throws otherwise
+    * (callers fall back, same contract as [[lookup]]). Returns the MDT
+    * as-of commit and a Dataset of found entries.
+    */
   def lookupDistributed(
       dataTableBase: String,
       keys: org.apache.spark.sql.Dataset[String],
       hadoopConf: Configuration
   ): (String, org.apache.spark.sql.Dataset[RecordIndexEntry]) = {
-    distributedLookups.incrementAndGet()
-    val (latest, slices) = MetadataTable.openPartition(dataTableBase, PartitionName, hadoopConf)
-    val byGroup = alignedGroups(slices).getOrElse(throw new IllegalStateException(
-      s"$PartitionName slices are not hash-aligned (${slices.map(_.fileId)}); " +
-        "distributed lookup would misroute keys"))
-    val n = byGroup.size
+    val groups = openGroups(dataTableBase, hadoopConf)
     val spark = keys.sparkSession
-    val serConf = new graft.util.SerializableConf(hadoopConf)
-    val bc = spark.sparkContext.broadcast(byGroup)
+    val conf = spark.sparkContext.broadcast(new graft.util.SerializableConf(hadoopConf))
+    val entries = probeDistributed(keys.rdd, groups, conf)(identity).flatMap(_._2._2)
     import spark.implicits._
-    val entries = keys
-      .groupByKey(k => fileGroupIndex(k, n))
-      .flatMapGroups { (g: Int, it: Iterator[String]) =>
-        // bounded per-task memory: keys probe in fixed-size batches so a
-        // group holding many millions of keys never materializes as one
-        // Set (the batch re-reads the group's HFiles — the IO-for-memory
-        // trade this path exists to make). Duplicate keys across batches
-        // just probe twice; callers pass distinct sets.
-        it.grouped(256 * 1024).flatMap { batch =>
-          probeSlice(bc.value(g), latest, batch.distinct, serConf.value)
-            .collect { case (_, Some(e)) => e }
-        }
-      }
-    (latest, entries)
+    (groups.asOf, spark.createDataset(entries))
   }
 
   /** Decode one HoodieMetadataRecord's `recordIndexMetadata` branch.

@@ -1,11 +1,15 @@
 package graft.write
 
 import graft.core.{HoodieConfig, MetaField}
-import graft.table.HudiTable
+import graft.table.{HudiTable, RecordIndex}
+import graft.util.SerializableConf
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.HashPartitioner
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StringType
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** Write path for `df.write.format("hudi-graft")` — the user-facing
   * surface the reference stops short of (docs/reader-spec.md:345 declares
@@ -46,12 +50,21 @@ import org.apache.spark.sql.types.StringType
   * group, new keys onto the partition's SMALL groups (latest slice below
   * `hoodie.parquet.max.file.size`; capacity = remaining bytes / the
   * latest commit's bytes per record) by key hash weighted by remaining
-  * capacity. Only overflow past capacity stages fresh base files, and a
-  * commit whose driver-side insert count leaves nothing to stage skips
-  * the staging job entirely. The upsert probe is the MDT record index
-  * where the table advertises one, else a key-column join against the
-  * current snapshot pruned to (key, partition, file name) — column-pruned
-  * scan, shuffle bounded by table keys + batch keys. Driver collects are
+  * capacity. They run as ONE RDD shuffle chain of three passes: a probe
+  * pass (on a record_index table the batch partitions by its keys' index
+  * group and each task probes its group's slice; the job that caches the
+  * result also counts inserts per partition), a log pass (partitioned by
+  * file group, one log file per group) and, on a record_index table, an
+  * index pass that writes the created keys' entries and the deleted
+  * keys' tombstones straight from the probe's cached partitions — no
+  * third shuffle. That is at most four Spark jobs per upsert, counting
+  * the incoming-row dedup's shuffle, and three per delete. Only overflow
+  * past capacity stages fresh base files, and a commit whose insert
+  * count leaves nothing to stage skips the staging job entirely. The
+  * probe is the MDT record index where the table advertises one, else a
+  * key-column join against the current snapshot pruned to (key,
+  * partition, file name) — column-pruned scan, shuffle bounded by table
+  * keys + batch keys — feeding the same log pass. Driver collects are
   * bounded by file groups or partitions — table file count, never key
   * count (the same bound AggMaintenance documents).
   *
@@ -367,37 +380,45 @@ object HudiWriter {
       .partitionBy(col("__key"), col("__part"))
       .orderBy(precombine.filter(f => operation != "delete" && data.columns.contains(f))
         .map(f => col(f).desc_nulls_last).getOrElse(col("__key").asc))
-    val keyed = keyed0
+    val deduped = keyed0
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1).drop("__rn")
-      .persist()
-
+    // a MOR upsert/delete reads the batch ONCE — its probe pass persists
+    // what it routes — unless secondary-index maintenance reads it again;
+    // every other route reads it several times. Persisting a frame read
+    // once would only add a job that materializes the cache
+    val readOnce = isMor && exists && secondaryIndexes.isEmpty &&
+      (operation == "upsert" || operation == "delete")
+    val c = new Commit(spark, basePath, instant, existing, maintainsRecordIndex)
     try {
+      val keyed = if (readOnce) deduped else c.persist(deduped)
+      val maintainsColStats = existing.exists(t =>
+        graft.table.ColumnStatsIndex.isAvailable(t.config))
+      val maintainsPartStats = existing.exists(t =>
+        graft.table.PartitionStatsIndex.isAvailable(t.config))
+
       val routed = operation match {
         case "insert" | "bulk_insert" =>
           val staged = routeFresh(keyed, instant, opts)
-          Routed(Some(staged), newKeys = Some(staged))
+          Routed(Some(staged), indexChanges = c.indexChanges(Some(staged), None))
         case "insert_overwrite_table" =>
-          val rep = existing.map(_.fsView.slicesAsOf(instant)
+          val rep = existing.map(_ => c.slices
             .groupBy(_.partitionPath).view.mapValues(_.map(_.fileId).toSet).toMap)
             .getOrElse(Map.empty[String, Set[String]])
           Routed(Some(routeFresh(keyed, instant, opts)), replaced = rep)
         case "upsert" =>
           existing match {
-            case None =>
-              val staged = routeFresh(keyed, instant, opts)
-              Routed(Some(staged), newKeys = Some(staged))
+            case None => Routed(Some(routeFresh(keyed, instant, opts)))
             case Some(t) if t.config.isMor =>
-              routeMorUpsert(spark, basePath, t, keyed, instant, opts)
-            case Some(t) => routeUpsert(spark, basePath, t, keyed, instant, opts, cdcMode)
+              routeMorUpsert(c, t, keyed, opts)
+            case Some(t) => routeUpsert(c, t, keyed, opts, cdcMode)
           }
         case "delete" =>
           existing match {
             case None => throw new IllegalArgumentException(
               "hudi-graft: operation 'delete' on a nonexistent table")
-            case Some(t) if t.config.isMor =>
-              routeMorDelete(spark, basePath, t, keyed, instant)
-            case Some(t) => routeDelete(spark, basePath, t, keyed, instant, cdcMode)
+            case Some(t) if t.config.isMor => routeMorDelete(c, t, keyed)
+            case Some(t) => routeDelete(c, t, keyed, cdcMode)
           }
         case other =>
           throw new IllegalArgumentException(
@@ -405,10 +426,6 @@ object HudiWriter {
               "(insert | bulk_insert | upsert | delete | insert_overwrite_table)")
       }
 
-      val maintainsColStats = existing.exists(t =>
-        graft.table.ColumnStatsIndex.isAvailable(t.config))
-      val maintainsPartStats = existing.exists(t =>
-        graft.table.PartitionStatsIndex.isAvailable(t.config))
       // captured BEFORE staging writes any new partition dir (the fs
       // view lists lazily) — "was this partition new to this commit?"
       val priorPartitions: Set[String] =
@@ -446,9 +463,9 @@ object HudiWriter {
       // record-index maintenance: created-key entries + deleted-key
       // tombstones land as an MDT deltacommit BEFORE the data commit
       // (same freshness contract as the files partition)
-      if (maintainsRecordIndex && (routed.newKeys.nonEmpty || routed.deletedKeys.nonEmpty))
-        RecordIndexMaintenance.append(spark, basePath, instant,
-          routed.newKeys, routed.deletedKeys, timelineTz)
+      if (maintainsRecordIndex) routed.indexChanges.foreach(changes =>
+        RecordIndexMaintenance.append(spark, basePath, instant, c.recordIndex, changes,
+          timelineTz, c.conf))
       // column_stats maintenance: exact per-(file, column) bounds from
       // the staging pass, appended before the data commit
       lazy val statEntries = routed.staged
@@ -550,9 +567,8 @@ object HudiWriter {
       val tableVersion = existing.map(_.config.tableVersion).getOrElse(6)
       writeTimeline(fs, base, instant, operation, files, routed, commitSchema, tableVersion,
         timelineTz, isMor)
-      routed.retained.foreach(df => scala.util.Try(df.unpersist()))
       Seq(instant)
-    } finally keyed.unpersist()
+    } finally c.release()
   }
 
   // ---- routing ------------------------------------------------------------
@@ -576,14 +592,70 @@ object HudiWriter {
       // the rows the MOR upsert appended as log data (partition_stats
       // maintenance widens bounds from them)
       logRows: Option[DataFrame] = None,
-      // record-index maintenance inputs: locations of keys this commit
-      // CREATED (fresh groups or log-routed inserts) and keys it REMOVED
-      newKeys: Option[DataFrame] = None,
-      deletedKeys: Option[DataFrame] = None,
-      // persisted frames the MAINTENANCE passes still consume — routing
-      // must not unpersist them on return (the probe/join would silently
-      // re-execute per pass); write() releases them after the commit
-      retained: Seq[DataFrame] = Nil)
+      // record-index maintenance input: locations of keys this commit
+      // CREATED (fresh groups or log-routed inserts) and tombstones of
+      // keys it REMOVED
+      indexChanges: Option[RDD[RecordIndexMaintenance.Change]] = None)
+
+  /** Per-commit shared state. The Hadoop conf is serialized once — one
+    * broadcast shared by the probe, log and index passes; the
+    * record_index partition is opened at most once (probe and
+    * maintenance read the same slices); the latest file slices are
+    * planned once; and every frame or RDD routing persists is registered
+    * here and released in write()'s `finally`, also when the commit fails
+    * partway through.
+    */
+  private final class Commit(
+      val spark: SparkSession,
+      val basePath: String,
+      val instant: String,
+      table: Option[HudiTable],
+      val indexed: Boolean) {
+    val hadoopConf: org.apache.hadoop.conf.Configuration = spark.sessionState.newHadoopConf()
+    private var bc: Option[Broadcast[SerializableConf]] = None
+    private val held = scala.collection.mutable.ArrayBuffer.empty[() => Unit]
+
+    def conf: Broadcast[SerializableConf] = bc.getOrElse {
+      val b = spark.sparkContext.broadcast(new SerializableConf(hadoopConf))
+      bc = Some(b)
+      b
+    }
+
+    /** The target's latest file slices as of this commit's instant. */
+    lazy val slices: Vector[graft.fs.FileSlice] = table.get.fsView.slicesAsOf(instant)
+
+    lazy val recordIndex: RecordIndex.Groups = RecordIndex.openGroups(basePath, hadoopConf)
+
+    def persist(df: DataFrame): DataFrame = {
+      val p = df.persist()
+      held += (() => p.unpersist())
+      p
+    }
+
+    // spill rather than drop: a recomputed partition could resolve the
+    // dedup's precombine ties differently from the one already routed
+    def persist[T](rdd: RDD[T]): RDD[T] = {
+      rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      held += (() => rdd.unpersist())
+      rdd
+    }
+
+    /** Record-index changes of frames of created-key locations and
+      * removed keys; None on a table without a record index.
+      */
+    def indexChanges(
+        entries: Option[DataFrame],
+        tombstones: Option[DataFrame]): Option[RDD[RecordIndexMaintenance.Change]] =
+      if (!indexed) None
+      else RecordIndexMaintenance.changesOf(entries, tombstones, recordIndex.n)
+
+    def release(): Unit = {
+      held.foreach(f => scala.util.Try(f()))
+      held.clear()
+      bc.foreach(b => scala.util.Try(b.destroy()))
+      bc = None
+    }
+  }
 
   /** One MOR log file this commit appended: becomes a write-stats entry
     * (numInserts = `inserts`, numUpdateWrites = the rest of `rows`, or
@@ -604,15 +676,8 @@ object HudiWriter {
     * per-row UDF in the insert hot path.
     */
   private def routeFresh(keyed: DataFrame, instant: String, opts: Options): DataFrame = {
-    val bytes = BigInt(keyed.queryExecution.optimizedPlan.stats.sizeInBytes.toString)
-    // stats-less leaves (RDD-backed frames, JDBC) estimate at
-    // spark.sql.defaultSizeInBytes (≈ Long.Max) — an absurd reading must
-    // not explode into 4096 tiny files; fall back to the cluster's
-    // parallelism as the group count
-    val groups =
-      if (bytes > BigInt(1L << 50))
-        keyed.sparkSession.sparkContext.defaultParallelism.max(1)
-      else (bytes / opts.maxFileBytes).toLong.max(0L).min(4096L).toInt + 1
+    val groups = freshGroups(keyed.sparkSession,
+      BigInt(keyed.queryExecution.optimizedPlan.stats.sizeInBytes.toString), opts.maxFileBytes)
     val fidExpr = {
       val h = md5(concat(lit(s"$instant/"), col("__part"), lit("/"),
         col("__bucket").cast(StringType)))
@@ -627,11 +692,22 @@ object HudiWriter {
       .drop("__bucket")
   }
 
-  /** (key → location) probe shared by upsert/delete routing. On a
-    * record_index table, the batch's distinct keys look up the MDT index
-    * DISTRIBUTED (keys shuffle by Hudi's key-hash group mapping; each
-    * index group's HFiles are read once cluster-wide) — ZERO snapshot
-    * scans, IO proportional to batch keys — and matching becomes GLOBAL
+  /** Fresh groups per partition for `bytes` of rows: one per
+    * `maxFileBytes`, at most 4096. Stats-less leaves (RDD-backed frames,
+    * JDBC) estimate at spark.sql.defaultSizeInBytes (≈ Long.Max) — an
+    * absurd reading must not explode into 4096 tiny files; it falls back
+    * to the cluster's parallelism as the group count.
+    */
+  private def freshGroups(spark: SparkSession, bytes: BigInt, maxFileBytes: Long): Int =
+    if (bytes > BigInt(1L << 50)) spark.sparkContext.defaultParallelism.max(1)
+    else (bytes / maxFileBytes).toLong.max(0L).min(4096L).toInt + 1
+
+  /** The record_index probe every upsert/delete on an indexed table
+    * plans: `rows` look up the MDT index DISTRIBUTED
+    * ([[RecordIndex.probeDistributed]]: rows shuffle by Hudi's key-hash
+    * group mapping; each index group's HFiles are read once
+    * cluster-wide) — ZERO snapshot scans, IO proportional to batch keys
+    * — and matching becomes GLOBAL
     * (key alone: upstream's record-index semantics with
     * `hoodie.record.index.update.partition.path=false`, so a row arriving
     * with a changed partition value updates the record at its CURRENT
@@ -641,41 +717,45 @@ object HudiWriter {
     * REFUSES the write loudly rather than falling back: the snapshot
     * probe has DIFFERENT (non-global) matching semantics, and a silent
     * downgrade would e.g. make a keys-only global delete match nothing.
-    * Non-indexed tables probe the snapshot pruned to (key, partition,
-    * file name): non-global, column-pruned, shuffle bounded by table
-    * keys + batch keys. Returns (locations (__key, __part, __fid),
-    * global?).
     */
-  private def probeLocations(
-      spark: SparkSession,
-      basePath: String,
-      t: HudiTable,
-      keyed: DataFrame): (DataFrame, Boolean) = {
-    if (graft.table.RecordIndex.isAvailable(t.config)) {
-      // an ADVERTISED record index is trusted (the same contract the
-      // read side's latest-snapshot plans apply: every writer of an
-      // index-advertising table must maintain it — this writer does)
-      try {
-        import spark.implicits._
-        val (_, entries) = graft.table.RecordIndex.lookupDistributed(
-          basePath, keyed.select("__key").distinct().as[String],
-          spark.sessionState.newHadoopConf())
-        indexProbes.incrementAndGet()
-        return (entries.toDF().select(col("key").as("__key"),
-          col("partitionPath").as("__part"), col("fileId").as("__fid")), true)
-      } catch {
+  private def indexProbe[T: scala.reflect.ClassTag](c: Commit, rows: RDD[T])(
+      key: T => String): RDD[(Int, (T, Option[graft.table.RecordIndexEntry]))] = {
+    val groups =
+      try c.recordIndex
+      catch {
         case e: IllegalStateException => throw new UnsupportedOperationException(
           "hudi-graft: the table advertises a record_index this writer cannot probe " +
             s"(${e.getMessage}) — refusing rather than silently downgrading to the " +
             "non-global snapshot probe (a keys-only delete would match nothing)", e)
       }
-    }
+    indexProbes.incrementAndGet()
+    RecordIndex.probeDistributed(rows, groups, c.conf)(key)
+  }
+
+  /** The non-indexed probe: the current snapshot pruned to (key,
+    * partition, file name) as (__key, __part, __fid) — non-global,
+    * column-pruned, shuffle bounded by table keys + batch keys.
+    */
+  private def snapshotLocations(c: Commit): DataFrame = {
     snapshotProbes.incrementAndGet()
-    (spark.read.format("hudi-graft").load(basePath).select(
+    c.spark.read.format("hudi-graft").load(c.basePath).select(
       col(MetaField.RecordKey).as("__key"),
       col(MetaField.PartitionPath).as("__part"),
-      fidFromFileName.as("__fid")), false)
+      fidFromFileName.as("__fid"))
   }
+
+  /** (key → location) probe of the COW upsert/delete routing: the
+    * batch's distinct keys through [[indexProbe]] on a record_index
+    * table, else [[snapshotLocations]]. Returns (locations (__key,
+    * __part, __fid), global?).
+    */
+  private def probeLocations(c: Commit, keyed: DataFrame): (DataFrame, Boolean) =
+    if (c.indexed) {
+      import c.spark.implicits._
+      val found = indexProbe(c, keyed.select("__key").distinct().as[String].rdd)(identity)
+        .flatMap(_._2._2.map(e => (e.key, e.partitionPath, e.fileId)))
+      (found.toDF("__key", "__part", "__fid"), true)
+    } else (snapshotLocations(c), false)
 
   /** Join the batch against probe locations: global probes match on the
     * key alone and OVERRIDE the incoming partition with the record's
@@ -815,16 +895,15 @@ object HudiWriter {
     * proportional to the cdc bytes and past the cleaner horizon.
     */
   private def routeUpsert(
-      spark: SparkSession,
-      basePath: String,
+      c: Commit,
       t: HudiTable,
       keyed: DataFrame,
-      instant: String,
       opts: Options,
       cdcMode: Option[String]
   ): Routed = {
-    val (index, global) = probeLocations(spark, basePath, t, keyed)
-    val routed = joinLocations(keyed, index, global).persist()
+    val (spark, basePath, instant) = (c.spark, c.basePath, c.instant)
+    val (index, global) = probeLocations(c, keyed)
+    val routed = c.persist(joinLocations(keyed, index, global))
     locally {
       val matched = routed.filter(col("__fid").isNotNull)
       // DISTINCT touched groups: bounded by table file count, never keys
@@ -834,11 +913,11 @@ object HudiWriter {
       val freshPart = routeFresh(routed.filter(col("__fid").isNull).drop("__fid"),
         instant, opts)
       if (touched.isEmpty)
-        return Routed(Some(freshPart), newKeys = Some(freshPart), retained = Seq(routed))
+        return Routed(Some(freshPart), indexChanges = c.indexChanges(Some(freshPart), None))
 
       // prevCommit per rewritten group = the base instant of the slice
       // being rewritten (the metadata CDC's savepoint guard verifies)
-      val prevCommits = t.fsView.slicesAsOf(instant)
+      val prevCommits = c.slices
         .filter(sl => touched.contains(sl.fileId))
         .map(sl => sl.fileId -> sl.commitTimestamp).toMap
 
@@ -874,7 +953,7 @@ object HudiWriter {
       }
       Routed(Some(carried.unionByName(updated).unionByName(fresh)),
         updateCounts = perFid, prevCommits = prevCommits, cdcFiles = sidecars,
-        newKeys = Some(freshPart), retained = Seq(routed))
+        indexChanges = c.indexChanges(Some(freshPart), None))
     }
   }
 
@@ -887,25 +966,24 @@ object HudiWriter {
     * stored row, after = null).
     */
   private def routeDelete(
-      spark: SparkSession,
-      basePath: String,
+      c: Commit,
       t: HudiTable,
       keyed: DataFrame,
-      instant: String,
       cdcMode: Option[String]
   ): Routed = {
-    val (index, global) = probeLocations(spark, basePath, t, keyed)
-    val matched = (if (global)
+    val (spark, basePath, instant) = (c.spark, c.basePath, c.instant)
+    val (index, global) = probeLocations(c, keyed)
+    val matched = c.persist(if (global)
       keyed.select("__key").distinct().join(index, Seq("__key"), "inner")
     else keyed.select("__key", "__part")
-      .join(index, Seq("__key", "__part"), "inner")).persist()
+      .join(index, Seq("__key", "__part"), "inner"))
     locally {
       val perFid = matched.groupBy("__fid").count().collect()
         .map(r => r.getString(0) -> r.getLong(1)).toMap
       val touched = perFid.keySet
-      if (touched.isEmpty) return Routed(None, retained = Seq(matched))
+      if (touched.isEmpty) return Routed(None)
       val dataColsAll = t.tableSchema.fieldNames.filterNot(MetaField.all.contains)
-      val slices = t.fsView.slicesAsOf(instant).filter(sl => touched.contains(sl.fileId))
+      val slices = c.slices.filter(sl => touched.contains(sl.fileId))
       val prevCommits = slices.map(sl => sl.fileId -> sl.commitTimestamp).toMap
       val required = slices.map(sl => sl.fileId -> sl.partitionPath).toMap
       val stored = spark.read.format("hudi-graft")
@@ -925,75 +1003,162 @@ object HudiWriter {
       }
       Routed(Some(survivors), deleteCounts = perFid, prevCommits = prevCommits,
         cdcFiles = sidecars, requiredGroups = required,
-        deletedKeys = Some(matched.select("__key")), retained = Seq(matched))
+        indexChanges = c.indexChanges(None, Some(matched.select("__key"))))
     }
   }
 
-  /** MOR upsert routing (deltacommit): matched keys append as ONE avro
-    * data block per touched file group onto the group's latest slice —
-    * full meta-prefixed rows stamped with the new instant, so the MOR
-    * merge's overwrite-with-latest picks them over the base rows.
-    * Unmatched keys (inserts) go to SMALL existing groups first —
+  /** One batch row through the MOR passes: record key, partition path
+    * (the record's CURRENT one once a global probe matched it), file
+    * group (null until the probe matches or [[InsertRoute]] assigns
+    * one), the data columns (null for deletes), and whether it is an
+    * insert routed into a small group's log.
+    */
+  private[write] final case class Loc(
+      key: String,
+      part: String,
+      fid: String,
+      data: Row,
+      ins: Boolean = false)
+
+  /** Probe pass of a MOR upsert or delete: the batch as [[Loc]]s matched
+    * to their file groups. On a record_index table the rows partition by
+    * their key's index group and each task probes its group's slice
+    * ([[indexProbe]]) with GLOBAL matching: a matched row takes the
+    * record's current partition, and a delete keeps one row per matched
+    * key. The result is persisted and also returned keyed by group
+    * ordinal, still partitioned by it, for the index pass. Without an
+    * index the non-global snapshot join ([[snapshotLocations]]) feeds
+    * the same passes; only an upsert, which reads it twice, persists it.
+    */
+  private def probeMor(
+      c: Commit,
+      keyed: DataFrame,
+      deletes: Boolean): (RDD[Loc], Option[RDD[(Int, Loc)]]) = {
+    val dataCols = keyed.columns.filterNot(Set("__key", "__part").contains).toSeq
+    def locs(df: DataFrame, fid: Boolean): RDD[Loc] =
+      df.select(Seq(col("__key"), col("__part")) ++
+        (if (fid) Seq(col("__fid")) else Seq(lit(null).cast(StringType))) ++
+        (if (deletes) Nil else Seq(struct(dataCols.map(col): _*))): _*)
+        .rdd.map(r => Loc(r.getString(0), r.getString(1), r.getString(2),
+          if (deletes) null else r.getStruct(3)))
+    if (c.indexed) {
+      val probed = indexProbe(c, locs(keyed, fid = false))(_.key).mapPartitions({ it =>
+        val seen = scala.collection.mutable.HashSet.empty[String]
+        it.flatMap {
+          case (g, (l, Some(e))) =>
+            if (deletes && !seen.add(l.key)) None
+            else Some(g -> l.copy(part = e.partitionPath, fid = e.fileId))
+          case (g, (l, None)) => if (deletes) None else Some(g -> l)
+        }
+      }, preservesPartitioning = true)
+      (c.persist(probed).values, Some(probed))
+    } else {
+      val index = snapshotLocations(c)
+      val joined =
+        if (deletes) keyed.select("__key", "__part").join(index, Seq("__key", "__part"), "inner")
+        else keyed.join(index, Seq("__key", "__part"), "left")
+      val rows = locs(joined, fid = true)
+      (if (deletes) rows else c.persist(rows), None)
+    }
+  }
+
+  /** Where a MOR upsert's unmatched key goes: a SMALL group's log by its
+    * Spark `xxhash64` (seed 42) against [[smallFileTargets]]'
+    * cumulative capacity bounds, or — past capacity, or in a partition
+    * with no small group — fresh group `floorMod(hash, freshGroups)` of
+    * its partition, named like [[routeFresh]] names it.
+    */
+  private[write] final case class InsertRoute(
+      instant: String,
+      targets: Map[String, (Long, Vector[(Double, Option[String])])],
+      freshGroups: Int) {
+    private[write] def hash(key: String): Long =
+      org.apache.spark.sql.catalyst.expressions.XXH64.hashUTF8String(
+        org.apache.spark.unsafe.types.UTF8String.fromString(key), 42L)
+
+    def small(l: Loc): Option[String] = targets.get(l.part).flatMap { case (n, buckets) =>
+      val slot = Math.floorMod(hash(l.key), n)
+      buckets.find(_._1 > slot).flatMap(_._2)
+    }
+
+    def fresh(l: Loc): String =
+      freshFileId(instant, l.part, Math.floorMod(hash(l.key), freshGroups.toLong).toInt)
+
+    def fid(l: Loc): String = small(l).getOrElse(fresh(l))
+  }
+
+  /** MOR upsert routing (deltacommit), three passes over one shuffle
+    * chain. (1) Probe ([[probeMor]]): the job that builds the probe's
+    * cache also counts each partition's unmatched keys (inserts). (2)
+    * Log ([[writeMorLogs]]): matched keys append as ONE avro data block
+    * per touched file group onto the group's latest slice — full
+    * meta-prefixed rows stamped with the new instant, so the MOR merge's
+    * overwrite-with-latest picks them over the base rows — and inserts
+    * go to SMALL existing groups first, riding the same log files:
     * upstream's small-file handling for an index that finds records in
-    * log files: one job counts them per partition, [[smallFileTargets]]
-    * spreads each partition's count over its groups whose latest slice
-    * is below `hoodie.parquet.max.file.size` by remaining capacity, and
-    * the routed inserts ride the SAME log pass as the updates (the
-    * reader merges log-only keys; the record index gets their (partition,
-    * group) entries). Only overflow past capacity, and partitions with no
-    * small group, route to fresh parquet base-file groups; when the count
-    * shows no overflow the commit stages no base file at all. Log naming
-    * follows the read side's association rule: v6 names carry the target
-    * slice's BASE instant, v8+ the delta's own instant (completion from
-    * the timeline). Scale shape: the probe is the same column-pruned key
-    * join as COW, the insert count collects one row per partition, the
-    * log emission repartitions change rows by file group (each task
-    * buffers at most its groups' change volume), and the driver collects
-    * only (fileId → path, rows, bytes) for write stats.
+    * log files. [[smallFileTargets]] spreads each partition's count over
+    * its groups whose latest slice is below `hoodie.parquet.max.file.size`
+    * by remaining capacity ([[InsertRoute]]); the reader merges log-only
+    * keys. Only overflow past capacity, and partitions with no small
+    * group, stage fresh parquet base-file groups (sized by the overflow
+    * count × the bytes-per-record estimate); when the count shows no
+    * overflow the commit stages no base file at all. (3) Index: on a
+    * record_index table the created keys' (partition, group) entries
+    * come from the probe's cached partitions, already laid out by index
+    * group ([[RecordIndexMaintenance.append]]). Log naming follows the
+    * read side's association rule: v6 names carry the target slice's
+    * BASE instant, v8+ the delta's own instant (completion from the
+    * timeline). The driver collects one insert count per partition and
+    * one (fileId → path, rows, bytes) per log file.
     */
   private def routeMorUpsert(
-      spark: SparkSession,
-      basePath: String,
+      c: Commit,
       t: HudiTable,
       keyed: DataFrame,
-      instant: String,
       opts: Options
   ): Routed = {
-    val (index, global) = probeLocations(spark, basePath, t, keyed)
-    val routed = joinLocations(keyed, index, global).persist()
-    val unmatched = routed.filter(col("__fid").isNull)
-    // one job (a DataFrame groupBy would cost a second, AQE's stage job)
-    val inserts = unmatched.select("__part").rdd.map(_.getString(0)).countByValue().toMap
-    val targets = smallFileTargets(t.fsView.slicesAsOf(instant), inserts,
-      opts.maxFileBytes, averageBytesPerRecord(t))
-    val pick = udf { (part: String, hash: Long) =>
-      targets.get(part).flatMap { case (n, buckets) =>
-        val slot = Math.floorMod(hash, n)
-        buckets.find(_._1 > slot).flatMap(_._2)
-      }.orNull
+    val (rows, byGroup) = probeMor(c, keyed, deletes = false)
+    val inserts = rows.mapPartitions { it =>
+      val n = scala.collection.mutable.HashMap.empty[String, Long]
+      it.foreach(l => if (l.fid == null) n(l.part) = n.getOrElse(l.part, 0L) + 1L)
+      Iterator.single(n.toMap)
+    }.collect().flatten.groupMapReduce(_._1)(_._2)(_ + _)
+    val bytesPerRecord = averageBytesPerRecord(t)
+    val targets = smallFileTargets(c.slices, inserts, opts.maxFileBytes, bytesPerRecord)
+    val overflow = targets.valuesIterator.collect {
+      case (n, buckets) if buckets.exists(_._2.isEmpty) =>
+        n - buckets.collect { case (upTo, Some(_)) => upTo }.lastOption.getOrElse(0.0)
+    }.sum
+    val route = InsertRoute(c.instant, targets,
+      freshGroups(c.spark, BigInt(math.ceil(overflow).toLong) * bytesPerRecord, opts.maxFileBytes))
+
+    val dataSchema = StructType(keyed.schema.filterNot(f => f.name == "__key" || f.name == "__part"))
+    val logRows = rows.flatMap { l =>
+      if (l.fid != null) Some(l) else route.small(l).map(f => l.copy(fid = f, ins = true))
     }
-    val assigned = unmatched.withColumn("__fid", pick(col("__part"), xxhash64(col("__key"))))
-    val logInserts = assigned.filter(col("__fid").isNotNull)
-    val logRows = routed.filter(col("__fid").isNotNull).withColumn("__ins", lit(false))
-      .unionByName(logInserts.withColumn("__ins", lit(true)))
-    val dataCols = keyed.columns.filterNot(Set("__key", "__part").contains)
-    val logs = writeMorLogs(spark, basePath, t, logRows, dataCols, instant, deletes = false)
-    val overflows = targets.valuesIterator.exists(_._2.exists(_._2.isEmpty))
+    val logs = writeMorLogs(c, t, logRows, dataSchema, deletes = false)
     val fresh =
-      if (!overflows) None
-      else Some(routeFresh(assigned.filter(col("__fid").isNull).drop("__fid"), instant, opts))
-    val created = (fresh.toSeq :+ logInserts)
-      .map(_.select("__key", "__part", "__fid")).reduce(_ unionByName _)
+      if (overflow <= 0) None
+      else {
+        val instant = c.instant
+        Some(c.spark.createDataFrame(
+          rows.filter(l => l.fid == null && route.small(l).isEmpty).map(l =>
+            Row.fromSeq(l.data.toSeq ++ Seq(l.key, l.part, route.fresh(l), instant))),
+          StructType(dataSchema.fields ++ Seq("__key", "__part", "__fid", MetaField.CommitTime)
+            .map(StructField(_, StringType)))))
+      }
     val touched = logs.map(_.fileId).toSet
-    val prevCommits = t.fsView.slicesAsOf(instant)
-      .filter(sl => touched.contains(sl.fileId))
-      .map(sl => sl.fileId -> sl.commitTimestamp).toMap
     Routed(fresh,
       updateCounts = logs.map(l => l.fileId -> (l.rows - l.inserts)).toMap,
-      prevCommits = prevCommits, logWrites = logs,
-      logRows = if (logs.isEmpty) None else Some(logRows),
-      newKeys = Some(created),
-      retained = Seq(routed))
+      prevCommits = c.slices.filter(sl => touched.contains(sl.fileId))
+        .map(sl => sl.fileId -> sl.commitTimestamp).toMap,
+      logWrites = logs,
+      logRows = if (logs.isEmpty) None else Some(c.spark.createDataFrame(
+        logRows.map(l => Row.fromSeq(l.data.toSeq :+ l.part)),
+        StructType(dataSchema.fields :+ StructField("__part", StringType)))),
+      indexChanges = if (inserts.isEmpty) None else byGroup.map(_.mapPartitions(
+        _.collect { case (g, l) if l.fid == null => (g, (l.key, l.part, route.fid(l))) },
+        preservesPartitioning = true)))
   }
 
   /** Small-file insert plan per partition: `inserts` (partition → count
@@ -1045,153 +1210,114 @@ object HudiWriter {
     * block per touched group — (key, partition, null-ordering) triples,
     * so the merge's commit-time tiebreak removes the row (M3's
     * event-time-zero semantics). Unmatched keys are no-ops; no base
-    * files are written at all.
+    * files are written at all. The same passes as [[routeMorUpsert]]
+    * minus the insert count: the log pass's job builds the probe's
+    * cache, and on a record_index table the index pass writes the
+    * tombstones from it.
     */
-  private def routeMorDelete(
-      spark: SparkSession,
-      basePath: String,
-      t: HudiTable,
-      keyed: DataFrame,
-      instant: String
-  ): Routed = {
-    val (index, global) = probeLocations(spark, basePath, t, keyed)
-    val matched = (if (global)
-      keyed.select("__key").distinct().join(index, Seq("__key"), "inner")
-    else keyed.select("__key", "__part")
-      .join(index, Seq("__key", "__part"), "inner")).persist()
+  private def routeMorDelete(c: Commit, t: HudiTable, keyed: DataFrame): Routed = {
+    val (rows, byGroup) = probeMor(c, keyed, deletes = true)
     // delete blocks carry keys only — no data columns
-    val logs = writeMorLogs(spark, basePath, t, matched, Array.empty, instant, deletes = true)
-    if (logs.isEmpty) return Routed(None, retained = Seq(matched))
+    val logs = writeMorLogs(c, t, rows, StructType(Nil), deletes = true)
+    if (logs.isEmpty) return Routed(None)
     val touched = logs.map(_.fileId).toSet
-    val prevCommits = t.fsView.slicesAsOf(instant)
-      .filter(sl => touched.contains(sl.fileId))
-      .map(sl => sl.fileId -> sl.commitTimestamp).toMap
     Routed(None,
       deleteCounts = logs.map(l => l.fileId -> l.rows).toMap,
-      prevCommits = prevCommits, logWrites = logs,
-      deletedKeys = Some(matched.select("__key")), retained = Seq(matched))
+      prevCommits = c.slices.filter(sl => touched.contains(sl.fileId))
+        .map(sl => sl.fileId -> sl.commitTimestamp).toMap,
+      logWrites = logs,
+      indexChanges = byGroup.map(_.mapValues(l => (l.key, null: String, null: String))))
   }
 
-  /** Distributed MOR log emission: `rows` (carrying __key/__part/__fid,
-    * and for upserts `__ins` marking routed inserts) repartition by file
-    * group; each task writes one log file per group it holds — an avro
-    * data block of full meta-prefixed records (upserts) or a delete
-    * block of (key, partition, null) triples — and the driver collects
-    * only per-file stats. The per-group name/version map is
-    * driver-computed from the fs view (bounded by table file count) and
-    * broadcast.
+  /** Log pass of every MOR commit: `rows` (with their file group set)
+    * partition by file group; each task writes one log file per group it
+    * holds — an avro data block of full meta-prefixed records sorted by
+    * key (upserts) or a delete block of (key, partition, 0) triples —
+    * and the driver collects only per-file stats. The per-group
+    * name/version map is driver-computed from the commit's slices
+    * (bounded by table file count).
     */
   private def writeMorLogs(
-      spark: SparkSession,
-      basePath: String,
+      c: Commit,
       t: HudiTable,
-      rows: DataFrame,
-      dataCols: Array[String],
-      instant: String,
+      rows: RDD[Loc],
+      dataSchema: StructType,
       deletes: Boolean): Seq[LogWrite] = {
     // per touched group: (partition, log name ts, next version) — v6 logs
     // name the slice's BASE instant (the association key FileGroup
     // .assemble anchors on), v8+ their OWN instant
     val v8 = t.config.tableVersion >= 8
-    val naming = t.fsView.slicesAsOf(instant).map { sl =>
+    val instant = c.instant
+    val naming = c.slices.map { sl =>
       sl.fileId -> ((sl.partitionPath,
         if (v8) instant else sl.commitTimestamp,
         sl.logFiles.map(_.version).maxOption.getOrElse(0) + 1))
     }.toMap
-    val token = Token
-    val conf = new graft.util.SerializableConf(spark.sessionState.newHadoopConf())
-    val bcNaming = spark.sparkContext.broadcast(naming)
-
-    // (fid, rel path, rows, bytes, inserts) per written log file
-    val entries: Array[(String, String, Long, Long, Long)] = if (deletes) {
-      rows.select(col("__fid"), col("__part"), col("__key"))
-        .repartition(col("__fid")).rdd.mapPartitions { it =>
-          val byFid = it.toVector.groupBy(_.getString(0))
-          byFid.iterator.map { case (fid, rs) =>
-            val (part, nameTs, version) = bcNaming.value.getOrElse(fid,
-              throw new IllegalStateException(
-                s"hudi-graft: file group $fid (from the key probe) has no slice as of " +
-                  "this write — the record index points at uncommitted state"))
-            val name = s".${fid}_$nameTs.log.${version}_$token"
-            val dir = if (part.isEmpty) new Path(basePath) else new Path(basePath, part)
-            val fs = dir.getFileSystem(conf.value)
-            val header = org.apache.avro.SchemaBuilder.record("graft_delete_header")
-              .fields().endRecord()
-            val out = new java.io.DataOutputStream(fs.create(new Path(dir, name), false))
-            // orderingVal 0 = upstream DeleteRecord's default: the merge's
-            // event-time-zero rule then compares on COMMIT TIME only, so
-            // this delete beats every earlier row version regardless of
-            // its precombine value (a null here would sort LOWEST and the
-            // delete would never win)
-            val triples = rs.sortBy(_.getString(2))
-              .map(r => (r.getString(2), r.getString(1), 0: Any))
-            try graft.log.LogFileWriter.deleteBlock(out, instant, header, triples)
-            finally out.close()
-            val rel = if (part.isEmpty) name else s"$part/$name"
-            (fid, rel, rs.size.toLong, fs.getFileStatus(new Path(dir, name)).getLen, 0L)
-          }
-        }.collect()
-    } else {
-      // full meta-prefixed record rows, stamped with the NEW instant so
-      // the MOR merge's (ordering, commit-time) comparison picks them
-      val metaRows = rows.select(
-        col("__fid"),
-        col("__part"),
-        struct(
-          lit(instant).as(MetaField.CommitTime) +:
-            concat_ws("_", lit(instant), col("__fid"), col("__key"))
-              .as(MetaField.CommitSeqno) +:
-            col("__key").as(MetaField.RecordKey) +:
-            col("__part").as(MetaField.PartitionPath) +:
-            lit("").as(MetaField.FileName) +:
-            dataCols.map(col).toIndexedSeq: _*).as("__row"),
-        col("__ins"))
-      val rowStruct = metaRows.schema("__row").dataType
-        .asInstanceOf[org.apache.spark.sql.types.StructType]
-      // fail on the DRIVER with a clear message — the avro log-block
-      // bridge covers the flat type matrix only (nested struct/map
-      // columns would otherwise throw per-task)
+    val (basePath, token, conf) = (c.basePath, Token, c.conf)
+    // full meta-prefixed record rows, stamped with the NEW instant so the
+    // MOR merge's (ordering, commit-time) comparison picks them
+    val rowStruct = StructType(Seq(MetaField.CommitTime, MetaField.CommitSeqno,
+      MetaField.RecordKey, MetaField.PartitionPath, MetaField.FileName)
+      .map(StructField(_, StringType)) ++ dataSchema.fields)
+    // fail on the DRIVER with a clear message — the avro log-block bridge
+    // covers the flat type matrix only (nested struct/map columns would
+    // otherwise throw per-task)
+    if (!deletes)
       try graft.log.SparkToAvro.toAvroSchema(rowStruct, "graft_mor_record")
       catch {
         case e: IllegalArgumentException => throw new UnsupportedOperationException(
           s"hudi-graft: MOR log append cannot avro-encode this schema (${e.getMessage}); " +
             "only flat column types are supported for MOR upserts", e)
       }
-      val rowSchemaJson = rowStruct.json
-      metaRows.repartition(col("__fid")).rdd.mapPartitions { it =>
-        val target = org.apache.spark.sql.types.DataType.fromJson(rowSchemaJson)
-          .asInstanceOf[org.apache.spark.sql.types.StructType]
-        val avro = graft.log.SparkToAvro.toAvroSchema(target, "graft_mor_record")
-        val byFid = it.toVector.groupBy(_.getString(0))
-        byFid.iterator.map { case (fid, rs) =>
-          val (part, nameTs, version) = bcNaming.value.getOrElse(fid,
+    val parts = math.max(1, math.min(naming.size, c.spark.sparkContext.defaultParallelism))
+
+    // (fid, rel path, rows, bytes, inserts) per written log file
+    val entries = rows.map(l => (l.fid, l)).partitionBy(new HashPartitioner(parts))
+      .mapPartitions { it =>
+        lazy val avro = graft.log.SparkToAvro.toAvroSchema(rowStruct, "graft_mor_record")
+        it.map(_._2).toVector.groupBy(_.fid).iterator.map { case (fid, rs0) =>
+          val (part, nameTs, version) = naming.getOrElse(fid,
             throw new IllegalStateException(
               s"hudi-graft: file group $fid (from the key probe) has no slice as of " +
                 "this write — the record index points at uncommitted state"))
           val name = s".${fid}_$nameTs.log.${version}_$token"
           val dir = if (part.isEmpty) new Path(basePath) else new Path(basePath, part)
-          val fs = dir.getFileSystem(conf.value)
-          val recs = rs.sortBy(_.getStruct(2).getString(2))
-            .map { r =>
-              val rec = graft.log.SparkToAvro.toRecord(r.getStruct(2), target, avro)
-              // real Hudi stamps log records with the LOG file's name
-              // (HoodieAppendHandle) — also what keeps the writer's own
-              // (key -> fileId) snapshot probe routable after a log merge
-              rec.put(MetaField.FileName, name)
-              rec
-            }
+          val fs = dir.getFileSystem(conf.value.value)
+          val rs = rs0.sortBy(_.key)
           val out = new java.io.DataOutputStream(fs.create(new Path(dir, name), false))
-          try graft.log.LogFileWriter.avroDataBlock(out, instant, avro, recs)
-          finally out.close()
+          try {
+            if (deletes) {
+              // orderingVal 0 = upstream DeleteRecord's default: the merge's
+              // event-time-zero rule then compares on COMMIT TIME only, so
+              // this delete beats every earlier row version regardless of
+              // its precombine value (a null here would sort LOWEST and the
+              // delete would never win)
+              val header = org.apache.avro.SchemaBuilder.record("graft_delete_header")
+                .fields().endRecord()
+              graft.log.LogFileWriter.deleteBlock(out, instant, header,
+                rs.map(l => (l.key, l.part, 0: Any)))
+            } else {
+              val recs = rs.map { l =>
+                val seqno = Seq(instant, fid, l.key).filter(_ != null).mkString("_")
+                val rec = graft.log.SparkToAvro.toRecord(
+                  Row.fromSeq(Seq(instant, seqno, l.key, l.part, "") ++ l.data.toSeq),
+                  rowStruct, avro)
+                // real Hudi stamps log records with the LOG file's name
+                // (HoodieAppendHandle) — also what keeps the writer's own
+                // (key -> fileId) snapshot probe routable after a log merge
+                rec.put(MetaField.FileName, name)
+                rec
+              }
+              graft.log.LogFileWriter.avroDataBlock(out, instant, avro, recs)
+            }
+          } finally out.close()
           val rel = if (part.isEmpty) name else s"$part/$name"
           (fid, rel, rs.size.toLong, fs.getFileStatus(new Path(dir, name)).getLen,
-            rs.count(_.getBoolean(3)).toLong)
+            rs.count(_.ins).toLong)
         }
       }.collect()
-    }
     entries.toSeq.sortBy(_._1).map { case (fid, rel, n, bytes, inserts) =>
-      val (part, _, _) = naming(fid)
-      LogWrite(part, fid, rel, n, bytes, inserts)
+      LogWrite(naming(fid)._1, fid, rel, n, bytes, inserts)
     }
   }
 

@@ -1,7 +1,11 @@
 package graft.write
 
-import graft.table.{FilesPartitionRecord, MetadataTable, RecordIndex}
+import graft.table.{FilesPartitionRecord, RecordIndex}
+import graft.util.SerializableConf
 import org.apache.hadoop.fs.Path
+import org.apache.spark.HashPartitioner
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Metadata-table `record_index`-partition maintenance for the write
@@ -15,14 +19,18 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * index consumer relies on).
   *
   * Scale shape: the volume is O(created + deleted KEYS) — row scale, so
-  * nothing passes through the driver: key locations repartition by
-  * Hudi's key-hash group mapping ([[RecordIndex.fileGroupIndex]], the
-  * same 31-poly hash reads probe by), one executor task writes one index
+  * nothing passes through the driver: key locations partition by Hudi's
+  * key-hash group mapping ([[RecordIndex.fileGroupIndex]], the same
+  * 31-poly hash reads probe by), one executor task writes one index
   * group's log block (records sorted — the HFile key invariant), and the
-  * driver only completes the timeline. Requires a provably hash-aligned
-  * slice set, exactly like the distributed read probe — a gap would
-  * shrink the modulus and misroute every subsequent lookup, so
-  * misalignment throws rather than corrupting the index.
+  * driver only completes the timeline. This is the third pass of a MOR
+  * upsert or delete on an indexed table: its changes come from the
+  * probe pass's cached partitions, already laid out by group, so the
+  * blocks are written without a shuffle. Requires a provably
+  * hash-aligned slice set ([[RecordIndex.openGroups]]), exactly like the
+  * distributed probe — a gap would shrink the modulus and misroute every
+  * subsequent lookup, so misalignment throws rather than corrupting the
+  * index.
   */
 object RecordIndexMaintenance {
 
@@ -75,73 +83,78 @@ object RecordIndexMaintenance {
     out.toByteArray
   }
 
-  /** Append `entries` ((__key, __part, __fid) of keys CREATED by this
-    * commit) and `tombstones` ((__key) of keys it removed) to the record
-    * index at `instant`, then complete the MDT deltacommit.
+  /** One record-index change, keyed by its key's group ordinal:
+    * (key, partition, fileId) names the location of a key this commit
+    * CREATED; (key, null, null) tombstones a key it removed.
+    */
+  type Change = (Int, (String, String, String))
+
+  /** [[Change]]s of `entries` ((__key, __part, __fid) frames) and
+    * `tombstones` ((__key) frames) for an index of `n` groups — the
+    * input shape of the commits whose key locations are DataFrames
+    * (inserts, COW upserts and deletes); they are not partitioned yet.
+    */
+  def changesOf(
+      entries: Option[DataFrame],
+      tombstones: Option[DataFrame],
+      n: Int): Option[RDD[Change]] = {
+    import org.apache.spark.sql.functions.{col, lit}
+    val frames = entries.map(_.select("__key", "__part", "__fid")).toSeq ++
+      tombstones.map(_.select(col("__key"), lit(null).cast("string").as("__part"),
+        lit(null).cast("string").as("__fid"))).toSeq
+    frames.reduceOption(_ unionByName _).map(_.rdd.map { r =>
+      val key = r.getString(0)
+      (RecordIndex.fileGroupIndex(key, n), (key, r.getString(1), r.getString(2)))
+    })
+  }
+
+  /** Append `changes` to the record index `groups` (opened by the
+    * commit, at `instant`), then complete the MDT deltacommit. The
+    * changes shuffle by group ordinal through `HashPartitioner(n)` —
+    * the identity mapping, so one task holds exactly one index group's
+    * keys. A caller whose changes are already partitioned that way (the
+    * MOR probe's cached output) skips the shuffle: `partitionBy` with an
+    * equal partitioner is a no-op.
     */
   def append(
       spark: SparkSession,
       dataTableBase: String,
       instant: String,
-      entries: Option[DataFrame],
-      tombstones: Option[DataFrame],
-      timelineTimezone: String): Unit = {
-    val hadoopConf = spark.sessionState.newHadoopConf()
+      groups: RecordIndex.Groups,
+      changes: RDD[Change],
+      timelineTimezone: String,
+      conf: Broadcast[SerializableConf]): Unit = {
     val mdtBase = new Path(new Path(dataTableBase, ".hoodie"), "metadata")
-    val fs = mdtBase.getFileSystem(hadoopConf)
-    val mdtConfig = graft.core.HoodieConfig.load(mdtBase.toString, hadoopConf)
-
-    val (_, slices) = MetadataTable.openPartition(
-      dataTableBase, RecordIndex.PartitionName, hadoopConf)
-    // hash-aligned group map: ordinal -> (sliceFileId, nameTs, nextVersion)
-    val parsed = slices.flatMap(sl => RecordIndex.groupIndexOf(sl.fileId).map(_ -> sl))
-    if (parsed.size != slices.size ||
-        parsed.map(_._1).sorted != (0 until slices.size))
-      throw new IllegalStateException(
-        s"record_index slices are not hash-aligned (${slices.map(_.fileId)}); " +
-          "appending would misroute keys")
+    val fs = mdtBase.getFileSystem(conf.value.value)
+    val mdtConfig = graft.core.HoodieConfig.load(mdtBase.toString, conf.value.value)
+    // group ordinal -> (sliceFileId, nameTs, nextVersion)
     val v8 = mdtConfig.tableVersion >= 8
-    val naming = parsed.map { case (g, sl) =>
-      g -> ((sl.fileId,
+    val naming = groups.slices.map { sl =>
+      RecordIndex.groupIndexOf(sl.fileId).get -> ((sl.fileId,
         if (v8) instant else sl.commitTimestamp,
         sl.logFiles.map(_.version).maxOption.getOrElse(0) + 1))
     }.toMap
-    val n = naming.size
-
-    // one row per (key, valueBytes-kind): tombstones carry a null fid
-    val frames = entries.map(_.select("__key", "__part", "__fid")).toSeq ++
-      tombstones.map(_.select(org.apache.spark.sql.functions.col("__key"),
-        org.apache.spark.sql.functions.lit(null).cast("string").as("__part"),
-        org.apache.spark.sql.functions.lit(null).cast("string").as("__fid"))).toSeq
-    if (frames.isEmpty) return
-    val rows = frames.reduce(_ unionByName _)
-
     val tsMillis = graft.core.Timestamps.timelineToEpochMillis(instant, timelineTimezone)
-    val conf = new graft.util.SerializableConf(hadoopConf)
-    val bcNaming = spark.sparkContext.broadcast(naming)
     val riDir = new Path(mdtBase, RecordIndex.PartitionName).toString
     val token = "0-0-0"
     val schemaBytes = riAvroSchema.toString.getBytes("UTF-8")
 
-    // executor-side: each task holds exactly one index group's keys
-    // (HashPartitioner on the group ordinal is the identity mapping),
+    // executor-side: each task holds exactly one index group's keys,
     // sorts them (the HFile key invariant) and writes one log block
-    val written = rows.rdd
-      .map(r => (RecordIndex.fileGroupIndex(r.getString(0), n), r))
-      .partitionBy(new org.apache.spark.HashPartitioner(n))
+    val written = changes
+      .partitionBy(new HashPartitioner(groups.n))
       .mapPartitionsWithIndex { (g, it) =>
-        val recs = it.map { case (_, r) =>
-          val key = r.getString(0)
-          if (r.isNullAt(2)) key -> Array.emptyByteArray
-          else key -> entryBytes(key, r.getString(1), r.getString(2), tsMillis)
+        val recs = it.map { case (_, (key, part, fid)) =>
+          if (fid == null) key -> Array.emptyByteArray
+          else key -> entryBytes(key, part, fid, tsMillis)
         }.toVector.sortBy(_._1)
         if (recs.isEmpty) Iterator.empty
         else {
-          val (sliceFid, nameTs, version) = bcNaming.value(g)
+          val (sliceFid, nameTs, version) = naming(g)
           val hfileBytes = graft.hfile.HFileWriter.write(
             recs, Map("schema" -> schemaBytes), recordsPerBlock = 64)
           val dir = new Path(riDir)
-          val fsx = dir.getFileSystem(conf.value)
+          val fsx = dir.getFileSystem(conf.value.value)
           val name = s".${sliceFid}_$nameTs.log.${version}_$token"
           val out = new java.io.DataOutputStream(fsx.create(new Path(dir, name), false))
           try {

@@ -61,6 +61,16 @@ class HudiMorSmallFileSpec extends SparkTestBase {
     assert(t("c") == (5L, Vector(5.0 -> None)))
   }
 
+  test("the insert route hashes keys exactly like Spark's xxhash64 column function") {
+    import spark.implicits._
+    val keys = orders().select(col("o_orderkey").cast("string").as("k"))
+      .unionByName(Seq("", "é", "key with spaces", "\u00ff\u4e2d\ud83d\ude00").toDF("k"))
+    val route = HudiWriter.InsertRoute("1", Map.empty, 1)
+    keys.select(col("k"), xxhash64(col("k"))).collect().foreach { r =>
+      assert(route.hash(r.getString(0)) == r.getLong(1), r.getString(0))
+    }
+  }
+
   test("new keys ride small groups' logs through every reader and a second upsert") {
     val path = fresh("writer_mor_smallfile")
     val base = orders().filter(col("o_orderkey") % 4 =!= 1)
