@@ -16,6 +16,9 @@ object Fixtures {
   private val refData = "/root/reference/crates/test/data"
   private val outRoot = graft.fixtures.HudiFixtureBuilder.targetPath("fixtures")
 
+  /** True when the reference repo's golden-fixture data root exists. */
+  def referenceDataPresent: Boolean = Files.isDirectory(Paths.get(refData))
+
   /** Unzip (once) and return the table path; None when unavailable. */
   def table(zipRel: String, tableName: String): Option[String] =
     table(zipRel, tableName, tableName)
