@@ -112,7 +112,7 @@ object HudiFixtureBuilder {
 
   private def ensureLocked(spark: SparkSession, sfDir: String): Unit = synchronized {
     val fs = FileSystem.get(spark.sessionState.newHadoopConf())
-    val marker = new Path(root(sfDir), "_GRAFT_FIXTURES_READY_v43")
+    val marker = new Path(root(sfDir), "_GRAFT_FIXTURES_READY_v44")
     if (fs.exists(marker)) { readySeen.add(root(sfDir)); return }
     // cross-PROCESS exclusion (synchronized only guards this JVM):
     // create-exclusive a lock file holding a unique token. Losers poll
@@ -430,6 +430,8 @@ object HudiFixtureBuilder {
     val updates = src.filter(col("o_orderkey") % 7 === 0)
       .withColumn("o_orderstatus", lit("U"))
       .withColumn("__commit", lit(T2))
+    // _hoodie_file_name is stamped per log file below: real Hudi (and
+    // this repo's writer) name a log record's file as the log's own name
     val updMeta = withMeta(updates, "o_orderpriority", lit(""))
       .withColumn("__bucket", pmod(col("_hoodie_record_key").cast("long"), lit(Buckets)).cast("int"))
     val updRows = updMeta.collect()
@@ -441,7 +443,8 @@ object HudiFixtureBuilder {
         val i = partIdx(p)
         val logName = s".${fileIdB(i, b)}_$T1.log.1_$Token"
         val out = new DataOutputStream(fs.create(new Path(new Path(base, p), logName), true))
-        val dataRows = rows.map(r => org.apache.spark.sql.Row.fromSeq(r.toSeq.dropRight(1)))
+        val dataRows = rows.map(r =>
+          org.apache.spark.sql.Row.fromSeq(r.toSeq.dropRight(1).updated(4, logName)))
         try {
           if (i == 0 && b == 0) {
             // parquet-format block: spill the rows through a parquet write

@@ -514,15 +514,41 @@ private[sources] final class SliceMergeState(
     if (c != 0) c > 0 else cmpAny(seqnoOf(a), seqnoOf(b)) > 0
   }
 
-  final class DeleteInfo(
-      var eventOrd: Any, var commitOrd: Any, var eventZero: Boolean) {
+  /** A key's delete records, reduced exactly for [[winsOver]]: a row is
+    * deleted when ANY of them beats it — a delete whose ordering is an
+    * integral zero by commit time alone, any other by (ordering, commit
+    * time) — so the reduction keeps the latest zero-ordering commit and
+    * the greatest (ordering, commit) of the rest. `eventOrd` and
+    * `commitOrd`, the greatest of each over all the key's deletes, stamp
+    * its tombstone row.
+    */
+  final class DeleteInfo {
+    var eventOrd: Any = null
+    var commitOrd: Any = null
+    private var zeroCommit: Any = null
+    private var ord: Any = null
+    private var ordCommit: Any = null
+
+    def add(o: Any, commit: Any, zero: Boolean): Unit = {
+      if (commitOrd == null || cmpAny(o, eventOrd) > 0) eventOrd = o
+      if (commitOrd == null || cmpAny(commit, commitOrd) > 0) commitOrd = commit
+      if (zero) {
+        if (zeroCommit == null || cmpAny(commit, zeroCommit) > 0) zeroCommit = commit
+      } else if (ordCommit == null || beats(o, commit, ord, ordCommit)) {
+        ord = o
+        ordCommit = commit
+      }
+    }
+
+    private def beats(o: Any, commit: Any, recEvent: Any, recCommit: Any): Boolean = {
+      val c = cmpAny(o, recEvent)
+      c > 0 || (c == 0 && cmpAny(commit, recCommit) > 0)
+    }
+
     /** ordering.rs:41-51 incl. the integer-zero special case. */
     def winsOver(recEvent: Any, recCommit: Any): Boolean =
-      if (eventZero) cmpAny(commitOrd, recCommit) > 0
-      else {
-        val c = cmpAny(eventOrd, recEvent)
-        c > 0 || (c == 0 && cmpAny(commitOrd, recCommit) > 0)
-      }
+      (zeroCommit != null && cmpAny(zeroCommit, recCommit) > 0) ||
+        (ordCommit != null && beats(ord, ordCommit, recEvent, recCommit))
   }
 
   private def isIntegralZero(v: Any): Boolean = v match {
@@ -579,16 +605,8 @@ private[sources] final class SliceMergeState(
         val commit = UTF8String.fromString(b.instantTime)
         for ((key, _, ordRaw) <- b.deleteRecords) {
           counters.deleteRecordsSeen += 1
-          val ord = toCatalystScalar(ordRaw)
-          val zero = isIntegralZero(ordRaw)
-          dels.get(key) match {
-            case Some(info) =>
-              if (cmpAny(ord, info.eventOrd) > 0) {
-                info.eventOrd = ord; info.eventZero = zero
-              }
-              if (cmpAny(commit, info.commitOrd) > 0) info.commitOrd = commit
-            case None => dels(key) = new DeleteInfo(ord, commit, zero)
-          }
+          dels.getOrElseUpdate(key, new DeleteInfo)
+            .add(toCatalystScalar(ordRaw), commit, isIntegralZero(ordRaw))
         }
       }
     }

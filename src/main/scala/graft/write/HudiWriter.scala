@@ -40,33 +40,36 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   * fileId/path/partitionPath/prevCommit/numWrites/numUpdateWrites/
   * fileSizeInBytes and `extraMetadata.schema` (the writer's data schema).
   *
-  * Scale shape: ONE shuffle per staged commit — rows route to their
-  * target file group (hash-bucketed for fresh groups, the matched group
-  * for COW upserts) and each (partition, fileGroup) writes exactly one
+  * Scale shape: base files stage with ONE shuffle — rows route to their
+  * target file group and each (partition, fileGroup) writes exactly one
   * parquet file from one task via `partitionBy` staging; the driver then
   * RENAMES files into Hudi names and writes metadata, O(#files) namenode
-  * ops (the standard committer cost, never data movement). MOR upserts
-  * and deletes append log blocks instead: updates onto the matched
-  * group, new keys onto the partition's SMALL groups (latest slice below
+  * ops (the standard committer cost, never data movement). Inserts
+  * hash-bucket into fresh groups with no probe. Every upsert and delete,
+  * COW or MOR, starts from the same RDD probe pass ([[probe]]): on a
+  * record_index table the batch partitions by its keys' index group and
+  * each task probes its group's slice (GLOBAL matching); without one, a
+  * key-column join against the current snapshot pruned to (key,
+  * partition, file name) matches per partition. The probe result is
+  * cached, and one counting job over it yields each partition's new keys
+  * and each file group's matched keys. The table types differ only in
+  * the last pass. MOR appends log blocks: updates onto the matched group,
+  * new keys onto the partition's SMALL groups (latest slice below
   * `hoodie.parquet.max.file.size`; capacity = remaining bytes / the
   * latest commit's bytes per record) by key hash weighted by remaining
-  * capacity. They run as ONE RDD shuffle chain of three passes: a probe
-  * pass (on a record_index table the batch partitions by its keys' index
-  * group and each task probes its group's slice; the job that caches the
-  * result also counts inserts per partition), a log pass (partitioned by
-  * file group, one log file per group) and, on a record_index table, an
-  * index pass that writes the created keys' entries and the deleted
-  * keys' tombstones straight from the probe's cached partitions — no
-  * third shuffle. That is at most four Spark jobs per upsert, counting
-  * the incoming-row dedup's shuffle, and three per delete. Only overflow
-  * past capacity stages fresh base files, and a commit whose insert
-  * count leaves nothing to stage skips the staging job entirely. The
-  * probe is the MDT record index where the table advertises one, else a
-  * key-column join against the current snapshot pruned to (key,
-  * partition, file name) — column-pruned scan, shuffle bounded by table
-  * keys + batch keys — feeding the same log pass. Driver collects are
-  * bounded by file groups or partitions — table file count, never key
-  * count (the same bound AggMaintenance documents).
+  * capacity, one log file per group from a pass partitioned by file
+  * group — at most four Spark jobs per upsert, counting the incoming-row
+  * dedup's shuffle, and three per delete. COW rewrites the matched
+  * groups' base files: the stored rows minus the matched keys plus the
+  * incoming rows, staged like inserts. New keys past small-group capacity
+  * (all of them on COW) stage fresh groups sized by their count × the
+  * bytes-per-record estimate; a commit with nothing to stage skips the
+  * staging job. On a record_index table an index pass writes the created
+  * keys' entries and the deleted keys' tombstones straight from the
+  * probe's cached partitions, already laid out by index group — no
+  * further shuffle. Driver collects are bounded by file groups or
+  * partitions — table file count, never key count (the same bound
+  * AggMaintenance documents).
   *
   * Incoming rows are deduplicated per (key, partition) by the precombine
   * field (greatest wins; ties and no-precombine keep one row
@@ -383,11 +386,11 @@ object HudiWriter {
     val deduped = keyed0
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1).drop("__rn")
-    // a MOR upsert/delete reads the batch ONCE — its probe pass persists
+    // an upsert/delete reads the batch ONCE — its probe pass persists
     // what it routes — unless secondary-index maintenance reads it again;
     // every other route reads it several times. Persisting a frame read
     // once would only add a job that materializes the cache
-    val readOnce = isMor && exists && secondaryIndexes.isEmpty &&
+    val readOnce = exists && secondaryIndexes.isEmpty &&
       (operation == "upsert" || operation == "delete")
     val c = new Commit(spark, basePath, instant, existing, maintainsRecordIndex)
     try {
@@ -400,25 +403,27 @@ object HudiWriter {
       val routed = operation match {
         case "insert" | "bulk_insert" =>
           val staged = routeFresh(keyed, instant, opts)
-          Routed(Some(staged), indexChanges = c.indexChanges(Some(staged), None))
+          Routed(Some(staged), indexChanges = c.indexChanges(staged))
         case "insert_overwrite_table" =>
           val rep = existing.map(_ => c.slices
             .groupBy(_.partitionPath).view.mapValues(_.map(_.fileId).toSet).toMap)
             .getOrElse(Map.empty[String, Set[String]])
           Routed(Some(routeFresh(keyed, instant, opts)), replaced = rep)
-        case "upsert" =>
+        case "upsert" | "delete" =>
+          val deletes = operation == "delete"
           existing match {
-            case None => Routed(Some(routeFresh(keyed, instant, opts)))
-            case Some(t) if t.config.isMor =>
-              routeMorUpsert(c, t, keyed, opts)
-            case Some(t) => routeUpsert(c, t, keyed, opts, cdcMode)
-          }
-        case "delete" =>
-          existing match {
-            case None => throw new IllegalArgumentException(
+            case None if deletes => throw new IllegalArgumentException(
               "hudi-graft: operation 'delete' on a nonexistent table")
-            case Some(t) if t.config.isMor => routeMorDelete(c, t, keyed)
-            case Some(t) => routeDelete(c, t, keyed, cdcMode)
+            case None => Routed(Some(routeFresh(keyed, instant, opts)))
+            case Some(t) =>
+              // delete inputs name keys only: no data columns are routed
+              val dataSchema =
+                if (deletes) StructType(Nil)
+                else StructType(keyed.schema.filterNot(f => f.name == "__key" || f.name == "__part"))
+              val (rows, byGroup) = probe(c, keyed, dataSchema, deletes)
+              if (!t.config.isMor) routeCow(c, t, rows, byGroup, dataSchema, opts, deletes, cdcMode)
+              else if (deletes) routeMorDelete(c, t, rows, byGroup)
+              else routeMorUpsert(c, t, rows, byGroup, dataSchema, opts)
           }
         case other =>
           throw new IllegalArgumentException(
@@ -589,8 +594,8 @@ object HudiWriter {
       cdcFiles: Map[String, (String, Long)] = Map.empty,
       requiredGroups: Map[String, String] = Map.empty,
       logWrites: Seq[LogWrite] = Nil,
-      // the rows the MOR upsert appended as log data (partition_stats
-      // maintenance widens bounds from them)
+      // the rows the MOR upsert appended as log data, a [[located]] frame
+      // (partition_stats maintenance widens bounds from them)
       logRows: Option[DataFrame] = None,
       // record-index maintenance input: locations of keys this commit
       // CREATED (fresh groups or log-routed inserts) and tombstones of
@@ -640,14 +645,20 @@ object HudiWriter {
       rdd
     }
 
-    /** Record-index changes of frames of created-key locations and
-      * removed keys; None on a table without a record index.
+    /** Record-index changes of an insert's staged frame of created-key
+      * locations; None on a table without a record index.
       */
-    def indexChanges(
-        entries: Option[DataFrame],
-        tombstones: Option[DataFrame]): Option[RDD[RecordIndexMaintenance.Change]] =
+    def indexChanges(staged: DataFrame): Option[RDD[RecordIndexMaintenance.Change]] =
       if (!indexed) None
-      else RecordIndexMaintenance.changesOf(entries, tombstones, recordIndex.n)
+      else Some(RecordIndexMaintenance.changesOf(staged, recordIndex.n))
+
+    /** prevCommit of each rewritten or appended-to group: the base
+      * instant of its latest slice (the metadata CDC's savepoint guard
+      * verifies).
+      */
+    def prevCommits(touched: Set[String]): Map[String, String] =
+      slices.collect { case sl if touched.contains(sl.fileId) => sl.fileId -> sl.commitTimestamp }
+        .toMap
 
     def release(): Unit = {
       held.foreach(f => scala.util.Try(f()))
@@ -741,33 +752,8 @@ object HudiWriter {
     c.spark.read.format("hudi-graft").load(c.basePath).select(
       col(MetaField.RecordKey).as("__key"),
       col(MetaField.PartitionPath).as("__part"),
-      fidFromFileName.as("__fid"))
+      fidOfFileName.as("__fid"))
   }
-
-  /** (key → location) probe of the COW upsert/delete routing: the
-    * batch's distinct keys through [[indexProbe]] on a record_index
-    * table, else [[snapshotLocations]]. Returns (locations (__key,
-    * __part, __fid), global?).
-    */
-  private def probeLocations(c: Commit, keyed: DataFrame): (DataFrame, Boolean) =
-    if (c.indexed) {
-      import c.spark.implicits._
-      val found = indexProbe(c, keyed.select("__key").distinct().as[String].rdd)(identity)
-        .flatMap(_._2._2.map(e => (e.key, e.partitionPath, e.fileId)))
-      (found.toDF("__key", "__part", "__fid"), true)
-    } else (snapshotLocations(c), false)
-
-  /** Join the batch against probe locations: global probes match on the
-    * key alone and OVERRIDE the incoming partition with the record's
-    * current location for matched rows.
-    */
-  private def joinLocations(keyed: DataFrame, index: DataFrame, global: Boolean): DataFrame =
-    if (global)
-      keyed.join(index.withColumnRenamed("__part", "__locpart"), Seq("__key"), "left")
-        .withColumn("__part",
-          when(col("__fid").isNotNull, col("__locpart")).otherwise(col("__part")))
-        .drop("__locpart")
-    else keyed.join(index, Seq("__key", "__part"), "left")
 
   /** Columns eligible for column_stats maintenance: the wrapper types
     * the MDT-subset schema carries (LongWrapper/DateWrapper/
@@ -866,9 +852,7 @@ object HudiWriter {
     * `.{fid}_{ts}.log.{v}_{token}` — strip the leading dot, take
     * everything before the first '_' (fileIds contain no underscore).
     */
-  private[write] def fidOfFileName: org.apache.spark.sql.Column = fidFromFileName
-
-  private def fidFromFileName: org.apache.spark.sql.Column =
+  private[write] def fidOfFileName: org.apache.spark.sql.Column =
     substring_index(regexp_replace(col(MetaField.FileName), "^\\.", ""), "_", 1)
 
   /** Deterministic UUID-shaped fileId for a fresh group (the driver-side
@@ -883,135 +867,11 @@ object HudiWriter {
       s"${h.substring(16, 20)}-${h.substring(20, 32)}-0"
   }
 
-  /** Upsert routing: probe the snapshot's (key, partition → fileId),
-    * rewrite matched groups (carried rows keep their commit stamps,
-    * incoming rows win and stamp the new instant), hash-route unmatched
-    * keys to fresh groups. Returns (staged rows, per-fid update counts,
-    * no replacements, per-fid prevCommit, per-fid cdc sidecar). With
-    * `cdcEnabled`, each rewritten group also gets a `-cdc` sidecar log
-    * file holding the exact (before, after) images of its updates —
-    * written DISTRIBUTED (one task buffers at most its groups' change
-    * volume), so CDC readers later serve this commit with IO
-    * proportional to the cdc bytes and past the cleaner horizon.
-    */
-  private def routeUpsert(
-      c: Commit,
-      t: HudiTable,
-      keyed: DataFrame,
-      opts: Options,
-      cdcMode: Option[String]
-  ): Routed = {
-    val (spark, basePath, instant) = (c.spark, c.basePath, c.instant)
-    val (index, global) = probeLocations(c, keyed)
-    val routed = c.persist(joinLocations(keyed, index, global))
-    locally {
-      val matched = routed.filter(col("__fid").isNotNull)
-      // DISTINCT touched groups: bounded by table file count, never keys
-      val perFid = matched.groupBy("__fid").count().collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
-      val touched = perFid.keySet
-      val freshPart = routeFresh(routed.filter(col("__fid").isNull).drop("__fid"),
-        instant, opts)
-      if (touched.isEmpty)
-        return Routed(Some(freshPart), indexChanges = c.indexChanges(Some(freshPart), None))
-
-      // prevCommit per rewritten group = the base instant of the slice
-      // being rewritten (the metadata CDC's savepoint guard verifies)
-      val prevCommits = c.slices
-        .filter(sl => touched.contains(sl.fileId))
-        .map(sl => sl.fileId -> sl.commitTimestamp).toMap
-
-      // stored rows project onto the commit's (possibly EVOLVED) data
-      // schema: widened columns upcast, added columns null-fill
-      val targetFields = keyed.schema.fields
-        .filterNot(f => Set("__key", "__part").contains(f.name)).toSeq
-      val stored0 = spark.read.format("hudi-graft")
-        .option("cdc.file.groups", touched.toSeq.sorted.mkString(","))
-        .load(basePath)
-        .withColumn("__key", col(MetaField.RecordKey))
-        .withColumn("__part", col(MetaField.PartitionPath))
-        .withColumn("__fid", fidFromFileName)
-      val stored = stored0.select((alignTo(stored0, targetFields) ++ Seq(
-        col("__key"), col("__part"), col("__fid"), col(MetaField.CommitTime))): _*)
-      // carried: stored rows not overwritten — keep their commit stamp
-      val dataCols = keyed.columns.filterNot(Set("__key", "__part").contains)
-      val carried = stored
-        .join(matched.select("__key", "__part"), Seq("__key", "__part"), "left_anti")
-        .select((dataCols.map(col) ++ Seq(col("__key"), col("__part"), col("__fid"),
-          col(MetaField.CommitTime))): _*)
-      val updated = matched
-        .withColumn(MetaField.CommitTime, lit(instant))
-        .select((dataCols.map(col) ++ Seq(col("__key"), col("__part"), col("__fid"),
-          col(MetaField.CommitTime))): _*)
-      val fresh = freshPart
-        .select((dataCols.map(col) ++ Seq(col("__key"), col("__part"), col("__fid"),
-          col(MetaField.CommitTime))): _*)
-      val sidecars = cdcMode match {
-        case None => Map.empty[String, (String, Long)]
-        case Some(m) => writeCdcSidecars(spark, basePath, stored, matched, dataCols,
-          instant, t.config.timelineTimezone, deletes = false, mode = m)
-      }
-      Routed(Some(carried.unionByName(updated).unionByName(fresh)),
-        updateCounts = perFid, prevCommits = prevCommits, cdcFiles = sidecars,
-        indexChanges = c.indexChanges(Some(freshPart), None))
-    }
-  }
-
-  /** Delete routing (upstream's `delete` operation): incoming rows name
-    * the keys to REMOVE. Matched groups rewrite with the surviving rows
-    * only (carried commit stamps preserved); a group losing every row
-    * still writes an EMPTY base-file version (`requiredGroups`) so the
-    * deletion is visible. Unmatched keys are no-ops. With CDC enabled,
-    * each rewritten group's sidecar carries `d` records (before = the
-    * stored row, after = null).
-    */
-  private def routeDelete(
-      c: Commit,
-      t: HudiTable,
-      keyed: DataFrame,
-      cdcMode: Option[String]
-  ): Routed = {
-    val (spark, basePath, instant) = (c.spark, c.basePath, c.instant)
-    val (index, global) = probeLocations(c, keyed)
-    val matched = c.persist(if (global)
-      keyed.select("__key").distinct().join(index, Seq("__key"), "inner")
-    else keyed.select("__key", "__part")
-      .join(index, Seq("__key", "__part"), "inner"))
-    locally {
-      val perFid = matched.groupBy("__fid").count().collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
-      val touched = perFid.keySet
-      if (touched.isEmpty) return Routed(None)
-      val dataColsAll = t.tableSchema.fieldNames.filterNot(MetaField.all.contains)
-      val slices = c.slices.filter(sl => touched.contains(sl.fileId))
-      val prevCommits = slices.map(sl => sl.fileId -> sl.commitTimestamp).toMap
-      val required = slices.map(sl => sl.fileId -> sl.partitionPath).toMap
-      val stored = spark.read.format("hudi-graft")
-        .option("cdc.file.groups", touched.toSeq.sorted.mkString(","))
-        .load(basePath)
-        .withColumn("__key", col(MetaField.RecordKey))
-        .withColumn("__part", col(MetaField.PartitionPath))
-        .withColumn("__fid", fidFromFileName)
-      val survivors = stored
-        .join(matched.select("__key", "__part"), Seq("__key", "__part"), "left_anti")
-        .select((dataColsAll.map(col) ++ Seq(col("__key"), col("__part"), col("__fid"),
-          col(MetaField.CommitTime))): _*)
-      val sidecars = cdcMode match {
-        case None => Map.empty[String, (String, Long)]
-        case Some(m) => writeCdcSidecars(spark, basePath, stored, matched, dataColsAll,
-          instant, t.config.timelineTimezone, deletes = true, mode = m)
-      }
-      Routed(Some(survivors), deleteCounts = perFid, prevCommits = prevCommits,
-        cdcFiles = sidecars, requiredGroups = required,
-        indexChanges = c.indexChanges(None, Some(matched.select("__key"))))
-    }
-  }
-
-  /** One batch row through the MOR passes: record key, partition path
-    * (the record's CURRENT one once a global probe matched it), file
-    * group (null until the probe matches or [[InsertRoute]] assigns
-    * one), the data columns (null for deletes), and whether it is an
-    * insert routed into a small group's log.
+  /** One batch row through the upsert/delete passes: record key,
+    * partition path (the record's CURRENT one once a global probe
+    * matched it), file group (null until the probe matches or
+    * [[InsertRoute]] assigns one), the data columns (empty for deletes),
+    * and whether it is an insert routed into a small group's log.
     */
   private[write] final case class Loc(
       key: String,
@@ -1020,27 +880,28 @@ object HudiWriter {
       data: Row,
       ins: Boolean = false)
 
-  /** Probe pass of a MOR upsert or delete: the batch as [[Loc]]s matched
-    * to their file groups. On a record_index table the rows partition by
+  /** Probe pass of every upsert and delete, COW or MOR: the batch as
+    * persisted [[Loc]]s matched to their file groups (`dataSchema`'s
+    * columns ride along). On a record_index table the rows partition by
     * their key's index group and each task probes its group's slice
     * ([[indexProbe]]) with GLOBAL matching: a matched row takes the
     * record's current partition, and a delete keeps one row per matched
-    * key. The result is persisted and also returned keyed by group
-    * ordinal, still partitioned by it, for the index pass. Without an
-    * index the non-global snapshot join ([[snapshotLocations]]) feeds
-    * the same passes; only an upsert, which reads it twice, persists it.
+    * key; the result is also returned keyed by group ordinal, still
+    * partitioned by it, for the index pass ([[probedChanges]]). Without
+    * an index the non-global snapshot join ([[snapshotLocations]]) feeds
+    * the same passes, and a delete keeps matched keys only.
     */
-  private def probeMor(
+  private def probe(
       c: Commit,
       keyed: DataFrame,
+      dataSchema: StructType,
       deletes: Boolean): (RDD[Loc], Option[RDD[(Int, Loc)]]) = {
-    val dataCols = keyed.columns.filterNot(Set("__key", "__part").contains).toSeq
     def locs(df: DataFrame, fid: Boolean): RDD[Loc] =
       df.select(Seq(col("__key"), col("__part")) ++
         (if (fid) Seq(col("__fid")) else Seq(lit(null).cast(StringType))) ++
-        (if (deletes) Nil else Seq(struct(dataCols.map(col): _*))): _*)
+        (if (deletes) Nil else Seq(struct(dataSchema.fieldNames.map(col).toIndexedSeq: _*))): _*)
         .rdd.map(r => Loc(r.getString(0), r.getString(1), r.getString(2),
-          if (deletes) null else r.getStruct(3)))
+          if (deletes) Row.empty else r.getStruct(3)))
     if (c.indexed) {
       val probed = indexProbe(c, locs(keyed, fid = false))(_.key).mapPartitions({ it =>
         val seen = scala.collection.mutable.HashSet.empty[String]
@@ -1057,16 +918,59 @@ object HudiWriter {
       val joined =
         if (deletes) keyed.select("__key", "__part").join(index, Seq("__key", "__part"), "inner")
         else keyed.join(index, Seq("__key", "__part"), "left")
-      val rows = locs(joined, fid = true)
-      (if (deletes) rows else c.persist(rows), None)
+      (c.persist(locs(joined, fid = true)), None)
     }
   }
 
-  /** Where a MOR upsert's unmatched key goes: a SMALL group's log by its
+  /** The one counting job over the cached probe result: (unmatched keys
+    * per partition — the inserts, matched keys per file group). Driver
+    * memory is bounded by partitions and groups, never keys.
+    */
+  private def probeCounts(rows: RDD[Loc]): (Map[String, Long], Map[String, Long]) = {
+    val perTask = rows.mapPartitions { it =>
+      val inserts = scala.collection.mutable.HashMap.empty[String, Long]
+      val matched = scala.collection.mutable.HashMap.empty[String, Long]
+      it.foreach { l =>
+        if (l.fid == null) inserts(l.part) = inserts.getOrElse(l.part, 0L) + 1L
+        else matched(l.fid) = matched.getOrElse(l.fid, 0L) + 1L
+      }
+      Iterator.single((inserts.toMap, matched.toMap))
+    }.collect()
+    def sum(ms: Seq[Map[String, Long]]) = ms.flatten.groupMapReduce(_._1)(_._2)(_ + _)
+    (sum(perTask.map(_._1).toSeq), sum(perTask.map(_._2).toSeq))
+  }
+
+  /** Index pass input from the probe's group-keyed partitions, with no
+    * shuffle: under an insert route the created keys' (partition, group)
+    * entries, without one (a delete) a tombstone per matched key. None
+    * on a table without a record index.
+    */
+  private def probedChanges(
+      byGroup: Option[RDD[(Int, Loc)]],
+      route: Option[InsertRoute]): Option[RDD[RecordIndexMaintenance.Change]] =
+    byGroup.map(_.mapPartitions(it => route match {
+      case Some(r) => it.collect { case (g, l) if l.fid == null => (g, (l.key, l.part, r.fid(l))) }
+      case None => it.map { case (g, l) => (g, (l.key, null: String, null: String)) }
+    }, preservesPartitioning = true))
+
+  /** [[Loc]]s whose file group is set as a staging frame: `dataSchema`'s
+    * columns, then __key, __part, __fid and the commit time stamped with
+    * this commit's instant — the shape [[writeStagedWithStats]] stages.
+    */
+  private def located(c: Commit, rows: RDD[Loc], dataSchema: StructType): DataFrame = {
+    val instant = c.instant
+    c.spark.createDataFrame(
+      rows.map(l => Row.fromSeq(l.data.toSeq ++ Seq(l.key, l.part, l.fid, instant))),
+      StructType(dataSchema.fields ++ Seq("__key", "__part", "__fid", MetaField.CommitTime)
+        .map(StructField(_, StringType))))
+  }
+
+  /** Where an upsert's unmatched key goes: a SMALL group's log by its
     * Spark `xxhash64` (seed 42) against [[smallFileTargets]]'
-    * cumulative capacity bounds, or — past capacity, or in a partition
-    * with no small group — fresh group `floorMod(hash, freshGroups)` of
-    * its partition, named like [[routeFresh]] names it.
+    * cumulative capacity bounds, or — past capacity, in a partition with
+    * no small group, or on a COW table, which passes no targets — fresh
+    * group `floorMod(hash, freshGroups)` of its partition, named like
+    * [[routeFresh]] names it.
     */
   private[write] final case class InsertRoute(
       instant: String,
@@ -1087,42 +991,106 @@ object HudiWriter {
     def fid(l: Loc): String = small(l).getOrElse(fresh(l))
   }
 
-  /** MOR upsert routing (deltacommit), three passes over one shuffle
-    * chain. (1) Probe ([[probeMor]]): the job that builds the probe's
-    * cache also counts each partition's unmatched keys (inserts). (2)
-    * Log ([[writeMorLogs]]): matched keys append as ONE avro data block
-    * per touched file group onto the group's latest slice — full
-    * meta-prefixed rows stamped with the new instant, so the MOR merge's
-    * overwrite-with-latest picks them over the base rows — and inserts
-    * go to SMALL existing groups first, riding the same log files:
-    * upstream's small-file handling for an index that finds records in
-    * log files. [[smallFileTargets]] spreads each partition's count over
-    * its groups whose latest slice is below `hoodie.parquet.max.file.size`
-    * by remaining capacity ([[InsertRoute]]); the reader merges log-only
-    * keys. Only overflow past capacity, and partitions with no small
-    * group, stage fresh parquet base-file groups (sized by the overflow
-    * count × the bytes-per-record estimate); when the count shows no
-    * overflow the commit stages no base file at all. (3) Index: on a
-    * record_index table the created keys' (partition, group) entries
-    * come from the probe's cached partitions, already laid out by index
-    * group ([[RecordIndexMaintenance.append]]). Log naming follows the
-    * read side's association rule: v6 names carry the target slice's
-    * BASE instant, v8+ the delta's own instant (completion from the
-    * timeline). The driver collects one insert count per partition and
-    * one (fileId → path, rows, bytes) per log file.
+  /** COW upsert and delete routing (commit): after the [[probe]], the
+    * counting job ([[probeCounts]]) names the touched groups and counts
+    * each partition's new keys; the last pass rewrites each touched
+    * group's base file as its stored rows minus the matched keys plus
+    * the incoming rows (none for a delete). Carried rows keep their
+    * commit stamps; incoming rows stamp the new instant. A group losing
+    * every row still writes an EMPTY base-file version (`requiredGroups`)
+    * so the deletion is visible. New keys stage fresh groups named by
+    * [[InsertRoute]] with no small-file targets, as many per partition as
+    * their count × the bytes-per-record estimate fills. With CDC enabled,
+    * each rewritten group also gets a `-cdc` sidecar log file of its
+    * updates' (before, after) or its deletes' (before, null) images
+    * ([[writeCdcSidecars]]). On a record_index table the index pass
+    * writes the created keys' entries or the deleted keys' tombstones
+    * from the probe's partitions ([[probedChanges]]), as on MOR.
+    */
+  private def routeCow(
+      c: Commit,
+      t: HudiTable,
+      rows: RDD[Loc],
+      byGroup: Option[RDD[(Int, Loc)]],
+      dataSchema: StructType,
+      opts: Options,
+      deletes: Boolean,
+      cdcMode: Option[String]): Routed = {
+    val (inserts, perFid) = probeCounts(rows)
+    val route = InsertRoute(c.instant, Map.empty, freshGroups(c.spark,
+      BigInt(inserts.values.sum) * averageBytesPerRecord(t), opts.maxFileBytes))
+    val incoming = located(c, rows.map(l => if (l.fid == null) l.copy(fid = route.fresh(l)) else l),
+      dataSchema)
+    val created = if (inserts.isEmpty) None else probedChanges(byGroup, Some(route))
+    val touched = perFid.keySet
+    if (touched.isEmpty)
+      return Routed(if (inserts.isEmpty) None else Some(incoming), indexChanges = created)
+
+    // stored rows project onto the commit's (possibly EVOLVED) data
+    // schema: widened columns upcast, added columns null-fill; a delete
+    // keeps the table's data schema
+    val targetFields =
+      if (deletes) t.tableSchema.fields.filterNot(f => MetaField.all.contains(f.name)).toSeq
+      else dataSchema.fields.toSeq
+    val stored0 = c.spark.read.format("hudi-graft")
+      .option("cdc.file.groups", touched.toSeq.sorted.mkString(","))
+      .load(c.basePath)
+      .withColumn("__key", col(MetaField.RecordKey))
+      .withColumn("__part", col(MetaField.PartitionPath))
+      .withColumn("__fid", fidOfFileName)
+    val stored = stored0.select((alignTo(stored0, targetFields) ++ Seq(
+      col("__key"), col("__part"), col("__fid"), col(MetaField.CommitTime))): _*)
+    // incoming keys either matched a stored row of a touched group or
+    // exist nowhere in the table
+    val carried = stored.join(incoming.select("__key", "__part"), Seq("__key", "__part"), "left_anti")
+    val sidecars = cdcMode match {
+      case None => Map.empty[String, (String, Long)]
+      case Some(m) => writeCdcSidecars(c, stored, located(c, rows.filter(_.fid != null), dataSchema),
+        targetFields.map(_.name), t.config.timelineTimezone, deletes, m)
+    }
+    Routed(Some(if (deletes) carried else carried.unionByName(incoming)),
+      updateCounts = if (deletes) Map.empty else perFid,
+      deleteCounts = if (deletes) perFid else Map.empty,
+      prevCommits = c.prevCommits(touched),
+      cdcFiles = sidecars,
+      requiredGroups = c.slices.collect {
+        case sl if touched.contains(sl.fileId) => sl.fileId -> sl.partitionPath
+      }.toMap,
+      indexChanges = if (deletes) probedChanges(byGroup, None) else created)
+  }
+
+  /** MOR upsert routing (deltacommit): after the [[probe]], the counting
+    * job ([[probeCounts]]) counts each partition's unmatched keys
+    * (inserts). The log pass ([[writeMorLogs]]) appends matched keys as
+    * ONE avro data block per touched file group onto the group's latest
+    * slice — full meta-prefixed rows stamped with the new instant, so the
+    * MOR merge's overwrite-with-latest picks them over the base rows — and
+    * inserts go to SMALL existing groups first, riding the same log
+    * files: upstream's small-file handling for an index that finds
+    * records in log files. [[smallFileTargets]] spreads each partition's
+    * count over its groups whose latest slice is below
+    * `hoodie.parquet.max.file.size` by remaining capacity
+    * ([[InsertRoute]]); the reader merges log-only keys. Only overflow
+    * past capacity, and partitions with no small group, stage fresh
+    * parquet base-file groups (sized by the overflow count × the
+    * bytes-per-record estimate); when the count shows no overflow the
+    * commit stages no base file at all. On a record_index table the
+    * created keys' entries come from the probe's cached partitions
+    * ([[probedChanges]]). Log naming follows the read side's association
+    * rule: v6 names carry the target slice's BASE instant, v8+ the
+    * delta's own instant (completion from the timeline). The driver
+    * collects one insert count per partition and one (fileId → path,
+    * rows, bytes) per log file.
     */
   private def routeMorUpsert(
       c: Commit,
       t: HudiTable,
-      keyed: DataFrame,
+      rows: RDD[Loc],
+      byGroup: Option[RDD[(Int, Loc)]],
+      dataSchema: StructType,
       opts: Options
   ): Routed = {
-    val (rows, byGroup) = probeMor(c, keyed, deletes = false)
-    val inserts = rows.mapPartitions { it =>
-      val n = scala.collection.mutable.HashMap.empty[String, Long]
-      it.foreach(l => if (l.fid == null) n(l.part) = n.getOrElse(l.part, 0L) + 1L)
-      Iterator.single(n.toMap)
-    }.collect().flatten.groupMapReduce(_._1)(_._2)(_ + _)
+    val (inserts, _) = probeCounts(rows)
     val bytesPerRecord = averageBytesPerRecord(t)
     val targets = smallFileTargets(c.slices, inserts, opts.maxFileBytes, bytesPerRecord)
     val overflow = targets.valuesIterator.collect {
@@ -1132,33 +1100,21 @@ object HudiWriter {
     val route = InsertRoute(c.instant, targets,
       freshGroups(c.spark, BigInt(math.ceil(overflow).toLong) * bytesPerRecord, opts.maxFileBytes))
 
-    val dataSchema = StructType(keyed.schema.filterNot(f => f.name == "__key" || f.name == "__part"))
     val logRows = rows.flatMap { l =>
       if (l.fid != null) Some(l) else route.small(l).map(f => l.copy(fid = f, ins = true))
     }
     val logs = writeMorLogs(c, t, logRows, dataSchema, deletes = false)
     val fresh =
       if (overflow <= 0) None
-      else {
-        val instant = c.instant
-        Some(c.spark.createDataFrame(
-          rows.filter(l => l.fid == null && route.small(l).isEmpty).map(l =>
-            Row.fromSeq(l.data.toSeq ++ Seq(l.key, l.part, route.fresh(l), instant))),
-          StructType(dataSchema.fields ++ Seq("__key", "__part", "__fid", MetaField.CommitTime)
-            .map(StructField(_, StringType)))))
-      }
-    val touched = logs.map(_.fileId).toSet
+      else Some(located(c, rows.flatMap(l =>
+        if (l.fid == null && route.small(l).isEmpty) Some(l.copy(fid = route.fresh(l))) else None),
+        dataSchema))
     Routed(fresh,
       updateCounts = logs.map(l => l.fileId -> (l.rows - l.inserts)).toMap,
-      prevCommits = c.slices.filter(sl => touched.contains(sl.fileId))
-        .map(sl => sl.fileId -> sl.commitTimestamp).toMap,
+      prevCommits = c.prevCommits(logs.map(_.fileId).toSet),
       logWrites = logs,
-      logRows = if (logs.isEmpty) None else Some(c.spark.createDataFrame(
-        logRows.map(l => Row.fromSeq(l.data.toSeq :+ l.part)),
-        StructType(dataSchema.fields :+ StructField("__part", StringType)))),
-      indexChanges = if (inserts.isEmpty) None else byGroup.map(_.mapPartitions(
-        _.collect { case (g, l) if l.fid == null => (g, (l.key, l.part, route.fid(l))) },
-        preservesPartitioning = true)))
+      logRows = if (logs.isEmpty) None else Some(located(c, logRows, dataSchema)),
+      indexChanges = if (inserts.isEmpty) None else probedChanges(byGroup, Some(route)))
   }
 
   /** Small-file insert plan per partition: `inserts` (partition → count
@@ -1211,22 +1167,23 @@ object HudiWriter {
     * so the merge's commit-time tiebreak removes the row (M3's
     * event-time-zero semantics). Unmatched keys are no-ops; no base
     * files are written at all. The same passes as [[routeMorUpsert]]
-    * minus the insert count: the log pass's job builds the probe's
-    * cache, and on a record_index table the index pass writes the
-    * tombstones from it.
+    * minus the count: the log pass's job builds the probe's cache, and
+    * on a record_index table the index pass writes the tombstones from
+    * it.
     */
-  private def routeMorDelete(c: Commit, t: HudiTable, keyed: DataFrame): Routed = {
-    val (rows, byGroup) = probeMor(c, keyed, deletes = true)
+  private def routeMorDelete(
+      c: Commit,
+      t: HudiTable,
+      rows: RDD[Loc],
+      byGroup: Option[RDD[(Int, Loc)]]): Routed = {
     // delete blocks carry keys only — no data columns
     val logs = writeMorLogs(c, t, rows, StructType(Nil), deletes = true)
     if (logs.isEmpty) return Routed(None)
-    val touched = logs.map(_.fileId).toSet
     Routed(None,
       deleteCounts = logs.map(l => l.fileId -> l.rows).toMap,
-      prevCommits = c.slices.filter(sl => touched.contains(sl.fileId))
-        .map(sl => sl.fileId -> sl.commitTimestamp).toMap,
+      prevCommits = c.prevCommits(logs.map(_.fileId).toSet),
       logWrites = logs,
-      indexChanges = byGroup.map(_.mapValues(l => (l.key, null: String, null: String))))
+      indexChanges = probedChanges(byGroup, None))
   }
 
   /** Log pass of every MOR commit: `rows` (with their file group set)
@@ -1270,6 +1227,8 @@ object HudiWriter {
             "only flat column types are supported for MOR upserts", e)
       }
     val parts = math.max(1, math.min(naming.size, c.spark.sparkContext.defaultParallelism))
+    // the probe that named each row's file group, for the error below
+    val prober = if (c.indexed) "the record index" else "the snapshot's _hoodie_file_name"
 
     // (fid, rel path, rows, bytes, inserts) per written log file
     val entries = rows.map(l => (l.fid, l)).partitionBy(new HashPartitioner(parts))
@@ -1278,8 +1237,8 @@ object HudiWriter {
         it.map(_._2).toVector.groupBy(_.fid).iterator.map { case (fid, rs0) =>
           val (part, nameTs, version) = naming.getOrElse(fid,
             throw new IllegalStateException(
-              s"hudi-graft: file group $fid (from the key probe) has no slice as of " +
-                "this write — the record index points at uncommitted state"))
+              s"hudi-graft: file group $fid (from $prober) has no slice as of " +
+                s"this write — $prober points at uncommitted state"))
           val name = s".${fid}_$nameTs.log.${version}_$token"
           val dir = if (part.isEmpty) new Path(basePath) else new Path(basePath, part)
           val fs = dir.getFileSystem(conf.value.value)
@@ -1321,28 +1280,28 @@ object HudiWriter {
     }
   }
 
-  /** Distributed `-cdc` sidecar emission for an upsert's rewritten
-    * groups: (before = the stored row being replaced, after = the
-    * incoming winner) image pairs repartition by file group; each task
-    * writes one log file per group it holds (buffering bounded by the
-    * group's CHANGE volume, never table size) with a single CdcData
-    * block, and the driver collects only (fileId → path, bytes) for the
-    * commit metadata's cdcStats. Fresh-key inserts route to new groups
-    * and need no images (readers serve them one-sided from the base
-    * file); upserts produce no deletes.
+  /** Distributed `-cdc` sidecar emission for a COW commit's rewritten
+    * groups: (before = the stored row, after = the incoming winner, or
+    * null for a delete) image pairs of the `matched` rows — the probe's
+    * matched [[Loc]]s as a [[located]] frame — repartition by file group;
+    * each task writes one log file per group it holds (buffering bounded
+    * by the group's CHANGE volume, never table size) with a single
+    * CdcData block, and the driver collects only (fileId → path, bytes)
+    * for the commit metadata's cdcStats. Fresh-key inserts route to new
+    * groups and need no images (readers serve them one-sided from the
+    * base file).
     */
   private def writeCdcSidecars(
-      spark: SparkSession,
-      basePath: String,
+      c: Commit,
       stored: DataFrame,
       matched: DataFrame,
-      dataCols: Array[String],
-      instant: String,
+      dataCols: Seq[String],
       timelineTimezone: String,
       deletes: Boolean,
       mode: String): Map[String, (String, Long)] = {
+    val (basePath, instant, conf) = (c.basePath, c.instant, c.conf)
     val b = stored.select(col("__key"), col("__part"), col("__fid"),
-      struct(dataCols.map(col).toIndexedSeq: _*).as("__before"))
+      struct(dataCols.map(col): _*).as("__before"))
     val images =
       if (deletes)
         // delete images: before = the stored row, after = null
@@ -1351,15 +1310,13 @@ object HudiWriter {
             lit(null).cast(b.schema("__before").dataType).as("__after"))
       else {
         val a = matched.select(col("__key"), col("__part"),
-          struct(dataCols.map(col).toIndexedSeq: _*).as("__after"))
+          struct(dataCols.map(col): _*).as("__after"))
         b.join(a, Seq("__key", "__part"), "inner")
           .select(col("__fid"), col("__part"), col("__key"), col("__before"), col("__after"))
       }
     val dataSchema = org.apache.spark.sql.types.StructType(
       images.schema("__before").dataType.asInstanceOf[org.apache.spark.sql.types.StructType])
     val schemaJson = dataSchema.json
-    val conf = new graft.util.SerializableConf(
-      spark.sessionState.newHadoopConf())
     // the TABLE's timeline timezone, matching CdcRead's inference stamps —
     // persisted and inferred feeds must hash-identically on non-UTC tables
     val tsMs = graft.core.Timestamps.timelineToEpochMillis(instant, timelineTimezone).toString
@@ -1398,7 +1355,7 @@ object HudiWriter {
         }
         val name = s".${fid}_$instant.log.1_$token${graft.fs.LogFile.CdcSuffix}"
         val dir = if (part.isEmpty) new Path(basePath) else new Path(basePath, part)
-        val fs = dir.getFileSystem(conf.value)
+        val fs = dir.getFileSystem(conf.value.value)
         val out = new java.io.DataOutputStream(fs.create(new Path(dir, name), true))
         try graft.log.LogFileWriter.cdcDataBlock(out, instant, cdcAvro, recs)
         finally out.close()

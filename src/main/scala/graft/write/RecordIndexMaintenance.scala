@@ -23,10 +23,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * key-hash group mapping ([[RecordIndex.fileGroupIndex]], the same
   * 31-poly hash reads probe by), one executor task writes one index
   * group's log block (records sorted — the HFile key invariant), and the
-  * driver only completes the timeline. This is the third pass of a MOR
-  * upsert or delete on an indexed table: its changes come from the
-  * probe pass's cached partitions, already laid out by group, so the
-  * blocks are written without a shuffle. Requires a provably
+  * driver only completes the timeline. This is the last pass of every
+  * upsert or delete on an indexed table, COW or MOR: its changes come
+  * from the probe pass's cached partitions, already laid out by group,
+  * so the blocks are written without a shuffle. Requires a provably
   * hash-aligned slice set ([[RecordIndex.openGroups]]), exactly like the
   * distributed probe — a gap would shrink the modulus and misroute every
   * subsequent lookup, so misalignment throws rather than corrupting the
@@ -89,31 +89,23 @@ object RecordIndexMaintenance {
     */
   type Change = (Int, (String, String, String))
 
-  /** [[Change]]s of `entries` ((__key, __part, __fid) frames) and
-    * `tombstones` ((__key) frames) for an index of `n` groups — the
-    * input shape of the commits whose key locations are DataFrames
-    * (inserts, COW upserts and deletes); they are not partitioned yet.
+  /** [[Change]]s naming the locations of an insert's created keys, a
+    * (__key, __part, __fid) frame, for an index of `n` groups — the only
+    * commits whose key locations are a DataFrame rather than the
+    * upsert/delete probe's group-keyed partitions; not partitioned yet.
     */
-  def changesOf(
-      entries: Option[DataFrame],
-      tombstones: Option[DataFrame],
-      n: Int): Option[RDD[Change]] = {
-    import org.apache.spark.sql.functions.{col, lit}
-    val frames = entries.map(_.select("__key", "__part", "__fid")).toSeq ++
-      tombstones.map(_.select(col("__key"), lit(null).cast("string").as("__part"),
-        lit(null).cast("string").as("__fid"))).toSeq
-    frames.reduceOption(_ unionByName _).map(_.rdd.map { r =>
+  def changesOf(entries: DataFrame, n: Int): RDD[Change] =
+    entries.select("__key", "__part", "__fid").rdd.map { r =>
       val key = r.getString(0)
       (RecordIndex.fileGroupIndex(key, n), (key, r.getString(1), r.getString(2)))
-    })
-  }
+    }
 
   /** Append `changes` to the record index `groups` (opened by the
     * commit, at `instant`), then complete the MDT deltacommit. The
     * changes shuffle by group ordinal through `HashPartitioner(n)` —
     * the identity mapping, so one task holds exactly one index group's
     * keys. A caller whose changes are already partitioned that way (the
-    * MOR probe's cached output) skips the shuffle: `partitionBy` with an
+    * upsert/delete probe's cached output) skips the shuffle: `partitionBy` with an
     * equal partitioner is a no-op.
     */
   def append(

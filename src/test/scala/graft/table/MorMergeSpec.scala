@@ -137,6 +137,21 @@ class MorMergeSpec extends SparkTestBase {
     assert(values(commitTieTable("del_zero", 7L, 0)) == Map("k2" -> "y"))
   }
 
+  test("every delete of a key is weighed: a later zero delete beats a record an older delete lost to") {
+    // k1: deleted at t2 (ord 5), re-sent at t3 with a greater ord, deleted
+    // again at t4 with the zero ordering (commit time decides, t4 wins).
+    // k2: two ordered deletes — the one with the greatest ord (t2) is
+    // older than the record and the newer one (t4) has a smaller ord, so
+    // neither beats the t3 record
+    val path = table("del_mixed",
+      Seq(rec(t1, 1, "k1", 5L, "x0"), rec(t1, 2, "k2", 5L, "y0")),
+      Seq(
+        LogCommit(t2, deletes = Seq("k1" -> 5L, "k2" -> 9L)),
+        LogCommit(t3, data = Seq(rec(t3, 1, "k1", 50L, "x"), rec(t3, 2, "k2", 9L, "y"))),
+        LogCommit(t4, deletes = Seq("k1" -> 0, "k2" -> 3L))))
+    assert(values(path) == Map("k2" -> "y"))
+  }
+
   test("append-only keeps every version") {
     val path = table("append_only",
       Seq(rec(t1, 1, "k1", 5L, "a")),

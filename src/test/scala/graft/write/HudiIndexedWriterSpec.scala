@@ -264,16 +264,13 @@ class HudiIndexedWriterSpec extends SparkTestBase {
     fs.delete(new Path(plain, ".hoodie/metadata"), true)
 
     // partition values unchanged: the two probes differ only in matching
-    // scope (global vs per partition), which such a batch cannot see.
-    // Keys %7 are left alone: the fixture's update log records carry an
-    // empty _hoodie_file_name, which the snapshot probe cannot route
-    val live = orders().filter(col("o_orderkey") % 7 =!= 0)
-    val upserts = local(live.filter(col("o_orderkey") % 5 === 0)
+    // scope (global vs per partition), which such a batch cannot see
+    val upserts = local(orders().filter(col("o_orderkey") % 5 === 0)
       .withColumn("o_orderstatus", lit("D"))
       .withColumn("o_custkey", col("o_custkey") + lit(100000))
       .unionByName(orders().filter(col("o_orderkey") % 40 === 3)
         .withColumn("o_orderkey", col("o_orderkey") + lit(50000000L))))
-    val deletes = local(live.filter(col("o_orderkey") % 13 === 0)
+    val deletes = local(orders().filter(col("o_orderkey") % 13 === 0)
       .select("o_orderkey", "o_orderpriority"))
     HudiWriter.snapshotProbes.set(0)
     HudiWriter.indexProbes.set(0)
