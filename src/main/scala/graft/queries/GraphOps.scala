@@ -1,7 +1,12 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
+import org.apache.spark.storage.StorageLevel
 
 import scala.jdk.CollectionConverters._
 
@@ -18,14 +23,24 @@ import scala.jdk.CollectionConverters._
   * one). The tiny mass truncation loses is part of the operator's
   * definition, identically in both engines.
   *
-  * Scale shape (100 TB): per iteration — one broadcast-sized join of the
-  * node-sized rank relation onto the (persisted) edge relation, one
-  * combinable SUM shuffle by dst, and a `localCheckpoint` that cuts the
-  * lineage so the plan does not grow with iteration count (the
-  * dedup_groups pointer-jumping discipline; measured there, plan growth
-  * per round is what kills iterative DataFrame jobs). The rank relation
-  * is node-sized (orders of magnitude below edges); the edge relation is
-  * built once and reused by every iteration.
+  * Scale shape (100 TB): the edge relation is built once per session and
+  * reused by every round; the rank relation is node-sized (orders of
+  * magnitude below edges). Two regimes, chosen by whether the node set
+  * fits the broadcast gate:
+  *  - Broadcast (every bench and oracle run): the node ids live on the
+  *    driver and the edges as one persisted RDD of primitive per-
+  *    partition arrays, partitioned by dst. A round is ONE Spark job: the
+  *    driver broadcasts its rank array, each task sums `pr DIV deg` per
+  *    dst of its partition, and the driver applies the damping step to
+  *    the collected sums. Top-K is picked on the driver. No Catalyst
+  *    planning, no exchange, no checkpoint per round: on a scale-up box
+  *    the fixed cost of a DataFrame round trip dominated the round
+  *    (*Flare*, OSDI 2018).
+  *  - Shuffle-hash (a node set past the gate): one node-sized rank
+  *    shuffle into a shuffle-hash join with the src-partitioned edges,
+  *    one combinable SUM shuffle by dst, and a `localCheckpoint` that
+  *    cuts the lineage so the plan does not grow with iteration count
+  *    (the dedup_groups pointer-jumping discipline).
   *
   * The DuckDB oracle is independently shaped: the same ten iterations
   * UNROLLED into chained CTEs (standard SQL forbids aggregation in a
@@ -38,16 +53,14 @@ object GraphOps {
   private val Iters = 10
   private val TopK = 20
 
-  /** Broadcast gate for the per-iteration (edges ⋈ ranks) join. The rank
-    * relation is node-sized; after `localCheckpoint` its stats are gone,
-    * so WITHOUT the explicit hint Spark shuffle-joins the full edge
-    * relation every iteration (measured: 13s vs 1s at sf0.1). Below the
-    * gate the node relation broadcasts; above it (a graph whose node set
-    * alone beats the broadcast limit) the edge relation is hash-
-    * partitioned by src ONCE and each iteration shuffles only the
-    * node-sized rank relation into a shuffle-hash join — no edge
-    * re-shuffle, no sort. [[sparkImpl]] takes the gate as a parameter so
-    * the regime-differential test can force the shuffle-hash regime.
+  /** Regime gate on the node-sized rank relation. Below it the ranks
+    * live on the driver and ship to the tasks as a broadcast each round;
+    * above it (a graph whose node set alone beats the broadcast limit)
+    * the edge relation is hash-partitioned by src ONCE and each iteration
+    * shuffles only the node-sized rank relation into a shuffle-hash join
+    * — no edge re-shuffle, no sort. [[sparkImpl]] takes the gate as a
+    * parameter so the regime-differential test can force the shuffle-
+    * hash regime.
     */
   private val BroadcastMaxBytes = 64L << 20
   private val RankRowBytes = 48L // BIGINT node id + long rank + row overhead
@@ -61,19 +74,102 @@ object GraphOps {
     */
   private val MinPartitionBytes = 8L << 20
 
-  /** Session-shared graph prep (the ANN/minhash prep contract): the
-    * (edges ⋈ deg) relation and node count build ONCE per (session, dir,
-    * regime) and stay persisted — ten iterations plus repeat invocations
-    * all read the same cached relation instead of re-deriving the pair
-    * graph from the base tables. Nodes are BIGINT ids inside the loop
-    * (customer 2k, supplier 2k+1): integer join/agg keys shuffle a
-    * fraction of the string bytes, and the display name is restored on
-    * the node-sized relation at the very end.
+  /** A node without a rank in the driver's rank array: it has no in-edge
+    * from a ranked node, so it drops out of the next round — as the inner
+    * join plus `groupBy(dst)` drops it in the shuffle-hash regime. Ranks
+    * themselves are never negative.
     */
-  private case class Prep(dir: String, withDeg: DataFrame, nodes: DataFrame, n: Long) {
+  private final val Absent = -1L
+
+  private val ResultSchema = StructType(Seq(
+    StructField("rank", IntegerType, nullable = false),
+    StructField("node", StringType),
+    StructField("pr", LongType)))
+
+  /** Session-shared graph prep (the ANN/minhash prep contract): built
+    * ONCE per (session, dir, regime) and kept — ten iterations plus
+    * repeat invocations all read the same edges instead of re-deriving
+    * the pair graph from the base tables. Nodes are BIGINT ids (customer
+    * 2k, supplier 2k+1): integer keys shuffle a fraction of the string
+    * bytes, and the display name is restored on the top-K at the end.
+    */
+  private sealed trait Prep {
+    def dir: String
+    def unpersistAll(): Unit
+  }
+
+  /** The broadcast regime's prep: the sorted node ids on the driver
+    * (a node's position is its dense index) and the dst-partitioned
+    * edges as [[EdgeBlock]]s over those indices. `ids` ships once, for
+    * building the blocks, and stays alive with them: a lost block
+    * recomputes from it.
+    */
+  private final case class LocalRanksPrep(dir: String, ids: Array[Long],
+      idsB: Broadcast[Array[Long]], edges: RDD[EdgeBlock]) extends Prep {
+    def unpersistAll(): Unit = {
+      edges.unpersist(blocking = false)
+      idsB.destroy()
+    }
+  }
+
+  /** The shuffle-hash regime's prep: (edges ⋈ deg) partitioned by src,
+    * and the node relation, both persisted.
+    */
+  private final case class ShufflePrep(dir: String, withDeg: DataFrame, nodes: DataFrame,
+      n: Long) extends Prep {
     def unpersistAll(): Unit = {
       withDeg.unpersist(blocking = false)
       nodes.unpersist(blocking = false)
+    }
+  }
+
+  /** One partition of the broadcast regime's edges: edge `i` runs from
+    * node index `src(i)` (out-degree `deg(i)`) to `dsts(slot(i))`; `dsts`
+    * holds each of the partition's distinct dst indices once, and no
+    * other partition holds them.
+    */
+  private final case class EdgeBlock(src: Array[Int], deg: Array[Long], slot: Array[Int],
+      dsts: Array[Int]) {
+
+    /** Per dst of this block, the sum of `pr DIV deg` over its edges from
+      * ranked nodes; a dst with no such edge is left out.
+      */
+    def contribSums(ranks: Array[Long]): (Array[Int], Array[Long]) = {
+      val sums = new Array[Long](dsts.length)
+      val hit = new Array[Boolean](dsts.length)
+      var i = 0
+      while (i < src.length) {
+        val pr = ranks(src(i))
+        if (pr != Absent) {
+          sums(slot(i)) += pr / deg(i)
+          hit(slot(i)) = true
+        }
+        i += 1
+      }
+      val kept = dsts.indices.filter(hit(_))
+      (kept.map(dsts(_)).toArray, kept.map(sums(_)).toArray)
+    }
+  }
+
+  private object EdgeBlock {
+    /** A block from (src, dst, deg) BIGINT rows, ids indexed by `ids`. */
+    def apply(rows: Iterator[InternalRow], ids: Array[Long]): EdgeBlock = {
+      def index(id: Long): Int = {
+        val i = java.util.Arrays.binarySearch(ids, id)
+        // the edge relation is symmetric, so every dst is also a src
+        if (i < 0) throw new IllegalStateException(s"pagerank edge endpoint $id is not a node")
+        i
+      }
+      val src, dst = Array.newBuilder[Int]
+      val deg = Array.newBuilder[Long]
+      rows.foreach { r =>
+        src += index(r.getLong(0))
+        dst += index(r.getLong(1))
+        deg += r.getLong(2)
+      }
+      val d = dst.result()
+      val dsts = d.distinct.sorted
+      EdgeBlock(src.result(), deg.result(), d.map(java.util.Arrays.binarySearch(dsts, _)), dsts)
     }
   }
 
@@ -123,16 +219,15 @@ object GraphOps {
             try {
               val n = nodes.count() // node-sized; materializes the edge cache too
               val joined = edges.join(deg, "src")
-              // Size the cached iteration relation's partitioning by the
-              // MEASURED edge count, floored at the cluster parallelism:
-              // cached plans skip AQE coalescing (spark.sql.optimizer.
-              // canChangeCachedPlanOutputPartitioning is off by default),
-              // and the fixed session shuffle-partition count would
-              // undersplit a 100 TB edge relation. The parallelism floor
-              // matters the other way: per-iteration compute (join + agg
-              // over every edge) dominates task overhead, so dropping
-              // below the core count serializes the loop (measured 2x
-              // slower at sf0.1 with a single byte-sized partition).
+              // Size the iteration relation's partitioning by the MEASURED
+              // edge count, floored at the cluster parallelism: neither a
+              // cached plan nor an RDD gets AQE coalescing, and the fixed
+              // session shuffle-partition count would undersplit a 100 TB
+              // edge relation. The parallelism floor matters the other
+              // way: per-iteration compute over every edge dominates task
+              // overhead, so dropping below the core count serializes the
+              // loop (measured 2x slower at sf0.1 with a single byte-sized
+              // partition).
               val e = edges.count() // narrow job over the already-persisted edges
               // The parallelism floor is DATA-BOUNDED (r16): flooring at the
               // raw core count anti-scaled — at sf0.1 the 10-iteration loop
@@ -148,21 +243,34 @@ object GraphOps {
                 e * EdgeRowBytes / MinPartitionBytes + 1)
               val parts = math.max(coreFloor,
                 math.min(1L << 18, e * EdgeRowBytes / TargetPartitionBytes + 1)).toInt
-              // Broadcast regime: pre-partition the cached edge relation by
-              // dst. The per-iteration BroadcastHashJoin preserves the stream
-              // side's HashPartitioning(dst), so the groupBy(dst) SUM needs
-              // NO exchange — each iteration is one shuffle-free stage.
-              // Non-broadcast regime: partition by src so the shuffle-hash
-              // join co-locates with the node-sized rank shuffle; the
-              // edge-sized contrib shuffle by dst is inherent there.
-              val withDeg =
-                (if (n * RankRowBytes <= broadcastMaxBytes) joined.repartition(parts, col("dst"))
-                 else joined.repartition(parts, col("src"))).persist()
-              try withDeg.count() // materialize from the edge cache
-              catch {
-                case t: Throwable => withDeg.unpersist(blocking = false); throw t
+              if (n * RankRowBytes <= broadcastMaxBytes) {
+                // Broadcast regime: the node set is ≤ the gate BY
+                // DEFINITION, so holding it on the driver has the same
+                // bounded memory exposure the broadcast itself imposes.
+                // Partitioning the edges by dst gives each dst's whole sum
+                // to one task.
+                val ids = nodes.collect().map(_.getLong(0)).sorted
+                nodes.unpersist(blocking = false)
+                val idsB = s.sparkContext.broadcast(ids)
+                val blocks = joined.repartition(parts, col("dst"))
+                  .select("src", "dst", "deg").queryExecution.toRdd
+                  .mapPartitions(rows => Iterator(EdgeBlock(rows, idsB.value)))
+                  .persist(StorageLevel.MEMORY_AND_DISK)
+                val lp = LocalRanksPrep(d, ids, idsB, blocks)
+                try blocks.count() // materialize from the edge cache
+                catch { case t: Throwable => lp.unpersistAll(); throw t }
+                lp
+              } else {
+                // partition by src so the shuffle-hash join co-locates with
+                // the node-sized rank shuffle; the edge-sized contrib
+                // shuffle by dst is inherent here
+                val withDeg = joined.repartition(parts, col("src")).persist()
+                try withDeg.count() // materialize from the edge cache
+                catch {
+                  case t: Throwable => withDeg.unpersist(blocking = false); throw t
+                }
+                ShufflePrep(d, withDeg, nodes, n)
               }
-              Prep(d, withDeg, nodes, n)
             } catch { case t: Throwable => nodes.unpersist(blocking = false); throw t }
           // a stale prep for ANOTHER dir under the same key must free its
           // caches (the TextOps.sharedPrep put-return discipline)
@@ -176,58 +284,70 @@ object GraphOps {
 
   private[queries] def sparkImpl(s: SparkSession, d: String,
       broadcastMaxBytes: Long = BroadcastMaxBytes): DataFrame = {
-    val p = prep(s, d, broadcastMaxBytes)
-    val useBroadcast = p.n * RankRowBytes <= broadcastMaxBytes
-    val prInit = Scale / p.n
+    val top = prep(s, d, broadcastMaxBytes) match {
+      case p: LocalRanksPrep => localRanksTopK(s, p)
+      case p: ShufflePrep => shuffleTopK(p)
+    }
+    s.createDataFrame(top.zipWithIndex.map { case ((node, pr), i) => Row(i + 1, node, pr) }
+      .asJava, ResultSchema)
+  }
+
+  /** Display name of a node id: customer 2k is `c<k>`, supplier 2k+1 `s<k>`. */
+  private def nodeName(id: Long): String =
+    if (id % 2 == 0) s"c${id / 2}" else s"s${(id - 1) / 2}"
+
+  /** The broadcast regime's rounds, one Spark job each, then the top-K
+    * (pr desc, node name asc) picked on the driver.
+    */
+  private def localRanksTopK(s: SparkSession, p: LocalRanksPrep): Seq[(String, Long)] = {
+    val n = p.ids.length
+    val baseQ = ((Scale / n) * 15) / 100
+    var ranks = Array.fill(n)(Scale / n)
+    for (_ <- 1 to Iters) {
+      val ranksB = s.sparkContext.broadcast(ranks)
+      val sums = try p.edges.map(_.contribSums(ranksB.value)).collect()
+        finally ranksB.destroy()
+      ranks = Array.fill(n)(Absent)
+      for ((dsts, csums) <- sums; i <- dsts.indices) ranks(dsts(i)) = baseQ + (csums(i) * 85) / 100
+    }
+    // only nodes ranked at least the K-th highest rank can make the top K
+    val ranked = (0 until n).filter(ranks(_) != Absent)
+    val prs = ranked.map(ranks(_)).sorted
+    val cut = if (prs.length > TopK) prs(prs.length - TopK) else Long.MinValue
+    ranked.filter(ranks(_) >= cut).map(i => (nodeName(p.ids(i)), ranks(i)))
+      .sortWith((a, b) => a._2 > b._2 || (a._2 == b._2 && a._1 < b._1))
+      .take(TopK)
+  }
+
+  /** The shuffle-hash regime: DataFrame rounds over the src-partitioned
+    * edges, each cut by an eager `localCheckpoint`, then a distributed
+    * top-K of TopK rows to the driver.
+    */
+  private def shuffleTopK(p: ShufflePrep): Seq[(String, Long)] = {
     val baseQ = ((Scale / p.n) * 15) / 100
-    var ranks = p.nodes.select(col("node"), lit(prInit).as("pr"))
-    def step(rankSide: DataFrame): DataFrame =
-      p.withDeg.join(rankSide, col("src") === col("node"))
+    var ranks = p.nodes.select(col("node"), lit(Scale / p.n).as("pr"))
+    for (_ <- 1 to Iters) {
+      // eager localCheckpoint: cuts lineage, materializes the iteration
+      val next = p.withDeg.join(ranks.hint("shuffle_hash"), col("src") === col("node"))
         .select(col("dst"), expr("pr DIV deg").as("contrib"))
         .groupBy("dst")
         .agg(sum(col("contrib")).as("csum"))
         .select(col("dst").as("node"), (lit(baseQ) + expr("(csum * 85) DIV 100")).as("pr"))
-    if (useBroadcast) {
-      // Broadcast regime: the rank relation is ≤ the broadcast gate BY
-      // DEFINITION, so collecting it to the driver each iteration has the
-      // same bounded memory exposure the broadcast itself imposes — and a
-      // LocalRelation rank side makes each iteration exactly ONE job over
-      // the dst-partitioned edge cache (broadcast of driver-local rows is
-      // free; the groupBy(dst) needs no exchange; no localCheckpoint
-      // block-store writes, nothing to unpersist).
-      val schema = ranks.schema
-      for (_ <- 1 to Iters) {
-        val rows = step(broadcast(ranks)).collect().toSeq
-        ranks = s.createDataFrame(rows.asJava, schema)
-      }
-    } else {
-      for (_ <- 1 to Iters) {
-        // eager localCheckpoint: cuts lineage, materializes the iteration
-        val next = step(ranks.hint("shuffle_hash")).localCheckpoint()
-        graft.util.Checkpoints.freeLocalCheckpoint(ranks) // superseded generation
-        ranks = next
-      }
+        .localCheckpoint()
+      graft.util.Checkpoints.freeLocalCheckpoint(ranks) // superseded generation
+      ranks = next
     }
-    val named = ranks.select(
-      when(col("node") % 2 === 0, concat(lit("c"), expr("node DIV 2")))
-        .otherwise(concat(lit("s"), expr("(node - 1) DIV 2"))).as("node"),
-      col("pr"))
-    val top = named.orderBy(col("pr").desc, col("node")).limit(TopK)
-    val result = top.select(
-      row_number().over(
-        org.apache.spark.sql.expressions.Window.orderBy(col("pr").desc, col("node")))
-        .as("rank"),
-      col("node"), col("pr"))
-      .orderBy("rank")
-    // materialize the TopK-bounded result (driver-safe: TopK rows) so the
-    // returned frame is a self-contained LocalRelation — then the FINAL
-    // checkpoint generation can be freed right here, like its superseded
-    // predecessors. Lazier schemes (parking the checkpoint and freeing it
-    // on the next invocation) would invalidate a still-held previous
-    // result: a localCheckpoint cannot recompute once unpersisted.
-    val rows = result.collect().toSeq
+    // collecting the TopK-bounded rows lets the FINAL generation be
+    // freed right here, like its superseded predecessors: the returned
+    // frame never reads the checkpoint
+    val top = ranks.select(
+        when(col("node") % 2 === 0, concat(lit("c"), expr("node DIV 2")))
+          .otherwise(concat(lit("s"), expr("(node - 1) DIV 2"))).as("node"),
+        col("pr"))
+      .orderBy(col("pr").desc, col("node")).limit(TopK)
+      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
     graft.util.Checkpoints.freeLocalCheckpoint(ranks)
-    s.createDataFrame(rows.asJava, result.schema)
+    top
   }
 
   private def duckSql: String = {

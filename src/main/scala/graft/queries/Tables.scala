@@ -2,12 +2,36 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
 /** Loaders for the driver-provided parquet test tables (TESTDATA.md). */
 object Tables {
-  def t(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+
+  /** A test table, its parquet schema inferred ONCE per session: every
+    * inference is a Spark job (`SchemaMergeUtils.mergeSchemasInParallel`),
+    * and an entry reading six tables paid six of them before its own
+    * query started. The cached schema is keyed on the file's modification
+    * time, so a rewritten table is inferred again, and on the session's
+    * parquet confs, which decide what a column infers to
+    * (`spark.sql.legacy.parquet.nanosAsLong` reads TIMESTAMP(NANOS) as a
+    * long). Spark makes file-source data schemas nullable either way.
+    */
+  def t(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    val p = new org.apache.hadoop.fs.Path(path)
+    val version = (p.getFileSystem(spark.sessionState.newHadoopConf())
+      .getFileStatus(p).getModificationTime,
+      spark.conf.getAll.filter(_._1.contains(".parquet.")))
+    val reg = SessionRegistry.of(spark)
+    val schema = reg.get(s"schema:$path").collect {
+      case (v, st: StructType) if v == version => st
+    }.getOrElse {
+      val st = spark.read.parquet(path).schema
+      reg.put(s"schema:$path", (version, st))
+      st
+    }
+    spark.read.schema(schema).parquet(path)
+  }
 
   /** Register a base table as a temp view ONCE per (session, dir).
     *

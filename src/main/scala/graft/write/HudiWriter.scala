@@ -71,18 +71,19 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   * partitions — table file count, never key count (the same bound
   * AggMaintenance documents).
   *
-  * Incoming rows are deduplicated per (key, partition) by the precombine
+  * Incoming rows are deduplicated per (key, partition) — per key alone on
+  * a record_index table, whose probe matches globally — by the precombine
   * field (greatest wins; ties and no-precombine keep one row
   * deterministically), then incoming ALWAYS wins over stored — upstream's
   * default OverwriteWithLatestAvroPayload. Carried stored rows keep their
   * original `_hoodie_commit_time` (the COW stamp-preservation every
   * incremental/CDC reader in this repo depends on) while their
   * `_hoodie_file_name` moves to the rewritten file, exactly like real
-  * Hudi. The upsert index is NON-GLOBAL (upstream's default): the probe
-  * keys on (record key, partition path), so a row arriving with a
-  * CHANGED partition value inserts there and leaves the old partition's
-  * copy in place — exactly upstream's non-global bloom/simple index
-  * behavior.
+  * Hudi. Without a record_index the upsert index is NON-GLOBAL
+  * (upstream's default): the probe keys on (record key, partition path),
+  * so a row arriving with a CHANGED partition value inserts there and
+  * leaves the old partition's copy in place — exactly upstream's
+  * non-global bloom/simple index behavior.
   */
 object HudiWriter {
 
@@ -377,10 +378,15 @@ object HudiWriter {
     val keyed0 = data
       .withColumn("__key", keyExpr)
       .withColumn("__part", partExprSafe)
-    // dedupe incoming per (key, partition): greatest precombine wins;
-    // without one, an arbitrary-but-deterministic single row survives
+    // dedupe incoming per (key, partition) — per key alone on a
+    // record_index table, whose probe matches globally (upstream's
+    // HoodieWriteHelper.deduplicateRecords under a global index): greatest
+    // precombine wins; without one, an arbitrary-but-deterministic single
+    // row survives
+    val dedupKey =
+      if (maintainsRecordIndex) Seq(col("__key")) else Seq(col("__key"), col("__part"))
     val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("__key"), col("__part"))
+      .partitionBy(dedupKey: _*)
       .orderBy(precombine.filter(f => operation != "delete" && data.columns.contains(f))
         .map(f => col(f).desc_nulls_last).getOrElse(col("__key").asc))
     val deduped = keyed0

@@ -1,10 +1,12 @@
 package graft.queries
 
 import graft.{SparkEntry, SparkTestBase}
+import org.apache.spark.graftspec.JobCount
 
-/** PageRank invariants plus the property that makes ten DataFrame
-  * iterations viable at scale: localCheckpoint cuts lineage, so the
-  * final plan must NOT contain the 10-iteration join chain.
+/** PageRank invariants plus the properties that make ten iterations
+  * viable at scale: the final plan must NOT contain the 10-iteration join
+  * chain, a warm call runs one Spark job per round, and repeat calls pin
+  * nothing beyond the session's prep.
   */
 class GraphOpsSpec extends SparkTestBase {
 
@@ -49,5 +51,25 @@ class GraphOpsSpec extends SparkTestBase {
       case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => l
     }
     assert(locals.nonEmpty, "expected a self-contained LocalRelation of the top-k ranks")
+  }
+
+  // The DataFrame loop this one replaced ran 21 jobs on a warm call:
+  // two per round (the rank broadcast's and the round's own) plus the
+  // top-K's (local[4], 4 shuffle partitions).
+  test("a warm call runs one Spark job per round") {
+    GraphOps.sparkImpl(spark, sfDir) // builds or reuses the session's prep
+    val (_, jobs) = JobCount(spark)(GraphOps.sparkImpl(spark, sfDir))
+    assert(jobs <= 10, s"a warm PageRank ran $jobs Spark jobs")
+  }
+
+  test("the prep persists one RDD and invocations persist nothing more") {
+    GraphOps.dropCaches(spark)
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    SparkEntry.queries("graph_pagerank")(spark, sfDir).collect()
+    val afterFirst = spark.sparkContext.getPersistentRDDs.keySet
+    assert((afterFirst -- before).size == 1 && (before -- afterFirst).isEmpty,
+      s"the prep persisted ${afterFirst -- before} and released ${before -- afterFirst}")
+    SparkEntry.queries("graph_pagerank")(spark, sfDir).collect()
+    assert(spark.sparkContext.getPersistentRDDs.keySet == afterFirst)
   }
 }

@@ -113,6 +113,20 @@ class HudiCowIndexedWriterSpec extends SparkTestBase {
     assert(RecordIndex.lookup(indexed, keysOf(deletes), conf).entries.isEmpty)
   }
 
+  test("a record_index table keeps one row of a key the batch carries under two partitions") {
+    val path = table("writer_cow_dedup_global", indexed = true)
+    val seven = orders().filter(col("o_orderkey") === 7)
+    val custkey = seven.select(col("o_custkey").cast("long")).head().getLong(0)
+    // the record index matches key 7 globally: deduplicating per (key,
+    // partition) would route both rows to its one stored location
+    w(local(seven.unionByName(seven
+      .withColumn("o_orderpriority", lit("9-OTHER"))
+      .withColumn("o_custkey", col("o_custkey") + lit(100000)))), path)
+    val kept = read(path).filter(col("o_orderkey") === 7)
+      .select(col("o_custkey").cast("long")).collect().map(_.getLong(0)).toSeq
+    assert(kept == Seq(custkey + 100000), "the greater precombine alone must survive")
+  }
+
   // The join-based COW route this one replaced (a DataFrame probe and
   // join, a per-group count collect, then the rewrite) ran 16 Spark jobs
   // for this upsert and 15 for this delete on the indexed table, 12 and
