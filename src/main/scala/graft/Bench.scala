@@ -1,4 +1,5 @@
 package graft
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -92,12 +93,20 @@ object Bench {
     val grouped = inFamily :+
       (("other", qSeq.filterNot(kv => matchedNames.contains(kv._1)),
         (_: SparkSession) => ()))
+    // Janino compiles per entry in its LAST pass: a warm entry that still
+    // compiles is losing its generated classes to Spark's codegen cache
+    // (`spark.sql.codegen.cache.maxEntries`, 100 by default) between
+    // passes — the thrash that a suite-wide working set past the cache
+    // causes, invisible in wall time alone.
+    def compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val lastCompiles = scala.collection.mutable.Map.empty[String, Long]
     // A failed query must NEVER improve the headline: failures record a
     // -1 sentinel (visible in the JSON, excluded from totals) and log the
     // exception loudly — the time-to-exception is not a benchmark time.
     val famPasses: Seq[List[Seq[(String, Double)]]] = grouped.map { case (fam, qs, drop) =>
       val passes = (1 to runs).toList.map { pass =>
         qs.map { case (name, fn) =>
+          val c0 = compiles
           val t0 = System.nanoTime()
           val ok =
             try { fn(spark, sfDir).count(); true }
@@ -107,6 +116,7 @@ object Bench {
                 false
             }
           val dt = if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
+          lastCompiles(name) = compiles - c0
           if (debug) System.err.println(f"[bench] $fam/pass$pass $name%-28s $dt%.2f")
           name -> dt
         }
@@ -142,8 +152,10 @@ object Bench {
     // round harness captures, which is why every BENCH_r*.json so far
     // carries parsed:null and a head-truncated line — the full report
     // must live where line length doesn't matter.
+    val compilesJs = lastCompiles.toSeq.sorted
+      .map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
     val fullJson =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":${js(best)},"queries_cold":${js(cold)},"total_cold":$totalCold,"failed":$failedJs,"sf":"$sfDir","runs":$runs,"agg":"min","grouping":"family"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":${js(best)},"queries_cold":${js(cold)},"codegen_compiles":$compilesJs,"total_cold":$totalCold,"failed":$failedJs,"sf":"$sfDir","runs":$runs,"agg":"min","grouping":"family"}"""
     // anchor to THIS repo's root (nearest ancestor carrying both
     // build.sbt and the graft source tree — build.sbt alone could match a
     // different sbt checkout), not the process cwd — a spark-submit from

@@ -1,6 +1,13 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructField, StructType}
+import org.apache.spark.storage.StorageLevel
+
+import scala.jdk.CollectionConverters._
 
 /** Approximate-nearest-neighbor scale path: random-hyperplane (SimHash)
   * LSH over the quantized embeddings. Candidate pairs come only from
@@ -298,8 +305,7 @@ object AnnOps {
 
   /** Unpersist and forget every ANN prep — the bench calls this at its
     * group boundary so the session never carries a drained group's
-    * caches into the next group's measurements (pq's checkpoints free
-    * their RDD blocks rather than unpersist).
+    * caches into the next group's measurements.
     */
   private[graft] def dropCaches(s: SparkSession): Unit = {
     val reg = SessionRegistry.of(s)
@@ -308,8 +314,7 @@ object AnnOps {
         reg.remove(k).collect { case p: Prep => p }
           .foreach(_.dfs.foreach(_.unpersist(false)))
       }
-      reg.remove("pqprep").collect { case p: Prep => p }
-        .foreach(_.dfs.foreach(df => graft.util.Checkpoints.freeLocalCheckpoint(df)))
+      reg.remove("pqprep").collect { case p: PqPrep => p }.foreach(_.release())
     }
   }
 
@@ -549,10 +554,18 @@ object AnnOps {
   // the quantized vectors. Query: asymmetric distance computation — the
   // query's EXACT subvectors dot the neighbors' codewords, summed across
   // subspaces (all BIGINT), top-[[pqRerank]] candidates then rerank with
-  // exact full-precision cosine. At 100 TB the scan side touches only
-  // (vec_id, m, cid) codes plus a codebook that always broadcasts
-  // (M×K×subdim integers); the exact relation is read for the reranked
-  // handful only.
+  // exact full-precision cosine.
+  //
+  // Spark searches the way FAISS IndexPQ does: per query a lookup table
+  // `LUT[m][k] = q_m · codeword(m, k)` built on the driver (M×K longs),
+  // broadcast, and ONE map-only job that scores every vector as
+  // Σ_m LUT[m][code_m] over primitive code blocks, each task keeping a
+  // bounded top-[[pqRerank]] per query. The driver merges them, one more
+  // job fetches the reranked handful of exact vectors by id, and the
+  // cosine and top-5 run on the driver. At 100 TB the scan touches only
+  // the codes, nothing shuffles, and the driver holds the codebook plus
+  // Q × [[pqRerank]] candidates. The DuckDB oracle keeps the relational
+  // ADC join ([[pqSearchSql]]), a second implementation.
   private val pqM = 8
   private val pqSubDim = 8
   private val pqK = 16
@@ -624,16 +637,14 @@ object AnnOps {
        |$iters""".stripMargin
   }
 
-  /** ADC scan + exact rerank, over pre-built codes/centroid relations
-    * (expects `subv` in scope for the query subvectors).
+  /** The oracle's ADC scan + exact rerank over the trained codes and
+    * centroid relations (expects `subv` and `qn` in scope).
     */
-  private def pqSearchSql(spark: Boolean, codesRel: String, centRel: String): String = {
-    val dot = if (spark) sparkDot else duckDot
-    val qnRel = if (spark) "ann_qn" else "qn"
-    val pairDot = dot.format("a.q", "b.q")
+  private def pqSearchSql(codesRel: String, centRel: String): String = {
+    val pairDot = duckDot.format("a.q", "b.q")
     s""", adc0 AS (
        |  SELECT qs.vec_id AS query_id, cv.vec_id AS neighbor_id,
-       |    ${dot.format("qs.sq", "c.cq")} AS part
+       |    ${duckDot.format("qs.sq", "c.cq")} AS part
        |  FROM subv qs
        |  JOIN $codesRel cv ON cv.m = qs.m AND cv.vec_id <> qs.vec_id
        |  JOIN $centRel c ON c.m = cv.m AND c.cid = cv.cid
@@ -649,8 +660,8 @@ object AnnOps {
        |  SELECT c.query_id, c.neighbor_id,
        |    CAST($pairDot AS DOUBLE) / sqrt(CAST(a.qnorm AS DOUBLE) * CAST(b.qnorm AS DOUBLE)) AS score
        |  FROM (SELECT query_id, neighbor_id FROM cand WHERE rk <= $pqRerank) c
-       |  JOIN $qnRel a ON a.vec_id = c.query_id
-       |  JOIN $qnRel b ON b.vec_id = c.neighbor_id),
+       |  JOIN qn a ON a.vec_id = c.query_id
+       |  JOIN qn b ON b.vec_id = c.neighbor_id),
        |ranked AS (
        |  SELECT query_id, neighbor_id, score,
        |    ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY score DESC, neighbor_id) AS rank
@@ -660,59 +671,185 @@ object AnnOps {
        |ORDER BY query_id, rank""".stripMargin
   }
 
-  /** Spark splits the PQ pipeline at the natural cache line: codebook
-    * training + encoding (`ann_pq_cent` / `ann_pq_codes`) build once per
-    * (session, dir) and persist — they are the index; every query pays
-    * only the ADC scan + rerank (the sq8/ann_qn prep contract). DuckDB
-    * keeps the single-statement CTE text.
+  /** The PQ index, built once per (session, dir) and kept: the codebook
+    * on the driver (`codebook(m)(k)`, subspace `m`'s codewords in cid
+    * order), the codes as persisted [[PqBlock]]s, the query vectors
+    * (`vec_id < 5`) on the driver, and `qn`, an RDD over the persisted
+    * `ann_qn` rows for the rerank's by-id fetch.
     */
-  private def pqPrep(s: SparkSession, d: String): Unit = {
+  private[queries] final case class PqPrep(dir: String, codebook: Array[Array[Array[Long]]],
+      queries: Array[PqVec], blocks: RDD[PqBlock], qn: RDD[InternalRow]) {
+    def release(): Unit = blocks.unpersist(blocking = false)
+  }
+
+  /** A quantized vector: `q` and `qnorm` are NULL together (a NULL
+    * embedding).
+    */
+  private[queries] final case class PqVec(id: Long, q: Array[Long], qnorm: Long)
+
+  private object PqVec {
+    /** From an `ann_qn` row (vec_id, q, qnorm) with a non-NULL vec_id. */
+    def apply(r: InternalRow): PqVec =
+      if (r.isNullAt(1)) PqVec(r.getLong(0), null, 0L)
+      else PqVec(r.getLong(0), r.getArray(1).toLongArray(), r.getLong(2))
+  }
+
+  /** One partition of the PQ codes: vector `ids(i)` has code
+    * `codes(i * pqM + m)` in subspace `m`, an index into that subspace's
+    * codebook, or -1 for a codeword the codebook lacks (a cluster whose
+    * only members have NULL embeddings); that subspace then adds
+    * nothing, as the oracle's inner join with the codebook drops it.
+    */
+  private[queries] final case class PqBlock(ids: Array[Long], codes: Array[Int]) {
+
+    /** Per query `j`, this partition's top `k` (approx, id) pairs, best
+      * first: approx is Σ_m `luts(j)(m)(code_m)`, ordered by approx desc
+      * then id asc; the query itself is skipped.
+      */
+    def topK(queryIds: Array[Long], luts: Array[Array[Array[Long]]], k: Int): Array[Array[(Long, Long)]] =
+      queryIds.indices.map { j =>
+        val lut = luts(j)
+        // head = the worst pair kept
+        val heap = new java.util.PriorityQueue[(Long, Long)](k + 1, PqBlock.Worst)
+        for (i <- ids.indices if ids(i) != queryIds(j)) {
+          var approx = 0L
+          var coded = false
+          for (m <- 0 until pqM) {
+            val code = codes(i * pqM + m)
+            if (code >= 0) { approx += lut(m)(code); coded = true }
+          }
+          if (coded) {
+            val pair = (approx, ids(i))
+            if (heap.size < k) heap.add(pair)
+            else if (PqBlock.Worst.compare(pair, heap.peek) > 0) { heap.poll(); heap.add(pair) }
+          }
+        }
+        heap.asScala.toArray.sorted(PqBlock.Worst.reverse)
+      }.toArray
+  }
+
+  private[queries] object PqBlock {
+    /** Orders (approx, id) pairs worst first: lower approx, then higher id. */
+    val Worst: Ordering[(Long, Long)] = new Ordering[(Long, Long)] {
+      def compare(a: (Long, Long), b: (Long, Long)): Int =
+        if (a._1 != b._1) java.lang.Long.compare(a._1, b._1) else java.lang.Long.compare(b._2, a._2)
+    }
+
+    /** A block from (vec_id, m, cid) rows, non-NULL vec_id. */
+    def apply(rows: Iterator[(Long, (Int, Long))], cids: Array[Array[Long]]): PqBlock = {
+      val all = rows.toArray
+      val ids = all.map(_._1).distinct.sorted
+      val codes = Array.fill(ids.length * pqM)(-1)
+      all.foreach { case (id, (m, cid)) =>
+        val k = java.util.Arrays.binarySearch(cids(m), cid)
+        if (k >= 0) codes(java.util.Arrays.binarySearch(ids, id) * pqM + m) = k
+      }
+      PqBlock(ids, codes)
+    }
+  }
+
+  /** `LUT[m][k]`: `graft_dot` of the query's subvector `m` with codeword
+    * `k` (over the shorter length). A NULL query vector scores every
+    * codeword 0, so its candidates tie and fall back to id order — as
+    * the oracle's all-NULL approx does.
+    */
+  private def pqLut(q: Array[Long], codebook: Array[Array[Array[Long]]]): Array[Array[Long]] = {
+    val qq = if (q == null) Array.emptyLongArray else q
+    codebook.indices.toArray.map { m =>
+      val sub = qq.slice(m * pqSubDim, m * pqSubDim + pqSubDim)
+      codebook(m).map(cw => sub.indices.take(cw.length).map(i => sub(i) * cw(i)).sum)
+    }
+  }
+
+  /** The rerank's exact cosine; NULL for a NULL vector or a zero norm. */
+  private def pqCosine(a: PqVec, b: PqVec): Option[Double] =
+    if (a.q == null || b.q == null) None
+    else {
+      val den = math.sqrt(a.qnorm.toDouble * b.qnorm.toDouble)
+      if (den == 0.0) None
+      else Some(a.q.indices.take(b.q.length).map(i => a.q(i) * b.q(i)).sum.toDouble / den)
+    }
+
+  private[queries] def pqPrep(s: SparkSession, d: String): PqPrep = {
     sparkPrep(s, d)
     val reg = SessionRegistry.of(s)
     reg.synchronized {
-      val cached = reg.get("pqprep").collect { case p: Prep if p.dir == d => p }
-      val Seq(codes, cent) = cached.map(_.dfs).getOrElse {
-        // localCheckpoint, not persist: the trained plan is two unrolled
-        // k-means iterations deep, and a cached VIEW still re-analyzes
-        // that whole logical plan on every query — checkpointing
-        // collapses codes/centroids to leaf RDD scans (they are tiny:
-        // n×M codes + M×K codewords). The chain executes ONCE (r12):
-        // the final codebook is re-derived from the checkpointed codes
-        // (`cent_N = rebuild(perDim(m_N))` holds by construction of the
-        // last training iteration — the ClusterOps.clusterPrep argument)
-        // instead of a second full training run.
+      reg.get("pqprep").collect { case p: PqPrep if p.dir == d => p }.getOrElse {
+        // persisted for the two reads below (codebook, blocks) and
+        // released once the blocks hold the codes
         val codes = s.sql(
-          s"WITH ${pqTrainSql(spark = true)} SELECT vec_id, m, cid FROM m$pqIters")
-          .localCheckpoint(true)
-        val cent =
+          s"WITH ${pqTrainSql(spark = true)} SELECT vec_id, m, cid FROM m$pqIters").persist()
+        val p =
           try {
             codes.createOrReplaceTempView("ann_pq_codes")
-            s.sql(s"WITH subv AS (${pqSubvSql(spark = true)}),\n" +
+            // the final codebook is re-derived from the codes (`cent_N =
+            // rebuild(perDim(m_N))` holds by construction of the last
+            // training iteration — the ClusterOps.clusterPrep argument)
+            // instead of a second full training run
+            val cent = s.sql(s"WITH subv AS (${pqSubvSql(spark = true)}),\n" +
               s"cd AS (${pqPerDim(spark = true, "ann_pq_codes")})\n" +
-              pqRebuild(spark = true, "cd").stripLeading()).localCheckpoint(true)
-          } catch {
-            case t: Throwable =>
-              graft.util.Checkpoints.freeLocalCheckpoint(codes); throw t
+              pqRebuild(spark = true, "cd").stripLeading()).collect()
+              .map(r => (r.getInt(0), r.getLong(1), r.getSeq[Long](2).toArray))
+              .groupBy(_._1)
+            val entries = Array.tabulate(pqM)(m => cent.getOrElse(m, Array.empty).sortBy(_._2))
+            val cids = entries.map(_.map(_._2))
+            val codebook = entries.map(_.map(_._3))
+            val qn = s.table("ann_qn").queryExecution.toRdd
+            val queries = qn.filter(r => !r.isNullAt(0) && r.getLong(0) < 5).map(PqVec(_))
+              .collect().sortBy(_.id)
+            val coded = codes.queryExecution.toRdd
+            val blocks = coded.filter(!_.isNullAt(0))
+              .map(r => (r.getLong(0), (r.getInt(1), r.getLong(2))))
+              .partitionBy(new HashPartitioner(coded.getNumPartitions))
+              .mapPartitions(rows => Iterator(PqBlock(rows, cids)))
+              .persist(StorageLevel.MEMORY_AND_DISK)
+            try blocks.count() // materialize while the codes are cached
+            catch { case t: Throwable => blocks.unpersist(blocking = false); throw t }
+            PqPrep(d, codebook, queries, blocks, qn)
+          } finally {
+            s.catalog.dropTempView("ann_pq_codes")
+            codes.unpersist(blocking = false)
           }
-        val dfs = Seq(codes, cent)
-        reg.put("pqprep", Prep(d, dfs))
-          .collect { case p: Prep if p.dir != d => p }
-          .foreach(_.dfs.foreach(df =>
-            graft.util.Checkpoints.freeLocalCheckpoint(df)))
-        cent.createOrReplaceTempView("ann_pq_cent")
-        dfs
-      }
-      if (!s.catalog.tableExists("ann_pq_codes") ||
-          !s.catalog.tableExists("ann_pq_cent")) {
-        codes.createOrReplaceTempView("ann_pq_codes")
-        cent.createOrReplaceTempView("ann_pq_cent")
+        reg.put("pqprep", p).collect { case old: PqPrep if old.dir != d => old }
+          .foreach(_.release())
+        p
       }
     }
   }
 
-  private def sparkPqMain: String =
-    s"""WITH subv AS (${pqSubvSql(spark = true)})
-       |${pqSearchSql(spark = true, codesRel = "ann_pq_codes", centRel = "ann_pq_cent")}""".stripMargin
+  private val PqSchema = StructType(Seq(
+    StructField("query_id", LongType),
+    StructField("neighbor_id", LongType),
+    StructField("rank", IntegerType, nullable = false),
+    StructField("score", DoubleType)))
+
+  /** (neighbor_id, score): score desc with NULLs last, then neighbor_id. */
+  private val PqRerankOrder: Ordering[(Long, Option[Double])] =
+    Ordering.by[(Long, Option[Double]), (Boolean, Double, Long)] {
+      case (id, score) => (score.isEmpty, score.fold(0.0)(-_), id)
+    }(Ordering.Tuple3(Ordering.Boolean, Ordering.Double.TotalOrdering, Ordering.Long))
+
+  /** The ADC search over the prep: one scoring job, one fetch job. */
+  private def pqImpl(s: SparkSession, d: String): DataFrame = {
+    val p = pqPrep(s, d)
+    val queryIds = p.queries.map(_.id)
+    val lutsB = s.sparkContext.broadcast(p.queries.map(q => pqLut(q.q, p.codebook)))
+    val tops = try p.blocks.map(_.topK(queryIds, lutsB.value, pqRerank)).collect()
+      finally lutsB.destroy()
+    val cands = queryIds.indices.map(j =>
+      tops.flatMap(_(j)).sorted(PqBlock.Worst.reverse).take(pqRerank).map(_._2))
+    val need = cands.flatten.toSet
+    val vecs = p.qn.filter(r => !r.isNullAt(0) && need.contains(r.getLong(0))).map(PqVec(_))
+      .collect().map(v => v.id -> v).toMap
+    val rows = p.queries.indices.flatMap { j =>
+      val q = p.queries(j)
+      cands(j).map(id => (id, pqCosine(q, vecs(id))))
+        .sorted(PqRerankOrder)
+        .take(5).zipWithIndex
+        .map { case ((id, score), i) => Row(q.id, id, i + 1, score.map(Double.box).orNull) }
+    }
+    s.createDataFrame(rows.asJava, PqSchema)
+  }
 
   private val duckPqSql: String =
     s"""WITH qe AS (
@@ -720,7 +857,7 @@ object AnnOps {
        |  FROM embeddings),
        |qn AS (SELECT vec_id, q, ${duckDot.format("q", "q")} AS qnorm FROM qe),
        |${pqTrainSql(spark = false)}
-       |${pqSearchSql(spark = false, codesRel = s"m$pqIters", centRel = s"cent$pqIters")}""".stripMargin
+       |${pqSearchSql(codesRel = s"m$pqIters", centRel = s"cent$pqIters")}""".stripMargin
 
   /** recall@5 of the IVF probe against the exhaustive top-5 — the
     * evaluation every ANN deployment runs before trusting an index
@@ -852,9 +989,11 @@ object AnnOps {
     "embed_ann_sq8" -> QueryDef(
       (s, d) => { sq8Prep(s, d); s.sql(sparkSq8Main) },
       Some(duckSq8Sql)),
-    "embed_ann_pq" -> QueryDef(
-      (s, d) => { pqPrep(s, d); s.sql(sparkPqMain) },
-      Some(duckPqSql)),
+    // The relational ADC join (the oracle's shape) run on Spark took,
+    // per warm call inside interleaved pipeline passes (sf0.01, local[2],
+    // 4-core box, median of 8): 13 jobs, 0.74 s and up to 51 Janino
+    // compiles; the lookup-table scan: 2 jobs, 0.08 s, 0–4 compiles.
+    "embed_ann_pq" -> QueryDef(pqImpl _, Some(duckPqSql)),
     "embed_ann_recall" -> QueryDef(
       runSpark(ivfRecallSql("ann_qn", sparkDot, "")) _,
       ivfRecallSql("qn", duckDot, duckQnPrefix)),

@@ -1,6 +1,15 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
+import org.apache.spark.storage.StorageLevel
+import org.apache.spark.unsafe.types.UTF8String
+
+import java.math.RoundingMode
+import scala.jdk.CollectionConverters._
 
 /** Train-corpus curation operators: benchmark decontamination and the
   * end-to-end train-prep pipeline (quality gate -> exact dedup -> split).
@@ -340,22 +349,8 @@ object CurateOps {
        |ORDER BY c.doc_id""".stripMargin
   }
 
-  /** Data-mixing diagnostics: per-source unigram KL divergence against
-    * the whole-corpus distribution (add-one smoothed, restricted to the
-    * source's observed vocabulary — the standard practical variant), plus
-    * per-source volume stats. High KL flags a source whose token
-    * distribution is atypical for the mix — the signal a weighting/
-    * resampling stage consumes.
-    *
-    * Scale shape: one tokenize pass; every aggregate is map-side
-    * combinable ((source, tok) then tok then source); the count joins
-    * are AQE-decided. Determinism: each KL term is a per-element double
-    * expression (deterministic except ln's last ulp) rounded to 12
-    * decimals and summed as DECIMAL — term magnitudes ~1e-5 put ulp
-    * perturbations ~1e-19, far below the rounding granularity.
-    */
   /** Pairwise source vocabulary overlap — the OTHER data-mixing
-    * diagnostic next to [[sourceKlSql]]: KL compares token FREQUENCIES,
+    * diagnostic next to [[sourceKlImpl]]: KL compares token FREQUENCIES,
     * Jaccard compares vocabulary SETS (a source can share frequencies
     * while contributing novel vocabulary, and vice versa). All counts
     * exact; the Jaccard is one correctly-rounded division. Scale shape:
@@ -393,24 +388,39 @@ object CurateOps {
        |ORDER BY p.src_a, p.src_b""".stripMargin
   }
 
-  private def sourceKlSql(spark: Boolean, scRel: Option[String] = None): String = {
-    val (split, explodeToks) =
-      if (spark) ("split(text, ' ')", "explode(split(text, ' '))")
-      else ("string_split(text, ' ')", "UNNEST(string_split(text, ' '))")
-    val cnt = (e: String) => if (spark) e else s"CAST($e AS BIGINT)"
+  /** Data-mixing diagnostics: per-source unigram KL divergence against
+    * the whole-corpus distribution (add-one smoothed, restricted to the
+    * source's observed vocabulary — the standard practical variant), plus
+    * per-source volume stats. High KL flags a source whose token
+    * distribution is atypical for the mix — the signal a weighting/
+    * resampling stage consumes.
+    *
+    * Scale shape (Spark): ONE tokenize pass, a map-side-combinable
+    * `(tok, source) → c` aggregate ([[sourceCountsSql]]). Its output is
+    * sources × vocabulary rows; they hash-partition by token into
+    * persisted [[SourceKl.Block]]s, at most #sources + 1 counts per token.
+    * The job that builds the blocks returns every source's totals and
+    * the corpus totals; a second job sums each source's KL terms. The
+    * per-source tail runs on the driver, and the result is a
+    * LocalRelation: no joins, and few generated classes to keep in
+    * Spark's 100-entry codegen cache.
+    *
+    * Determinism: each KL term is a per-element double expression
+    * (deterministic except ln's last ulp) rounded to 12 decimals and
+    * summed as DECIMAL — term magnitudes ~1e-5 put ulp perturbations
+    * ~1e-19, far below the rounding granularity. The Spark side computes
+    * the same expression in Scala with Spark's own arithmetic
+    * ([[SourceKl.Block.klSums]]).
+    */
+  private def sourceKlSql: String = {
     val ps = "((CAST(sc.c AS DOUBLE) + 1.0) / (CAST(st.n AS DOUBLE) + CAST(tot.vocab AS DOUBLE)))"
     val pc = "((CAST(cc.c AS DOUBLE) + 1.0) / (CAST(tot.n AS DOUBLE) + CAST(tot.vocab AS DOUBLE)))"
-    // `sc` (the (source, token) count dictionary — a corpus REDUCTION) is
-    // referenced three times (per-source totals, corpus totals, KL terms);
-    // the Spark impl materializes it once (scRel), the oracle keeps the CTE
-    val scCte = scRel.map(r => s"SELECT source, tok, c FROM $r").getOrElse(
-      s"""SELECT source, tok, ${cnt("COUNT(1)")} AS c
-         |  FROM (SELECT source, $explodeToks AS tok FROM corpus) GROUP BY source, tok""".stripMargin)
     s"""WITH corpus AS ($corpusSql),
-       |sc AS ($scCte),
-       |st AS (SELECT source, ${cnt("SUM(c)")} AS n, COUNT(1) AS vocab_s FROM sc GROUP BY source),
-       |cc AS (SELECT tok, ${cnt("SUM(c)")} AS c FROM sc GROUP BY tok),
-       |tot AS (SELECT ${cnt("SUM(c)")} AS n, ${cnt("COUNT(1)")} AS vocab FROM cc),
+       |sc AS (SELECT source, tok, CAST(COUNT(1) AS BIGINT) AS c
+       |  FROM (SELECT source, UNNEST(string_split(text, ' ')) AS tok FROM corpus) GROUP BY source, tok),
+       |st AS (SELECT source, CAST(SUM(c) AS BIGINT) AS n, COUNT(1) AS vocab_s FROM sc GROUP BY source),
+       |cc AS (SELECT tok, CAST(SUM(c) AS BIGINT) AS c FROM sc GROUP BY tok),
+       |tot AS (SELECT CAST(SUM(c) AS BIGINT) AS n, CAST(COUNT(1) AS BIGINT) AS vocab FROM cc),
        |terms AS (
        |  SELECT sc.source,
        |    CAST(round($ps * ln($ps / $pc), 12) AS DECIMAL(28, 12)) AS term
@@ -427,6 +437,115 @@ object CurateOps {
        |JOIN st ON d.source = st.source
        |JOIN kl k ON d.source = k.source
        |ORDER BY d.source""".stripMargin
+  }
+
+  /** The one corpus scan of [[sourceKlImpl]]: `(tok, source) → c`. Every
+    * corpus row also yields one NULL token, so the `tok IS NULL` rows
+    * count each source's docs, docs with null or empty text included
+    * (`split` itself never yields NULL).
+    */
+  private def sourceCountsSql: String =
+    s"""WITH corpus AS ($corpusSql)
+       |SELECT tok, source, COUNT(1) AS c FROM (
+       |  SELECT source, explode(concat(coalesce(split(text, ' '), array()),
+       |    array(CAST(NULL AS STRING)))) AS tok
+       |  FROM corpus)
+       |GROUP BY tok, source""".stripMargin
+
+  private val SourceKlSchema = StructType(Seq(
+    StructField("source", StringType),
+    StructField("n_docs", LongType, nullable = false),
+    StructField("n_tokens", LongType),
+    StructField("vocab_size", LongType, nullable = false),
+    StructField("kl_unigram", DoubleType)))
+
+  private def sourceKlImpl(s: SparkSession, d: String): DataFrame = {
+    prep(s, d)
+    val counts = s.sql(sourceCountsSql).queryExecution.toRdd
+    val blocks = SourceKl.blocks(counts).persist(StorageLevel.MEMORY_AND_DISK)
+    val rows = try SourceKl.rows(blocks) finally blocks.unpersist(blocking = false)
+    s.createDataFrame(rows.asJava, SourceKlSchema)
+  }
+
+  /** The token-keyed pass of [[sourceKlImpl]]. A source is an
+    * `Option[String]`: the NULL source's tokens count toward the corpus
+    * totals but it gets no row, as the inner joins of the oracle drop it.
+    */
+  private object SourceKl {
+
+    /** One source's token count `n`, distinct tokens `vocab` and docs. */
+    final case class Totals(n: Long, vocab: Long, docs: Long) {
+      def +(o: Totals): Totals = Totals(n + o.n, vocab + o.vocab, docs + o.docs)
+    }
+
+    /** One partition of the `(tok, source) → c` counts, keyed by token:
+      * `toks` holds each token's (source, c) pairs, `docs` the NULL
+      * token's (each source's doc count) in the one partition that holds
+      * that key.
+      */
+    final case class Block(toks: Array[Array[(Option[String], Long)]],
+        docs: Array[(Option[String], Long)]) {
+
+      def totals: Map[Option[String], Totals] =
+        (toks.flatten.map { case (s, c) => s -> Totals(c, 1L, 0L) } ++
+          docs.map { case (s, k) => s -> Totals(0L, 0L, k) })
+          .groupMapReduce(_._1)(_._2)(_ + _)
+
+      /** Per non-NULL source with a token here, the exact DECIMAL sum of
+        * its terms `CAST(round(ps * ln(ps / pc), 12) AS DECIMAL(28, 12))`
+        * with `ps = (c + 1.0) / (n_s + vocab)` and `pc = (cc + 1.0) /
+        * (total + vocab)`, `cc` the token's count over every source.
+        * Spark's arithmetic: `ln` is `StrictMath.log`; `round` and the
+        * cast both go through the double's shortest decimal string and
+        * round HALF_UP.
+        */
+      def klSums(n: Map[String, Long], total: Long, vocab: Long): Map[String, java.math.BigDecimal] = {
+        val v = vocab.toDouble
+        val terms = for {
+          tok <- toks
+          pc = (tok.map(_._2).sum.toDouble + 1.0) / (total.toDouble + v)
+          (Some(s), c) <- tok
+        } yield {
+          val ps = (c.toDouble + 1.0) / (n(s).toDouble + v)
+          val rounded = java.math.BigDecimal.valueOf(ps * StrictMath.log(ps / pc))
+            .setScale(12, RoundingMode.HALF_UP).doubleValue()
+          s -> java.math.BigDecimal.valueOf(rounded).setScale(12, RoundingMode.HALF_UP)
+        }
+        terms.groupMapReduce(_._1)(_._2)(_.add(_))
+      }
+    }
+
+    object Block {
+      def apply(rows: Iterator[(String, (Option[String], Long))]): Block = {
+        val (marker, toks) = rows.toArray.partition(_._1 == null)
+        Block(toks.groupBy(_._1).values.map(_.map(_._2)).toArray, marker.map(_._2))
+      }
+    }
+
+    /** `(tok, source, c)` rows hash-partitioned by token into blocks. */
+    def blocks(counts: RDD[InternalRow]): RDD[Block] =
+      counts.map { r =>
+        val tok = if (r.isNullAt(0)) null else r.getUTF8String(0).toString
+        val source = if (r.isNullAt(1)) None else Some(r.getUTF8String(1).toString)
+        (tok, (source, r.getLong(2)))
+      }.partitionBy(new HashPartitioner(counts.getNumPartitions))
+        .mapPartitions(rows => Iterator(Block(rows)))
+
+    /** The result rows, ordered by source: one job for the totals (it
+      * also materializes `blocks`), one for the KL sums.
+      */
+    def rows(blocks: RDD[Block]): Seq[Row] = {
+      val parts = blocks.map(b => (b.totals, b.toks.length.toLong)).collect()
+      val totals = parts.flatMap(_._1).groupMapReduce(_._1)(_._2)(_ + _)
+      val vocab = parts.map(_._2).sum
+      val total = totals.values.map(_.n).sum
+      val n = totals.collect { case (Some(s), t) => s -> t.n }
+      val kl = blocks.map(_.klSums(n, total, vocab)).collect().flatMap(_.toSeq)
+        .groupMapReduce(_._1)(_._2)(_.add(_))
+      totals.toSeq.collect { case (Some(s), t) if t.vocab > 0 => (s, t) }
+        .sortWith((a, b) => UTF8String.fromString(a._1).compareTo(UTF8String.fromString(b._1)) < 0)
+        .map { case (s, t) => Row(s, t.docs, t.n, t.vocab, kl(s).doubleValue()) }
+    }
   }
 
   /** Corpus heavy hitters: the exact top-[[hhK]] most frequent word
@@ -986,18 +1105,14 @@ object CurateOps {
     "text_ccnet_buckets" -> QueryDef(
       (s, d) => sq(s, d, ccnetBucketsSql(spark = true)),
       Some(ccnetBucketsSql(spark = false))),
-    // Inline `sc` CTE, deliberately: the r15-opt materialization was
-    // A/B-adjudicated a REAL regression in r16 — isolated min-of-5 on one
-    // box, r15-build inline 0.778 s vs materialized 1.181 s. The three
-    // downstream references (st/cc/terms) are all cheap aggregates of the
-    // dictionary-sized sc; re-running the tokenize+count subtree twice
-    // more is cheaper at sf0.1 than one materialize+re-read round-trip.
-    "text_source_kl" -> QueryDef(
-      ((s: SparkSession, d: String) => {
-        prep(s, d)
-        s.sql(sourceKlSql(spark = true))
-      }),
-      Some(sourceKlSql(spark = false))),
+    // One tokenize pass plus two jobs over token-keyed blocks. The
+    // oracle's SQL run on Spark (inline `sc` CTE, re-tokenizing the corpus
+    // per reference) took, per warm call inside interleaved pipeline
+    // passes (sf0.01, local[2], 4-core box, median of 8): 16 jobs, 0.94 s
+    // and 45–56 Janino compiles, its classes evicted from the 100-entry
+    // codegen cache by the other entries between calls. This form: 3
+    // jobs, 0.19 s, 0–17 compiles.
+    "text_source_kl" -> QueryDef(sourceKlImpl _, Some(sourceKlSql)),
     // Inline `vt` CTE, deliberately: the r15-opt materialization was
     // A/B-adjudicated a REAL regression in r16 — isolated min-of-5 on one
     // box, r15-build inline 0.351 s vs materialized 0.548 s (persist mode
