@@ -326,9 +326,6 @@ object LanceWriter {
     buf.u16(0); buf.u16(3)
     buf.bytes("LANC".getBytes("UTF-8"))
 
-    val p = new Path(path)
-    val fs = p.getFileSystem(conf)
-    val out = fs.create(p, true)
-    try out.write(buf.out.toByteArray) finally out.close()
+    graft.io.Storage(conf).writeFile(new Path(path), buf.out.toByteArray, overwrite = true)
   }
 }

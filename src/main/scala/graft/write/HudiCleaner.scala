@@ -41,7 +41,8 @@ object HudiCleaner {
   def clean(spark: SparkSession, basePath: String, retainCommits: Int): CleanStats = {
     require(retainCommits >= 1, s"retain_commits must be >= 1, got $retainCommits")
     val t = HudiTable(spark, basePath)
-    val fs = new Path(basePath).getFileSystem(spark.sessionState.newHadoopConf())
+    val hadoopConf = spark.sessionState.newHadoopConf()
+    val fs = new Path(basePath).getFileSystem(hadoopConf)
     val timelineDir = t.timeline.dir
 
     // savepoints PIN history: each one keeps, per file group, the slice
@@ -115,10 +116,9 @@ object HudiCleaner {
     val body =
       s"""{"earliestCommitToRetain":"$earliestRetained","totalFilesDeleted":${candidates.size},""" +
         s""""partitionToDeletedFiles":$byPartition}"""
-    def touch(name: String, content: String = ""): Unit = {
-      val o = fs.create(new Path(timelineDir, name), true)
-      o.write(content.getBytes("UTF-8")); o.close()
-    }
+    val storage = graft.io.Storage(hadoopConf)
+    def touch(name: String, content: String = ""): Unit =
+      storage.writeFile(new Path(timelineDir, name), content.getBytes("UTF-8"), overwrite = true)
     // crash-safe ordering (real Hudi persists the plan before destroying
     // anything): requested carries the full plan, then the MDT tombstones
     // land, then the files delete, and only then does the clean COMPLETE.
@@ -132,7 +132,7 @@ object HudiCleaner {
     val mdtParts = t.config.getOrElse("hoodie.table.metadata.partitions", "")
       .split(",").map(_.trim).filter(_.nonEmpty).toSet
     if (mdtParts.contains("files"))
-      MdtMaintenance.tombstoneFiles(basePath, spark.sessionState.newHadoopConf(),
+      MdtMaintenance.tombstoneFiles(basePath, hadoopConf,
         instant, candidates.map(c => (c._1, c._2)))
     val deleted = Vector.newBuilder[(String, String)]
     for ((p, name, path) <- candidates)

@@ -42,7 +42,8 @@ object HudiClustering {
       throw new UnsupportedOperationException(
         "hudi-graft clustering: record_index tables are not clusterable here — " +
           "relocation would invalidate every index entry and a rebuild is not implemented")
-    val fs = new Path(basePath).getFileSystem(spark.sessionState.newHadoopConf())
+    val hadoopConf = spark.sessionState.newHadoopConf()
+    val fs = new Path(basePath).getFileSystem(hadoopConf)
     val latest = t.timeline.latestCommitTimestamp.getOrElse(
       return ClusteringStats(None, Nil, Map.empty))
     val slices = t.fsView.slicesAsOf(latest)
@@ -52,10 +53,9 @@ object HudiClustering {
     val instant = HudiWriter.instantAfter(latest, t.config.timelineTimezone)
 
     val timelineDir = t.timeline.dir
-    def touch(name: String, content: String = ""): Unit = {
-      val o = fs.create(new Path(timelineDir, name), true)
-      o.write(content.getBytes("UTF-8")); o.close()
-    }
+    val storage = graft.io.Storage(hadoopConf)
+    def touch(name: String, content: String = ""): Unit =
+      storage.writeFile(new Path(timelineDir, name), content.getBytes("UTF-8"), overwrite = true)
     val planJson = replaced.toSeq.sortBy(_._1).map { case (p, fids) =>
       s""""${HudiWriter.escapeJson(p)}":${fids.toSeq.sorted.map(f => s""""$f"""").mkString("[", ",", "]")}"""
     }.mkString("""{"inputGroups":{""", ",", "}}")
@@ -88,7 +88,7 @@ object HudiClustering {
     val mdtParts = t.config.getOrElse("hoodie.table.metadata.partitions", "")
       .split(",").map(_.trim).filter(_.nonEmpty).toSet
     if (mdtParts.contains("files"))
-      MdtMaintenance.appendFiles(basePath, spark.sessionState.newHadoopConf(), instant,
+      MdtMaintenance.appendFiles(basePath, hadoopConf, instant,
         files.map { case (p, _, rel, _, sz) =>
           (p, rel.substring(rel.lastIndexOf('/') + 1), sz)
         })

@@ -26,11 +26,10 @@ object HudiSavepoints {
     val visible = t.fsView.slicesAsOf(ts)
     require(visible.nonEmpty || t.fsView.partitionPaths.isEmpty,
       s"hudi-graft savepoint: no slices are visible as of $ts (already cleaned)")
-    val fs = t.timeline.dir.getFileSystem(spark.sessionState.newHadoopConf())
-    def touch(name: String, content: String = ""): Unit = {
-      val o = fs.create(new Path(t.timeline.dir, name), true)
-      o.write(content.getBytes("UTF-8")); o.close()
-    }
+    val storage = graft.io.Storage(spark.sessionState.newHadoopConf())
+    def touch(name: String, content: String = ""): Unit =
+      storage.writeFile(new Path(t.timeline.dir, name), content.getBytes("UTF-8"),
+        overwrite = true)
     touch(s"$ts.savepoint.requested")
     touch(s"$ts.savepoint.inflight")
     touch(s"$ts.savepoint", s"""{"savepointedAt":"$ts"}""")

@@ -1,6 +1,7 @@
 package graft.write
 
 import graft.core.{HoodieConfig, MetaField}
+import graft.io.{ParquetFiles, Storage}
 import graft.table.{HudiTable, RecordIndex}
 import graft.util.SerializableConf
 import org.apache.hadoop.fs.{FileSystem, Path}
@@ -87,7 +88,7 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   */
 object HudiWriter {
 
-  private val Token = "0-0-0"
+  private[write] val Token = "0-0-0"
 
   /** Observability for specs: how many upsert/delete probes planned a
     * full-snapshot key join vs an MDT record-index lookup. The indexed
@@ -108,7 +109,8 @@ object HudiWriter {
       partitionColumns: Seq[String],
       options: Map[String, String]): Unit = {
     val opts = new Options(options)
-    val fs = new Path(basePath).getFileSystem(spark.sessionState.newHadoopConf())
+    val hadoopConf = spark.sessionState.newHadoopConf()
+    val fs = new Path(basePath).getFileSystem(hadoopConf)
     if (fs.exists(new Path(basePath, ".hoodie/hoodie.properties")))
       throw new IllegalArgumentException(s"hudi-graft: table already exists at $basePath")
     val keyFields = opts.recordKeyFields.getOrElse(throw new IllegalArgumentException(
@@ -132,8 +134,8 @@ object HudiWriter {
     val tableType =
       if (opts.tableType.equalsIgnoreCase("MERGE_ON_READ")) "MERGE_ON_READ"
       else "COPY_ON_WRITE"
-    writeTableProperties(fs, new Path(basePath), opts, keyFields, partFields, precombine,
-      tableType, keyFields.size > 1 || partFields.size > 1, opts.hiveStylePartitioning,
+    writeTableProperties(Storage(hadoopConf), new Path(basePath), opts, keyFields, partFields,
+      precombine, tableType, keyFields.size > 1 || partFields.size > 1, opts.hiveStylePartitioning,
       createSchema = Some(createSchema))
   }
 
@@ -147,7 +149,9 @@ object HudiWriter {
       mode: SaveMode,
       options: Map[String, String]): Seq[String] = {
     val opts = new Options(options)
-    val fs = new Path(basePath).getFileSystem(spark.sessionState.newHadoopConf())
+    val hadoopConf = spark.sessionState.newHadoopConf()
+    val fs = new Path(basePath).getFileSystem(hadoopConf)
+    val storage = Storage(hadoopConf)
     val propsPath = new Path(basePath, ".hoodie/hoodie.properties")
     val exists = fs.exists(propsPath)
 
@@ -333,7 +337,7 @@ object HudiWriter {
     val base = new Path(basePath)
 
     if (!exists)
-      writeTableProperties(fs, base, opts, keyFields, partFields, precombine,
+      writeTableProperties(storage, base, opts, keyFields, partFields, precombine,
         if (isMor) "MERGE_ON_READ" else "COPY_ON_WRITE", renderComplex, hiveStyle)
 
     // supplemental CDC logging: sidecars are emitted for REWRITTEN groups
@@ -576,7 +580,7 @@ object HudiWriter {
         } finally olds0.foreach(df => scala.util.Try(df.unpersist()))
       }
       val tableVersion = existing.map(_.config.tableVersion).getOrElse(6)
-      writeTimeline(fs, base, instant, operation, files, routed, commitSchema, tableVersion,
+      writeTimeline(storage, base, instant, operation, files, routed, commitSchema, tableVersion,
         timelineTz, isMor)
       Seq(instant)
     } finally c.release()
@@ -767,7 +771,7 @@ object HudiWriter {
     * (file, column) and falls open on a gap, so partial coverage costs a
     * footer read, never a wrong answer.
     */
-  private def statColumnsOf(
+  private[write] def statColumnsOf(
       schema: org.apache.spark.sql.types.StructType): Seq[org.apache.spark.sql.types.StructField] = {
     import org.apache.spark.sql.types._
     schema.fields.filter(f =>
@@ -779,7 +783,7 @@ object HudiWriter {
     * staging pass's per-file aggregates (all-null columns skip — no
     * bounds to record, absence fails open).
     */
-  private def colStatsEntries(
+  private[write] def colStatsEntries(
       files: Seq[(String, String, String, Long, Long)],
       fileStats: Map[(String, String), Seq[(String, Any, Any, Long)]],
       stagedSchema: org.apache.spark.sql.types.StructType)
@@ -1240,6 +1244,7 @@ object HudiWriter {
     val entries = rows.map(l => (l.fid, l)).partitionBy(new HashPartitioner(parts))
       .mapPartitions { it =>
         lazy val avro = graft.log.SparkToAvro.toAvroSchema(rowStruct, "graft_mor_record")
+        val storage = Storage(conf.value.value)
         it.map(_._2).toVector.groupBy(_.fid).iterator.map { case (fid, rs0) =>
           val (part, nameTs, version) = naming.getOrElse(fid,
             throw new IllegalStateException(
@@ -1247,9 +1252,8 @@ object HudiWriter {
                 s"this write — $prober points at uncommitted state"))
           val name = s".${fid}_$nameTs.log.${version}_$token"
           val dir = if (part.isEmpty) new Path(basePath) else new Path(basePath, part)
-          val fs = dir.getFileSystem(conf.value.value)
           val rs = rs0.sortBy(_.key)
-          val out = new java.io.DataOutputStream(fs.create(new Path(dir, name), false))
+          val out = storage.create(new Path(dir, name), overwrite = false)
           try {
             if (deletes) {
               // orderingVal 0 = upstream DeleteRecord's default: the merge's
@@ -1277,8 +1281,7 @@ object HudiWriter {
             }
           } finally out.close()
           val rel = if (part.isEmpty) name else s"$part/$name"
-          (fid, rel, rs.size.toLong, fs.getFileStatus(new Path(dir, name)).getLen,
-            rs.count(_.ins).toLong)
+          (fid, rel, rs.size.toLong, out.bytes, rs.count(_.ins).toLong)
         }
       }.collect()
     entries.toSeq.sortBy(_._1).map { case (fid, rel, n, bytes, inserts) =>
@@ -1344,6 +1347,7 @@ object HudiWriter {
           s"hudi-graft: unknown cdc supplemental logging mode '$other'")
       }
       val byFid = it.toVector.groupBy(r => (r.getString(0), r.getString(1)))
+      val storage = Storage(conf.value.value)
       val op = if (deletes) "d" else "u"
       byFid.iterator.map { case ((fid, part), rows) =>
         val recs = rows.sortBy(_.getString(2)).map { r =>
@@ -1361,12 +1365,11 @@ object HudiWriter {
         }
         val name = s".${fid}_$instant.log.1_$token${graft.fs.LogFile.CdcSuffix}"
         val dir = if (part.isEmpty) new Path(basePath) else new Path(basePath, part)
-        val fs = dir.getFileSystem(conf.value.value)
-        val out = new java.io.DataOutputStream(fs.create(new Path(dir, name), true))
+        val out = storage.create(new Path(dir, name), overwrite = true)
         try graft.log.LogFileWriter.cdcDataBlock(out, instant, cdcAvro, recs)
         finally out.close()
         val rel = if (part.isEmpty) name else s"$part/$name"
-        (fid, rel, fs.getFileStatus(new Path(dir, name)).getLen)
+        (fid, rel, out.bytes)
       }
     }.collect()
     entries.map { case (fid, rel, len) => fid -> (rel, len) }.toMap
@@ -1447,54 +1450,45 @@ object HudiWriter {
         (f.name, r.get(3 + i * 3), r.get(4 + i * 3), r.getLong(5 + i * 3))
       }.toSeq
     }.toMap
-    val out = Seq.newBuilder[(String, String, String, Long, Long)]
+    // (partition, fid, staged file, bytes) per staged base file
+    val stagedFiles = Seq.newBuilder[(String, String, Path, Long)]
     for (pDir <- fs.listStatus(tmp).toSeq.filter(_.isDirectory).sortBy(_.getPath.getName)) {
       val part = decodeStagedValue(pDir.getPath.getName.stripPrefix("__p=")).stripPrefix("p:")
       for (fDir <- fs.listStatus(pDir.getPath).toSeq.filter(_.isDirectory)
           .sortBy(_.getPath.getName)) {
         val fid = decodeStagedValue(fDir.getPath.getName.stripPrefix("__f="))
-        val file = fs.listStatus(fDir.getPath).map(_.getPath)
-          .find(_.getName.startsWith("part-"))
+        val file = fs.listStatus(fDir.getPath).find(_.getPath.getName.startsWith("part-"))
           .getOrElse(throw new IllegalStateException(s"no staged file under $fDir"))
-        val name = s"${fid}_${Token}_$instant.parquet"
-        val dir = if (part.isEmpty) base else new Path(base, part)
-        fs.mkdirs(dir)
-        val dest = new Path(dir, name)
-        if (!fs.rename(file, dest))
-          throw new java.io.IOException(s"hudi-graft: rename $file -> $dest failed")
-        val rel = if (part.isEmpty) name else s"$part/$name"
-        out += ((part, fid, rel, counts.getOrElse((part, fid), 0L),
-          fs.getFileStatus(dest).getLen))
+        stagedFiles += ((part, fid, file.getPath, file.getLen))
       }
     }
-    fs.delete(new Path(base, ".hoodie/.temp"), true)
-    val written = out.result()
+    val written = stagedFiles.result()
     // rewritten groups that lost EVERY row still need a base-file version
-    // (schema-only parquet) — without one their old slice stays visible
-    // and the deleted rows resurrect
+    // (schema-only parquet, written here on the driver) — without one
+    // their old slice stays visible and the deleted rows resurrect
     val missing = requiredGroups.filterNot { case (fid, _) => written.exists(_._2 == fid) }
-    val emptied = missing.toSeq.sortBy(_._1).map { case (fid, part) =>
-      val fileSchema = org.apache.spark.sql.types.StructType(
-        withMeta.schema.fields.filterNot(f => f.name == "__p" || f.name == "__f"))
+    val emptied = if (missing.isEmpty) Nil else {
+      val parquet = ParquetFiles.prepare(spark, org.apache.spark.sql.types.StructType(
+        withMeta.schema.fields.filterNot(f => f.name == "__p" || f.name == "__f")))
+      missing.toSeq.sortBy(_._1).map { case (fid, part) =>
+        val file = new Path(tmp, s"empty_$fid.parquet")
+        (part, fid, file, parquet.open(file).close())
+      }
+    }
+    val storage = Storage(spark.sessionState.newHadoopConf())
+    val files = (written ++ emptied).map { case (part, fid, file, bytes) =>
       val name = s"${fid}_${Token}_$instant.parquet"
       val dir = if (part.isEmpty) base else new Path(base, part)
-      val tmp2 = new Path(base, s".hoodie/.temp/empty_$fid")
-      // ONE empty partition (emptyRDD has zero → no task → no file): the
-      // single write task emits a schema-only parquet file
-      spark.createDataFrame(
-        spark.sparkContext.parallelize(Seq.empty[org.apache.spark.sql.Row], 1), fileSchema)
-        .write.mode("overwrite").parquet(tmp2.toString)
-      val part0 = fs.listStatus(tmp2).map(_.getPath).find(_.getName.startsWith("part-"))
-        .getOrElse(throw new IllegalStateException(
-          s"empty base-file staging produced no part file under $tmp2"))
-      fs.mkdirs(dir)
-      fs.rename(part0, new Path(dir, name))
-      fs.delete(tmp2, true)
+      storage.mkdirs(dir)
+      val dest = new Path(dir, name)
+      if (!fs.rename(file, dest))
+        throw new java.io.IOException(s"hudi-graft: rename $file -> $dest failed")
       val rel = if (part.isEmpty) name else s"$part/$name"
-      (part, fid, rel, 0L, fs.getFileStatus(new Path(dir, name)).getLen)
+      (part, fid, rel, counts.getOrElse((part, fid), 0L), bytes)
     }
-    if (emptied.nonEmpty) fs.delete(new Path(base, ".hoodie/.temp"), true)
-    (written ++ emptied, colStats)
+    // only this instant's staging: a concurrent writer's stays untouched
+    fs.delete(tmp, true)
+    (files, colStats)
   }
 
   /** partitionBy HIVE-escapes directory values (ExternalCatalogUtils
@@ -1508,7 +1502,7 @@ object HudiWriter {
   // ---- metadata --------------------------------------------------------------
 
   private def writeTableProperties(
-      fs: FileSystem,
+      storage: Storage,
       base: Path,
       opts: Options,
       keyFields: Seq[String],
@@ -1518,7 +1512,6 @@ object HudiWriter {
       renderComplex: Boolean,
       hiveStyle: Boolean,
       createSchema: Option[String] = None): Unit = {
-    fs.mkdirs(new Path(base, ".hoodie"))
     val keygen =
       if (renderComplex) "org.apache.hudi.keygen.ComplexKeyGenerator"
       else if (partFields.nonEmpty) "org.apache.hudi.keygen.SimpleKeyGenerator"
@@ -1545,12 +1538,12 @@ object HudiWriter {
     // java.util.Properties values may contain ':'/'=' unescaped; the
     // avro JSON is single-line so no continuation escaping is needed
     createSchema.foreach(s => sb ++= s"hoodie.table.create.schema=$s\n")
-    val out = fs.create(new Path(base, ".hoodie/hoodie.properties"), true)
-    out.write(sb.result().getBytes("UTF-8")); out.close()
+    storage.writeFile(new Path(base, ".hoodie/hoodie.properties"),
+      sb.result().getBytes("UTF-8"), overwrite = true)
   }
 
   private def writeTimeline(
-      fs: FileSystem,
+      storage: Storage,
       base: Path,
       instant: String,
       operation: String,
@@ -1571,8 +1564,8 @@ object HudiWriter {
     // with a {request}_{completion} name (timeline layout v2)
     val timelineDir =
       if (tableVersion >= 8) new Path(base, ".hoodie/timeline") else new Path(base, ".hoodie")
-    fs.mkdirs(timelineDir)
-    def touch(name: String): Unit = fs.create(new Path(timelineDir, name), true).close()
+    def touch(name: String, body: String = ""): Unit =
+      storage.writeFile(new Path(timelineDir, name), body.getBytes("UTF-8"), overwrite = true)
     touch(s"$instant.$action.requested")
     touch(s"$instant.$action.inflight")
     // base-file entries plus (MOR) log-file entries, merged per partition
@@ -1624,8 +1617,7 @@ object HudiWriter {
     val completedName =
       if (tableVersion >= 8) s"${instant}_${completionNow(instant, timelineTimezone)}.$action"
       else s"$instant.$action"
-    val out = fs.create(new Path(timelineDir, completedName), true)
-    out.write(body.getBytes("UTF-8")); out.close()
+    touch(completedName, body)
   }
 
   // ---- shared write-side primitives (one copy; HudiCleaner reuses) -------

@@ -1,8 +1,9 @@
 package graft.write
 
 import graft.table.{FilesPartitionRecord, MetadataTable}
+import graft.io.Storage
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 
 /** Metadata-table `files`-partition maintenance for the write path: each
   * data commit appends ONE deltacommit to the MDT (`.hoodie/metadata`, a
@@ -138,7 +139,6 @@ object MdtMaintenance {
       partitionName: String,
       schema: org.apache.avro.Schema): Unit = {
     val mdtBase = new Path(new Path(dataTableBase, ".hoodie"), "metadata")
-    val fs = mdtBase.getFileSystem(hadoopConf)
 
     // locate the partition's current slice (the log attaches to it)
     val (_, slices) = MetadataTable.openPartition(dataTableBase, partitionName, hadoopConf)
@@ -157,11 +157,11 @@ object MdtMaintenance {
     val nextVersion = slice.logFiles.map(_.version).maxOption.getOrElse(0) + 1
     val partDir = new Path(mdtBase, partitionName)
     val logName = s".${slice.fileId}_$nameTs.log.${nextVersion}_0-0-0"
-    val out = new java.io.DataOutputStream(fs.create(new Path(partDir, logName), false))
+    val out = Storage(hadoopConf).create(new Path(partDir, logName), overwrite = false)
     try graft.log.LogFileWriter.hfileDataBlock(out, instant, schema, hfileBytes)
     finally out.close()
 
-    completeDeltacommit(fs, mdtBase, mdtConfig, instant)
+    completeDeltacommit(hadoopConf, mdtBase, mdtConfig, instant)
   }
 
   /** The MDT's own timeline: one deltacommit at the DATA instant (layout-
@@ -171,29 +171,28 @@ object MdtMaintenance {
     * overwriting identical content.
     */
   private[write] def completeDeltacommit(
-      fs: FileSystem,
+      hadoopConf: Configuration,
       mdtBase: Path,
       mdtConfig: graft.core.HoodieConfig,
       instant: String): Unit = {
     val mdtTimelineDir =
       if (mdtConfig.tableVersion >= 8) new Path(mdtBase, ".hoodie/timeline")
       else new Path(mdtBase, ".hoodie")
-    fs.mkdirs(mdtTimelineDir)
+    val storage = Storage(hadoopConf)
+    storage.mkdirs(mdtTimelineDir)
     // true idempotence incl. v8 (whose completed names embed a fresh
     // wall-clock completion): a commit maintaining several MDT
     // partitions completes the instant ONCE — a second call must not
     // mint a second {instant}_{completion}.deltacommit
-    val already = fs.listStatus(mdtTimelineDir).exists { st =>
+    val already = mdtTimelineDir.getFileSystem(hadoopConf).listStatus(mdtTimelineDir).exists { st =>
       val n = st.getPath.getName
       n == s"$instant.deltacommit" ||
         (n.startsWith(instant + "_") && n.endsWith(".deltacommit"))
     }
     if (already) return
     val body = """{"partitionToWriteStats":{},"compacted":false}""".getBytes("UTF-8")
-    def touch(name: String, content: Array[Byte] = Array.emptyByteArray): Unit = {
-      val o = fs.create(new Path(mdtTimelineDir, name), true)
-      o.write(content); o.close()
-    }
+    def touch(name: String, content: Array[Byte] = Array.emptyByteArray): Unit =
+      storage.writeFile(new Path(mdtTimelineDir, name), content, overwrite = true)
     touch(s"$instant.deltacommit.requested")
     touch(s"$instant.deltacommit.inflight")
     val completedName =

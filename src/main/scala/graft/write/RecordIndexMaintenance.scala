@@ -117,7 +117,6 @@ object RecordIndexMaintenance {
       timelineTimezone: String,
       conf: Broadcast[SerializableConf]): Unit = {
     val mdtBase = new Path(new Path(dataTableBase, ".hoodie"), "metadata")
-    val fs = mdtBase.getFileSystem(conf.value.value)
     val mdtConfig = graft.core.HoodieConfig.load(mdtBase.toString, conf.value.value)
     // group ordinal -> (sliceFileId, nameTs, nextVersion)
     val v8 = mdtConfig.tableVersion >= 8
@@ -145,10 +144,9 @@ object RecordIndexMaintenance {
           val (sliceFid, nameTs, version) = naming(g)
           val hfileBytes = graft.hfile.HFileWriter.write(
             recs, Map("schema" -> schemaBytes), recordsPerBlock = 64)
-          val dir = new Path(riDir)
-          val fsx = dir.getFileSystem(conf.value.value)
           val name = s".${sliceFid}_$nameTs.log.${version}_$token"
-          val out = new java.io.DataOutputStream(fsx.create(new Path(dir, name), false))
+          val out = graft.io.Storage(conf.value.value)
+            .create(new Path(riDir, name), overwrite = false)
           try {
             val avro = new org.apache.avro.Schema.Parser()
               .parse(new String(schemaBytes, "UTF-8"))
@@ -158,6 +156,6 @@ object RecordIndexMaintenance {
         }
       }.collect()
     if (written.nonEmpty)
-      MdtMaintenance.completeDeltacommit(fs, mdtBase, mdtConfig, instant)
+      MdtMaintenance.completeDeltacommit(conf.value.value, mdtBase, mdtConfig, instant)
   }
 }

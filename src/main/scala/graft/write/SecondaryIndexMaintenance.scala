@@ -133,16 +133,15 @@ object SecondaryIndexMaintenance {
           val sorted = entries.sortBy(_._1).toIndexedSeq
           val hfileBytes = graft.hfile.HFileWriter.write(sorted,
             Map("schema" -> schemaJson.getBytes("UTF-8")), recordsPerBlock = 64)
-          val dir = new Path(dirStr)
-          val fsx = dir.getFileSystem(conf.value)
-          val out = new java.io.DataOutputStream(fsx.create(new Path(dir, logName), false))
+          val out = graft.io.Storage(conf.value)
+            .create(new Path(dirStr, logName), overwrite = false)
           try graft.log.LogFileWriter.hfileDataBlock(out, instant, schema, hfileBytes)
           finally out.close()
           Iterator.single(logName)
         }
       }.collect()
     if (written.nonEmpty)
-      MdtMaintenance.completeDeltacommit(fs, mdtBase, mdtConfig, instant)
+      MdtMaintenance.completeDeltacommit(hadoopConf, mdtBase, mdtConfig, instant)
   }
 
   /** A LIVE entry's value: HoodieMetadataRecord(type=7,

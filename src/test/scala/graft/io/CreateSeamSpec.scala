@@ -1,0 +1,50 @@
+package graft.io
+
+import org.scalatest.funsuite.AnyFunSuite
+
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
+
+/** Every file or directory graft creates goes through [[Storage]]: no
+  * Hadoop `create(` or `mkdirs(` call in the main sources outside
+  * `graft/io/Storage.scala` and the fixture builder. A Hadoop call is one
+  * on a `FileSystem` — a `getFileSystem(..)`/`FileSystem.get(..)` result,
+  * the `FileSystem` object, or a value whose name contains `fs`.
+  */
+class CreateSeamSpec extends AnyFunSuite {
+
+  private val root = Paths.get("src/main/scala")
+
+  private val hadoopCreate =
+    """(\b\w*(fs|Fs|FS)\w*|\bFileSystem|getFileSystem\([^)]*\)|FileSystem\.get\w*\([^)]*\))""" +
+      """\s*\.(create|createNewFile|mkdirs)\("""
+  private val call = hadoopCreate.r
+
+  test("no Hadoop create or mkdirs outside graft/io/Storage.scala and fixtures/") {
+    assert(Files.isDirectory(root), s"run from the repository root (no $root)")
+    val files = Files.walk(root).iterator.asScala
+      .filter(_.toString.endsWith(".scala"))
+      .filterNot(_.endsWith(Paths.get("graft/io/Storage.scala")))
+      .filterNot(p => root.relativize(p).toString.startsWith("graft/fixtures/"))
+      .toVector
+    assert(files.size > 50, s"only ${files.size} sources found")
+    val offenders = for {
+      f <- files
+      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
+      if call.findFirstIn(line).isDefined
+    } yield s"${root.relativize(f)}:${i + 1}: ${line.trim}"
+    assert(offenders.isEmpty, offenders.mkString("\n", "\n", ""))
+  }
+
+  test("the scan tells Hadoop creates from Storage's") {
+    Seq("val out = fs.create(new Path(dir, name), false)",
+      "fsx.create(p, true)",
+      "p.getFileSystem(conf).mkdirs(dir)",
+      "FileSystem.get(conf).create(p)",
+      "localFs.mkdirs(p)").foreach(c => assert(call.findFirstIn(c).isDefined, c))
+    Seq("val out = storage.create(p, overwrite = false)",
+      "Storage(conf).create(p, true)",
+      "AvroSchema.create(AvroSchema.Type.INT)",
+      "Files.createDirectories(d)").foreach(c => assert(call.findFirstIn(c).isEmpty, c))
+  }
+}

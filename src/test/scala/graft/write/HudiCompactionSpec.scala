@@ -1,8 +1,12 @@
 package graft.write
 
 import graft.SparkTestBase
-import graft.table.HudiTable
+import graft.table.{ColumnStatsIndex, HudiTable}
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.graftspec.JobCount
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
@@ -133,5 +137,150 @@ class HudiCompactionSpec extends SparkTestBase {
       HudiCompaction.compact(spark, path)
     }
     assert(ex.getMessage.contains("MERGE_ON_READ"), ex.getMessage)
+  }
+
+  private def footer(path: String): ParquetMetadata = {
+    val r = ParquetFileReader.open(
+      HadoopInputFile.fromPath(new Path(path), spark.sessionState.newHadoopConf()))
+    try r.getFooter finally r.close()
+  }
+
+  private val RowMetadata = "org.apache.spark.sql.parquet.row.metadata"
+
+  /** The footer Spark's own parquet writer gives the compacting groups'
+    * merged rows (or none of them), projected to the base-file columns —
+    * what compaction staged through `df.write.parquet` before it wrote
+    * its bases itself.
+    */
+  private def sparkWrittenFooter(path: String, withRows: Boolean): ParquetMetadata = {
+    val t = HudiTable(spark, path)
+    val fids = t.fsView.slicesAsOf(t.timeline.latestCommitTimestamp.get)
+      .filter(_.hasLogFiles).map(_.fileId)
+    val merged = spark.read.format("hudi-graft")
+      .option("cdc.file.groups", fids.mkString(",")).load(path)
+    val fid = HudiWriter.fidOfFileName
+    val projected = merged.select(
+      col("_hoodie_commit_time") +:
+        concat_ws("_", col("_hoodie_commit_time"), fid, col("_hoodie_record_key"))
+          .as("_hoodie_commit_seqno") +:
+        col("_hoodie_record_key") +: col("_hoodie_partition_path") +:
+        concat(fid, lit("_0-0-0_0.parquet")).as("_hoodie_file_name") +:
+        merged.columns.filterNot(_.startsWith("_hoodie_")).map(col).toSeq: _*)
+    val out = fresh(s"${new Path(path).getName}_spark_written")
+    val df =
+      if (withRows) projected.coalesce(1)
+      else spark.createDataFrame(
+        spark.sparkContext.parallelize(Seq.empty[org.apache.spark.sql.Row], 1), projected.schema)
+    df.write.parquet(out)
+    val fs = FileSystem.get(spark.sessionState.newHadoopConf())
+    footer(fs.listStatus(new Path(out)).map(_.getPath.toString)
+      .find(_.endsWith(".parquet")).get)
+  }
+
+  test("compaction is one Spark job, and its bases keep the codec and Spark row metadata") {
+    val path = fresh("writer_compact_onejob")
+    w(orders(), path, "insert")
+    w(orders().filter(col("o_orderkey") % 5 === 0)
+      .withColumn("o_orderstatus", lit("J")), path, "upsert")
+    val before = spark.read.format("hudi-graft").load(path)
+      .drop("_hoodie_commit_seqno", "_hoodie_file_name").collect().map(_.toSeq).toSet
+    val old = sparkWrittenFooter(path, withRows = true)
+    val (stats, jobs) = JobCount(spark)(HudiCompaction.compact(spark, path))
+    assert(jobs == 1, s"compaction ran $jobs Spark jobs")
+    val cts = stats.instant.get
+
+    val newBases = HudiTable(spark, path).fsView.slicesAsOf(cts).flatMap(_.baseFile)
+    assert(newBases.nonEmpty && newBases.forall(_.fileName.endsWith(s"_$cts.parquet")))
+    import scala.jdk.CollectionConverters._
+    def codecs(f: ParquetMetadata) =
+      f.getBlocks.asScala.flatMap(_.getColumns.asScala.map(_.getCodec)).toSet
+    newBases.foreach { bf =>
+      val f = footer(bf.path)
+      assert(codecs(f) == codecs(old), bf.fileName)
+      assert(f.getFileMetaData.getKeyValueMetaData.get(RowMetadata) ==
+        old.getFileMetaData.getKeyValueMetaData.get(RowMetadata), bf.fileName)
+    }
+    // nothing staged is left behind
+    val fs = FileSystem.get(spark.sessionState.newHadoopConf())
+    assert(!fs.exists(new Path(path, s".hoodie/.temp/$cts")))
+    val after = spark.read.format("hudi-graft").load(path)
+      .drop("_hoodie_commit_seqno", "_hoodie_file_name").collect().map(_.toSeq).toSet
+    assert(after == before)
+  }
+
+  test("a column_stats table gets exact entries for the compacted bases") {
+    graft.fixtures.HudiFixtureBuilder.ensure(spark, sfDir)
+    val fs = FileSystem.get(spark.sessionState.newHadoopConf())
+    val path = fresh("writer_compact_colstats")
+    org.apache.hadoop.fs.FileUtil.copy(fs,
+      new Path(graft.fixtures.HudiFixtureBuilder.rangePath(sfDir)), fs, new Path(path), false,
+      spark.sessionState.newHadoopConf())
+    // the column_stats fixture as a MERGE_ON_READ table, so upserts log
+    val props = new Path(path, ".hoodie/hoodie.properties")
+    val text = new String(graft.util.ReadFully(fs, props), "UTF-8")
+      .replace("hoodie.table.type=COPY_ON_WRITE", "hoodie.table.type=MERGE_ON_READ") +
+      "hoodie.table.precombine.field=o_custkey\n"
+    fs.delete(props, false)
+    val o = fs.create(props, false)
+    o.write(text.getBytes("UTF-8")); o.close()
+    orders().filter(col("o_orderkey") % 7 === 0)
+      .withColumn("o_orderstatus", lit("X"))
+      .write.format("hudi-graft")
+      .option("hoodie.datasource.write.recordkey.field", "o_orderkey")
+      .option("hoodie.datasource.write.precombine.field", "o_custkey")
+      .option("hoodie.datasource.write.operation", "upsert")
+      .mode(SaveMode.Append).save(path)
+    val before = spark.read.format("hudi-graft").load(path)
+      .drop("_hoodie_commit_seqno", "_hoodie_file_name").collect().map(_.toSeq).toSet
+
+    val cts = HudiCompaction.compact(spark, path).instant.get
+    val compacted = HudiTable(spark, path).fsView.slicesAsOf(cts)
+      .filter(_.commitTimestamp == cts).flatMap(_.baseFile)
+    assert(compacted.nonEmpty)
+    val lookup = ColumnStatsIndex.load(path, spark.sessionState.newHadoopConf())
+    compacted.foreach { bf =>
+      val entries = lookup.entries.filter(_.fileName == bf.fileName)
+      assert(entries.map(_.columnName).toSet.contains("o_orderkey"),
+        s"no column_stats entries for ${bf.fileName}")
+      val file = spark.read.parquet(bf.path)
+      val rows = file.count()
+      entries.foreach { e =>
+        val a = file.agg(min(e.columnName), max(e.columnName),
+          sum(when(col(e.columnName).isNull, 1L).otherwise(0L))).head
+        val norm: Any => Any = {
+          case d: java.sql.Date => d.toLocalDate.toEpochDay.toInt
+          case v => v
+        }
+        assert(e.min.contains(norm(a.get(0))) && e.max.contains(norm(a.get(1))),
+          s"${bf.fileName}.${e.columnName}: index (${e.min},${e.max}) vs file (${a.get(0)},${a.get(1)})")
+        assert(e.nullCount.contains(a.getLong(2)) && e.valueCount.contains(rows) &&
+          e.isTightBound, e.toString)
+      }
+      assert(lookup.rowCounts.get(bf.fileName).contains(rows))
+    }
+    val after = spark.read.format("hudi-graft").load(path)
+      .drop("_hoodie_commit_seqno", "_hoodie_file_name").collect().map(_.toSeq).toSet
+    assert(after == before, "compaction must not change the snapshot")
+    assert(spark.read.format("hudi-graft").load(path)
+      .filter(col("o_orderkey") <= 100 && col("o_orderstatus") === "X").count() ==
+      orders().filter(col("o_orderkey") <= 100 && col("o_orderkey") % 7 === 0).count())
+  }
+
+  test("an emptied group's base is written on the driver with Spark's footer") {
+    val path = fresh("writer_compact_empty_footer")
+    w(orders().limit(40), path, "insert")
+    w(orders().limit(40).select("o_orderkey", "o_orderpriority"), path, "delete")
+    val old = sparkWrittenFooter(path, withRows = false)
+    val (stats, jobs) = JobCount(spark)(HudiCompaction.compact(spark, path))
+    assert(jobs == 1, s"compaction ran $jobs Spark jobs")
+    val bases = HudiTable(spark, path).fsView.slicesAsOf(stats.instant.get).flatMap(_.baseFile)
+    assert(bases.nonEmpty)
+    bases.foreach { bf =>
+      val f = footer(bf.path)
+      assert(f.getBlocks.isEmpty, bf.fileName)
+      assert(f.getFileMetaData.getKeyValueMetaData.get(RowMetadata) ==
+        old.getFileMetaData.getKeyValueMetaData.get(RowMetadata))
+      assert(spark.read.parquet(bf.path).count() == 0)
+    }
   }
 }
