@@ -145,6 +145,12 @@ final case class HoodieConfig(props: Map[String, String]) {
     */
   def cdcEnabled: Boolean = getOrElse(CdcEnabled, "false").toBoolean
 
+  /** The metadata-table partitions the table advertises
+    * (`hoodie.table.metadata.partitions`, comma-separated).
+    */
+  lazy val metadataPartitions: Set[String] =
+    getOrElse(MetadataPartitions, "").split(",").map(_.trim).filter(_.nonEmpty).toSet
+
   /** CDC supplemental logging mode (`op_key_only` | `data_before` |
     * `data_before_after`). Only `data_before_after` carries full
     * before/after images; the other modes cannot serve an image feed by
@@ -184,6 +190,7 @@ object HoodieConfig {
   val KeyGeneratorClass = "hoodie.table.keygenerator.class"
   val CdcEnabled = "hoodie.table.cdc.enabled"
   val CdcLoggingMode = "hoodie.table.cdc.supplemental.logging.mode"
+  val MetadataPartitions = "hoodie.table.metadata.partitions"
 
   /** Load `<base>/.hoodie/hoodie.properties` — java.util.Properties
     * format, including its escape rules (Hudi writes `\:` inside the

@@ -95,13 +95,12 @@ object GraftProcedures {
         StructField("source_fields", StringType, nullable = false),
         StructField("advertised", BooleanType, nullable = false))),
       (t, _) => {
-        val advertised = t.config.getOrElse("hoodie.table.metadata.partitions", "")
-          .split(",").map(_.trim).filter(_.nonEmpty).toVector
+        val advertised = t.config.metadataPartitions
         val defs = SecondaryIndex.indexDefs(t.basePath, t.hadoopConf)
         val declared = defs.values.toVector.sortBy(_.indexName).map(d =>
           row(d.indexName, d.indexType, d.sourceFields.mkString(","),
             Boolean.box(advertised.contains(d.indexName))))
-        val undeclared = advertised.filterNot(defs.contains).sorted.map(p =>
+        val undeclared = advertised.filterNot(defs.contains).toVector.sorted.map(p =>
           row(p, "", "", Boolean.box(true)))
         declared ++ undeclared
       }))

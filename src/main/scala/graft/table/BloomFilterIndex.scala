@@ -42,8 +42,7 @@ object BloomFilterIndex {
   val PartitionName = "bloom_filters"
 
   def isAvailable(config: HoodieConfig): Boolean =
-    config.getOrElse("hoodie.table.metadata.partitions", "")
-      .split(",").map(_.trim).contains(PartitionName)
+    config.metadataPartitions.contains(PartitionName)
 
   /** base64 of the big-endian xxhash64 of `s` — one ID half of a bloom
     * index key.

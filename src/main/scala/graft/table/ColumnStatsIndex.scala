@@ -123,8 +123,7 @@ object ColumnStatsIndex {
   val PartitionName = "column_stats"
 
   def isAvailable(config: HoodieConfig): Boolean =
-    config.getOrElse("hoodie.table.metadata.partitions", "")
-      .split(",").map(_.trim).contains(PartitionName)
+    config.metadataPartitions.contains(PartitionName)
 
   /** Decoded-lookup memo misses (full partition decodes) — monotonic,
     * for tests pinning "a repeat plan decodes nothing".
@@ -287,8 +286,7 @@ object PartitionStatsIndex {
   val PartitionName = "partition_stats"
 
   def isAvailable(config: HoodieConfig): Boolean =
-    config.getOrElse("hoodie.table.metadata.partitions", "")
-      .split(",").map(_.trim).contains(PartitionName)
+    config.metadataPartitions.contains(PartitionName)
 
   /** partitionPath → columnName → (min, max), as of the MDT's latest
     * commit. Throws on structural problems; callers catch and fall back

@@ -54,10 +54,8 @@ object MetadataTable {
   def isEnabled(config: HoodieConfig, basePath: String): Boolean = {
     if (config.tableVersion < 8) return false
     if (basePath.replace('\\', '/').endsWith(".hoodie/metadata")) return false
-    val partitions = config.getOrElse("hoodie.table.metadata.partitions", "")
-      .split(",").map(_.trim).toSet
     config.getOrElse("hoodie.metadata.enable", "false").toBoolean ||
-      partitions.contains(FilesPartitionRecord.PartitionName)
+      config.metadataPartitions.contains(FilesPartitionRecord.PartitionName)
   }
 
   /** Open `<dataTableBase>/.hoodie/metadata` and plan one MDT partition's

@@ -61,8 +61,7 @@ object RecordIndex {
     * reference's get_metadata_table_partitions reads, table/mod.rs:351).
     */
   def isAvailable(config: HoodieConfig): Boolean =
-    config.getOrElse("hoodie.table.metadata.partitions", "")
-      .split(",").map(_.trim).contains(PartitionName)
+    config.metadataPartitions.contains(PartitionName)
 
   /** Hudi's record-key → MDT file-group mapping (the public
     * HoodieTableMetadataUtil.mapRecordKeyToFileGroupIndex: a

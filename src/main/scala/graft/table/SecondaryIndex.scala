@@ -48,8 +48,7 @@ object SecondaryIndex {
 
   /** The `secondary_index_*` partitions the table advertises. */
   def availablePartitions(config: HoodieConfig): Seq[String] =
-    config.getOrElse("hoodie.table.metadata.partitions", "")
-      .split(",").map(_.trim).filter(_.startsWith(PartitionPrefix)).toSeq
+    config.metadataPartitions.filter(_.startsWith(PartitionPrefix)).toSeq.sorted
 
   /** Parse `.hoodie/.index_defs/index.json`. Missing file → empty.
     * Memoized per (path, mtime, length): unlike MDT files the defs file

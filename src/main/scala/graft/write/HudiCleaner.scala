@@ -129,9 +129,7 @@ object HudiCleaner {
     // serves deleted paths
     touch(s"$instant.clean.requested", body)
     touch(s"$instant.clean.inflight")
-    val mdtParts = t.config.getOrElse("hoodie.table.metadata.partitions", "")
-      .split(",").map(_.trim).filter(_.nonEmpty).toSet
-    if (mdtParts.contains("files"))
+    if (t.config.metadataPartitions.contains("files"))
       MdtMaintenance.tombstoneFiles(basePath, hadoopConf,
         instant, candidates.map(c => (c._1, c._2)))
     val deleted = Vector.newBuilder[(String, String)]

@@ -17,11 +17,12 @@ import org.apache.spark.sql.functions._
   * cluster base files; MOR slices with logs fold them in the same pass
   * (real Hudi's clustering does too — the new groups are log-free).
   *
-  * Scale shape: one distributed merged scan of the clustered groups,
-  * one hash-bucket shuffle into the new group layout (group count from
-  * the plan's size estimate over the target file size), partitionBy
-  * staging — the same one-shuffle shape as a data write; the driver
-  * handles only names and metadata.
+  * Scale shape: ONE Spark job — one distributed merged scan of the
+  * clustered groups and one hash-bucket shuffle into the new group
+  * layout (group count from the plan's size estimate over the target
+  * file size), each task writing its groups' base files through
+  * [[BaseFiles]] — the same shape as a data write; the driver handles
+  * only names and metadata.
   */
 object HudiClustering {
 
@@ -43,7 +44,6 @@ object HudiClustering {
         "hudi-graft clustering: record_index tables are not clusterable here — " +
           "relocation would invalidate every index entry and a rebuild is not implemented")
     val hadoopConf = spark.sessionState.newHadoopConf()
-    val fs = new Path(basePath).getFileSystem(hadoopConf)
     val latest = t.timeline.latestCommitTimestamp.getOrElse(
       return ClusteringStats(None, Nil, Map.empty))
     val slices = t.fsView.slicesAsOf(latest)
@@ -56,62 +56,33 @@ object HudiClustering {
     val storage = graft.io.Storage(hadoopConf)
     def touch(name: String, content: String = ""): Unit =
       storage.writeFile(new Path(timelineDir, name), content.getBytes("UTF-8"), overwrite = true)
-    val planJson = replaced.toSeq.sortBy(_._1).map { case (p, fids) =>
-      s""""${HudiWriter.escapeJson(p)}":${fids.toSeq.sorted.map(f => s""""$f"""").mkString("[", ",", "]")}"""
-    }.mkString("""{"inputGroups":{""", ",", "}}")
-    touch(s"$instant.replacecommit.requested", planJson)
+    touch(s"$instant.replacecommit.requested",
+      s"""{"inputGroups":${HudiWriter.fileIdsJson(replaced)}}""")
     touch(s"$instant.replacecommit.inflight")
 
     // merged view with per-row stamps preserved; rows re-bucket into
     // fresh groups (same derivation as a data write's fresh routing)
     val merged = spark.read.format("hudi-graft").load(basePath)
-    val bytes = BigInt(merged.queryExecution.optimizedPlan.stats.sizeInBytes.toString)
-    val groups =
-      if (bytes > BigInt(1L << 50)) spark.sparkContext.defaultParallelism.max(1)
-      else (bytes / targetFileBytes).toLong.max(0L).min(4096L).toInt + 1
-    val fidExpr = {
-      val h = md5(concat(lit(s"$instant/"), col("__part"), lit("/"),
-        col("__bucket").cast("string")))
-      concat_ws("-",
-        substring(h, 1, 8), substring(h, 9, 4), substring(h, 13, 4),
-        substring(h, 17, 4), concat(substring(h, 21, 12), lit("-0")))
-    }
+    val groups = HudiWriter.freshGroups(merged, targetFileBytes)
     val staged = merged
       .withColumn("__key", col(MetaField.RecordKey))
       .withColumn("__part", col(MetaField.PartitionPath))
-      .withColumn("__bucket", pmod(xxhash64(col("__key")), lit(groups)).cast("int"))
-      .withColumn("__fid", fidExpr)
-      .drop("__bucket")
-      .drop(MetaField.all.filterNot(_ == MetaField.CommitTime): _*)
-    val files = HudiWriter.writeStaged(spark, fs, new Path(basePath), staged, instant)
+      .withColumn("__fid", HudiWriter.freshFid(instant, groups))
+    val files = BaseFiles.write(BaseFiles.grouped(staged, instant), basePath, instant)
 
-    val mdtParts = t.config.getOrElse("hoodie.table.metadata.partitions", "")
-      .split(",").map(_.trim).filter(_.nonEmpty).toSet
-    if (mdtParts.contains("files"))
+    if (t.config.metadataPartitions.contains("files"))
       MdtMaintenance.appendFiles(basePath, hadoopConf, instant,
-        files.map { case (p, _, rel, _, sz) =>
-          (p, rel.substring(rel.lastIndexOf('/') + 1), sz)
-        })
+        files.map(f => (f.partition, f.name, f.bytes)))
 
-    val stats = files.groupBy(_._1).toSeq.sortBy(_._1).map { case (p, fsz) =>
-      val entries = fsz.sortBy(_._2).map { case (_, fid, rel, rows, sz) =>
-        s"""{"fileId":"$fid","path":"${HudiWriter.escapeJson(rel)}",""" +
-          s""""partitionPath":"${HudiWriter.escapeJson(p)}","prevCommit":"null",""" +
-          s""""numWrites":$rows,"numUpdateWrites":0,"numInserts":0,"numDeletes":0,""" +
-          s""""fileSizeInBytes":$sz}"""
-      }.mkString("[", ",", "]")
-      s""""${HudiWriter.escapeJson(p)}":$entries"""
-    }.mkString("{", ",", "}")
-    val repJson = replaced.toSeq.sortBy(_._1).map { case (p, fids) =>
-      s""""${HudiWriter.escapeJson(p)}":${fids.toSeq.sorted.map(f => s""""$f"""").mkString("[", ",", "]")}"""
-    }.mkString("{", ",", "}")
+    val stats = HudiWriter.writeStatsJson(files.map(HudiWriter.WriteStat(_)))
     val completedName =
       if (t.config.tableVersion >= 8)
         s"${instant}_${HudiWriter.completionNow(instant, t.config.timelineTimezone)}.replacecommit"
       else s"$instant.replacecommit"
     touch(completedName,
-      s"""{"partitionToWriteStats":$stats,"partitionToReplaceFileIds":$repJson,""" +
+      s"""{"partitionToWriteStats":$stats,"partitionToReplaceFileIds":""" +
+        s"""${HudiWriter.fileIdsJson(replaced)},""" +
         s""""compacted":false,"operationType":"CLUSTER"}""")
-    ClusteringStats(Some(instant), files.map(f => (f._1, f._2)), replaced)
+    ClusteringStats(Some(instant), files.map(f => (f.partition, f.fileId)), replaced)
   }
 }

@@ -1,10 +1,10 @@
 package graft.write
 
 import graft.core.{HoodieConfig, MetaField}
-import graft.io.{ParquetFiles, Storage}
+import graft.io.Storage
 import graft.table.{HudiTable, RecordIndex}
 import graft.util.SerializableConf
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.HashPartitioner
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
@@ -41,11 +41,13 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   * fileId/path/partitionPath/prevCommit/numWrites/numUpdateWrites/
   * fileSizeInBytes and `extraMetadata.schema` (the writer's data schema).
   *
-  * Scale shape: base files stage with ONE shuffle — rows route to their
-  * target file group and each (partition, fileGroup) writes exactly one
-  * parquet file from one task via `partitionBy` staging; the driver then
-  * RENAMES files into Hudi names and writes metadata, O(#files) namenode
-  * ops (the standard committer cost, never data movement). Inserts
+  * Scale shape: base files stage in ONE Spark job with one shuffle —
+  * rows route to their target file group, shuffle by (partition,
+  * fileGroup), and each task writes each group it holds as exactly one
+  * parquet file ([[BaseFiles]]), returning the file's row count, size
+  * and column_stats bounds; the driver then RENAMES files into Hudi
+  * names and writes metadata, O(#files) namenode ops (never data
+  * movement). Inserts
   * hash-bucket into fresh groups with no probe. Every upsert and delete,
   * COW or MOR, starts from the same RDD probe pass ([[probe]]): on a
   * record_index table the batch partitions by its keys' index group and
@@ -181,8 +183,7 @@ object HudiWriter {
       // through it); the remaining INDEX partitions (column_stats/
       // secondary/bloom) are not — a commit would leave them stale and
       // index-served reads silently wrong, so those tables refuse
-      val mdtParts = t.config.getOrElse("hoodie.table.metadata.partitions", "")
-        .split(",").map(_.trim).filter(_.nonEmpty).toSet
+      val mdtParts = t.config.metadataPartitions
       val unmaintained =
         mdtParts - "files" - "record_index" - "column_stats" - "partition_stats" -
           "bloom_filters" --
@@ -197,9 +198,7 @@ object HudiWriter {
     // else (numeric/date renderings, expression indexes) throws here —
     // the refusal must land BEFORE any bytes are written
     val secondaryIndexes: Seq[(String, String)] = existing.map { t =>
-      val parts = t.config.getOrElse("hoodie.table.metadata.partitions", "")
-        .split(",").map(_.trim)
-        .filter(_.startsWith(graft.table.SecondaryIndex.PartitionPrefix)).toSeq
+      val parts = graft.table.SecondaryIndex.availablePartitions(t.config)
       if (parts.isEmpty) Nil
       else SecondaryIndexMaintenance.resolveWritable(basePath,
         spark.sessionState.newHadoopConf(), t.tableSchema, parts)
@@ -447,13 +446,10 @@ object HudiWriter {
         if (maintainsPartStats) existing.get.fsView.partitionPaths.toSet else Set.empty
       // routing already knows when nothing is left to stage (a MOR delete,
       // an upsert whose inserts all went to logs, a delete matching no
-      // key): skip the staging job and its .temp listing outright
-      val (files, fileStats) = routed.staged match {
-        case None => (Nil, Map.empty[(String, String), Seq[(String, Any, Any, Long)]])
-        case Some(staged) =>
-          writeStagedWithStats(spark, fs, base, staged, instant, routed.requiredGroups,
-            if (maintainsColStats || maintainsPartStats) statColumnsOf(staged.schema) else Nil)
-      }
+      // key): skip the staging job outright
+      val baseRows = routed.staged.map(BaseFiles.grouped(_, instant))
+      val files = baseRows.map(BaseFiles.write(_, basePath, instant, routed.requiredGroups,
+        stats = maintainsColStats || maintainsPartStats)).getOrElse(Nil)
       // the commit's recorded schema is the TABLE's data schema — a
       // keys-only delete input must not shrink it (readers resolve the
       // table schema commit-metadata-first)
@@ -465,16 +461,9 @@ object HudiWriter {
       // files-partition MDT maintenance: the MDT deltacommit (same
       // instant) completes BEFORE the data commit, so any reader that
       // sees the data instant sees an MDT at least as new
-      val maintainsMdt = existing.exists(_.config
-        .getOrElse("hoodie.table.metadata.partitions", "").split(",")
-        .map(_.trim).contains("files"))
-      if (maintainsMdt)
+      if (existing.exists(_.config.metadataPartitions.contains("files")))
         MdtMaintenance.appendFiles(basePath, spark.sessionState.newHadoopConf(), instant,
-          files.map { case (p, _, rel, _, bytes) =>
-            (p, rel.substring(rel.lastIndexOf('/') + 1), bytes)
-          } ++ routed.logWrites.map { lw =>
-            (lw.partition, lw.relPath.substring(lw.relPath.lastIndexOf('/') + 1), lw.bytes)
-          })
+          (files ++ routed.logWrites.map(_.file)).map(f => (f.partition, f.name, f.bytes)))
       // record-index maintenance: created-key entries + deleted-key
       // tombstones land as an MDT deltacommit BEFORE the data commit
       // (same freshness contract as the files partition)
@@ -483,9 +472,9 @@ object HudiWriter {
           timelineTz, c.conf))
       // column_stats maintenance: exact per-(file, column) bounds from
       // the staging pass, appended before the data commit
-      lazy val statEntries = routed.staged
-        .map(s => colStatsEntries(files, fileStats, s.schema)).getOrElse(Nil)
-      if (maintainsColStats && fileStats.nonEmpty)
+      lazy val statEntries = baseRows
+        .map(rows => BaseFiles.colStatsEntries(files, rows.schema)).getOrElse(Nil)
+      if (maintainsColStats && files.nonEmpty)
         ColumnStatsMaintenance.append(basePath, spark.sessionState.newHadoopConf(),
           instant, statEntries)
       // partition_stats maintenance: partition-level bounds of every row
@@ -529,9 +518,7 @@ object HudiWriter {
         graft.table.BloomFilterIndex.isAvailable(t.config))
       if (maintainsBloom)
         BloomFilterMaintenance.append(spark, basePath, instant,
-          files.filter(_._4 > 0).map { case (p, _, rel, rows, _) =>
-            (p, rel.substring(rel.lastIndexOf('/') + 1), rows)
-          })
+          files.filter(_.rows > 0).map(f => (f.partition, f.name, f.rows)))
       // secondary-index maintenance: old values from the PRE-COMMIT
       // snapshot (the data commit hasn't completed yet) joined with the
       // incoming batch — changed values tombstone the old entry and add
@@ -688,7 +675,9 @@ object HudiWriter {
       relPath: String,
       rows: Long,
       bytes: Long,
-      inserts: Long)
+      inserts: Long) {
+    def file: BaseFiles.Written = BaseFiles.Written(partition, fileId, relPath, rows, bytes)
+  }
 
   /** Fresh-group routing: hash-bucket keys into N new file groups per
     * partition, N from the PLANNED input size (Catalyst's estimate — no
@@ -697,21 +686,30 @@ object HudiWriter {
     * per-row UDF in the insert hot path.
     */
   private def routeFresh(keyed: DataFrame, instant: String, opts: Options): DataFrame = {
-    val groups = freshGroups(keyed.sparkSession,
-      BigInt(keyed.queryExecution.optimizedPlan.stats.sizeInBytes.toString), opts.maxFileBytes)
-    val fidExpr = {
-      val h = md5(concat(lit(s"$instant/"), col("__part"), lit("/"),
-        col("__bucket").cast(StringType)))
-      concat_ws("-",
-        substring(h, 1, 8), substring(h, 9, 4), substring(h, 13, 4),
-        substring(h, 17, 4), concat(substring(h, 21, 12), lit("-0")))
-    }
+    val groups = freshGroups(keyed, opts.maxFileBytes)
     keyed
-      .withColumn("__bucket", pmod(xxhash64(col("__key")), lit(groups)).cast("int"))
-      .withColumn("__fid", fidExpr)
+      .withColumn("__fid", freshFid(instant, groups))
       .withColumn(MetaField.CommitTime, lit(instant))
-      .drop("__bucket")
   }
+
+  /** The fresh group of a row by its `__key` and `__part`: one of
+    * `groups` buckets by key hash, its fileId md5(instant/partition/
+    * bucket) — the expression [[freshFileId]] computes on the driver.
+    */
+  private[write] def freshFid(instant: String, groups: Int): org.apache.spark.sql.Column = {
+    val bucket = pmod(xxhash64(col("__key")), lit(groups)).cast("int")
+    val h = md5(concat(lit(s"$instant/"), col("__part"), lit("/"), bucket.cast(StringType)))
+    concat_ws("-",
+      substring(h, 1, 8), substring(h, 9, 4), substring(h, 13, 4),
+      substring(h, 17, 4), concat(substring(h, 21, 12), lit("-0")))
+  }
+
+  /** Fresh groups per partition for the rows of `df`, by its planned
+    * size (Catalyst's estimate — no extra job).
+    */
+  private[write] def freshGroups(df: DataFrame, maxFileBytes: Long): Int =
+    freshGroups(df.sparkSession,
+      BigInt(df.queryExecution.optimizedPlan.stats.sizeInBytes.toString), maxFileBytes)
 
   /** Fresh groups per partition for `bytes` of rows: one per
     * `maxFileBytes`, at most 4096. Stats-less leaves (RDD-backed frames,
@@ -765,70 +763,21 @@ object HudiWriter {
       fidOfFileName.as("__fid"))
   }
 
-  /** Columns eligible for column_stats maintenance: the wrapper types
-    * the MDT-subset schema carries (LongWrapper/DateWrapper/
-    * StringWrapper). Anything else is SKIPPED — every index tier keys by
-    * (file, column) and falls open on a gap, so partial coverage costs a
-    * footer read, never a wrong answer.
-    */
-  private[write] def statColumnsOf(
-      schema: org.apache.spark.sql.types.StructType): Seq[org.apache.spark.sql.types.StructField] = {
-    import org.apache.spark.sql.types._
-    schema.fields.filter(f =>
-      !f.name.startsWith("__") && !MetaField.all.contains(f.name) &&
-        (f.dataType == LongType || f.dataType == DateType || f.dataType == StringType)).toSeq
-  }
-
-  /** Build [[ColumnStatsMaintenance.FileColStats]] entries from the
-    * staging pass's per-file aggregates (all-null columns skip — no
-    * bounds to record, absence fails open).
-    */
-  private[write] def colStatsEntries(
-      files: Seq[(String, String, String, Long, Long)],
-      fileStats: Map[(String, String), Seq[(String, Any, Any, Long)]],
-      stagedSchema: org.apache.spark.sql.types.StructType)
-      : Seq[ColumnStatsMaintenance.FileColStats] =
-    for {
-      (p, fid, rel, rows, _) <- files
-      stats <- fileStats.get((p, fid)).toSeq
-      (colName, mn, mx, nc) <- stats
-      if mn != null && mx != null
-    } yield ColumnStatsMaintenance.FileColStats(p, rel.substring(rel.lastIndexOf('/') + 1),
-      colName, statWrapper(stagedSchema(colName).dataType), statValue(mn), statValue(mx),
-      rows, nc)
-
   /** Per-(partition, column) (wrapper, min, max) of `rows` — the
     * partition_stats input for rows that reach no staged base file (MOR
     * log appends). One aggregation over the persisted routing frame.
     */
   private def partitionBounds(rows: DataFrame): Seq[(String, String, String, Any, Any)] = {
-    val cols = statColumnsOf(rows.schema)
+    val cols = BaseFiles.statColumnsOf(rows.schema)
     if (cols.isEmpty) return Nil
     val aggs = cols.flatMap(f => Seq(min(col(f.name)), max(col(f.name))))
     rows.groupBy("__part").agg(aggs.head, aggs.tail: _*).collect().toSeq.flatMap { r =>
       cols.zipWithIndex.collect {
         case (f, i) if !r.isNullAt(1 + 2 * i) =>
-          (r.getString(0), f.name, statWrapper(f.dataType),
-            statValue(r.get(1 + 2 * i)), statValue(r.get(2 + 2 * i)))
+          (r.getString(0), f.name, BaseFiles.statWrapper(f.dataType),
+            BaseFiles.statValue(r.get(1 + 2 * i)), BaseFiles.statValue(r.get(2 + 2 * i)))
       }
     }
-  }
-
-  private def statWrapper(dt: org.apache.spark.sql.types.DataType): String = {
-    import org.apache.spark.sql.types._
-    dt match {
-      case LongType => "LongWrapper"
-      case DateType => "DateWrapper"
-      case StringType => "StringWrapper"
-      case other => throw new IllegalStateException(s"unexpected stat type $other")
-    }
-  }
-
-  /** Stats values as the MDT records them: dates as epoch days. */
-  private def statValue(v: Any): Any = v match {
-    case d: java.sql.Date => Int.box(d.toLocalDate.toEpochDay.toInt)
-    case ld: java.time.LocalDate => Int.box(ld.toEpochDay.toInt)
-    case other => other
   }
 
   /** Supported type widenings on write (the pairs the read side upcasts
@@ -965,7 +914,7 @@ object HudiWriter {
 
   /** [[Loc]]s whose file group is set as a staging frame: `dataSchema`'s
     * columns, then __key, __part, __fid and the commit time stamped with
-    * this commit's instant — the shape [[writeStagedWithStats]] stages.
+    * this commit's instant — the shape [[BaseFiles.grouped]] takes.
     */
   private def located(c: Commit, rows: RDD[Loc], dataSchema: StructType): DataFrame = {
     val instant = c.instant
@@ -1375,130 +1324,6 @@ object HudiWriter {
     entries.map { case (fid, rel, len) => fid -> (rel, len) }.toMap
   }
 
-  // ---- physical write -------------------------------------------------------
-
-  /** One Spark job: repartition by (partition, fileGroup), stage via
-    * partitionBy so each group lands as exactly one parquet file, then
-    * rename into Hudi base-file names. Returns
-    * (partition, fileId, relPath, rows, bytes) per file.
-    */
-  private[write] def writeStaged(
-      spark: SparkSession,
-      fs: FileSystem,
-      base: Path,
-      staged: DataFrame,
-      instant: String,
-      requiredGroups: Map[String, String] = Map.empty): Seq[(String, String, String, Long, Long)] =
-    writeStagedWithStats(spark, fs, base, staged, instant, requiredGroups, Nil)._1
-
-  /** As [[writeStaged]], additionally computing EXACT per-(file, column)
-    * min/max/nullCount for `statColumns` in the SAME metadata pass that
-    * counts staged rows — the column_stats maintenance input, one extra
-    * aggregation over a scan the writer already runs.
-    */
-  private[write] def writeStagedWithStats(
-      spark: SparkSession,
-      fs: FileSystem,
-      base: Path,
-      staged: DataFrame,
-      instant: String,
-      requiredGroups: Map[String, String],
-      statColumns: Seq[org.apache.spark.sql.types.StructField])
-      : (Seq[(String, String, String, Long, Long)],
-         Map[(String, String), Seq[(String, Any, Any, Long)]]) = {
-    val dataCols = staged.columns
-      .filterNot(c => c.startsWith("__") || c == MetaField.CommitTime)
-    val fileName = concat(col("__fid"), lit(s"_${Token}_$instant.parquet"))
-    // staging dir values carry a "p:" prefix so an EMPTY partition value
-    // (unpartitioned table) survives partitionBy, which would otherwise
-    // render it as the hive null-sentinel directory and collide with a
-    // genuine null-partition value
-    val withMeta = staged.select(
-      col(MetaField.CommitTime) +:
-        concat_ws("_", col(MetaField.CommitTime), col("__fid"), col("__key"))
-          .as(MetaField.CommitSeqno) +:
-        col("__key").as(MetaField.RecordKey) +:
-        col("__part").as(MetaField.PartitionPath) +:
-        fileName.as(MetaField.FileName) +:
-        (dataCols.map(col) ++ Seq(
-          concat(lit("p:"), col("__part")).as("__p"), col("__fid").as("__f"))): _*)
-    val tmp = new Path(base, s".hoodie/.temp/$instant")
-    withMeta
-      .repartition(col("__p"), col("__f"))
-      .write.partitionBy("__p", "__f").mode("overwrite").parquet(tmp.toString)
-    // row counts per file from the staging footers — a metadata-only
-    // columnar count, no data re-read; a zero-row staging (delete of
-    // only-unmatched keys, or all rows routed to requiredGroups) leaves
-    // no partition dirs at all
-    val hasStaged = fs.exists(tmp) &&
-      fs.listStatus(tmp).exists(_.getPath.getName.startsWith("__p="))
-    val aggExprs = count(lit(1)).as("__cnt") +: statColumns.zipWithIndex.flatMap {
-      case (f, i) => Seq(
-        min(col(f.name)).as(s"__mn$i"), max(col(f.name)).as(s"__mx$i"),
-        sum(when(col(f.name).isNull, 1L).otherwise(0L)).as(s"__nc$i"))
-    }
-    val aggRows =
-      if (!hasStaged) Array.empty[org.apache.spark.sql.Row]
-      else spark.read.parquet(tmp.toString)
-        .groupBy("__p", "__f").agg(aggExprs.head, aggExprs.tail: _*).collect()
-    val counts = aggRows
-      .map(r => (r.getString(0).stripPrefix("p:"), r.getString(1)) -> r.getLong(2)).toMap
-    // per-file column stats: (partition, fid) -> (column, min, max, nullCount)
-    val colStats: Map[(String, String), Seq[(String, Any, Any, Long)]] = aggRows.map { r =>
-      val key = (r.getString(0).stripPrefix("p:"), r.getString(1))
-      key -> statColumns.zipWithIndex.map { case (f, i) =>
-        (f.name, r.get(3 + i * 3), r.get(4 + i * 3), r.getLong(5 + i * 3))
-      }.toSeq
-    }.toMap
-    // (partition, fid, staged file, bytes) per staged base file
-    val stagedFiles = Seq.newBuilder[(String, String, Path, Long)]
-    for (pDir <- fs.listStatus(tmp).toSeq.filter(_.isDirectory).sortBy(_.getPath.getName)) {
-      val part = decodeStagedValue(pDir.getPath.getName.stripPrefix("__p=")).stripPrefix("p:")
-      for (fDir <- fs.listStatus(pDir.getPath).toSeq.filter(_.isDirectory)
-          .sortBy(_.getPath.getName)) {
-        val fid = decodeStagedValue(fDir.getPath.getName.stripPrefix("__f="))
-        val file = fs.listStatus(fDir.getPath).find(_.getPath.getName.startsWith("part-"))
-          .getOrElse(throw new IllegalStateException(s"no staged file under $fDir"))
-        stagedFiles += ((part, fid, file.getPath, file.getLen))
-      }
-    }
-    val written = stagedFiles.result()
-    // rewritten groups that lost EVERY row still need a base-file version
-    // (schema-only parquet, written here on the driver) — without one
-    // their old slice stays visible and the deleted rows resurrect
-    val missing = requiredGroups.filterNot { case (fid, _) => written.exists(_._2 == fid) }
-    val emptied = if (missing.isEmpty) Nil else {
-      val parquet = ParquetFiles.prepare(spark, org.apache.spark.sql.types.StructType(
-        withMeta.schema.fields.filterNot(f => f.name == "__p" || f.name == "__f")))
-      missing.toSeq.sortBy(_._1).map { case (fid, part) =>
-        val file = new Path(tmp, s"empty_$fid.parquet")
-        (part, fid, file, parquet.open(file).close())
-      }
-    }
-    val storage = Storage(spark.sessionState.newHadoopConf())
-    val files = (written ++ emptied).map { case (part, fid, file, bytes) =>
-      val name = s"${fid}_${Token}_$instant.parquet"
-      val dir = if (part.isEmpty) base else new Path(base, part)
-      storage.mkdirs(dir)
-      val dest = new Path(dir, name)
-      if (!fs.rename(file, dest))
-        throw new java.io.IOException(s"hudi-graft: rename $file -> $dest failed")
-      val rel = if (part.isEmpty) name else s"$part/$name"
-      (part, fid, rel, counts.getOrElse((part, fid), 0L), bytes)
-    }
-    // only this instant's staging: a concurrent writer's stays untouched
-    fs.delete(tmp, true)
-    (files, colStats)
-  }
-
-  /** partitionBy HIVE-escapes directory values (ExternalCatalogUtils
-    * .escapePathName: '%', '=', ':' → %XX, but '+' and spaces stay
-    * literal — NOT URL encoding, whose decode would corrupt '+' to a
-    * space); unescape with Spark's own inverse.
-    */
-  private def decodeStagedValue(v: String): String =
-    org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.unescapePathName(v)
-
   // ---- metadata --------------------------------------------------------------
 
   private def writeTableProperties(
@@ -1547,7 +1372,7 @@ object HudiWriter {
       base: Path,
       instant: String,
       operation: String,
-      files: Seq[(String, String, String, Long, Long)],
+      files: Seq[BaseFiles.Written],
       routed: Routed,
       commitSchema: org.apache.spark.sql.types.StructType,
       tableVersion: Int,
@@ -1568,49 +1393,26 @@ object HudiWriter {
       storage.writeFile(new Path(timelineDir, name), body.getBytes("UTF-8"), overwrite = true)
     touch(s"$instant.$action.requested")
     touch(s"$instant.$action.inflight")
-    // base-file entries plus (MOR) log-file entries, merged per partition
-    val baseEntries = files.map { case (p, fid, rel, rows, bytes) =>
-      val upd = updateCounts.getOrElse(fid, 0L)
-      val del = deleteCounts.getOrElse(fid, 0L)
-      // rewritten groups receive no fresh keys under this routing, so
-      // their non-update rows are CARRIED, not inserted
-      val ins = if (updateCounts.contains(fid) || deleteCounts.contains(fid)) 0L else rows
-      val prev = prevCommits.getOrElse(fid, "null")
-      val cdc = cdcFiles.get(fid).map { case (cdcRel, cdcLen) =>
-        s""","cdcStats":{"${escape(cdcRel)}":$cdcLen}""" }.getOrElse("")
-      (p, fid,
-        s"""{"fileId":"$fid","path":"${escape(rel)}","partitionPath":"${escape(p)}","prevCommit":"$prev",""" +
-          s""""numWrites":$rows,"numUpdateWrites":$upd,"numInserts":$ins,""" +
-          s""""numDeletes":$del,"fileSizeInBytes":$bytes,"totalWriteBytes":$bytes$cdc}""")
-    }
-    val logEntries = routed.logWrites.map { lw =>
-      val upd = updateCounts.getOrElse(lw.fileId, 0L)
-      val del = deleteCounts.getOrElse(lw.fileId, 0L)
-      val prev = prevCommits.getOrElse(lw.fileId, "null")
-      (lw.partition, lw.fileId,
-        s"""{"fileId":"${lw.fileId}","path":"${escape(lw.relPath)}","partitionPath":"${escape(lw.partition)}",""" +
-          s""""prevCommit":"$prev","numWrites":${lw.rows},"numUpdateWrites":$upd,""" +
-          s""""numInserts":${lw.inserts},"numDeletes":$del,"fileSizeInBytes":${lw.bytes},""" +
-          s""""totalWriteBytes":${lw.bytes}}""")
-    }
-    val stats = (baseEntries ++ logEntries).groupBy(_._1).toSeq.sortBy(_._1).map {
-      case (p, entries) =>
-        s""""${escape(p)}":${entries.sortBy(_._2).map(_._3).mkString("[", ",", "]")}"""
-    }.mkString("{", ",", "}")
+    // base-file entries plus (MOR) log-file entries, merged per partition;
+    // rewritten groups receive no fresh keys under this routing, so their
+    // non-update rows are CARRIED, not inserted
+    val rewritten = updateCounts.keySet ++ deleteCounts.keySet
+    val written = files.map(f => (f, if (rewritten.contains(f.fileId)) 0L else f.rows)) ++
+      routed.logWrites.map(lw => (lw.file, lw.inserts))
+    val stats = writeStatsJson(written.map { case (f, inserts) =>
+      WriteStat(f, prevCommits.getOrElse(f.fileId, "null"),
+        updates = updateCounts.getOrElse(f.fileId, 0L), inserts = inserts,
+        deletes = deleteCounts.getOrElse(f.fileId, 0L), cdc = cdcFiles.get(f.fileId))
+    })
     val rep =
       if (action != "replacecommit") ""
-      else {
-        val m = replaced.toSeq.sortBy(_._1).map { case (p, fids) =>
-          s""""${escape(p)}":${fids.toSeq.sorted.map(f => s""""$f"""").mkString("[", ",", "]")}"""
-        }.mkString("{", ",", "}")
-        s""","partitionToReplaceFileIds":$m"""
-      }
+      else s""","partitionToReplaceFileIds":${fileIdsJson(replaced)}"""
     // the writer's DATA schema, like real Hudi — but only for the flat
     // type matrix the avro bridge covers; readers fall back to footers
     val schemaJson = scala.util.Try(
       graft.log.SparkToAvro.toAvroSchema(commitSchema, "graft_write_record").toString).toOption
     val extra = schemaJson.map(s =>
-      s""","extraMetadata":{"schema":"${escape(s)}"}""").getOrElse("")
+      s""","extraMetadata":{"schema":"${escapeJson(s)}"}""").getOrElse("")
     val opType = operation.toUpperCase(java.util.Locale.ROOT)
     val body =
       s"""{"partitionToWriteStats":$stats$rep$extra,"compacted":false,"operationType":"$opType"}"""
@@ -1621,6 +1423,41 @@ object HudiWriter {
   }
 
   // ---- shared write-side primitives (one copy; HudiCleaner reuses) -------
+
+  /** One file's entry in a commit's `partitionToWriteStats`: its counts,
+    * the base instant it replaced or appended to (`"null"` for a fresh
+    * group) and, for a COW rewrite with CDC, its `-cdc` sidecar's
+    * (path, bytes).
+    */
+  private[write] final case class WriteStat(
+      file: BaseFiles.Written,
+      prevCommit: String = "null",
+      updates: Long = 0L,
+      inserts: Long = 0L,
+      deletes: Long = 0L,
+      cdc: Option[(String, Long)] = None)
+
+  /** The `partitionToWriteStats` object of commit metadata: per
+    * partition, its files' entries by fileId.
+    */
+  private[write] def writeStatsJson(stats: Seq[WriteStat]): String =
+    stats.groupBy(_.file.partition).toSeq.sortBy(_._1).map { case (p, entries) =>
+      entries.sortBy(_.file.fileId).map { st =>
+        val f = st.file
+        val cdc = st.cdc.map { case (rel, len) => s""","cdcStats":{"${escapeJson(rel)}":$len}""" }
+        s"""{"fileId":"${f.fileId}","path":"${escapeJson(f.relPath)}",""" +
+          s""""partitionPath":"${escapeJson(p)}","prevCommit":"${st.prevCommit}",""" +
+          s""""numWrites":${f.rows},"numUpdateWrites":${st.updates},""" +
+          s""""numInserts":${st.inserts},"numDeletes":${st.deletes},""" +
+          s""""fileSizeInBytes":${f.bytes},"totalWriteBytes":${f.bytes}${cdc.getOrElse("")}}"""
+      }.mkString(s""""${escapeJson(p)}":[""", ",", "]")
+    }.mkString("{", ",", "}")
+
+  /** A partition → fileIds map as a JSON object, both sorted. */
+  private[write] def fileIdsJson(ids: Map[String, Set[String]]): String =
+    ids.toSeq.sortBy(_._1).map { case (p, fids) =>
+      s""""${escapeJson(p)}":${fids.toSeq.sorted.map(f => s""""$f"""").mkString("[", ",", "]")}"""
+    }.mkString("{", ",", "}")
 
   /** Millisecond-resolution timeline instant (the 17-digit form),
     * strictly after `floor` — wall clock, bumped on collision like real
@@ -1663,7 +1500,6 @@ object HudiWriter {
     sb.result()
   }
 
-  private def escape(s: String): String = escapeJson(s)
 
   private def nextInstant(latest: Option[String], timelineTimezone: String): String =
     instantAfter(latest.getOrElse("0"), timelineTimezone)
@@ -1681,7 +1517,7 @@ object HudiWriter {
     def recordKeyFields: Option[Seq[String]] =
       get("hoodie.datasource.write.recordkey.field", "recordkey.field", "primarykey")
         .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq).filter(_.nonEmpty)
-    /** Spark passes `df.write.partitionBy(...)` to a V1 provider as the
+    /** Spark passes a DataFrameWriter `partitionBy(...)` to a V1 provider as the
       * `__partition_columns` option (DataSourceUtils.PARTITIONING_COLUMNS_KEY,
       * a JSON string array) — silently ignoring it would write the table
       * unpartitioned; map it onto the hoodie partition-path spelling and

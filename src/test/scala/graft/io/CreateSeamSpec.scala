@@ -9,7 +9,9 @@ import scala.jdk.CollectionConverters._
   * Hadoop `create(` or `mkdirs(` call in the main sources outside
   * `graft/io/Storage.scala` and the fixture builder. A Hadoop call is one
   * on a `FileSystem` — a `getFileSystem(..)`/`FileSystem.get(..)` result,
-  * the `FileSystem` object, or a value whose name contains `fs`.
+  * the `FileSystem` object, or a value whose name contains `fs`. And base
+  * files have one writer, `graft.write.BaseFiles`: no `DataFrameWriter`
+  * parquet or `partitionBy` write under `graft/write`.
   */
 class CreateSeamSpec extends AnyFunSuite {
 
@@ -46,5 +48,38 @@ class CreateSeamSpec extends AnyFunSuite {
       "Storage(conf).create(p, true)",
       "AvroSchema.create(AvroSchema.Type.INT)",
       "Files.createDirectories(d)").foreach(c => assert(call.findFirstIn(c).isEmpty, c))
+  }
+
+  /** A `.write` chain, possibly over several lines, that reaches a
+    * `.parquet(` or `.partitionBy(` call.
+    */
+  private val frameWrite =
+    """\.write\b\s*(\.\s*\w+\s*\([^()]*\)\s*)*\.\s*(parquet|partitionBy)\(""".r
+
+  test("no DataFrameWriter parquet or partitionBy write under graft/write") {
+    val dir = root.resolve("graft/write")
+    val files = Files.list(dir).iterator.asScala.filter(_.toString.endsWith(".scala")).toVector
+    assert(files.exists(_.endsWith("BaseFiles.scala")), s"no BaseFiles.scala under $dir")
+    val offenders = for {
+      f <- files
+      text = new String(Files.readAllBytes(f), "UTF-8")
+      m <- frameWrite.findAllMatchIn(text)
+    } yield s"${root.relativize(f)}:${text.take(m.start).count(_ == '\n') + 1}: ${m.matched}"
+    assert(offenders.isEmpty, offenders.mkString("\n", "\n", ""))
+  }
+
+  test("the scan tells DataFrameWriter file writes from other writes") {
+    Seq("df.write.parquet(out)",
+      "df.write.mode(\"overwrite\").parquet(p.toString)",
+      "rows\n  .repartition(col(\"p\"))\n  .write.partitionBy(\"p\", \"f\").mode(\"overwrite\")",
+      "df.write\n  .partitionBy(\"a\")").foreach(c =>
+      assert(frameWrite.findFirstIn(c).isDefined, c))
+    Seq("out.write(r)",
+      "spark.read.parquet(p)",
+      "Window.partitionBy(col(\"k\"))",
+      "storage.writeFile(p, bytes, overwrite = true)",
+      "df.write.format(\"hudi-graft\").save(path)",
+      "\"hoodie.datasource.write.partitionpath.field\"").foreach(c =>
+      assert(frameWrite.findFirstIn(c).isEmpty, c))
   }
 }

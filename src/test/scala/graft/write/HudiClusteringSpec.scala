@@ -3,6 +3,7 @@ package graft.write
 import graft.SparkTestBase
 import graft.table.HudiTable
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.graftspec.JobCount
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
@@ -75,6 +76,19 @@ class HudiClusteringSpec extends SparkTestBase {
     val asOf = spark.read.format("hudi-graft")
       .option("as.of.timestamp", c2).load(path)
     assert(asOf.count() == orders().count())
+  }
+
+  // Staged through Spark's partitionBy writer and then re-read for its
+  // per-file row counts, this clustering ran 5 Spark jobs (local[4], 4
+  // shuffle partitions). It runs 2: the merged scan's shuffle into the new
+  // groups, and the staging job.
+  test("COW clustering writes its base files in one staging job") {
+    val path = fresh("writer_cluster_jobs")
+    w(orders(), path, "hoodie.datasource.write.operation" -> "insert")
+    val (stats, jobs) = JobCount(spark)(HudiClustering.cluster(spark, path))
+    assert(jobs <= 2, s"the clustering ran $jobs Spark jobs")
+    assert(stats.newGroups.nonEmpty)
+    assert(spark.read.format("hudi-graft").load(path).count() == orders().count())
   }
 
   test("MOR clustering folds logs; CALL run_clustering works") {

@@ -131,17 +131,18 @@ class HudiCowIndexedWriterSpec extends SparkTestBase {
   // join, a per-group count collect, then the rewrite) ran 16 Spark jobs
   // for this upsert and 15 for this delete on the indexed table, 12 and
   // 12 on the plain one (local[4], 4 shuffle partitions). The one probe
-  // chain runs 11 for each: the dedup's shuffle, the counting job over
+  // chain ran 11 for each: the dedup's shuffle, the counting job over
   // the cached probe, the rewrite's anti-join, staging and per-file stats
-  // jobs, and on the indexed table the index pass.
+  // jobs, and on the indexed table the index pass. Staging now returns
+  // each file's row count itself, so the per-file stats job is gone: 10.
   test("COW upserts and deletes run no more Spark jobs than the join-based route did") {
     for (indexed <- Seq(true, false)) {
       val path = table(s"writer_cow_jobs_$indexed", indexed)
       val (upserts, deletes) = (upsertBatch(), deleteBatch())
       val (_, upsertJobs) = JobCount(spark)(w(upserts, path))
       val (_, deleteJobs) = JobCount(spark)(w(deletes, path, op = "delete"))
-      assert(upsertJobs <= 11, s"indexed=$indexed: the upsert ran $upsertJobs Spark jobs")
-      assert(deleteJobs <= 11, s"indexed=$indexed: the delete ran $deleteJobs Spark jobs")
+      assert(upsertJobs <= 10, s"indexed=$indexed: the upsert ran $upsertJobs Spark jobs")
+      assert(deleteJobs <= 10, s"indexed=$indexed: the delete ran $deleteJobs Spark jobs")
       assert(read(path).count() == orders().count() +
         orders().filter(col("o_orderkey") % 40 === 3).count() -
         orders().filter(col("o_orderkey") % 13 === 0).count())

@@ -2,6 +2,7 @@ package graft.write
 
 import graft.SparkTestBase
 import graft.table.HudiTable
+import org.apache.spark.graftspec.JobCount
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
@@ -49,6 +50,19 @@ class HudiWriterSpec extends SparkTestBase {
     assert(r.getAs[String]("_hoodie_record_key") == "1")
     assert(r.getAs[String]("_hoodie_partition_path") == r.getAs[String]("o_orderpriority"))
     assert(r.getAs[String]("_hoodie_file_name").endsWith(".parquet"))
+  }
+
+  // Staged through Spark's partitionBy writer and then re-read for its
+  // per-file row counts, this bulk_insert ran 8 Spark jobs (local[4], 4
+  // shuffle partitions). It runs 5: the input's schema inference and the
+  // one staging query, whose dedup, cache and group shuffles adaptive
+  // execution submits as jobs of their own.
+  test("a bulk_insert writes its base files in one staging job") {
+    val path = fresh("writer_bulk_jobs")
+    val (_, jobs) = JobCount(spark)(writeOpts(orders(),
+      "hoodie.datasource.write.operation" -> "bulk_insert").mode(SaveMode.Append).save(path))
+    assert(jobs <= 5, s"the bulk_insert ran $jobs Spark jobs")
+    assert(spark.read.format("hudi-graft").load(path).count() == orders().count())
   }
 
   test("upsert rewrites matched groups; carried rows keep their commit stamps") {
