@@ -1,15 +1,18 @@
 package graft.core
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import graft.io.Storage
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 
 import scala.jdk.CollectionConverters._
 
 /** A timeline instant — one transaction-log entry.
   *
   * Filename formats (crates/core/src/timeline/instant.rs:107-183):
-  *  - pre-v8:        `{timestamp}.{action}[.{state}]`
+  *  - pending:       `{timestamp}.{action}.{requested|inflight}`, plus the
+  *                   bare v6 commit form `{timestamp}.inflight`
+  *  - pre-v8:        `{timestamp}.{action}` once completed
   *  - v8+ completed: `{requestedTs}_{completedTs}.{action}`
   *
   * `timestamp` is the request timestamp (ordering + identity);
@@ -22,15 +25,12 @@ final case class HoodieInstant(
     state: String
 ) {
   def isCompleted: Boolean = state == HoodieInstant.Completed
-  /** Timeline filename this instant was parsed from. */
+  /** This instant's timeline file name. A bare v6 `{ts}.inflight` parses
+    * to the commit instant this renders as `{ts}.commit.inflight`.
+    */
   def fileName: String = {
     val tsPart = completionTimestamp.fold(timestamp)(c => s"${timestamp}_$c")
-    val suffix = state match {
-      case HoodieInstant.Completed => action
-      case HoodieInstant.Inflight => if (action == "commit") "inflight" else s"$action.inflight"
-      case s => s"$action.$s"
-    }
-    s"$tsPart.$suffix"
+    if (isCompleted) s"$tsPart.$action" else s"$tsPart.$action.$state"
   }
 }
 
@@ -42,21 +42,22 @@ object HoodieInstant {
   val LoadingActions: Set[String] = Set("commit", "deltacommit", "replacecommit")
 
   private val tsRe = "^\\d{14}(\\d{3})?$".r
+  private val States = Set(Completed, Inflight, Requested)
 
-  /** Parse a timeline filename; None when it isn't a loadable instant. */
-  def parse(fileName: String): Option[HoodieInstant] = {
+  /** Parse any timeline file name — every action, every state; None for
+    * files that are not instants (`hoodie.properties`, `.crc` siblings).
+    */
+  def parseAny(fileName: String): Option[HoodieInstant] = {
     val dot = fileName.indexOf('.')
     if (dot <= 0) return None
-    val tsPart = fileName.substring(0, dot)
-    val suffix = fileName.substring(dot + 1)
-    val (action, state) = suffix.split("\\.", 2) match {
-      case Array("inflight") => ("commit", Inflight)
+    val (action, state) = fileName.substring(dot + 1).split("\\.", 2) match {
+      case Array(Inflight) => ("commit", Inflight)
       case Array(a) => (a, Completed)
-      case Array(a, st) => (a, st.toLowerCase)
+      case Array(a, st) => (a, st.toLowerCase(java.util.Locale.ROOT))
       case _ => return None
     }
-    if (!LoadingActions.contains(action)) return None
-    tsPart.split("_", 2) match {
+    if (action.isEmpty || !States.contains(state)) return None
+    fileName.substring(0, dot).split("_", 2) match {
       case Array(ts) if tsRe.matches(ts) =>
         Some(HoodieInstant(ts, None, action, state))
       case Array(req, compl) if tsRe.matches(req) && tsRe.matches(compl) && state == Completed =>
@@ -64,11 +65,23 @@ object HoodieInstant {
       case _ => None
     }
   }
+
+  /** Parse a timeline filename; None when it isn't a loadable instant. */
+  def parse(fileName: String): Option[HoodieInstant] =
+    parseAny(fileName).filter(i => LoadingActions.contains(i.action))
 }
 
-/** The active timeline: completed commit/deltacommit/replacecommit
-  * instants loaded from `.hoodie/` (v6) or `.hoodie/<timeline.path>/`
-  * (v8+), plus commit-metadata access (crates/core/src/timeline/mod.rs).
+/** The active timeline: every instant listed from `.hoodie/` (v6) or
+  * `.hoodie/<timeline.path>/` (v8+), the completed commit/deltacommit/
+  * replacecommit ones the reader loads, plus commit-metadata access
+  * (crates/core/src/timeline/mod.rs).
+  *
+  * One codec: this file (with [[HoodieInstant]]) is the only code that
+  * knows the timeline's directory and file names, for reading and for
+  * writing ([[begin]]). One listing: each `Timeline` lists its directory
+  * once, and every view of it — completed, pending, rollback-like,
+  * savepoints and the open-table cache's [[signature]] — derives from
+  * that listing.
   *
   * All of this is driver-side metadata work — file listings and small JSON
   * reads; at 100 TB the cost is bounded by the number of commits, not data.
@@ -81,62 +94,69 @@ final class Timeline(
 
   private val mapper = new ObjectMapper()
 
-  private val timelineDir: Path = {
-    val hoodie = new Path(basePath, ".hoodie")
-    if (config.timelinePath.nonEmpty) new Path(hoodie, config.timelinePath) else hoodie
-  }
+  /** The active-timeline directory. */
+  private[graft] val dir: Path = Timeline.dir(basePath, config)
 
-  /** The active-timeline directory (exposed for the table-open cache's
-    * revalidation fingerprint).
+  private val listing: Vector[FileStatus] = Timeline.list(dir, hadoopConf)
+
+  /** (name, length, mtime) of every file this timeline was built from —
+    * instant files are immutable by contract, so it changes iff the
+    * timeline changed. The open-table cache keys on it.
     */
-  private[graft] def dir: Path = timelineDir
+  private[graft] lazy val signature: String = Timeline.signatureOf(listing)
+
+  /** Every instant on the active timeline, any action and state, ascending
+    * by (request timestamp, action, state).
+    */
+  val instants: Vector[HoodieInstant] =
+    listing.flatMap(st => HoodieInstant.parseAny(st.getPath.getName))
+      .sortBy(i => (i.timestamp, i.action, i.state))
 
   /** All completed loadable instants, ascending by request timestamp. */
-  val completedInstants: Vector[HoodieInstant] = {
-    val fs = timelineDir.getFileSystem(hadoopConf)
-    if (!fs.exists(timelineDir)) Vector.empty
-    else
-      fs.listStatus(timelineDir)
-        .iterator
-        .filter(_.isFile)
-        .flatMap(st => HoodieInstant.parse(st.getPath.getName))
-        .filter(_.isCompleted)
-        .toVector
-        .sortBy(i => (i.timestamp, i.action))
-  }
+  val completedInstants: Vector[HoodieInstant] =
+    instants.filter(i => i.isCompleted && HoodieInstant.LoadingActions.contains(i.action))
 
   def latestCommitTimestamp: Option[String] = completedInstants.lastOption.map(_.timestamp)
 
-  /** Request timestamps of rollback/restore instants in ANY state, from a
-    * raw listing — these are not loadable instants (LoadingActions), but
-    * the as-of log pruning ([[graft.fs.FsView]]) must stand down when one
-    * exists past the as-of point: a rollback's COMMAND blocks may target
-    * earlier instants, and the reference scanner never range-skips
-    * command blocks, so dropping the log file that carries them would
-    * resurrect rolled-back data. Inflight ones count too — a crashed
-    * rollback may have appended its command block before completing.
+  /** Request timestamps of rollback/restore instants in ANY state — these
+    * are not loadable instants (LoadingActions), but the as-of log pruning
+    * ([[graft.fs.FsView]]) must stand down when one exists past the as-of
+    * point: a rollback's COMMAND blocks may target earlier instants, and
+    * the reference scanner never range-skips command blocks, so dropping
+    * the log file that carries them would resurrect rolled-back data.
+    * Inflight ones count too — a crashed rollback may have appended its
+    * command block before completing.
     */
-  lazy val rollbackLikeTimestamps: Vector[String] = {
-    val fs = timelineDir.getFileSystem(hadoopConf)
-    if (!fs.exists(timelineDir)) Vector.empty
-    else
-      fs.listStatus(timelineDir)
-        .iterator
-        .filter(_.isFile)
-        .map(_.getPath.getName)
-        .flatMap { n =>
-          val dot = n.indexOf('.')
-          if (dot <= 0) None
-          else {
-            val ts = n.substring(0, dot).split("_", 2)(0)
-            val action = n.substring(dot + 1).split("\\.", 2)(0)
-            if ((action == "rollback" || action == "restore") &&
-              ts.matches("\\d{14}(\\d{3})?")) Some(ts)
-            else None
-          }
-        }
-        .toVector.distinct.sorted
+  lazy val rollbackLikeTimestamps: Vector[String] =
+    instants.filter(i => i.action == "rollback" || i.action == "restore")
+      .map(_.timestamp).distinct.sorted
+
+  /** Requested/inflight instants with NO completed counterpart for the
+    * SAME (timestamp, action) — completed instants keep their markers on
+    * disk, and multi-writer same-instant pairs must not mask each other:
+    * a completed deltacommit at ts does not excuse an inflight commit at
+    * ts. A compaction COMPLETES as a `commit` (real Hudi's naming), so
+    * `{ts}.commit` discharges its markers.
+    */
+  lazy val pendingInstants: Vector[HoodieInstant] = {
+    val done = instants.filter(_.isCompleted).map(i => (i.timestamp, i.action)).toSet
+    instants.filter { i =>
+      !i.isCompleted && !done((i.timestamp, i.action)) &&
+        !(i.action == "compaction" && done((i.timestamp, "commit")))
+    }.distinctBy(i => (i.timestamp, i.action))
   }
+
+  /** Request timestamps of completed savepoints, ascending. */
+  def savepointTimestamps: Vector[String] =
+    instants.filter(i => i.isCompleted && i.action == "savepoint").map(_.timestamp).distinct
+
+  /** [[Timeline.begin]] on this table's timeline. */
+  def begin(action: String, ts: String, plan: String = ""): Timeline.Pending =
+    Timeline.begin(basePath, config, hadoopConf, action, ts, plan)
+
+  /** Delete `instant`'s file; whether it existed. */
+  def delete(instant: HoodieInstant): Boolean =
+    dir.getFileSystem(hadoopConf).delete(new Path(dir, instant.fileName), false)
 
   /** Completed instants whose *request* timestamp is <= `ts`, matching the
     * reference's as-of selection (timeline/mod.rs
@@ -208,8 +228,8 @@ final class Timeline(
     * instants repeatedly (replaced groups, touched groups, schema).
     */
   private def loadCommitMetadata(instant: HoodieInstant): JsonNode = {
-    val fs = timelineDir.getFileSystem(hadoopConf)
-    val p = new Path(timelineDir, instant.fileName)
+    val fs = dir.getFileSystem(hadoopConf)
+    val p = new Path(dir, instant.fileName)
     val bytes = graft.util.ReadFully(fs, p)
     if (bytes.length >= 4 && bytes(0) == 'O' && bytes(1) == 'b' && bytes(2) == 'j' && bytes(3) == 1) {
       import org.apache.avro.file.DataFileStream
@@ -355,17 +375,12 @@ final class Timeline(
   def archivedInstants: Vector[HoodieInstant] = {
     if (config.tableVersion >= 8) return lsmArchivedInstants(None, None)
     val folder = config.getOrElse("hoodie.archivelog.folder", ".hoodie/archived")
-    val dir = if (folder.startsWith(".hoodie")) new Path(basePath, folder)
+    val archive = if (folder.startsWith(".hoodie")) new Path(basePath, folder)
               else new Path(new Path(basePath, ".hoodie"), folder)
-    val fs = dir.getFileSystem(hadoopConf)
-    if (!fs.exists(dir)) Vector.empty
-    else
-      fs.listStatus(dir).iterator
-        .filter(_.isFile)
-        .flatMap(st => HoodieInstant.parse(st.getPath.getName))
-        .filter(_.isCompleted)
-        .toVector
-        .sortBy(i => (i.timestamp, i.action))
+    Timeline.list(archive, hadoopConf)
+      .flatMap(st => HoodieInstant.parse(st.getPath.getName))
+      .filter(_.isCompleted)
+      .sortBy(i => (i.timestamp, i.action))
   }
 
   /** v8+ LSM timeline-history data files — BEYOND the reference, whose
@@ -383,12 +398,12 @@ final class Timeline(
       case None => Vector.empty
       case Some(m) =>
         val historyPath = config.getOrElse("hoodie.timeline.history.path", "history")
-        val dir = new Path(timelineDir, historyPath)
-        val fs = dir.getFileSystem(hadoopConf)
+        val hist = new Path(dir, historyPath)
+        val fs = hist.getFileSystem(hadoopConf)
         m.entries.iterator
           .filter(e => start.forall(e.maxInstant >= _) && end.forall(e.minInstant <= _))
           .flatMap { e =>
-            val p = new Path(dir, e.fileName)
+            val p = new Path(hist, e.fileName)
             if (!fs.exists(p)) Iterator.empty
             else {
               val (schema, rows) = graft.log.ParquetBlock.decode(graft.util.ReadFully(fs, p))
@@ -447,15 +462,15 @@ final class Timeline(
     */
   def readHistoryManifest(): Option[TimelineManifest] = {
     val historyPath = config.getOrElse("hoodie.timeline.history.path", "history")
-    val dir = new Path(timelineDir, historyPath)
-    val fs = dir.getFileSystem(hadoopConf)
-    val versionFile = new Path(dir, "_version_")
+    val hist = new Path(dir, historyPath)
+    val fs = hist.getFileSystem(hadoopConf)
+    val versionFile = new Path(hist, "_version_")
     if (!fs.exists(versionFile)) return None
     def readString(p: Path): String =
       new String(graft.util.ReadFully(fs, p), "UTF-8")
     try {
       val version = readString(versionFile).trim.toLong
-      val node = mapper.readTree(readString(new Path(dir, s"manifest_$version")))
+      val node = mapper.readTree(readString(new Path(hist, s"manifest_$version")))
       val entries = node.path("entries").elements().asScala.map { e =>
         ManifestEntry(
           fileName = e.path("file_name").asText(""),
@@ -466,6 +481,88 @@ final class Timeline(
       }.toVector
       Some(TimelineManifest(node.path("version").asLong(version), entries))
     } catch { case _: Exception => None }
+  }
+}
+
+object Timeline {
+
+  /** The timeline directory of the table at `basePath`: `.hoodie/` on
+    * v6, `.hoodie/<hoodie.timeline.path>/` on v8+.
+    */
+  def dir(basePath: String, config: HoodieConfig): Path = {
+    val hoodie = new Path(basePath, ".hoodie")
+    if (config.timelinePath.nonEmpty) new Path(hoodie, config.timelinePath) else hoodie
+  }
+
+  /** The files in `dir`; none when it does not exist yet. */
+  private def list(dir: Path, conf: Configuration): Vector[FileStatus] =
+    try dir.getFileSystem(conf).listStatus(dir).iterator.filter(_.isFile).toVector
+    catch { case _: java.io.FileNotFoundException => Vector.empty }
+
+  private def signatureOf(files: Vector[FileStatus]): String =
+    files.map(st => s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}")
+      .sorted.mkString("|")
+
+  /** The [[Timeline.signature]] a fresh listing of `dir` would give. */
+  private[graft] def signature(dir: Path, conf: Configuration): String =
+    signatureOf(list(dir, conf))
+
+  /** Begin `action` at request timestamp `ts` on the timeline of the
+    * table at `basePath`: writes `{ts}.{action}.requested` carrying `plan`,
+    * then the empty `{ts}.{action}.inflight`. The returned handle
+    * completes it. Needs no listing, so a new table's first commit can
+    * call it before any `Timeline` exists.
+    */
+  def begin(
+      basePath: String,
+      config: HoodieConfig,
+      conf: Configuration,
+      action: String,
+      ts: String,
+      plan: String = ""): Pending = {
+    val pending = new Pending(dir(basePath, config), config, Storage(conf), ts, action)
+    pending.write(HoodieInstant(ts, None, action, HoodieInstant.Requested), plan)
+    pending.write(HoodieInstant(ts, None, action, HoodieInstant.Inflight), "")
+    pending
+  }
+
+  /** A begun instant, requested and inflight on the timeline. */
+  final class Pending private[Timeline] (
+      dir: Path,
+      config: HoodieConfig,
+      storage: Storage,
+      timestamp: String,
+      action: String) {
+
+    private[Timeline] def write(instant: HoodieInstant, body: String): Unit =
+      storage.writeFile(new Path(dir, instant.fileName), body.getBytes("UTF-8"),
+        overwrite = true)
+
+    /** Write the completed instant carrying `body` under the layout's
+      * name — `{ts}.{action}` on v6, `{ts}_{completion}.{action}` on v8+,
+      * the completion just an instant strictly after the request — where
+      * a compaction completes as a `commit` (real Hudi's naming).
+      */
+    def complete(body: String): HoodieInstant = {
+      val done = HoodieInstant(timestamp,
+        if (config.tableVersion >= 8) Some(instantAfter(timestamp, config.timelineTimezone))
+        else None,
+        if (action == "compaction") "commit" else action, HoodieInstant.Completed)
+      write(done, body)
+      done
+    }
+  }
+
+  /** Millisecond-resolution timeline instant (the 17-digit form),
+    * strictly after `floor` — wall clock, bumped on collision like real
+    * Hudi's instant generation — in the table's timeline timezone
+    * (`hoodie.table.timeline.timezone`): readers interpret instants in
+    * that zone, so a LOCAL-timezone table appended with UTC stamps would
+    * skew CDC ts_ms by the offset.
+    */
+  def instantAfter(floor: String, timelineTimezone: String = "UTC"): String = {
+    val now = Timestamps.normalize(System.currentTimeMillis().toString, timelineTimezone)
+    if (now > floor) now else (Timestamps.normalize(floor).toLong + 1).toString
   }
 }
 

@@ -80,6 +80,7 @@ final class FilePruner(
       allNulls: Set[String])
 
   private def fileStats(path: String): FooterFacts = {
+    FilePruner.footerReads.incrementAndGet()
     val reader = ParquetFileReader.open(
       HadoopInputFile.fromPath(new Path(path), conf))
     try {
@@ -168,6 +169,11 @@ final class FilePruner(
 }
 
 object FilePruner {
+  /** Parquet footers opened for pruning (driver-side, monotonic) — a file
+    * the column_stats tier covers prunes without one.
+    */
+  val footerReads = new java.util.concurrent.atomic.AtomicLong(0L)
+
   /** Map a raw footer statistic to the representation [[StatsRange.literal]]
     * produces for the column's Spark type, using the parquet LOGICAL type:
     * dates stay epoch-day Ints, timestamps normalize to epoch-micros Longs

@@ -27,6 +27,10 @@ final class HudiTable(
 
   val hadoopConf = spark.sessionState.newHadoopConf()
 
+  /** hoodie.properties' status, taken BEFORE it is read: a config change
+    * after this point makes the next open's [[fingerprint]] differ.
+    */
+  private val propsStatus = HudiTable.propsStatus(basePath, hadoopConf)
   private val storedConfig = HoodieConfig.load(basePath, hadoopConf)
 
   /** Call-scoped read options that supplement table configs — e.g. the
@@ -82,6 +86,11 @@ final class HudiTable(
 
   val timeline: Timeline = new Timeline(basePath, config, hadoopConf)
   val fsView: FsView = new FsView(basePath, config, timeline, hadoopConf)
+
+  /** The open-table cache's key for this build: the props status taken
+    * before loading them plus the very listing the timeline was built from.
+    */
+  private def fingerprint: String = s"${timeline.signature}|props=$propsStatus"
 
   /** Data-skipping ranges from the MDT `column_stats` partition when the
     * table advertises it (fileName → column → (min, max)), loaded once
@@ -530,12 +539,19 @@ object HudiTable {
     * opening a table costs a hoodie.properties read, a timeline listing,
     * commit-metadata JSON reads and (first scan) partition listings and
     * footers, all repeated identically for every query against an
-    * unchanged table. The fingerprint is one `listStatus` of the active
-    * timeline dir plus the hoodie.properties status: any commit, rollback,
+    * unchanged table. The fingerprint is the hoodie.properties status plus
+    * one `listStatus` of the active timeline dir: any commit, rollback,
     * clean, archive or config change alters it, so a changed table is
     * re-opened fresh (which is also exactly what the streaming source's
-    * `freshTable` wants — a new view only when there IS new data). A
-    * fingerprint failure fails open to a fresh build.
+    * `freshTable` wants — a new view only when there IS new data).
+    *
+    * A build's fingerprint comes from its own inputs — the props status
+    * taken before loading them and the listing its [[Timeline]] parsed —
+    * never from a second listing after the build: an instant completing
+    * in between would otherwise pin a table that lacks it under a
+    * fingerprint that includes it. So a changed table's open lists the
+    * timeline twice (the check and the build), an unchanged one's once.
+    * A fingerprint failure fails open to a fresh build.
     */
   private def cached(s: SparkSession, basePath: String, opts: Map[String, String]): HudiTable = {
     val reg = graft.queries.SessionRegistry.of(s)
@@ -543,42 +559,36 @@ object HudiTable {
       opts.toSeq.sorted.map { case (k, v) => s"$k=$v" }.mkString(",")
     reg.synchronized {
       reg.get(key) match {
-        case Some((t: HudiTable, fp: String)) if fp.nonEmpty && fingerprint(t) == fp => t
+        case Some(t: HudiTable) if current(t) == t.fingerprint => t
         case _ =>
           val t = new HudiTable(s, basePath, opts)
-          reg.put(key, (t, fingerprint(t)))
+          fingerprintListings.incrementAndGet()
+          reg.put(key, t)
           t
       }
     }
   }
 
   /** Fingerprint listings taken (one `listStatus` of the timeline dir
-    * each) — the per-open revalidation cost. Counter-asserted by specs
-    * that bound a streaming drain's planning IO.
+    * each, the revalidation's or a build's) — the per-open cost.
+    * Counter-asserted by specs that bound a streaming drain's planning IO.
     */
   val fingerprintListings = new java.util.concurrent.atomic.AtomicLong
 
-  /** (name, length, mtime) of every file in the active timeline dir plus
-    * hoodie.properties — instant files are immutable by contract, so this
-    * changes iff the table changed. Empty-string sentinel on any IO error
-    * (never matches a stored fingerprint → rebuild).
+  private def propsStatus(basePath: String, conf: org.apache.hadoop.conf.Configuration): String = {
+    val props = new org.apache.hadoop.fs.Path(basePath, ".hoodie/hoodie.properties")
+    val st = props.getFileSystem(conf).getFileStatus(props)
+    s"${st.getLen}:${st.getModificationTime}"
+  }
+
+  /** `t`'s fingerprint as the table stands now, in build order (props
+    * status, then the timeline listing); empty on any IO error, which
+    * never matches a build's.
     */
-  private def fingerprint(t: HudiTable): String =
+  private def current(t: HudiTable): String =
     try {
       fingerprintListings.incrementAndGet()
-      val fs = t.timeline.dir.getFileSystem(t.hadoopConf)
-      val entries =
-        if (!fs.exists(t.timeline.dir)) Vector.empty
-        else fs.listStatus(t.timeline.dir).iterator
-          .filter(_.isFile)
-          .map(st => s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}")
-          .toVector.sorted
-      val props = new org.apache.hadoop.fs.Path(t.basePath, ".hoodie/hoodie.properties")
-      val propsSig =
-        if (fs.exists(props)) {
-          val st = fs.getFileStatus(props)
-          s"${st.getLen}:${st.getModificationTime}"
-        } else "absent"
-      (entries :+ s"props=$propsSig").mkString("|")
+      val props = propsStatus(t.basePath, t.hadoopConf)
+      s"${Timeline.signature(t.timeline.dir, t.hadoopConf)}|props=$props"
     } catch { case scala.util.control.NonFatal(_) => "" }
 }

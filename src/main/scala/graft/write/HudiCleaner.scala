@@ -1,5 +1,6 @@
 package graft.write
 
+import graft.core.Timeline
 import graft.table.HudiTable
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
@@ -43,7 +44,6 @@ object HudiCleaner {
     val t = HudiTable(spark, basePath)
     val hadoopConf = spark.sessionState.newHadoopConf()
     val fs = new Path(basePath).getFileSystem(hadoopConf)
-    val timelineDir = t.timeline.dir
 
     // savepoints PIN history: each one keeps, per file group, the slice
     // an as-of-savepoint read serves (real Hudi's savepoint contract —
@@ -51,35 +51,8 @@ object HudiCleaner {
     // is exactly what the CDC savepoint-stale guard detects and refuses
     // to infer across); pending instants may be about to reference the
     // candidates and refuse below
-    val rawNames = fs.listStatus(timelineDir).iterator.filter(_.isFile)
-      .map(_.getPath.getName).toVector
-    val savepoints = rawNames.filter(n =>
-      n.endsWith(".savepoint") && n.count(_ == '.') == 1)
-      .map(_.stripSuffix(".savepoint").split("_")(0)).sorted
-    // PENDING = a requested/inflight marker with NO completed counterpart
-    // for the SAME (timestamp, action) — completed commits legitimately
-    // keep their markers on disk, and multi-writer same-instant pairs
-    // (commit + deltacommit at one timestamp) must not mask each other:
-    // a completed deltacommit at ts does not excuse an inflight commit
-    // at ts
-    val completedKeys = rawNames.iterator
-      .filterNot(n => n.endsWith(".requested") || n.endsWith(".inflight"))
-      .map(_.split("\\.", 2)).collect {
-        case Array(ts, action) => s"${ts.split("_")(0)}.$action"
-      }.toSet
-    val pending = rawNames.iterator
-      .filter(n => n.endsWith(".requested") || n.endsWith(".inflight"))
-      .map(_.split("\\.").toSeq).collect {
-        // {ts}.{action}.{state}, or the bare v6 commit form {ts}.inflight
-        case Seq(ts, action, _) => s"$ts.$action"
-        case Seq(ts, "inflight") => s"$ts.commit"
-      }
-      .filterNot(completedKeys.contains)
-      // a compaction COMPLETES as a `commit` (real Hudi's naming): its
-      // requested/inflight markers are discharged by `{ts}.commit`
-      .filterNot(k => k.endsWith(".compaction") &&
-        completedKeys.contains(k.stripSuffix(".compaction") + ".commit"))
-      .toVector
+    val savepoints = t.timeline.savepointTimestamps
+    val pending = t.timeline.pendingInstants.map(i => s"${i.timestamp}.${i.action}")
     if (pending.nonEmpty)
       throw new UnsupportedOperationException(
         s"hudi-graft clean: pending instants exist (${pending.sorted.mkString(", ")}) — a " +
@@ -109,16 +82,13 @@ object HudiCleaner {
     if (candidates.isEmpty)
       return CleanStats(None, Some(earliestRetained), Nil)
 
-    val instant = HudiWriter.instantAfter(commits.last, t.config.timelineTimezone)
+    val instant = Timeline.instantAfter(commits.last, t.config.timelineTimezone)
     val byPartition = candidates.groupBy(_._1).toSeq.sortBy(_._1).map { case (p, fsz) =>
       s""""${escape(p)}":${fsz.map(f => s""""${escape(f._2)}"""").mkString("[", ",", "]")}"""
     }.mkString("{", ",", "}")
     val body =
       s"""{"earliestCommitToRetain":"$earliestRetained","totalFilesDeleted":${candidates.size},""" +
         s""""partitionToDeletedFiles":$byPartition}"""
-    val storage = graft.io.Storage(hadoopConf)
-    def touch(name: String, content: String = ""): Unit =
-      storage.writeFile(new Path(timelineDir, name), content.getBytes("UTF-8"), overwrite = true)
     // crash-safe ordering (real Hudi persists the plan before destroying
     // anything): requested carries the full plan, then the MDT tombstones
     // land, then the files delete, and only then does the clean COMPLETE.
@@ -127,8 +97,7 @@ object HudiCleaner {
     // (b) tombstoned-but-present files, which only hides pre-horizon
     // versions the clean was about to remove anyway; never a listing that
     // serves deleted paths
-    touch(s"$instant.clean.requested", body)
-    touch(s"$instant.clean.inflight")
+    val clean = t.timeline.begin("clean", instant, body)
     if (t.config.metadataPartitions.contains("files"))
       MdtMaintenance.tombstoneFiles(basePath, hadoopConf,
         instant, candidates.map(c => (c._1, c._2)))
@@ -136,11 +105,7 @@ object HudiCleaner {
     for ((p, name, path) <- candidates)
       if (fs.delete(new Path(path), false)) deleted += ((p, name))
     val removed = deleted.result()
-    val completed =
-      if (t.config.tableVersion >= 8)
-        s"${instant}_${HudiWriter.completionNow(instant, t.config.timelineTimezone)}.clean"
-      else s"$instant.clean"
-    touch(completed, body)
+    clean.complete(body)
     CleanStats(Some(instant), Some(earliestRetained), removed)
   }
 

@@ -1,8 +1,7 @@
 package graft.write
 
-import graft.core.MetaField
+import graft.core.{MetaField, Timeline}
 import graft.table.HudiTable
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -21,8 +20,9 @@ import org.apache.spark.sql.functions._
   * clustered groups and one hash-bucket shuffle into the new group
   * layout (group count from the plan's size estimate over the target
   * file size), each task writing its groups' base files through
-  * [[BaseFiles]] — the same shape as a data write; the driver handles
-  * only names and metadata.
+  * [[BaseFiles]] — the same shape as a data write, with exact
+  * column_stats bounds when the table advertises the index, appended
+  * like compaction's; the driver handles only names and metadata.
   */
 object HudiClustering {
 
@@ -50,15 +50,9 @@ object HudiClustering {
     if (slices.isEmpty) return ClusteringStats(None, Nil, Map.empty)
     val replaced = slices.groupBy(_.partitionPath)
       .view.mapValues(_.map(_.fileId).toSet).toMap
-    val instant = HudiWriter.instantAfter(latest, t.config.timelineTimezone)
-
-    val timelineDir = t.timeline.dir
-    val storage = graft.io.Storage(hadoopConf)
-    def touch(name: String, content: String = ""): Unit =
-      storage.writeFile(new Path(timelineDir, name), content.getBytes("UTF-8"), overwrite = true)
-    touch(s"$instant.replacecommit.requested",
+    val instant = Timeline.instantAfter(latest, t.config.timelineTimezone)
+    val pending = t.timeline.begin("replacecommit", instant,
       s"""{"inputGroups":${HudiWriter.fileIdsJson(replaced)}}""")
-    touch(s"$instant.replacecommit.inflight")
 
     // merged view with per-row stamps preserved; rows re-bucket into
     // fresh groups (same derivation as a data write's fresh routing)
@@ -68,18 +62,20 @@ object HudiClustering {
       .withColumn("__key", col(MetaField.RecordKey))
       .withColumn("__part", col(MetaField.PartitionPath))
       .withColumn("__fid", HudiWriter.freshFid(instant, groups))
-    val files = BaseFiles.write(BaseFiles.grouped(staged, instant), basePath, instant)
+    val rows = BaseFiles.grouped(staged, instant)
+    val maintainsColStats = graft.table.ColumnStatsIndex.isAvailable(t.config)
+    val files = BaseFiles.write(rows, basePath, instant, stats = maintainsColStats)
 
+    // files-MDT and column_stats maintenance (same contract as compaction)
     if (t.config.metadataPartitions.contains("files"))
       MdtMaintenance.appendFiles(basePath, hadoopConf, instant,
         files.map(f => (f.partition, f.name, f.bytes)))
+    if (maintainsColStats)
+      ColumnStatsMaintenance.append(basePath, hadoopConf, instant,
+        BaseFiles.colStatsEntries(files, rows.schema))
 
     val stats = HudiWriter.writeStatsJson(files.map(HudiWriter.WriteStat(_)))
-    val completedName =
-      if (t.config.tableVersion >= 8)
-        s"${instant}_${HudiWriter.completionNow(instant, t.config.timelineTimezone)}.replacecommit"
-      else s"$instant.replacecommit"
-    touch(completedName,
+    pending.complete(
       s"""{"partitionToWriteStats":$stats,"partitionToReplaceFileIds":""" +
         s"""${HudiWriter.fileIdsJson(replaced)},""" +
         s""""compacted":false,"operationType":"CLUSTER"}""")

@@ -1,9 +1,7 @@
 package graft.write
 
-import graft.core.MetaField
-import graft.io.Storage
+import graft.core.{MetaField, Timeline}
 import graft.table.HudiTable
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -45,7 +43,6 @@ object HudiCompaction {
       throw new UnsupportedOperationException(
         "hudi-graft compaction: not a MERGE_ON_READ table — COW groups have no logs")
     val hadoopConf = spark.sessionState.newHadoopConf()
-    val storage = Storage(hadoopConf)
     val latest = t.timeline.latestCommitTimestamp.getOrElse(
       return CompactionStats(None, Nil))
     val candidates = t.fsView.slicesAsOf(latest).filter(_.hasLogFiles)
@@ -53,19 +50,15 @@ object HudiCompaction {
     val fids = candidates.map(_.fileId).sorted
     val prevCommits = candidates.map(sl => sl.fileId -> sl.commitTimestamp).toMap
     val partitions = candidates.map(sl => sl.fileId -> sl.partitionPath).toMap
-    val instant = HudiWriter.instantAfter(latest, t.config.timelineTimezone)
+    val instant = Timeline.instantAfter(latest, t.config.timelineTimezone)
 
     // plan-first (crash-safe like the cleaner): the requested marker
     // names every compacting slice before anything is written
-    val timelineDir = t.timeline.dir
-    def touch(name: String, content: String = ""): Unit =
-      storage.writeFile(new Path(timelineDir, name), content.getBytes("UTF-8"), overwrite = true)
     val planJson = candidates.sortBy(_.fileId).map { sl =>
       s"""{"fileId":"${sl.fileId}","partitionPath":"${HudiWriter.escapeJson(sl.partitionPath)}",""" +
         s""""baseInstantTime":"${sl.commitTimestamp}","logFiles":${sl.logFiles.size}}"""
     }.mkString("""{"operations":[""", ",", "]}")
-    touch(s"$instant.compaction.requested", planJson)
-    touch(s"$instant.compaction.inflight")
+    val pending = t.timeline.begin("compaction", instant, planJson)
 
     // merged view of exactly the compacting groups, projected to the base
     // file's columns — per-row commit stamps PRESERVED (that is what keeps
@@ -97,11 +90,7 @@ object HudiCompaction {
     // completed COMMIT with compacted:true — the logical-no-op spelling
     val stats = HudiWriter.writeStatsJson(files.map(f =>
       HudiWriter.WriteStat(f, prevCommit = prevCommits.getOrElse(f.fileId, "null"))))
-    val completedName =
-      if (t.config.tableVersion >= 8)
-        s"${instant}_${HudiWriter.completionNow(instant, t.config.timelineTimezone)}.commit"
-      else s"$instant.commit"
-    touch(completedName,
+    pending.complete(
       s"""{"partitionToWriteStats":$stats,"compacted":true,"operationType":"COMPACT"}""")
     CompactionStats(Some(instant), files.map(f => (f.partition, f.fileId)))
   }

@@ -1,7 +1,6 @@
 package graft.write
 
 import graft.table.HudiTable
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
 /** Savepoint lifecycle (upstream's `create_savepoint` /
@@ -11,7 +10,8 @@ import org.apache.spark.sql.SparkSession
   * stays exact for as long as the savepoint lives. Pure timeline
   * metadata: a requested → inflight → completed `.savepoint` instant
   * triple at the savepointed commit's own timestamp (the hudi-cli
-  * layout), JSON body naming the pinned commit.
+  * layout), JSON body naming the pinned commit, completed under the
+  * layout's name like every other action.
   */
 object HudiSavepoints {
 
@@ -26,25 +26,20 @@ object HudiSavepoints {
     val visible = t.fsView.slicesAsOf(ts)
     require(visible.nonEmpty || t.fsView.partitionPaths.isEmpty,
       s"hudi-graft savepoint: no slices are visible as of $ts (already cleaned)")
-    val storage = graft.io.Storage(spark.sessionState.newHadoopConf())
-    def touch(name: String, content: String = ""): Unit =
-      storage.writeFile(new Path(t.timeline.dir, name), content.getBytes("UTF-8"),
-        overwrite = true)
-    touch(s"$ts.savepoint.requested")
-    touch(s"$ts.savepoint.inflight")
-    touch(s"$ts.savepoint", s"""{"savepointedAt":"$ts"}""")
+    t.timeline.begin("savepoint", ts).complete(s"""{"savepointedAt":"$ts"}""")
     ts
   }
 
   def delete(spark: SparkSession, basePath: String, commitTs: String): Boolean = {
     val t = HudiTable(spark, basePath)
     val ts = graft.core.Timestamps.normalize(commitTs, t.config.timelineTimezone)
-    val fs = t.timeline.dir.getFileSystem(spark.sessionState.newHadoopConf())
     // markers first, completed file LAST: a crash mid-delete must never
     // leave marker-only files that read as a PENDING savepoint (which
-    // would refuse run_clean until manual timeline repair)
-    fs.delete(new Path(t.timeline.dir, s"$ts.savepoint.requested"), false)
-    fs.delete(new Path(t.timeline.dir, s"$ts.savepoint.inflight"), false)
-    fs.delete(new Path(t.timeline.dir, s"$ts.savepoint"), false)
+    // would refuse run_clean until manual timeline repair). The
+    // completed file is `{ts}.savepoint` or, on v8, `{ts}_{c}.savepoint`
+    val (done, markers) = t.timeline.instants
+      .filter(i => i.timestamp == ts && i.action == "savepoint").partition(_.isCompleted)
+    markers.foreach(t.timeline.delete)
+    done.map(t.timeline.delete).contains(true)
   }
 }

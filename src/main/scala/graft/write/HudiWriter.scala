@@ -1,6 +1,6 @@
 package graft.write
 
-import graft.core.{HoodieConfig, MetaField}
+import graft.core.{HoodieConfig, MetaField, Timeline}
 import graft.io.Storage
 import graft.table.{HudiTable, RecordIndex}
 import graft.util.SerializableConf
@@ -332,7 +332,8 @@ object HudiWriter {
     }
 
     val timelineTz = existing.map(_.config.timelineTimezone).getOrElse("UTC")
-    val instant = nextInstant(existing.flatMap(_.timeline.latestCommitTimestamp), timelineTz)
+    val instant = Timeline.instantAfter(
+      existing.flatMap(_.timeline.latestCommitTimestamp).getOrElse("0"), timelineTz)
     val base = new Path(basePath)
 
     if (!exists)
@@ -566,9 +567,8 @@ object HudiWriter {
           }
         } finally olds0.foreach(df => scala.util.Try(df.unpersist()))
       }
-      val tableVersion = existing.map(_.config.tableVersion).getOrElse(6)
-      writeTimeline(storage, base, instant, operation, files, routed, commitSchema, tableVersion,
-        timelineTz, isMor)
+      val config = existing.map(_.config).getOrElse(HoodieConfig.load(basePath, hadoopConf))
+      writeTimeline(basePath, config, hadoopConf, instant, operation, files, routed, commitSchema, isMor)
       Seq(instant)
     } finally c.release()
   }
@@ -1368,15 +1368,14 @@ object HudiWriter {
   }
 
   private def writeTimeline(
-      storage: Storage,
-      base: Path,
+      basePath: String,
+      config: HoodieConfig,
+      hadoopConf: org.apache.hadoop.conf.Configuration,
       instant: String,
       operation: String,
       files: Seq[BaseFiles.Written],
       routed: Routed,
       commitSchema: org.apache.spark.sql.types.StructType,
-      tableVersion: Int,
-      timelineTimezone: String,
       isMor: Boolean): Unit = {
     val updateCounts = routed.updateCounts
     val deleteCounts = routed.deleteCounts
@@ -1385,14 +1384,7 @@ object HudiWriter {
     val cdcFiles = routed.cdcFiles
     val action = if (replaced.nonEmpty || operation == "insert_overwrite_table")
       "replacecommit" else if (isMor) "deltacommit" else "commit"
-    // v8+ targets keep their timeline under .hoodie/timeline and complete
-    // with a {request}_{completion} name (timeline layout v2)
-    val timelineDir =
-      if (tableVersion >= 8) new Path(base, ".hoodie/timeline") else new Path(base, ".hoodie")
-    def touch(name: String, body: String = ""): Unit =
-      storage.writeFile(new Path(timelineDir, name), body.getBytes("UTF-8"), overwrite = true)
-    touch(s"$instant.$action.requested")
-    touch(s"$instant.$action.inflight")
+    val pending = Timeline.begin(basePath, config, hadoopConf, action, instant)
     // base-file entries plus (MOR) log-file entries, merged per partition;
     // rewritten groups receive no fresh keys under this routing, so their
     // non-update rows are CARRIED, not inserted
@@ -1416,10 +1408,7 @@ object HudiWriter {
     val opType = operation.toUpperCase(java.util.Locale.ROOT)
     val body =
       s"""{"partitionToWriteStats":$stats$rep$extra,"compacted":false,"operationType":"$opType"}"""
-    val completedName =
-      if (tableVersion >= 8) s"${instant}_${completionNow(instant, timelineTimezone)}.$action"
-      else s"$instant.$action"
-    touch(completedName, body)
+    pending.complete(body)
   }
 
   // ---- shared write-side primitives (one copy; HudiCleaner reuses) -------
@@ -1459,28 +1448,6 @@ object HudiWriter {
       s""""${escapeJson(p)}":${fids.toSeq.sorted.map(f => s""""$f"""").mkString("[", ",", "]")}"""
     }.mkString("{", ",", "}")
 
-  /** Millisecond-resolution timeline instant (the 17-digit form),
-    * strictly after `floor` — wall clock, bumped on collision like real
-    * Hudi's instant generation. Also the v8 completion-timestamp rule
-    * (completion is just "an instant strictly after the request").
-    */
-  private[write] def instantAfter(floor: String, timelineTimezone: String = "UTC"): String = {
-    // the TABLE's timeline timezone (hoodie.table.timeline.timezone), not
-    // hard-coded UTC: readers interpret timeline instants in that zone
-    // (Timestamps.timelineToEpochMillis), so a LOCAL-timezone table
-    // appended with UTC stamps would skew CDC ts_ms by the zone offset
-    val zone =
-      if (timelineTimezone.equalsIgnoreCase("LOCAL")) java.time.ZoneId.systemDefault()
-      else java.time.ZoneOffset.UTC
-    val fmt = java.time.format.DateTimeFormatter.ofPattern("yyyyMMddHHmmssSSS")
-      .withZone(zone)
-    val now = fmt.format(java.time.Instant.now())
-    if (now > floor) now else (normalizeTo17(floor).toLong + 1).toString
-  }
-
-  private[write] def completionNow(request: String, timelineTimezone: String = "UTC"): String =
-    instantAfter(request, timelineTimezone)
-
   /** JSON string escaping incl. control chars — a partition value (user
     * data) carrying a newline must not produce an unparseable commit file.
     */
@@ -1500,12 +1467,6 @@ object HudiWriter {
     sb.result()
   }
 
-
-  private def nextInstant(latest: Option[String], timelineTimezone: String): String =
-    instantAfter(latest.getOrElse("0"), timelineTimezone)
-
-  private def normalizeTo17(ts: String): String =
-    if (ts.length >= 17) ts.take(17) else ts.padTo(17, '0')
 
   /** Option resolution: upstream `hoodie.datasource.write.*` spellings
     * with short aliases.

@@ -1,5 +1,6 @@
 package graft.write
 
+import graft.core.Timeline
 import graft.table.{FilesPartitionRecord, MetadataTable}
 import graft.io.Storage
 import org.apache.hadoop.conf.Configuration
@@ -164,41 +165,19 @@ object MdtMaintenance {
     completeDeltacommit(hadoopConf, mdtBase, mdtConfig, instant)
   }
 
-  /** The MDT's own timeline: one deltacommit at the DATA instant (layout-
-    * aware: v8-internal MDTs complete under timeline/ with a completion
-    * timestamp). Idempotent — a commit that maintains BOTH the files and
-    * record_index partitions completes the same instant once per caller,
-    * overwriting identical content.
+  /** The MDT's own timeline: one deltacommit at the DATA instant, under
+    * the MDT's layout. Idempotent — a commit that maintains BOTH the files
+    * and record_index partitions completes the instant ONCE: a second
+    * call must not mint a second v8 `{instant}_{completion}.deltacommit`.
     */
   private[write] def completeDeltacommit(
       hadoopConf: Configuration,
       mdtBase: Path,
       mdtConfig: graft.core.HoodieConfig,
       instant: String): Unit = {
-    val mdtTimelineDir =
-      if (mdtConfig.tableVersion >= 8) new Path(mdtBase, ".hoodie/timeline")
-      else new Path(mdtBase, ".hoodie")
-    val storage = Storage(hadoopConf)
-    storage.mkdirs(mdtTimelineDir)
-    // true idempotence incl. v8 (whose completed names embed a fresh
-    // wall-clock completion): a commit maintaining several MDT
-    // partitions completes the instant ONCE — a second call must not
-    // mint a second {instant}_{completion}.deltacommit
-    val already = mdtTimelineDir.getFileSystem(hadoopConf).listStatus(mdtTimelineDir).exists { st =>
-      val n = st.getPath.getName
-      n == s"$instant.deltacommit" ||
-        (n.startsWith(instant + "_") && n.endsWith(".deltacommit"))
-    }
-    if (already) return
-    val body = """{"partitionToWriteStats":{},"compacted":false}""".getBytes("UTF-8")
-    def touch(name: String, content: Array[Byte] = Array.emptyByteArray): Unit =
-      storage.writeFile(new Path(mdtTimelineDir, name), content, overwrite = true)
-    touch(s"$instant.deltacommit.requested")
-    touch(s"$instant.deltacommit.inflight")
-    val completedName =
-      if (mdtConfig.tableVersion >= 8)
-        s"${instant}_${HudiWriter.completionNow(instant, mdtConfig.timelineTimezone)}.deltacommit"
-      else s"$instant.deltacommit"
-    touch(completedName, body)
+    val timeline = new Timeline(mdtBase.toString, mdtConfig, hadoopConf)
+    if (!timeline.completedInstants.exists(i => i.timestamp == instant && i.action == "deltacommit"))
+      timeline.begin("deltacommit", instant)
+        .complete("""{"partitionToWriteStats":{},"compacted":false}""")
   }
 }

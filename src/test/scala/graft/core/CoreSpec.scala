@@ -61,6 +61,84 @@ class CoreSpec extends AnyFunSuite {
     for (n <- names) assert(HoodieInstant.parse(n).get.fileName == n)
   }
 
+  test("parseAny reads every action and state; parse keeps only loadable ones") {
+    val c = HoodieInstant.parseAny("20251220210129235.compaction.requested").get
+    assert(c.action == "compaction" && c.state == HoodieInstant.Requested)
+    val rb = HoodieInstant.parseAny("20251220210117766_20251220210118628.rollback").get
+    assert(rb.action == "rollback" && rb.isCompleted &&
+      rb.completionTimestamp.contains("20251220210118628"))
+    for (junk <- Seq("hoodie.properties", ".20240418172802262.commit.crc",
+        "20240418172802262.commit.crc", "20240418172802262..inflight",
+        "20240418172802262_20240418172802263.commit.inflight"))
+      assert(HoodieInstant.parseAny(junk).isEmpty, junk)
+  }
+
+  // --- the write side: Timeline.begin / Pending.complete -------------------
+
+  private def emptyTable(name: String, props: String): (String, java.nio.file.Path) = {
+    val base = graft.fixtures.HudiFixtureBuilder.targetPath(s"fixtures/$name")
+    val b = new org.apache.hadoop.fs.Path(base)
+    val fs = b.getFileSystem(conf)
+    fs.delete(b, true)
+    val o = fs.create(new org.apache.hadoop.fs.Path(b, ".hoodie/hoodie.properties"), true)
+    o.write(s"hoodie.table.name=t\nhoodie.table.type=MERGE_ON_READ\n$props".getBytes("UTF-8"))
+    o.close()
+    (base, java.nio.file.Paths.get(base))
+  }
+
+  test("every (action, state) the writers emit round-trips through fileName and the parse") {
+    val actions = Seq("commit", "deltacommit", "replacecommit", "compaction", "clean", "savepoint")
+    for ((version, dir) <- Seq(6 -> ".hoodie", 8 -> ".hoodie/timeline")) {
+      val (base, local) = emptyTable(s"codec_v$version", s"hoodie.table.version=$version\n")
+      val cfg = HoodieConfig.load(base, conf)
+      val t0 = new Timeline(base, cfg, conf)
+      val stamps = actions.zipWithIndex.map { case (a, i) => a -> f"20240101000000$i%03d" }.toMap
+      val done = actions.map(a => a -> t0.begin(a, stamps(a), s"plan-$a").complete(s"body-$a")).toMap
+      def read(n: String) = new String(java.nio.file.Files.readAllBytes(local.resolve(s"$dir/$n")))
+      val t = new Timeline(base, cfg, conf)
+      assert(t.instants.size == 3 * actions.size, t.instants.mkString("\n"))
+      for (a <- actions; ts = stamps(a)) {
+        val completedAs = if (a == "compaction") "commit" else a
+        val names = Seq(s"$ts.$a.requested", s"$ts.$a.inflight", done(a).fileName)
+        if (version == 6) assert(done(a).fileName == s"$ts.$completedAs", done(a))
+        else assert(done(a).fileName.matches(s"${ts}_\\d{17}\\.$completedAs"), done(a))
+        for (n <- names) {
+          val i = HoodieInstant.parseAny(n).get
+          assert(i.fileName == n && i.timestamp == ts, n)
+          assert(t.instants.contains(i), s"$n not listed")
+        }
+        assert(read(names(0)) == s"plan-$a" && read(names(1)).isEmpty && read(names(2)) == s"body-$a")
+      }
+      assert(t.completedInstants.map(_.action) ==
+        Vector("commit", "deltacommit", "replacecommit", "commit"))
+      assert(t.pendingInstants.isEmpty && t.savepointTimestamps == Vector(stamps("savepoint")))
+    }
+  }
+
+  test("pending instants match on (ts, action); a commit discharges compaction markers") {
+    val (base, local) = emptyTable("codec_pending", "hoodie.table.version=6\n")
+    val names = Seq(
+      // a completed deltacommit at ts does not excuse an inflight commit at ts
+      "20240101000000001.deltacommit", "20240101000000001.commit.inflight",
+      // compaction markers are discharged by the `commit` it completes as
+      "20240101000000002.compaction.requested", "20240101000000002.compaction.inflight",
+      "20240101000000002.commit",
+      // the bare v6 `{ts}.inflight` is a pending commit
+      "20240101000000003.inflight",
+      "20240101000000004.clean.requested", "20240101000000004.clean.inflight",
+      "20240101000000004.clean",
+      "20240101000000005.compaction.requested",
+      "20240101000000006.rollback.requested", "20240101000000006.rollback.inflight")
+    names.foreach(n => java.nio.file.Files.write(local.resolve(s".hoodie/$n"), Array.emptyByteArray))
+    val t = new Timeline(base, HoodieConfig.load(base, conf), conf)
+    assert(t.pendingInstants.map(i => s"${i.timestamp}.${i.action}") == Vector(
+      "20240101000000001.commit", "20240101000000003.commit",
+      "20240101000000005.compaction", "20240101000000006.rollback"))
+    assert(t.rollbackLikeTimestamps == Vector("20240101000000006"))
+    assert(t.completedInstants.map(_.timestamp) ==
+      Vector("20240101000000001", "20240101000000002"))
+  }
+
   // --- Timestamps --------------------------------------------------------
   test("normalize timeline formats") {
     assert(Timestamps.normalize("20240418172802") == "20240418172802000")

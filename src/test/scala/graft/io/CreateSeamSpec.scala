@@ -11,7 +11,9 @@ import scala.jdk.CollectionConverters._
   * on a `FileSystem` — a `getFileSystem(..)`/`FileSystem.get(..)` result,
   * the `FileSystem` object, or a value whose name contains `fs`. And base
   * files have one writer, `graft.write.BaseFiles`: no `DataFrameWriter`
-  * parquet or `partitionBy` write under `graft/write`.
+  * parquet or `partitionBy` write under `graft/write`. And the timeline
+  * has one codec, `graft/core/Timeline.scala`: no other main source names
+  * a pending state, the v8 timeline directory or the completion clock.
   */
 class CreateSeamSpec extends AnyFunSuite {
 
@@ -81,5 +83,39 @@ class CreateSeamSpec extends AnyFunSuite {
       "df.write.format(\"hudi-graft\").save(path)",
       "\"hoodie.datasource.write.partitionpath.field\"").foreach(c =>
       assert(frameWrite.findFirstIn(c).isEmpty, c))
+  }
+
+  /** A `.requested"`/`.inflight"` literal, `".hoodie/timeline"` or a
+    * `completionNow(` call (the writers' former v8 completion-name
+    * helper) — each a timeline file name spelled outside the codec.
+    */
+  private val timelineName = """(\.(requested|inflight)"|\.hoodie/timeline"|\bcompletionNow\()""".r
+
+  test("no timeline file name is spelled outside graft/core/Timeline.scala and fixtures/") {
+    val files = Files.walk(root).iterator.asScala
+      .filter(_.toString.endsWith(".scala"))
+      .filterNot(_.endsWith(Paths.get("graft/core/Timeline.scala")))
+      .filterNot(p => root.relativize(p).toString.startsWith("graft/fixtures/"))
+      .toVector
+    assert(files.size > 50, s"only ${files.size} sources found")
+    val offenders = for {
+      f <- files
+      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
+      if timelineName.findFirstIn(line).isDefined
+    } yield s"${root.relativize(f)}:${i + 1}: ${line.trim}"
+    assert(offenders.isEmpty, offenders.mkString("\n", "\n", ""))
+  }
+
+  test("the scan tells timeline names from other strings") {
+    Seq("touch(s\"$instant.$action.requested\")",
+      "touch(s\"$ts.savepoint.inflight\")",
+      "new Path(base, \".hoodie/timeline\")",
+      "s\"${instant}_${HudiWriter.completionNow(instant, tz)}.clean\"").foreach(c =>
+      assert(timelineName.findFirstIn(c).isDefined, c))
+    Seq("t.timeline.begin(\"clean\", instant, body)",
+      "HoodieInstant.Inflight",
+      "new Path(base, \".hoodie/timeline/history\")",
+      "// the requested marker carries the plan").foreach(c =>
+      assert(timelineName.findFirstIn(c).isEmpty, c))
   }
 }

@@ -234,11 +234,41 @@ class HudiCompactionSpec extends SparkTestBase {
       .drop("_hoodie_commit_seqno", "_hoodie_file_name").collect().map(_.toSeq).toSet
 
     val cts = HudiCompaction.compact(spark, path).instant.get
-    val compacted = HudiTable(spark, path).fsView.slicesAsOf(cts)
-      .filter(_.commitTimestamp == cts).flatMap(_.baseFile)
-    assert(compacted.nonEmpty)
+    assertExactColStats(path, cts)
+    val after = spark.read.format("hudi-graft").load(path)
+      .drop("_hoodie_commit_seqno", "_hoodie_file_name").collect().map(_.toSeq).toSet
+    assert(after == before, "compaction must not change the snapshot")
+    assert(prunedWithoutFooters(path, col("o_orderkey") <= 100 && col("o_orderstatus") === "X") ==
+      orders().filter(col("o_orderkey") <= 100 && col("o_orderkey") % 7 === 0).count())
+  }
+
+  test("a clustered column_stats table gets exact entries and prunes without footer reads") {
+    graft.fixtures.HudiFixtureBuilder.ensure(spark, sfDir)
+    val fs = FileSystem.get(spark.sessionState.newHadoopConf())
+    val path = fresh("writer_cluster_colstats")
+    org.apache.hadoop.fs.FileUtil.copy(fs,
+      new Path(graft.fixtures.HudiFixtureBuilder.rangePath(sfDir)), fs, new Path(path), false,
+      spark.sessionState.newHadoopConf())
+    val before = spark.read.format("hudi-graft").load(path)
+      .drop("_hoodie_commit_seqno", "_hoodie_file_name").collect().map(_.toSeq).toSet
+    val cts = HudiClustering.cluster(spark, path, targetFileBytes = 64L << 10).instant.get
+    assertExactColStats(path, cts)
+    val after = spark.read.format("hudi-graft").load(path)
+      .drop("_hoodie_commit_seqno", "_hoodie_file_name").collect().map(_.toSeq).toSet
+    assert(after == before, "clustering must not change the snapshot")
+    assert(prunedWithoutFooters(path, col("o_orderkey") <= 100) ==
+      orders().filter(col("o_orderkey") <= 100).count())
+  }
+
+  /** Every base file `instant` wrote carries exact column_stats entries:
+    * min, max and null count as in the file, tight, with its row count.
+    */
+  private def assertExactColStats(path: String, instant: String): Unit = {
+    val written = HudiTable(spark, path).fsView.slicesAsOf(instant)
+      .filter(_.commitTimestamp == instant).flatMap(_.baseFile)
+    assert(written.nonEmpty)
     val lookup = ColumnStatsIndex.load(path, spark.sessionState.newHadoopConf())
-    compacted.foreach { bf =>
+    written.foreach { bf =>
       val entries = lookup.entries.filter(_.fileName == bf.fileName)
       assert(entries.map(_.columnName).toSet.contains("o_orderkey"),
         s"no column_stats entries for ${bf.fileName}")
@@ -258,12 +288,19 @@ class HudiCompactionSpec extends SparkTestBase {
       }
       assert(lookup.rowCounts.get(bf.fileName).contains(rows))
     }
-    val after = spark.read.format("hudi-graft").load(path)
-      .drop("_hoodie_commit_seqno", "_hoodie_file_name").collect().map(_.toSeq).toSet
-    assert(after == before, "compaction must not change the snapshot")
-    assert(spark.read.format("hudi-graft").load(path)
-      .filter(col("o_orderkey") <= 100 && col("o_orderstatus") === "X").count() ==
-      orders().filter(col("o_orderkey") <= 100 && col("o_orderkey") % 7 === 0).count())
+  }
+
+  /** The count of rows matching `filter`, read with the file pruning
+    * served by column_stats alone: no parquet footer opened, neither by
+    * the pruner nor by the aggregate pushdown planner.
+    */
+  private def prunedWithoutFooters(path: String, filter: org.apache.spark.sql.Column): Long = {
+    def footers = graft.fs.FilePruner.footerReads.get() +
+      graft.sources.GraftFooterAggScan.footerReads.get()
+    val before = footers
+    val n = spark.read.format("hudi-graft").load(path).filter(filter).count()
+    assert(footers == before, s"${footers - before} footer reads for an indexed table")
+    n
   }
 
   test("an emptied group's base is written on the driver with Spark's footer") {

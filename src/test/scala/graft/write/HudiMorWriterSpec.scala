@@ -171,66 +171,77 @@ class HudiMorWriterSpec extends SparkTestBase {
   }
 
   test("v8 MOR target: logs carry their OWN instant; completion lands under timeline/") {
-    val path = fresh("writer_mor_v8")
-    val fs = FileSystem.get(spark.sessionState.newHadoopConf())
-    val base = new Path(path)
-    // minimal v8 MOR table: one base file, layout-v2 completed commit
-    fs.mkdirs(new Path(base, ".hoodie/timeline"))
-    graft.fixtures.HudiFixtureBuilder.ensure(spark, sfDir)
-    val nation = spark.read.parquet(s"$sfDir/nation.parquet")
-    val t1 = "20240101000000000"
-    val fid = "00000000-0000-0000-0000-000000000000-0"
-    val name = s"${fid}_0-0-0_$t1.parquet"
-    val meta = nation.select(
-      lit(t1).as("_hoodie_commit_time"),
-      concat(lit(t1), lit("_0_"), col("n_nationkey")).as("_hoodie_commit_seqno"),
-      col("n_nationkey").cast("string").as("_hoodie_record_key"),
-      lit("").as("_hoodie_partition_path"),
-      lit(name).as("_hoodie_file_name"),
-      col("n_nationkey"), col("n_name"), col("n_regionkey"))
-    val tmp = new Path(base, ".tmp_base")
-    meta.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    val part = fs.listStatus(tmp).map(_.getPath).find(_.getName.startsWith("part-")).get
-    fs.rename(part, new Path(base, name))
-    fs.delete(tmp, true)
-    val out = fs.create(new Path(base, ".hoodie/hoodie.properties"), true)
-    out.write(
-      """hoodie.table.name=writer_mor_v8
-        |hoodie.table.type=MERGE_ON_READ
-        |hoodie.table.version=8
-        |hoodie.timeline.layout.version=2
-        |hoodie.table.recordkey.fields=n_nationkey
-        |hoodie.table.precombine.field=n_nationkey
-        |hoodie.populate.meta.fields=true
-        |""".stripMargin.getBytes("UTF-8"))
-    out.close()
-    val commit = fs.create(new Path(base, s".hoodie/timeline/${t1}_$t1.commit"), true)
-    commit.write(
-      s"""{"partitionToWriteStats":{"":[{"fileId":"$fid","path":"$name","partitionPath":""}]},"compacted":false}"""
+    // the default timeline directory, and one `hoodie.timeline.path` moves
+    for (tl <- Seq("timeline", "tl_custom")) {
+      val path = fresh(s"writer_mor_v8_$tl")
+      val fs = FileSystem.get(spark.sessionState.newHadoopConf())
+      val base = new Path(path)
+      // minimal v8 MOR table: one base file, layout-v2 completed commit
+      fs.mkdirs(new Path(base, s".hoodie/$tl"))
+      graft.fixtures.HudiFixtureBuilder.ensure(spark, sfDir)
+      val nation = spark.read.parquet(s"$sfDir/nation.parquet")
+      val t1 = "20240101000000000"
+      val fid = "00000000-0000-0000-0000-000000000000-0"
+      val name = s"${fid}_0-0-0_$t1.parquet"
+      val meta = nation.select(
+        lit(t1).as("_hoodie_commit_time"),
+        concat(lit(t1), lit("_0_"), col("n_nationkey")).as("_hoodie_commit_seqno"),
+        col("n_nationkey").cast("string").as("_hoodie_record_key"),
+        lit("").as("_hoodie_partition_path"),
+        lit(name).as("_hoodie_file_name"),
+        col("n_nationkey"), col("n_name"), col("n_regionkey"))
+      val tmp = new Path(base, ".tmp_base")
+      meta.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+      val part = fs.listStatus(tmp).map(_.getPath).find(_.getName.startsWith("part-")).get
+      fs.rename(part, new Path(base, name))
+      fs.delete(tmp, true)
+      val out = fs.create(new Path(base, ".hoodie/hoodie.properties"), true)
+      out.write((
+        s"""hoodie.table.name=writer_mor_v8
+          |hoodie.table.type=MERGE_ON_READ
+          |hoodie.table.version=8
+          |hoodie.timeline.layout.version=2
+          |hoodie.table.recordkey.fields=n_nationkey
+          |hoodie.table.precombine.field=n_nationkey
+          |hoodie.populate.meta.fields=true
+          |""".stripMargin + (if (tl == "timeline") "" else s"hoodie.timeline.path=$tl\n"))
         .getBytes("UTF-8"))
-    commit.close()
-    assert(spark.read.format("hudi-graft").load(path).count() == nation.count())
+      out.close()
+      val commit = fs.create(new Path(base, s".hoodie/$tl/${t1}_$t1.commit"), true)
+      commit.write(
+        s"""{"partitionToWriteStats":{"":[{"fileId":"$fid","path":"$name","partitionPath":""}]},"compacted":false}"""
+          .getBytes("UTF-8"))
+      commit.close()
+      assert(spark.read.format("hudi-graft").load(path).count() == nation.count())
 
-    nation.filter(col("n_nationkey") % 2 === 0).withColumn("n_name", lit("RENAMED"))
-      .write.format("hudi-graft")
-      .option("hoodie.datasource.write.recordkey.field", "n_nationkey")
-      .option("hoodie.datasource.write.precombine.field", "n_nationkey")
-      .mode(SaveMode.Append).save(path)
+      nation.filter(col("n_nationkey") % 2 === 0).withColumn("n_name", lit("RENAMED"))
+        .write.format("hudi-graft")
+        .option("hoodie.datasource.write.recordkey.field", "n_nationkey")
+        .option("hoodie.datasource.write.precombine.field", "n_nationkey")
+        .mode(SaveMode.Append).save(path)
 
-    val t = HudiTable(spark, path)
-    val c2 = t.timeline.completedInstants.map(_.timestamp).distinct.sorted.last
-    assert(c2 > t1)
-    // v8 log names its OWN instant (completion resolved from the timeline)
-    val slice = t.fsView.slicesAsOf(c2).head
-    assert(slice.logFiles.nonEmpty)
-    assert(slice.logFiles.forall(_.timestamp == c2),
-      s"v8 logs must carry their own request instant: ${slice.logFiles}")
-    val tl = fs.listStatus(new Path(base, ".hoodie/timeline")).map(_.getPath.getName)
-    assert(tl.exists(_.matches(s"${c2}_\\d{17}\\.deltacommit")), tl.mkString(","))
-    val back = spark.read.format("hudi-graft").load(path)
-    assert(back.count() == nation.count())
-    assert(back.filter(col("n_nationkey") % 2 === 0)
-      .select("n_name").distinct().collect().map(_.getString(0)).toSet == Set("RENAMED"))
+      val t = HudiTable(spark, path)
+      val c2 = t.timeline.completedInstants.map(_.timestamp).distinct.sorted.last
+      assert(c2 > t1)
+      // v8 log names its OWN instant (completion resolved from the timeline)
+      val slice = t.fsView.slicesAsOf(c2).head
+      assert(slice.logFiles.nonEmpty)
+      assert(slice.logFiles.forall(_.timestamp == c2),
+        s"v8 logs must carry their own request instant: ${slice.logFiles}")
+      val names = fs.listStatus(new Path(base, s".hoodie/$tl")).map(_.getPath.getName)
+      assert(names.exists(_.matches(s"${c2}_\\d{17}\\.deltacommit")), names.mkString(","))
+      // a savepoint completes under the same v8 name, and deletes whole
+      HudiSavepoints.create(spark, path, c2)
+      def savepoints = fs.listStatus(new Path(base, s".hoodie/$tl")).map(_.getPath.getName)
+        .filter(_.contains(".savepoint")).toSet
+      assert(savepoints.size == 3 && savepoints.exists(_.matches(s"${c2}_\\d{17}\\.savepoint")),
+        savepoints.mkString(","))
+      assert(HudiSavepoints.delete(spark, path, c2) && savepoints.isEmpty, savepoints.mkString(","))
+      val back = spark.read.format("hudi-graft").load(path)
+      assert(back.count() == nation.count())
+      assert(back.filter(col("n_nationkey") % 2 === 0)
+        .select("n_name").distinct().collect().map(_.getString(0)).toSet == Set("RENAMED"))
+    }
   }
 
   test("MOR upsert/delete without a precombine field refuse loudly") {
