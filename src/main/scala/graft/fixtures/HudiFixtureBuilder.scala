@@ -1095,7 +1095,7 @@ object HudiFixtureBuilder {
     * shape (`recType` 4 = bloom_filters, records.rs:115-116).
     */
   private def bloomFilterBytes(key: String, bloomBytes: Array[Byte]): Array[Byte] = {
-    import org.apache.avro.generic.{GenericData, GenericDatumWriter, GenericRecord}
+    import org.apache.avro.generic.GenericData
     val bmSchema = bloomFilterAvroSchema.getField("BloomFilterMetadata").schema().getTypes.get(1)
     val rec = new GenericData.Record(bloomFilterAvroSchema)
     rec.put("key", key)
@@ -1106,12 +1106,7 @@ object HudiFixtureBuilder {
     bm.put("bloomFilter", java.nio.ByteBuffer.wrap(bloomBytes))
     bm.put("isDeleted", false)
     rec.put("BloomFilterMetadata", bm)
-    val out = new java.io.ByteArrayOutputStream()
-    val writer = new GenericDatumWriter[GenericRecord](bloomFilterAvroSchema)
-    val enc = org.apache.avro.io.EncoderFactory.get().binaryEncoder(out, null)
-    writer.write(rec, enc)
-    enc.flush()
-    out.toByteArray
+    graft.write.MdtCommit.encode(rec)
   }
 
   // --- COW, non-partitioned, DATE-split file groups + column_stats MDT --
@@ -1485,7 +1480,7 @@ object HudiFixtureBuilder {
         |]}""".stripMargin.replaceAll("\n", ""))
 
   private def secondaryIndexBytes(key: String): Array[Byte] = {
-    import org.apache.avro.generic.{GenericData, GenericDatumWriter, GenericRecord}
+    import org.apache.avro.generic.GenericData
     val siSchema = secondaryIndexAvroSchema.getField("SecondaryIndexMetadata").schema()
       .getTypes.get(1)
     val rec = new GenericData.Record(secondaryIndexAvroSchema)
@@ -1494,11 +1489,7 @@ object HudiFixtureBuilder {
     val si = new GenericData.Record(siSchema)
     si.put("isDeleted", false)
     rec.put("SecondaryIndexMetadata", si)
-    val out = new java.io.ByteArrayOutputStream()
-    val enc = org.apache.avro.io.EncoderFactory.get().binaryEncoder(out, null)
-    new GenericDatumWriter[GenericRecord](secondaryIndexAvroSchema).write(rec, enc)
-    enc.flush()
-    out.toByteArray
+    graft.write.MdtCommit.encode(rec)
   }
 
   // --- COW, hive-partitioned by o_orderkey quartile + partition_stats MDT
@@ -1620,7 +1611,7 @@ object HudiFixtureBuilder {
       key: String, fileName: String, columnName: String, mn: Any, mx: Any,
       recType: Int = 3, wrapper: String = "LongWrapper",
       valueCount: java.lang.Long = null, tight: Boolean = true): Array[Byte] = {
-    import org.apache.avro.generic.{GenericData, GenericDatumWriter, GenericRecord}
+    import org.apache.avro.generic.GenericData
     val csSchema = columnStatsAvroSchema.getField("ColumnStatsMetadata").schema().getTypes.get(1)
     val wrapSchema = csSchema.getField("minValue").schema().getTypes.asScala
       .find(_.getName == wrapper).get
@@ -1649,11 +1640,7 @@ object HudiFixtureBuilder {
     cs.put("isDeleted", false)
     cs.put("isTightBound", tight)
     rec.put("ColumnStatsMetadata", cs)
-    val out = new java.io.ByteArrayOutputStream()
-    val enc = org.apache.avro.io.EncoderFactory.get().binaryEncoder(out, null)
-    new GenericDatumWriter[GenericRecord](columnStatsAvroSchema).write(rec, enc)
-    enc.flush()
-    out.toByteArray
+    graft.write.MdtCommit.encode(rec)
   }
 
   // --- MOR, non-partitioned, with a LOG-ONLY file group -------------------
@@ -2265,7 +2252,7 @@ object HudiFixtureBuilder {
 
   private def recordIndexBytes(key: String, partition: String, fid: String,
       instantTime: Long, rawEncoding: Boolean): Array[Byte] = {
-    import org.apache.avro.generic.{GenericData, GenericDatumWriter, GenericRecord}
+    import org.apache.avro.generic.GenericData
     val riSchema = recordIndexAvroSchema.getField("recordIndexMetadata").schema()
       .getTypes.get(1)
     val rec = new GenericData.Record(recordIndexAvroSchema)
@@ -2290,11 +2277,7 @@ object HudiFixtureBuilder {
       ri.put("fileIdEncoding", 0)
     }
     rec.put("recordIndexMetadata", ri)
-    val out = new java.io.ByteArrayOutputStream()
-    val enc = org.apache.avro.io.EncoderFactory.get().binaryEncoder(out, null)
-    new GenericDatumWriter[GenericRecord](recordIndexAvroSchema).write(rec, enc)
-    enc.flush()
-    out.toByteArray
+    graft.write.MdtCommit.encode(rec)
   }
 
   private def buildCowMdtNation(spark: SparkSession, sfDir: String): Unit = {

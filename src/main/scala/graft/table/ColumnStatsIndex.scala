@@ -158,9 +158,16 @@ object ColumnStatsIndex {
       dataTableBase: String,
       hadoopConf: Configuration,
       partition: String = PartitionName,
-      asOf: Option[String] = None): ColumnStatsLookup = {
-    val (latest, slices) = MetadataTable.openPartition(dataTableBase, partition, hadoopConf, asOf)
-    val memoKey = (dataTableBase, partition, latest)
+      asOf: Option[String] = None): ColumnStatsLookup =
+    load(MetadataTable.open(dataTableBase, hadoopConf, asOf), partition, hadoopConf)
+
+  /** As above, over an opened MDT. */
+  private[graft] def load(
+      mdt: MetadataTable.Opened,
+      partition: String,
+      hadoopConf: Configuration): ColumnStatsLookup = {
+    val (latest, slices) = (mdt.latest, mdt.slices(partition))
+    val memoKey = (mdt.dataTableBase, partition, latest)
     val memoized = lookupMemo.synchronized(Option(lookupMemo.get(memoKey)))
     memoized match {
       case Some(l) => l

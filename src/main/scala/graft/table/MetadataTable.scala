@@ -58,28 +58,48 @@ object MetadataTable {
       config.metadataPartitions.contains(FilesPartitionRecord.PartitionName)
   }
 
-  /** Open `<dataTableBase>/.hoodie/metadata` and plan one MDT partition's
-    * file slices as of the MDT's latest completed commit. Shared by the
-    * `files`-partition reader and [[RecordIndex]] so the MDT-opening
-    * decisions (partition-field override, empty-timeline semantics) live
-    * in one place. Throws when the MDT has no completed commit or the
-    * partition has no slice — a present-but-unreadable index is a
-    * structural error that callers must see and fall back on (storage
-    * listing / scan plans), never silently read as empty.
+  /** One open of `<dataTableBase>/.hoodie/metadata`: one
+    * `hoodie.properties` load, one timeline listing and one file-system
+    * view, fixed at the MDT commit `latest`, from which any number of
+    * partitions plan.
     */
-  private[graft] def openPartition(
+  private[graft] final class Opened private[MetadataTable] (
+      val dataTableBase: String,
+      val path: String,
+      val config: HoodieConfig,
+      val latest: String,
+      fsView: FsView) {
+
+    /** The partition's file slices as of [[latest]]; throws when it has
+      * none.
+      */
+    def slices(partition: String): Vector[graft.fs.FileSlice] = {
+      val pruner = new PartitionPruner(
+        Seq("partition_path" -> "string"), hiveStyle = false, urlEncoded = false,
+        Seq(PartitionFilter("partition_path", "=", Seq(partition))))
+      val slices = fsView.slicesAsOf(latest, pruner)
+      require(slices.nonEmpty, s"No file slice found for the $partition partition")
+      slices
+    }
+  }
+
+  /** Open the MDT as of its latest completed commit, or its newest one at
+    * or before `asOf`. Throws when it has no such commit — a
+    * present-but-unreadable index is a structural error that callers
+    * must see and fall back on (storage listing / scan plans), never
+    * silently read as empty.
+    */
+  private[graft] def open(
       dataTableBase: String,
-      partition: String,
       hadoopConf: Configuration,
       asOf: Option[String] = None
-  ): (String, Vector[graft.fs.FileSlice]) = {
+  ): Opened = {
     val mdtPath = new Path(new Path(dataTableBase, ".hoodie"), "metadata").toString
     val stored = HoodieConfig.load(mdtPath, hadoopConf)
     // the reference opens the MDT with PartitionFields overridden to the
     // single internal partition-path field (table/mod.rs:121-141)
     val config = HoodieConfig(stored.props + ("hoodie.table.partition.fields" -> "partition_path"))
     val timeline = new Timeline(mdtPath, config, hadoopConf)
-    val fsView = new FsView(mdtPath, config, timeline, hadoopConf)
     // as-of reads plan the MDT at its newest commit <= asOf (MDT commits
     // mirror the data commits they index); callers that need exact
     // synchronization compare the returned commit against their data
@@ -91,12 +111,27 @@ object MetadataTable {
       .orElse(timeline.latestCommitTimestamp)
       .getOrElse(
         throw new IllegalStateException(s"metadata table at $mdtPath has no completed commits"))
-    val pruner = new PartitionPruner(
-      Seq("partition_path" -> "string"), hiveStyle = false, urlEncoded = false,
-      Seq(PartitionFilter("partition_path", "=", Seq(partition))))
-    val slices = fsView.slicesAsOf(latest, pruner)
-    require(slices.nonEmpty, s"No file slice found for the $partition partition")
-    (latest, slices)
+    new Opened(dataTableBase, mdtPath, config, latest,
+      new FsView(mdtPath, config, timeline, hadoopConf))
+  }
+
+  /** [[open]] the MDT and plan one partition's file slices: (the MDT
+    * commit planned at, its slices). Shared by the `files`-partition
+    * reader and the index readers ([[RecordIndex]], column/partition
+    * stats, bloom filters, secondary indexes), so the MDT-opening
+    * decisions (partition-field override, empty-timeline semantics) live
+    * in one place; the write side's per-action handle
+    * ([[graft.write.MdtCommit]]) plans every partition it touches from
+    * one [[open]] instead. Throws when the partition has no slice.
+    */
+  private[graft] def openPartition(
+      dataTableBase: String,
+      partition: String,
+      hadoopConf: Configuration,
+      asOf: Option[String] = None
+  ): (String, Vector[graft.fs.FileSlice]) = {
+    val mdt = open(dataTableBase, hadoopConf, asOf)
+    (mdt.latest, mdt.slices(partition))
   }
 
   /** The MDT's newest completed commit at or before `asOf` (latest when
@@ -111,15 +146,8 @@ object MetadataTable {
       hadoopConf: Configuration,
       asOf: Option[String]
   ): Option[String] =
-    try {
-      val mdtPath = new Path(new Path(dataTableBase, ".hoodie"), "metadata").toString
-      val config = HoodieConfig.load(mdtPath, hadoopConf)
-      val timeline = new Timeline(mdtPath, config, hadoopConf)
-      asOf match {
-        case Some(ts) => timeline.instantsAsOf(ts).lastOption.map(_.timestamp)
-        case None => timeline.latestCommitTimestamp
-      }
-    } catch { case scala.util.control.NonFatal(_) => None }
+    try Some(open(dataTableBase, hadoopConf, asOf).latest)
+    catch { case scala.util.control.NonFatal(_) => None }
 
   /** Read + merge + decode the full `files` partition of the MDT at
     * `<dataTableBase>/.hoodie/metadata`. Throws on any structural problem;
@@ -128,9 +156,15 @@ object MetadataTable {
   def filesPartitionRecords(
       dataTableBase: String,
       hadoopConf: Configuration
+  ): Map[String, FilesPartitionRecord] =
+    filesPartitionRecords(open(dataTableBase, hadoopConf), hadoopConf)
+
+  /** As above, over an opened MDT. */
+  private[graft] def filesPartitionRecords(
+      mdt: Opened,
+      hadoopConf: Configuration
   ): Map[String, FilesPartitionRecord] = {
-    val (latest, slices) =
-      openPartition(dataTableBase, FilesPartitionRecord.PartitionName, hadoopConf)
+    val (latest, slices) = (mdt.latest, mdt.slices(FilesPartitionRecord.PartitionName))
 
     def readFully(p: Path): Array[Byte] = IndexIoCache.bytes(p, hadoopConf)
 

@@ -171,16 +171,16 @@ object RecordIndex {
     def n: Int = files.size
   }
 
-  /** Open the partition at the MDT's latest commit. Throws when the slice
-    * set is not hash-aligned: a gap would shrink the modulus, so a probe
+  /** The partition's groups in an opened MDT. Throws when the slice set
+    * is not hash-aligned: a gap would shrink the modulus, so a probe
     * would miss keys and an append would misroute them.
     */
-  def openGroups(dataTableBase: String, hadoopConf: Configuration): Groups = {
-    val (latest, slices) = MetadataTable.openPartition(dataTableBase, PartitionName, hadoopConf)
+  private[graft] def groups(mdt: MetadataTable.Opened): Groups = {
+    val slices = mdt.slices(PartitionName)
     val files = alignedGroups(slices).getOrElse(throw new IllegalStateException(
       s"$PartitionName slices are not hash-aligned (${slices.map(_.fileId)}); " +
         "a distributed lookup or append would misroute keys"))
-    Groups(latest, slices, files)
+    Groups(mdt.latest, slices, files)
   }
 
   /** Observability: number of distributed lookups planned (driver-side,
@@ -234,12 +234,12 @@ object RecordIndex {
       keys: org.apache.spark.sql.Dataset[String],
       hadoopConf: Configuration
   ): (String, org.apache.spark.sql.Dataset[RecordIndexEntry]) = {
-    val groups = openGroups(dataTableBase, hadoopConf)
+    val aligned = groups(MetadataTable.open(dataTableBase, hadoopConf))
     val spark = keys.sparkSession
     val conf = spark.sparkContext.broadcast(new graft.util.SerializableConf(hadoopConf))
-    val entries = probeDistributed(keys.rdd, groups, conf)(identity).flatMap(_._2._2)
+    val entries = probeDistributed(keys.rdd, aligned, conf)(identity).flatMap(_._2._2)
     import spark.implicits._
-    (groups.asOf, spark.createDataset(entries))
+    (aligned.asOf, spark.createDataset(entries))
   }
 
   /** Decode one HoodieMetadataRecord's `recordIndexMetadata` branch.

@@ -1,16 +1,16 @@
 package graft.write
 
 import graft.core.MetaField
-import graft.table.{BloomFilterIndex, MetadataTable}
-import org.apache.hadoop.fs.Path
+import graft.table.BloomFilterIndex
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Metadata-table `bloom_filters`-partition maintenance for the write
-  * path: each commit appends one HFile log block holding a SIMPLE
-  * (hadoop murmur) bloom per written base file — the exact
-  * serialization [[BloomFilterIndex]] (and real Hudi) probes, so the
-  * bloom point-lookup tier keeps pruning over connector-written files.
+  * path: each commit hands the action's [[MdtCommit]] one HFile block
+  * holding a SIMPLE (hadoop murmur) bloom per written base file — the
+  * exact serialization [[BloomFilterIndex]] (and real Hudi) probes, so
+  * the bloom point-lookup tier keeps pruning over connector-written
+  * files. The handle completes the MDT deltacommit once.
   *
   * Scale shape: the blooms build DISTRIBUTED — one record-key column
   * scan of the written files, per-task PARTIAL blooms (sized from the
@@ -27,16 +27,18 @@ object BloomFilterMaintenance {
   private val Hashes = 5
 
   /** Append blooms for `newFiles` ((partition, fileName, rows) of this
-    * commit's non-empty base files) at `instant`.
+    * commit's non-empty base files) through `mdt`.
     */
   def append(
       spark: SparkSession,
-      dataTableBase: String,
-      instant: String,
+      mdt: MdtCommit,
       newFiles: Seq[(String, String, Long)]): Unit = {
     if (newFiles.isEmpty) return
-    val hadoopConf = spark.sessionState.newHadoopConf()
-    val schema = bloomSchema(dataTableBase, hadoopConf)
+    val schema = mdt.baseSchema(BloomFilterIndex.PartitionName)
+    if (schema.getField("BloomFilterMetadata") == null)
+      throw new UnsupportedOperationException(
+        "bloom_filters schema lacks BloomFilterMetadata — not maintainable")
+    val dataTableBase = mdt.dataTableBase
 
     val byName = newFiles.map { case (p, name, rows) => name -> ((p, rows)) }.toMap
     require(byName.size == newFiles.size,
@@ -65,11 +67,10 @@ object BloomFilterMaintenance {
     val records = partials.toSeq.map { case (name, raw) =>
       val (partition, _) = byName(name)
       val key = BloomFilterIndex.indexKey(partition, name)
-      key -> recordBytes(schema, key, instant,
+      key -> recordBytes(schema, key, mdt.instant,
         java.util.Base64.getEncoder.encodeToString(raw).getBytes("UTF-8"))
     }.sortBy(_._1)
-    MdtMaintenance.appendBlockTo(dataTableBase, hadoopConf, instant, records,
-      BloomFilterIndex.PartitionName, schema)
+    mdt.append(BloomFilterIndex.PartitionName, schema, records)
   }
 
   private def newBloom(rows: Long): org.apache.hadoop.util.bloom.BloomFilter =
@@ -89,34 +90,12 @@ object BloomFilterMaintenance {
     bf
   }
 
-  /** The partition's base-HFile schema, validated to carry the
-    * BloomFilterMetadata branch this encoder fills.
-    */
-  private def bloomSchema(
-      dataTableBase: String,
-      hadoopConf: org.apache.hadoop.conf.Configuration): org.apache.avro.Schema = {
-    val (_, slices) = MetadataTable.openPartition(
-      dataTableBase, BloomFilterIndex.PartitionName, hadoopConf)
-    val baseFile = slices.headOption.flatMap(_.baseFile).getOrElse(
-      throw new IllegalStateException("bloom_filters partition has no base HFile"))
-    val fs = new Path(baseFile.path).getFileSystem(hadoopConf)
-    val baseReader = new graft.hfile.HFileReader(
-      graft.util.ReadFully(fs, new Path(baseFile.path)))
-    val schema = new org.apache.avro.Schema.Parser().parse(
-      baseReader.avroSchemaJson.getOrElse(throw new IllegalStateException(
-        "bloom_filters base HFile carries no avro schema")))
-    if (schema.getField("BloomFilterMetadata") == null)
-      throw new UnsupportedOperationException(
-        "bloom_filters schema lacks BloomFilterMetadata — not maintainable")
-    schema
-  }
-
   private def recordBytes(
       schema: org.apache.avro.Schema,
       key: String,
       instant: String,
       bloomBase64: Array[Byte]): Array[Byte] = {
-    import org.apache.avro.generic.{GenericData, GenericDatumWriter, GenericRecord}
+    import org.apache.avro.generic.GenericData
     val bmSchema = schema.getField("BloomFilterMetadata").schema().getTypes.get(1)
     val rec = new GenericData.Record(schema)
     rec.put("key", key)
@@ -127,10 +106,6 @@ object BloomFilterMaintenance {
     bm.put("bloomFilter", java.nio.ByteBuffer.wrap(bloomBase64))
     bm.put("isDeleted", false)
     rec.put("BloomFilterMetadata", bm)
-    val out = new java.io.ByteArrayOutputStream()
-    val enc = org.apache.avro.io.EncoderFactory.get().binaryEncoder(out, null)
-    new GenericDatumWriter[GenericRecord](schema).write(rec, enc)
-    enc.flush()
-    out.toByteArray
+    MdtCommit.encode(rec)
   }
 }

@@ -1,21 +1,18 @@
 package graft.write
 
-import graft.table.MetadataTable
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
-
-/** Metadata-table `column_stats`-partition maintenance for the write
-  * path: each commit appends one HFile log block of
-  * `HoodieMetadataColumnStats` records — EXACT per-(file, column)
-  * min/max/valueCount/nullCount computed from the staged data itself
-  * (one aggregation over the staging scan the writer already runs), so
-  * the index keeps pruning AND answering (tight bounds) over
-  * connector-written files with zero footer reads.
+/** Metadata-table `column_stats`- and `partition_stats`-partition
+  * maintenance for the write path: each commit hands the action's
+  * [[MdtCommit]] one HFile block of `HoodieMetadataColumnStats` records
+  * per partition — EXACT per-(file, column) min/max/valueCount/nullCount
+  * computed from the staged data itself (one aggregation over the
+  * staging scan the writer already runs), so the index keeps pruning AND
+  * answering (tight bounds) over connector-written files with zero
+  * footer reads. The handle completes the MDT deltacommit once.
   *
   * Records are encoded against the partition's OWN base-HFile schema
-  * (read once, driver-side): [[graft.table.ColumnStatsIndex]] decodes
-  * log overlays with the base's embedded schema, so a real-Hudi MDT
-  * (full HoodieMetadata.avsc) and this repo's fixture subset both
+  * (read once per action by the handle): [[graft.table.ColumnStatsIndex]]
+  * decodes log overlays with the base's embedded schema, so a real-Hudi
+  * MDT (full HoodieMetadata.avsc) and this repo's fixture subset both
   * round-trip — and a base schema this encoder cannot satisfy (an
   * unknown non-nullable field) refuses loudly instead of appending
   * bytes the reader would mis-decode.
@@ -39,14 +36,10 @@ object ColumnStatsMaintenance {
       valueCount: Long,
       nullCount: Long)
 
-  def append(
-      dataTableBase: String,
-      hadoopConf: Configuration,
-      instant: String,
-      stats: Seq[FileColStats]): Unit = {
+  def append(mdt: MdtCommit, stats: Seq[FileColStats]): Unit = {
     if (stats.isEmpty) return
-    val (schema, csSchema) = targetSchema(dataTableBase, hadoopConf,
-      graft.table.ColumnStatsIndex.PartitionName)
+    val partition = graft.table.ColumnStatsIndex.PartitionName
+    val (schema, csSchema) = targetSchema(mdt, partition)
     val records = stats
       .map(s => s"${s.column}//${s.partition}//${s.fileName}" -> encode(
         schema, csSchema, s"${s.column}//${s.partition}//${s.fileName}", recType = 3,
@@ -54,55 +47,70 @@ object ColumnStatsMaintenance {
         mn = s.min, mx = s.max, valueCount = Some(s.valueCount),
         nullCount = Some(s.nullCount), tight = true))
       .sortBy(_._1)
-    MdtMaintenance.appendBlockTo(dataTableBase, hadoopConf, instant, records,
-      graft.table.ColumnStatsIndex.PartitionName, schema)
+    mdt.append(partition, schema, records)
   }
 
-  /** Append MERGED partition-level bounds to the `partition_stats`
-    * partition: `bounds` = (partition, column, wrapper, min, max), each
-    * already unioned with the existing entry by the caller (so the
-    * record stays a SUPERSET of the truth). Written LOOSE
-    * (isTightBound=false): partition stats prune, they never answer.
-    * The record key is stable (`column//partition`), so repeat commits
-    * overlay in place; [[graft.table.ColumnStatsIndex]]'s last-wins map
-    * build makes the newest overlay authoritative over a fixture entry
-    * under a different key.
+  /** Append partition-level bounds to the `partition_stats` partition:
+    * `bounds` = (partition, column, wrapper, min, max) of every row this
+    * commit made visible, UNIONED here with the existing entry (read
+    * through `mdt`) so the record stays a SUPERSET of the truth. A
+    * partition in `priorPartitions` (it existed before this commit) with
+    * NO entry stays uncovered (fail-open at the pruner) rather than
+    * getting a bound that excludes its old files; brand-new partitions
+    * get fresh bounds. An existing entry of another value type refuses
+    * the write. Written LOOSE (isTightBound=false): partition stats
+    * prune, they never answer. The record key is stable
+    * (`column//partition`), so repeat commits overlay in place;
+    * [[graft.table.ColumnStatsIndex]]'s last-wins map build makes the
+    * newest overlay authoritative over a fixture entry under a different
+    * key.
     */
   def appendPartitionStats(
-      dataTableBase: String,
-      hadoopConf: Configuration,
-      instant: String,
-      bounds: Seq[(String, String, String, Any, Any)]): Unit = {
+      mdt: MdtCommit,
+      bounds: Seq[(String, String, String, Any, Any)],
+      priorPartitions: Set[String]): Unit = {
     if (bounds.isEmpty) return
-    val (schema, csSchema) = targetSchema(dataTableBase, hadoopConf,
-      graft.table.PartitionStatsIndex.PartitionName)
-    val records = bounds
+    val existing = mdt.partitionStats
+    def lo(a: Any, b: Any) =
+      if (a.asInstanceOf[Comparable[Any]].compareTo(b) <= 0) a else b
+    def hi(a: Any, b: Any) =
+      if (a.asInstanceOf[Comparable[Any]].compareTo(b) >= 0) a else b
+    val merged = bounds.groupBy(e => (e._1, e._2)).toSeq
+      .sortBy(_._1).flatMap { case ((p, c), es) =>
+        val newMn = es.map(_._4).reduce(lo)
+        val newMx = es.map(_._5).reduce(hi)
+        existing.get(p).flatMap(_.get(c)) match {
+          case Some((omn, omx)) if omn.getClass == newMn.getClass =>
+            Some((p, c, es.head._3, lo(omn, newMn), hi(omx, newMx)))
+          case Some(_) =>
+            throw new UnsupportedOperationException(
+              s"hudi-graft: partition_stats entry for ($p, $c) carries a different " +
+                "value type than this write — merging would corrupt the bound")
+          case None if !priorPartitions.contains(p) =>
+            Some((p, c, es.head._3, newMn, newMx))
+          case None => None
+        }
+      }
+    if (merged.isEmpty) return
+    val partition = graft.table.PartitionStatsIndex.PartitionName
+    val (schema, csSchema) = targetSchema(mdt, partition)
+    val records = merged
       .map { case (p, c, wrapper, mn, mx) =>
         s"$c//$p" -> encode(schema, csSchema, s"$c//$p", recType = 6,
           fileName = p, column = c, wrapper = wrapper, mn = mn, mx = mx,
           valueCount = None, nullCount = None, tight = false)
       }
       .sortBy(_._1)
-    MdtMaintenance.appendBlockTo(dataTableBase, hadoopConf, instant, records,
-      graft.table.PartitionStatsIndex.PartitionName, schema)
+    mdt.append(partition, schema, records)
   }
 
   /** The target partition's base-HFile schema + its validated
     * ColumnStatsMetadata branch.
     */
   private def targetSchema(
-      dataTableBase: String,
-      hadoopConf: Configuration,
+      mdt: MdtCommit,
       partitionName: String): (org.apache.avro.Schema, org.apache.avro.Schema) = {
-    val (_, slices) = MetadataTable.openPartition(dataTableBase, partitionName, hadoopConf)
-    val baseFile = slices.headOption.flatMap(_.baseFile).getOrElse(
-      throw new IllegalStateException(s"$partitionName partition has no base HFile"))
-    val fs = new Path(baseFile.path).getFileSystem(hadoopConf)
-    val baseReader = new graft.hfile.HFileReader(
-      graft.util.ReadFully(fs, new Path(baseFile.path)))
-    val schema = new org.apache.avro.Schema.Parser().parse(
-      baseReader.avroSchemaJson.getOrElse(throw new IllegalStateException(
-        s"$partitionName base HFile carries no avro schema")))
+    val schema = mdt.baseSchema(partitionName)
     val csField = Option(schema.getField("ColumnStatsMetadata")).getOrElse(
       throw new UnsupportedOperationException(
         s"$partitionName schema lacks ColumnStatsMetadata — not maintainable"))
@@ -133,7 +141,7 @@ object ColumnStatsMaintenance {
       valueCount: Option[Long],
       nullCount: Option[Long],
       tight: Boolean): Array[Byte] = {
-    import org.apache.avro.generic.{GenericData, GenericDatumWriter, GenericRecord}
+    import org.apache.avro.generic.GenericData
     import scala.jdk.CollectionConverters._
     val wrapSchema = csSchema.getField("minValue").schema().getTypes.asScala
       .find(_.getName == wrapper).getOrElse(
@@ -157,10 +165,6 @@ object ColumnStatsMaintenance {
     cs.put("isDeleted", false)
     if (csSchema.getField("isTightBound") != null) cs.put("isTightBound", tight)
     rec.put("ColumnStatsMetadata", cs)
-    val out = new java.io.ByteArrayOutputStream()
-    val enc = org.apache.avro.io.EncoderFactory.get().binaryEncoder(out, null)
-    new GenericDatumWriter[GenericRecord](schema).write(rec, enc)
-    enc.flush()
-    out.toByteArray
+    MdtCommit.encode(rec)
   }
 }

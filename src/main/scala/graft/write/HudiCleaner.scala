@@ -98,9 +98,11 @@ object HudiCleaner {
     // versions the clean was about to remove anyway; never a listing that
     // serves deleted paths
     val clean = t.timeline.begin("clean", instant, body)
-    if (t.config.metadataPartitions.contains("files"))
-      MdtMaintenance.tombstoneFiles(basePath, hadoopConf,
-        instant, candidates.map(c => (c._1, c._2)))
+    if (t.config.metadataPartitions.contains("files")) {
+      val mdt = new MdtCommit(basePath, hadoopConf, instant)
+      MdtMaintenance.tombstoneFiles(mdt, candidates.map(c => (c._1, c._2)))
+      mdt.complete()
+    }
     val deleted = Vector.newBuilder[(String, String)]
     for ((p, name, path) <- candidates)
       if (fs.delete(new Path(path), false)) deleted += ((p, name))

@@ -67,12 +67,12 @@ object HudiClustering {
     val files = BaseFiles.write(rows, basePath, instant, stats = maintainsColStats)
 
     // files-MDT and column_stats maintenance (same contract as compaction)
+    val mdt = new MdtCommit(basePath, hadoopConf, instant)
     if (t.config.metadataPartitions.contains("files"))
-      MdtMaintenance.appendFiles(basePath, hadoopConf, instant,
-        files.map(f => (f.partition, f.name, f.bytes)))
+      MdtMaintenance.appendFiles(mdt, files.map(f => (f.partition, f.name, f.bytes)))
     if (maintainsColStats)
-      ColumnStatsMaintenance.append(basePath, hadoopConf, instant,
-        BaseFiles.colStatsEntries(files, rows.schema))
+      ColumnStatsMaintenance.append(mdt, BaseFiles.colStatsEntries(files, rows.schema))
+    mdt.complete()
 
     val stats = HudiWriter.writeStatsJson(files.map(HudiWriter.WriteStat(_)))
     pending.complete(

@@ -80,12 +80,12 @@ object HudiCompaction {
       onlyRequired = true, stats = maintainsColStats)
 
     // files-MDT and column_stats maintenance (same contract as data commits)
+    val mdt = new MdtCommit(basePath, hadoopConf, instant)
     if (t.config.metadataPartitions.contains("files"))
-      MdtMaintenance.appendFiles(basePath, hadoopConf, instant,
-        files.map(f => (f.partition, f.name, f.bytes)))
+      MdtMaintenance.appendFiles(mdt, files.map(f => (f.partition, f.name, f.bytes)))
     if (maintainsColStats)
-      ColumnStatsMaintenance.append(basePath, hadoopConf, instant,
-        BaseFiles.colStatsEntries(files, projected.schema))
+      ColumnStatsMaintenance.append(mdt, BaseFiles.colStatsEntries(files, projected.schema))
+    mdt.complete()
 
     // completed COMMIT with compacted:true — the logical-no-op spelling
     val stats = HudiWriter.writeStatsJson(files.map(f =>

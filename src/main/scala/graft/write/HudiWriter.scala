@@ -459,114 +459,45 @@ object HudiWriter {
           org.apache.spark.sql.types.StructType(existing.get.tableSchema.fields
             .filterNot(f => MetaField.all.contains(f.name)))
         else data.schema
-      // files-partition MDT maintenance: the MDT deltacommit (same
-      // instant) completes BEFORE the data commit, so any reader that
-      // sees the data instant sees an MDT at least as new
+      // MDT maintenance: every maintained partition hands its records
+      // to the commit's one MDT handle, which completes the MDT
+      // deltacommit (same instant) once, after the last partition's log
+      // and BEFORE the data commit, so any reader that sees the data
+      // instant sees an MDT at least as new
       if (existing.exists(_.config.metadataPartitions.contains("files")))
-        MdtMaintenance.appendFiles(basePath, spark.sessionState.newHadoopConf(), instant,
+        MdtMaintenance.appendFiles(c.mdt,
           (files ++ routed.logWrites.map(_.file)).map(f => (f.partition, f.name, f.bytes)))
       // record-index maintenance: created-key entries + deleted-key
-      // tombstones land as an MDT deltacommit BEFORE the data commit
-      // (same freshness contract as the files partition)
+      // tombstones
       if (maintainsRecordIndex) routed.indexChanges.foreach(changes =>
-        RecordIndexMaintenance.append(spark, basePath, instant, c.recordIndex, changes,
-          timelineTz, c.conf))
+        RecordIndexMaintenance.append(c.mdt, changes, timelineTz, c.conf))
       // column_stats maintenance: exact per-(file, column) bounds from
-      // the staging pass, appended before the data commit
+      // the staging pass
       lazy val statEntries = baseRows
         .map(rows => BaseFiles.colStatsEntries(files, rows.schema)).getOrElse(Nil)
       if (maintainsColStats && files.nonEmpty)
-        ColumnStatsMaintenance.append(basePath, spark.sessionState.newHadoopConf(),
-          instant, statEntries)
+        ColumnStatsMaintenance.append(c.mdt, statEntries)
       // partition_stats maintenance: partition-level bounds of every row
       // this commit made visible — staged base files AND MOR log appends
-      // (a log update can move a value past its partition's bound) —
-      // UNIONED with the existing entry (the record must stay a superset
-      // of the truth). A pre-existing partition with NO entry stays
-      // uncovered (fail-open at the pruner) rather than getting a bound
-      // that excludes its old files; brand-new partitions get fresh bounds
-      lazy val newBounds = statEntries.map(e => (e.partition, e.column, e.wrapper, e.min, e.max)) ++
-        routed.logRows.toSeq.flatMap(partitionBounds)
-      if (maintainsPartStats && newBounds.nonEmpty) {
-        val conf = spark.sessionState.newHadoopConf()
-        val existingBounds = graft.table.PartitionStatsIndex.load(basePath, conf)
-        def lo(a: Any, b: Any) =
-          if (a.asInstanceOf[Comparable[Any]].compareTo(b) <= 0) a else b
-        def hi(a: Any, b: Any) =
-          if (a.asInstanceOf[Comparable[Any]].compareTo(b) >= 0) a else b
-        val merged = newBounds.groupBy(e => (e._1, e._2)).toSeq
-          .sortBy(_._1).flatMap { case ((p, c), es) =>
-            val newMn = es.map(_._4).reduce(lo)
-            val newMx = es.map(_._5).reduce(hi)
-            existingBounds.get(p).flatMap(_.get(c)) match {
-              case Some((omn, omx)) if omn.getClass == newMn.getClass =>
-                Some((p, c, es.head._3, lo(omn, newMn), hi(omx, newMx)))
-              case Some(_) =>
-                throw new UnsupportedOperationException(
-                  s"hudi-graft: partition_stats entry for ($p, $c) carries a different " +
-                    "value type than this write — merging would corrupt the bound")
-              case None if !priorPartitions.contains(p) =>
-                Some((p, c, es.head._3, newMn, newMx))
-              case None => None
-            }
-          }
-        ColumnStatsMaintenance.appendPartitionStats(basePath, conf, instant, merged)
-      }
+      // (a log update can move a value past its partition's bound)
+      if (maintainsPartStats)
+        ColumnStatsMaintenance.appendPartitionStats(c.mdt,
+          statEntries.map(e => (e.partition, e.column, e.wrapper, e.min, e.max)) ++
+            routed.logRows.toSeq.flatMap(partitionBounds),
+          priorPartitions)
       // bloom_filters maintenance: one distributed key-column scan of the
       // written files builds SIMPLE blooms (zero-row empty bases skip —
       // a missing bloom fails open at the probe)
       val maintainsBloom = existing.exists(t =>
         graft.table.BloomFilterIndex.isAvailable(t.config))
       if (maintainsBloom)
-        BloomFilterMaintenance.append(spark, basePath, instant,
+        BloomFilterMaintenance.append(spark, c.mdt,
           files.filter(_.rows > 0).map(f => (f.partition, f.name, f.rows)))
-      // secondary-index maintenance: old values from the PRE-COMMIT
-      // snapshot (the data commit hasn't completed yet) joined with the
-      // incoming batch — changed values tombstone the old entry and add
-      // the new one; a missing entry would lose rows, a stale extra one
-      // only costs pruning
-      if (secondaryIndexes.nonEmpty) {
-        val pre = spark.read.format("hudi-graft").load(basePath)
-        // canonical key rendering: strings verbatim; integrals via the
-        // long widening (decimal digits — the family-free rendering
-        // SecondaryIndex.renderLiteral probes with)
-        def rendered(df: DataFrame, column: String): org.apache.spark.sql.Column =
-          df.schema(column).dataType match {
-            case StringType => col(column)
-            case _ => col(column).cast("long").cast(StringType)
-          }
-        // insert/bulk_insert never REMOVE rows: a duplicate-key insert
-        // leaves the old row live, so tombstoning its old value entry
-        // would index-prune a live row away — inserts are ADD-ONLY
-        // (a stale extra entry only costs pruning)
-        val addOnly = operation == "insert" || operation == "bulk_insert"
-        // ONE pre-commit projection of every indexed column, bounded to
-        // the batch keys and persisted across the per-index appends
-        // (N indexes must not cost N snapshot scans)
-        val idxCols = secondaryIndexes.map(_._2).distinct
-        val olds0 =
-          if (addOnly) None
-          else Some(pre.select(col(MetaField.RecordKey).as("__key") +:
-            idxCols.map(c => rendered(pre, c).as(s"__old_$c")): _*)
-            .join(keyed.select("__key").distinct(), Seq("__key"), "left_semi")
-            .persist())
-        try {
-          for ((idxPart, column) <- secondaryIndexes) {
-            val news =
-              if (operation == "delete")
-                keyed.select("__key").distinct()
-                  .withColumn("__new", lit(null).cast(StringType))
-              else keyed.select(col("__key"), rendered(keyed, column).as("__new"))
-            val changes = olds0 match {
-              case None => news.withColumn("__old", lit(null).cast(StringType))
-              case Some(o) => news.join(
-                o.select(col("__key"), col(s"__old_$column").as("__old")),
-                Seq("__key"), "full_outer")
-            }
-            SecondaryIndexMaintenance.append(spark, basePath, instant, idxPart, changes)
-          }
-        } finally olds0.foreach(df => scala.util.Try(df.unpersist()))
-      }
+      // secondary-index maintenance: old values from the pre-commit
+      // snapshot joined with the incoming batch
+      if (secondaryIndexes.nonEmpty)
+        SecondaryIndexMaintenance.append(c.mdt, secondaryIndexes, keyed, operation, c.conf)
+      c.mdt.complete()
       val config = existing.map(_.config).getOrElse(HoodieConfig.load(basePath, hadoopConf))
       writeTimeline(basePath, config, hadoopConf, instant, operation, files, routed, commitSchema, isMor)
       Seq(instant)
@@ -600,9 +531,10 @@ object HudiWriter {
       indexChanges: Option[RDD[RecordIndexMaintenance.Change]] = None)
 
   /** Per-commit shared state. The Hadoop conf is serialized once — one
-    * broadcast shared by the probe, log and index passes; the
-    * record_index partition is opened at most once (probe and
-    * maintenance read the same slices); the latest file slices are
+    * broadcast shared by the probe, log and index passes; the metadata
+    * table is opened at most once, by the commit's one [[MdtCommit]]
+    * (the record_index probe and every maintainer read the same
+    * slices); the latest file slices are
     * planned once; and every frame or RDD routing persists is registered
     * here and released in write()'s `finally`, also when the commit fails
     * partway through.
@@ -626,7 +558,10 @@ object HudiWriter {
     /** The target's latest file slices as of this commit's instant. */
     lazy val slices: Vector[graft.fs.FileSlice] = table.get.fsView.slicesAsOf(instant)
 
-    lazy val recordIndex: RecordIndex.Groups = RecordIndex.openGroups(basePath, hadoopConf)
+    /** This commit's metadata-table delta; the record-index probe reads
+      * its groups.
+      */
+    val mdt = new MdtCommit(basePath, hadoopConf, instant)
 
     def persist(df: DataFrame): DataFrame = {
       val p = df.persist()
@@ -647,7 +582,7 @@ object HudiWriter {
       */
     def indexChanges(staged: DataFrame): Option[RDD[RecordIndexMaintenance.Change]] =
       if (!indexed) None
-      else Some(RecordIndexMaintenance.changesOf(staged, recordIndex.n))
+      else Some(RecordIndexMaintenance.changesOf(staged, mdt.recordIndex.n))
 
     /** prevCommit of each rewritten or appended-to group: the base
       * instant of its latest slice (the metadata CDC's savepoint guard
@@ -740,7 +675,7 @@ object HudiWriter {
   private def indexProbe[T: scala.reflect.ClassTag](c: Commit, rows: RDD[T])(
       key: T => String): RDD[(Int, (T, Option[graft.table.RecordIndexEntry]))] = {
     val groups =
-      try c.recordIndex
+      try c.mdt.recordIndex
       catch {
         case e: IllegalStateException => throw new UnsupportedOperationException(
           "hudi-graft: the table advertises a record_index this writer cannot probe " +

@@ -2,32 +2,31 @@ package graft.write
 
 import graft.table.{FilesPartitionRecord, RecordIndex}
 import graft.util.SerializableConf
-import org.apache.hadoop.fs.Path
 import org.apache.spark.HashPartitioner
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Metadata-table `record_index`-partition maintenance for the write
   * path: each commit that creates or removes record keys appends ONE
   * HFile log block per touched index file group — new keys as
   * `HoodieRecordIndexInfo` entries (fileIdEncoding=1, raw string fileId:
   * a public Hudi encoding this repo's [[RecordIndex]] reader decodes),
-  * deleted keys as empty-value tombstones — followed by one deltacommit
-  * on the MDT's own timeline at the DATA instant (completing BEFORE the
-  * data commit, preserving the `mdtAt >= dataAt` freshness gate every
-  * index consumer relies on).
+  * deleted keys as empty-value tombstones — through the action's
+  * [[MdtCommit]], which completes the MDT deltacommit once, at the DATA
+  * instant and before the data commit (the `mdtAt >= dataAt` freshness
+  * gate every index consumer relies on).
   *
   * Scale shape: the volume is O(created + deleted KEYS) — row scale, so
   * nothing passes through the driver: key locations partition by Hudi's
   * key-hash group mapping ([[RecordIndex.fileGroupIndex]], the same
   * 31-poly hash reads probe by), one executor task writes one index
   * group's log block (records sorted — the HFile key invariant), and the
-  * driver only completes the timeline. This is the last pass of every
+  * driver only names the logs. This is the last pass of every
   * upsert or delete on an indexed table, COW or MOR: its changes come
   * from the probe pass's cached partitions, already laid out by group,
   * so the blocks are written without a shuffle. Requires a provably
-  * hash-aligned slice set ([[RecordIndex.openGroups]]), exactly like the
+  * hash-aligned slice set ([[RecordIndex.groups]]), exactly like the
   * distributed probe — a gap would shrink the modulus and misroute every
   * subsequent lookup, so misalignment throws rather than corrupting the
   * index.
@@ -60,7 +59,7 @@ object RecordIndexMaintenance {
 
   /** One serialized HoodieMetadataRecord naming `key`'s location. */
   def entryBytes(key: String, partition: String, fid: String, instantTime: Long): Array[Byte] = {
-    import org.apache.avro.generic.{GenericData, GenericDatumWriter, GenericRecord}
+    import org.apache.avro.generic.GenericData
     val riSchema = riAvroSchema.getField("recordIndexMetadata").schema().getTypes.get(1)
     val rec = new GenericData.Record(riAvroSchema)
     rec.put("key", key)
@@ -76,11 +75,7 @@ object RecordIndexMaintenance {
     ri.put("fileIdLowBits", 0L)
     ri.put("fileIndex", -1)
     rec.put("recordIndexMetadata", ri)
-    val out = new java.io.ByteArrayOutputStream()
-    val enc = org.apache.avro.io.EncoderFactory.get().binaryEncoder(out, null)
-    new GenericDatumWriter[GenericRecord](riAvroSchema).write(rec, enc)
-    enc.flush()
-    out.toByteArray
+    MdtCommit.encode(rec)
   }
 
   /** One record-index change, keyed by its key's group ordinal:
@@ -100,8 +95,7 @@ object RecordIndexMaintenance {
       (RecordIndex.fileGroupIndex(key, n), (key, r.getString(1), r.getString(2)))
     }
 
-  /** Append `changes` to the record index `groups` (opened by the
-    * commit, at `instant`), then complete the MDT deltacommit. The
+  /** Append `changes` to the record index groups of `mdt`. The
     * changes shuffle by group ordinal through `HashPartitioner(n)` —
     * the identity mapping, so one task holds exactly one index group's
     * keys. A caller whose changes are already partitioned that way (the
@@ -109,26 +103,16 @@ object RecordIndexMaintenance {
     * equal partitioner is a no-op.
     */
   def append(
-      spark: SparkSession,
-      dataTableBase: String,
-      instant: String,
-      groups: RecordIndex.Groups,
+      mdt: MdtCommit,
       changes: RDD[Change],
       timelineTimezone: String,
       conf: Broadcast[SerializableConf]): Unit = {
-    val mdtBase = new Path(new Path(dataTableBase, ".hoodie"), "metadata")
-    val mdtConfig = graft.core.HoodieConfig.load(mdtBase.toString, conf.value.value)
-    // group ordinal -> (sliceFileId, nameTs, nextVersion)
-    val v8 = mdtConfig.tableVersion >= 8
-    val naming = groups.slices.map { sl =>
-      RecordIndex.groupIndexOf(sl.fileId).get -> ((sl.fileId,
-        if (v8) instant else sl.commitTimestamp,
-        sl.logFiles.map(_.version).maxOption.getOrElse(0) + 1))
+    val groups = mdt.recordIndex
+    val logs = groups.slices.map { sl =>
+      RecordIndex.groupIndexOf(sl.fileId).get ->
+        mdt.log(RecordIndex.PartitionName, sl, riAvroSchema)
     }.toMap
-    val tsMillis = graft.core.Timestamps.timelineToEpochMillis(instant, timelineTimezone)
-    val riDir = new Path(mdtBase, RecordIndex.PartitionName).toString
-    val token = "0-0-0"
-    val schemaBytes = riAvroSchema.toString.getBytes("UTF-8")
+    val tsMillis = graft.core.Timestamps.timelineToEpochMillis(mdt.instant, timelineTimezone)
 
     // executor-side: each task holds exactly one index group's keys,
     // sorts them (the HFile key invariant) and writes one log block
@@ -141,21 +125,10 @@ object RecordIndexMaintenance {
         }.toVector.sortBy(_._1)
         if (recs.isEmpty) Iterator.empty
         else {
-          val (sliceFid, nameTs, version) = naming(g)
-          val hfileBytes = graft.hfile.HFileWriter.write(
-            recs, Map("schema" -> schemaBytes), recordsPerBlock = 64)
-          val name = s".${sliceFid}_$nameTs.log.${version}_$token"
-          val out = graft.io.Storage(conf.value.value)
-            .create(new Path(riDir, name), overwrite = false)
-          try {
-            val avro = new org.apache.avro.Schema.Parser()
-              .parse(new String(schemaBytes, "UTF-8"))
-            graft.log.LogFileWriter.hfileDataBlock(out, instant, avro, hfileBytes)
-          } finally out.close()
-          Iterator.single(name)
+          logs(g).write(conf.value.value, recs)
+          Iterator.single(g)
         }
-      }.collect()
-    if (written.nonEmpty)
-      MdtMaintenance.completeDeltacommit(conf.value.value, mdtBase, mdtConfig, instant)
+      }.count()
+    mdt.wrote(written.toInt)
   }
 }

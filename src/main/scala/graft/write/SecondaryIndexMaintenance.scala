@@ -1,10 +1,10 @@
 package graft.write
 
-import graft.table.{MetadataTable, SecondaryIndex}
+import graft.table.SecondaryIndex
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
 
 /** Metadata-table `secondary_index_*` maintenance for the write path —
   * scoped to IDENTITY single-column indexes over STRING columns, where
@@ -25,8 +25,8 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: the change set is O(batch keys); entries sort and write
   * as one HFile log block from ONE executor task (nothing row-scale
-  * through the driver), then the driver completes the MDT deltacommit
-  * at the data instant.
+  * through the driver), named by the action's [[MdtCommit]], which
+  * completes the MDT deltacommit once.
   */
 object SecondaryIndexMaintenance {
 
@@ -74,40 +74,77 @@ object SecondaryIndexMaintenance {
     }
   }
 
-  /** Append this commit's index deltas for `idxPartition`.
+  /** Append this commit's deltas for every index of `indexes`
+    * ((partition, column), from [[resolveWritable]]) through `mdt`:
+    * old values come from the PRE-COMMIT snapshot (the data commit hasn't
+    * completed yet) joined with the incoming batch `keyed` (`__key` plus
+    * the data columns) of `operation` — changed values tombstone the old
+    * entry and add the new one; a missing entry would lose rows, a stale
+    * extra one only costs pruning.
+    */
+  def append(
+      mdt: MdtCommit,
+      indexes: Seq[(String, String)],
+      keyed: DataFrame,
+      operation: String,
+      conf: org.apache.spark.broadcast.Broadcast[graft.util.SerializableConf]): Unit = {
+    val pre = keyed.sparkSession.read.format("hudi-graft").load(mdt.dataTableBase)
+    // canonical key rendering: strings verbatim; integrals via the
+    // long widening (decimal digits — the family-free rendering
+    // SecondaryIndex.renderLiteral probes with)
+    def rendered(df: DataFrame, column: String): org.apache.spark.sql.Column =
+      df.schema(column).dataType match {
+        case StringType => col(column)
+        case _ => col(column).cast("long").cast(StringType)
+      }
+    // insert/bulk_insert never REMOVE rows: a duplicate-key insert
+    // leaves the old row live, so tombstoning its old value entry
+    // would index-prune a live row away — inserts are ADD-ONLY
+    // (a stale extra entry only costs pruning)
+    val addOnly = operation == "insert" || operation == "bulk_insert"
+    // ONE pre-commit projection of every indexed column, bounded to
+    // the batch keys and persisted across the per-index appends
+    // (N indexes must not cost N snapshot scans)
+    val idxCols = indexes.map(_._2).distinct
+    val olds0 =
+      if (addOnly) None
+      else Some(pre.select(col(graft.core.MetaField.RecordKey).as("__key") +:
+        idxCols.map(c => rendered(pre, c).as(s"__old_$c")): _*)
+        .join(keyed.select("__key").distinct(), Seq("__key"), "left_semi")
+        .persist())
+    try {
+      for ((idxPart, column) <- indexes) {
+        val news =
+          if (operation == "delete")
+            keyed.select("__key").distinct()
+              .withColumn("__new", lit(null).cast(StringType))
+          else keyed.select(col("__key"), rendered(keyed, column).as("__new"))
+        val changes = olds0 match {
+          case None => news.withColumn("__old", lit(null).cast(StringType))
+          case Some(o) => news.join(
+            o.select(col("__key"), col(s"__old_$column").as("__old")),
+            Seq("__key"), "full_outer")
+        }
+        appendIndex(mdt, idxPart, changes, conf)
+      }
+    } finally olds0.foreach(df => scala.util.Try(df.unpersist()))
+  }
+
+  /** Append one index's deltas for `idxPartition` through `mdt`.
     * `changes` columns: __key (record key), __old (pre-commit indexed
     * value, null = key did not exist), __new (post-commit value, null =
     * key deleted).
     */
-  def append(
-      spark: SparkSession,
-      dataTableBase: String,
-      instant: String,
+  private def appendIndex(
+      mdt: MdtCommit,
       idxPartition: String,
-      changes: DataFrame): Unit = {
-    val hadoopConf = spark.sessionState.newHadoopConf()
-    val (_, slices) = MetadataTable.openPartition(dataTableBase, idxPartition, hadoopConf)
-    val slice = slices.headOption.getOrElse(throw new IllegalStateException(
-      s"$idxPartition has no file slice"))
-    val baseFile = slice.baseFile.getOrElse(throw new IllegalStateException(
-      s"$idxPartition slice has no base HFile (log-only index groups are not appendable)"))
-    val fs = new Path(baseFile.path).getFileSystem(hadoopConf)
-    val schemaJson = new graft.hfile.HFileReader(
-      graft.util.ReadFully(fs, new Path(baseFile.path)))
-      .avroSchemaJson.getOrElse(throw new IllegalStateException(
-        s"$idxPartition base HFile carries no avro schema"))
-    val probe = new org.apache.avro.Schema.Parser().parse(schemaJson)
-    if (probe.getField("SecondaryIndexMetadata") == null)
+      changes: DataFrame,
+      conf: org.apache.spark.broadcast.Broadcast[graft.util.SerializableConf]): Unit = {
+    val schema = mdt.baseSchema(idxPartition)
+    if (schema.getField("SecondaryIndexMetadata") == null)
       throw new UnsupportedOperationException(
         s"$idxPartition schema lacks SecondaryIndexMetadata — not maintainable")
-
-    val mdtBase = new Path(new Path(dataTableBase, ".hoodie"), "metadata")
-    val mdtConfig = graft.core.HoodieConfig.load(mdtBase.toString, hadoopConf)
-    val nameTs = if (mdtConfig.tableVersion >= 8) instant else slice.commitTimestamp
-    val version = slice.logFiles.map(_.version).maxOption.getOrElse(0) + 1
-    val logName = s".${slice.fileId}_$nameTs.log.${version}_0-0-0"
-    val dirStr = new Path(mdtBase, idxPartition).toString
-    val conf = new graft.util.SerializableConf(hadoopConf)
+    val log = mdt.log(idxPartition, mdt.slices(idxPartition).head, schema)
 
     // one executor task sorts and writes the single HFile log block —
     // the change set is batch-key-scale, never table-scale
@@ -115,7 +152,7 @@ object SecondaryIndexMaintenance {
     val written = delta
       .select(col("__key"), col("__old"), col("__new"))
       .repartition(1).rdd.mapPartitions { it =>
-        val schema = new org.apache.avro.Schema.Parser().parse(schemaJson)
+        val schema = new org.apache.avro.Schema.Parser().parse(log.schemaJson)
         val entries = scala.collection.mutable.ArrayBuffer.empty[(String, Array[Byte])]
         for (r <- it) {
           val key = r.getString(0)
@@ -130,18 +167,11 @@ object SecondaryIndexMaintenance {
         }
         if (entries.isEmpty) Iterator.empty
         else {
-          val sorted = entries.sortBy(_._1).toIndexedSeq
-          val hfileBytes = graft.hfile.HFileWriter.write(sorted,
-            Map("schema" -> schemaJson.getBytes("UTF-8")), recordsPerBlock = 64)
-          val out = graft.io.Storage(conf.value)
-            .create(new Path(dirStr, logName), overwrite = false)
-          try graft.log.LogFileWriter.hfileDataBlock(out, instant, schema, hfileBytes)
-          finally out.close()
-          Iterator.single(logName)
+          log.write(conf.value.value, entries.sortBy(_._1).toIndexedSeq)
+          Iterator.single(log.path)
         }
-      }.collect()
-    if (written.nonEmpty)
-      MdtMaintenance.completeDeltacommit(hadoopConf, mdtBase, mdtConfig, instant)
+      }.count()
+    mdt.wrote(written.toInt)
   }
 
   /** A LIVE entry's value: HoodieMetadataRecord(type=7,
@@ -150,7 +180,7 @@ object SecondaryIndexMaintenance {
     * drops mappings on.)
     */
   private def liveBytes(schema: org.apache.avro.Schema, key: String): Array[Byte] = {
-    import org.apache.avro.generic.{GenericData, GenericDatumWriter, GenericRecord}
+    import org.apache.avro.generic.GenericData
     val rec = new GenericData.Record(schema)
     rec.put("key", key)
     rec.put("type", 7)
@@ -158,10 +188,6 @@ object SecondaryIndexMaintenance {
     val sim = new GenericData.Record(simSchema)
     sim.put("isDeleted", false)
     rec.put("SecondaryIndexMetadata", sim)
-    val out = new java.io.ByteArrayOutputStream()
-    val enc = org.apache.avro.io.EncoderFactory.get().binaryEncoder(out, null)
-    new GenericDatumWriter[GenericRecord](schema).write(rec, enc)
-    enc.flush()
-    out.toByteArray
+    MdtCommit.encode(rec)
   }
 }

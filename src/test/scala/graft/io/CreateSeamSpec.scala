@@ -14,6 +14,10 @@ import scala.jdk.CollectionConverters._
   * parquet or `partitionBy` write under `graft/write`. And the timeline
   * has one codec, `graft/core/Timeline.scala`: no other main source names
   * a pending state, the v8 timeline directory or the completion clock.
+  * And the metadata table has one write-side handle,
+  * `graft/write/MdtCommit.scala`: no other source under `graft/write`
+  * writes an HFile or an HFile log block, loads the MDT's
+  * `hoodie.properties` or names an MDT log file.
   */
 class CreateSeamSpec extends AnyFunSuite {
 
@@ -117,5 +121,47 @@ class CreateSeamSpec extends AnyFunSuite {
       "new Path(base, \".hoodie/timeline/history\")",
       "// the requested marker carries the plan").foreach(c =>
       assert(timelineName.findFirstIn(c).isEmpty, c))
+  }
+
+  /** An HFile write, an HFile log-block write, a `HoodieConfig.load` of
+    * the metadata table, or an interpolated `.log.` file name — each an
+    * MDT write decision taken outside the handle.
+    */
+  private val mdtWrite =
+    ("""(\bHFileWriter\.write\(|\bhfileDataBlock\(|""" +
+      """\bHoodieConfig\.load\([^)]*(?i:mdt|metadata)|\bs"[^"]*\.log\.)""").r
+
+  test("no MDT write decision under graft/write outside graft/write/MdtCommit.scala") {
+    val dir = root.resolve("graft/write")
+    val files = Files.list(dir).iterator.asScala.filter(_.toString.endsWith(".scala")).toVector
+    assert(files.exists(_.endsWith("MdtCommit.scala")), s"no MdtCommit.scala under $dir")
+    val hits = for {
+      f <- files if !f.endsWith("MdtCommit.scala")
+      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
+      if mdtWrite.findFirstIn(line).isDefined
+    } yield s"${root.relativize(f)}:${i + 1}: ${line.trim}"
+    // the data table's own log names are the data writer's: exactly
+    // two, the MOR log and the CDC sidecar
+    val (dataLogs, offenders) = hits.partition(h =>
+      h.startsWith("graft/write/HudiWriter.scala:") && h.contains("val name = s\".${fid}_"))
+    assert(offenders.isEmpty, offenders.mkString("\n", "\n", ""))
+    assert(dataLogs.size == 2, dataLogs.mkString("data log names:\n", "\n", ""))
+  }
+
+  test("the scan tells MDT write decisions from other code") {
+    Seq("val hfileBytes = graft.hfile.HFileWriter.write(",
+      "try graft.log.LogFileWriter.hfileDataBlock(out, instant, schema, hfileBytes)",
+      "val mdtConfig = graft.core.HoodieConfig.load(mdtBase.toString, hadoopConf)",
+      "HoodieConfig.load(s\"$base/.hoodie/metadata\", conf)",
+      "val logName = s\".${slice.fileId}_$nameTs.log.${nextVersion}_0-0-0\"",
+      "val name = s\".${sliceFid}_$nameTs.log.${version}_$token\"").foreach(c =>
+      assert(mdtWrite.findFirstIn(c).isDefined, c))
+    Seq("HoodieConfig.load(basePath, hadoopConf)",
+      "mdt.append(partition, schema, records)",
+      "logs(g).write(conf.value.value, recs)",
+      "LogFile.parse(name, path, size)",
+      "* `.{fid}_{ts}.log.{v}_{token}` — strip the leading dot",
+      "HFileWriter.scala").foreach(c =>
+      assert(mdtWrite.findFirstIn(c).isEmpty, c))
   }
 }
