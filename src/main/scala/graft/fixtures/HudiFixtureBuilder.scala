@@ -1765,7 +1765,7 @@ object HudiFixtureBuilder {
   // Nullable branches end-to-end — some_nulls validity bitmaps across
   // multiple small pages (pageRows=7 over 25 rows), an ALL-null column
   // (bufferless all_nulls pages), and exact COUNT(col) null proofs from
-  // the bitmap popcounts (readFacts' lance tier).
+  // the bitmap popcounts (`FileStats.read`'s Lance branch).
   private def buildCowLanceNulls(spark: SparkSession, sfDir: String): Unit = {
     val conf = spark.sessionState.newHadoopConf()
     val fs = FileSystem.get(conf)

@@ -71,6 +71,18 @@ object LogFile {
     */
   val CdcSuffix = "-cdc"
 
+  /** The name of the log a delta at `instant` appends to `slice`: v6
+    * tables name it after the slice's BASE instant (the association key
+    * [[FileGroup]] assembly anchors on), v8+ after the delta's own
+    * instant; the version follows the slice's newest log; the write
+    * token is `0-0-0`.
+    */
+  def nextName(slice: FileSlice, instant: String, tableVersion: Int): String = {
+    val nameTs = if (tableVersion >= 8) instant else slice.commitTimestamp
+    val version = slice.logFiles.map(_.version).maxOption.getOrElse(0) + 1
+    s".${slice.fileId}_$nameTs.log.${version}_0-0-0"
+  }
+
   def parse(name: String, path: String, size: Long): Option[LogFile] = {
     if (!name.startsWith(".")) return None
     if (name.endsWith(CdcSuffix)) return None

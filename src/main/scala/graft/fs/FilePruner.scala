@@ -1,14 +1,9 @@
 package graft.fs
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.ParquetFileReader
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.types._
 
-import scala.jdk.CollectionConverters._
-
-/** File-level min/max pruning from parquet footers (R2/C1 — reference:
+/** File-level pruning from [[FileStats]] (R2/C1 — reference:
   * crates/core/src/table/file_pruner.rs:38-273, statistics/mod.rs).
   *
   * Per-operator prune rules (a file is skipped only when its stats PROVE
@@ -23,23 +18,18 @@ import scala.jdk.CollectionConverters._
   * range (the reference's safety gate, table/mod.rs:486-491) — callers
   * enforce that.
   *
-  * Footer reads happen at planning; cost is one small ranged read per
-  * candidate file AFTER partition pruning, the same trade the reference
-  * makes (fs_view.rs:154-223).
-  *
-  * `preStats` (fileName → columnName → (min, max)) short-circuits the
-  * footer read for files it covers — fed from the metadata table's
-  * `column_stats` partition ([[graft.table.ColumnStatsIndex]]) when the
-  * table advertises it: ONE indexed metadata read replaces a footer
-  * fetch per candidate file, the 100 TB data-skipping path. Files absent
-  * from the map fall back to their footer.
+  * `index` (fileName → stats) is the metadata table's `column_stats`
+  * partition when the table advertises it: ONE indexed metadata read
+  * replaces a footer fetch per candidate file, the 100 TB data-skipping
+  * path. Only files it does not cover read their footer, one small
+  * ranged read each AFTER partition pruning — the same trade the
+  * reference makes (fs_view.rs:154-223).
   */
 final class FilePruner(
     filters: Seq[PartitionFilter],
     schema: StructType,
     conf: Configuration,
-    preStats: Map[String, Map[String, (Comparable[Any], Comparable[Any])]] = Map.empty,
-    preZeroNulls: Map[String, Set[String]] = Map.empty) {
+    index: Map[String, FileStats] = Map.empty) {
 
   private val relevant = filters.filter(f =>
     StatsRange.PrunableOps.contains(f.op) &&
@@ -50,10 +40,9 @@ final class FilePruner(
     * `IS NOT NULL` skips a file proven ALL-null (footer proof only — the
     * MDT's valueCount/nullCount pair can't distinguish all-null under
     * every writer interpretation, so the index never claims it). A
-    * column ABSENT from a file's footer (pre-evolution file) is all-null
-    * by re-injection and must fail open for IS NULL — absence proves
-    * nothing here, both proofs demand the chunk be present in every row
-    * group.
+    * column ABSENT from a file (pre-evolution file) is all-null by
+    * re-injection and must fail open for IS NULL — absence proves
+    * nothing here, both proofs demand the column be present.
     */
   private val nullFilters = filters.filter(f =>
     (f.op == "isnull" || f.op == "isnotnull") && schema.fieldNames.contains(f.field))
@@ -66,71 +55,9 @@ final class FilePruner(
     * pushes IsNotNull alongside almost every predicate, and paying a
     * planning read per file for it alone would tax every filtered query.
     */
-  private val isNullFilters = nullFilters.filter(_.op == "isnull")
+  private val footerWorthy = relevant.nonEmpty || nullFilters.exists(_.op == "isnull")
 
   def isTrivial: Boolean = relevant.isEmpty && nullFilters.isEmpty
-
-  /** Per-file footer facts: merged min/max ranges per column, columns
-    * proven zero-null, and columns proven all-null (every row group's
-    * chunk present with numNulls set).
-    */
-  private final case class FooterFacts(
-      ranges: Map[String, (Comparable[Any], Comparable[Any])],
-      zeroNulls: Set[String],
-      allNulls: Set[String])
-
-  private def fileStats(path: String): FooterFacts = {
-    FilePruner.footerReads.incrementAndGet()
-    val reader = ParquetFileReader.open(
-      HadoopInputFile.fromPath(new Path(path), conf))
-    try {
-      val blocks = reader.getFooter.getBlocks.asScala
-      // FP min/max ordering is writer policy: parquet-mr matches Spark's
-      // NaN-greatest ordering (or drops stats on NaN pages); writers that
-      // EXCLUDE NaN from bounds (parquet-cpp) would let `x > 5` prune a
-      // file whose NaN rows match. Same gate as the aggregate pushdown's
-      // readFacts — trust float/double chunk stats only from parquet-mr.
-      val fpTrusted = Option(reader.getFooter.getFileMetaData.getCreatedBy)
-        .exists(_.contains("parquet-mr"))
-      val acc = scala.collection.mutable.Map.empty[String, (Comparable[Any], Comparable[Any])]
-      val nulls = scala.collection.mutable.Map.empty[String, Long]    // total known nulls
-      val values = scala.collection.mutable.Map.empty[String, Long]   // total values
-      val chunksSeen = scala.collection.mutable.Map.empty[String, Int]
-      val nullsKnown = scala.collection.mutable.Map.empty[String, Boolean]
-      for (block <- blocks; col <- block.getColumns.asScala) {
-        val name = col.getPath.toDotString
-        chunksSeen(name) = chunksSeen.getOrElse(name, 0) + 1
-        values(name) = values.getOrElse(name, 0L) + col.getValueCount
-        val st = col.getStatistics
-        val known = st != null && st.isNumNullsSet
-        nullsKnown(name) = nullsKnown.getOrElse(name, true) && known
-        if (known) nulls(name) = nulls.getOrElse(name, 0L) + st.getNumNulls
-        if (st != null && st.hasNonNullValue) {
-          val mn = normalize(st.genericGetMin(), col.getPrimitiveType)
-          val mx = normalize(st.genericGetMax(), col.getPrimitiveType)
-          val fp = mn.isInstanceOf[java.lang.Float] || mn.isInstanceOf[java.lang.Double]
-          if (mn != null && mx != null && (!fp || fpTrusted)) {
-            acc.get(name) match {
-              case Some((m0, x0)) =>
-                acc(name) = (if (mn.compareTo(m0) < 0) mn else m0,
-                  if (mx.compareTo(x0) > 0) mx else x0)
-              case None => acc(name) = (mn, mx)
-            }
-          }
-        }
-      }
-      val complete = chunksSeen.keySet.toSet.filter(c =>
-        blocks.nonEmpty && chunksSeen(c) == blocks.size && nullsKnown.getOrElse(c, false))
-      FooterFacts(
-        acc.toMap,
-        complete.filter(c => nulls.getOrElse(c, -1L) == 0L),
-        complete.filter(c => values.getOrElse(c, 0L) > 0L &&
-          nulls.getOrElse(c, -1L) == values(c)))
-    } finally reader.close()
-  }
-
-  private def normalize(v: Any, pt: org.apache.parquet.schema.PrimitiveType): Comparable[Any] =
-    FilePruner.normalizeStat(v, pt)
 
   /** Concurrent footer pruning over many candidate files: one small ranged
     * read each, latency-bound on object stores — issue them on a bounded
@@ -143,80 +70,25 @@ final class FilePruner(
     else graft.util.Parallel.map(items, parallelism)(a => (a, shouldInclude(fileOf(a))))
       .collect { case (a, true) => a }
 
-  /** Whether `file` may contain matching rows (fail-open). The footer is
-    * read only when the index maps don't already cover what the filters
-    * need — an index-covered file prunes with ZERO per-file IO.
+  /** Whether `file` may contain matching rows (fail-open). An
+    * index-covered file prunes with ZERO per-file IO.
     */
   def shouldInclude(file: BaseFile): Boolean = {
     if (isTrivial) return true
     try {
-      val needFooter =
-        (relevant.nonEmpty && !preStats.contains(file.fileName)) ||
-          (isNullFilters.nonEmpty && !preZeroNulls.contains(file.fileName))
-      val footer =
-        // Lance base files carry no footer stats — fail open (keep) unless
-        // the MDT column_stats tier pre-supplied ranges for the file
-        if (needFooter && !file.path.endsWith(".lance")) fileStats(file.path)
-        else FooterFacts(Map.empty, Set.empty, Set.empty)
-      val ranges = preStats.getOrElse(file.fileName, footer.ranges)
-      val zero = preZeroNulls.getOrElse(file.fileName, footer.zeroNulls)
-      relevant.forall(f => StatsRange.permits(schema, f, ranges)) &&
-        nullFilters.forall(f =>
-          if (f.op == "isnull") !zero.contains(f.field)
-          else !footer.allNulls.contains(f.field))
+      val stats = index.get(file.fileName).orElse(
+        // Lance base files carry no min/max: fail open (keep)
+        if (footerWorthy && !file.path.endsWith(".lance")) Some(FileStats.read(file.path, conf))
+        else None)
+      stats.forall { s =>
+        relevant.forall(f => StatsRange.permits(schema, f, s.ranges)) &&
+          nullFilters.forall { f =>
+            val c = s.column(f.field).filter(_.present)
+            if (f.op == "isnull") !c.exists(_.nullCount.contains(0L)) else !c.exists(_.allNull)
+          }
+      }
     } catch { case _: Exception => true }
   }
-}
-
-object FilePruner {
-  /** Parquet footers opened for pruning (driver-side, monotonic) — a file
-    * the column_stats tier covers prunes without one.
-    */
-  val footerReads = new java.util.concurrent.atomic.AtomicLong(0L)
-
-  /** Map a raw footer statistic to the representation [[StatsRange.literal]]
-    * produces for the column's Spark type, using the parquet LOGICAL type:
-    * dates stay epoch-day Ints, timestamps normalize to epoch-micros Longs
-    * across MILLIS/MICROS/NANOS units, decimals decode their unscaled
-    * int/long/binary form to a java BigDecimal. Binaries without a
-    * string/decimal annotation (raw bytes, INT96 timestamps) yield null —
-    * fail open, there is no literal form to compare against. Shared with
-    * the aggregate pushdown's footer tier, whose date/decimal/timestamp
-    * MIN/MAX answers use the same representations (epoch-day Int and
-    * epoch-micros Long are ALSO the catalyst-internal forms).
-    */
-  def normalizeStat(v: Any, pt: org.apache.parquet.schema.PrimitiveType): Comparable[Any] = {
-    import org.apache.parquet.schema.LogicalTypeAnnotation
-    import org.apache.parquet.schema.LogicalTypeAnnotation.TimeUnit
-    val ann = pt.getLogicalTypeAnnotation
-    ((ann, v) match {
-      case (dec: LogicalTypeAnnotation.DecimalLogicalTypeAnnotation, _) => v match {
-        case i: java.lang.Integer => java.math.BigDecimal.valueOf(i.longValue(), dec.getScale)
-        case l: java.lang.Long => java.math.BigDecimal.valueOf(l.longValue(), dec.getScale)
-        case b: org.apache.parquet.io.api.Binary =>
-          new java.math.BigDecimal(new java.math.BigInteger(b.getBytes), dec.getScale)
-        case _ => null
-      }
-      case (ts: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation, l: java.lang.Long) =>
-        ts.getUnit match {
-          case TimeUnit.MILLIS => Long.box(Math.multiplyExact(l.longValue(), 1000L))
-          case TimeUnit.MICROS => l
-          // NANOS: fail open. A micros normalization needs direction-aware
-          // rounding (floor for min, ceil for max) to stay conservative,
-          // and Spark may surface NANOS columns as LongType (nanosAsLong),
-          // where the literal is raw nanos and a micros-normalized bound
-          // would compare at the wrong scale — no safe literal form here.
-          case TimeUnit.NANOS => null
-        }
-      case (_: LogicalTypeAnnotation.StringLogicalTypeAnnotation |
-            _: LogicalTypeAnnotation.EnumLogicalTypeAnnotation,
-            b: org.apache.parquet.io.api.Binary) => b.toStringUsingUTF8
-      case (_, _: org.apache.parquet.io.api.Binary) => null
-      case (_, other: Comparable[_]) => other
-      case _ => null
-    }).asInstanceOf[Comparable[Any]]
-  }
-
 }
 
 /** The stats-vs-predicate prune rules shared by [[FilePruner]] (per-file
@@ -359,8 +231,6 @@ object StatsRange {
   * returns false and the caller keeps the exact row-filtering path.
   */
 object CommitRangeStats {
-  private val CommitCol = "_hoodie_commit_time"
-
   def fullyContained(
       files: Seq[BaseFile],
       start: Option[String],
@@ -368,27 +238,15 @@ object CommitRangeStats {
       conf: Configuration,
       parallelism: Int = 16): Boolean =
     try {
-      graft.util.Parallel.map(files, parallelism) { f =>
-        val reader = ParquetFileReader.open(
-          HadoopInputFile.fromPath(new Path(f.path), conf))
-        try {
-          val blocks = reader.getFooter.getBlocks.asScala
-          blocks.nonEmpty && blocks.forall { b =>
-            b.getColumns.asScala.find(_.getPath.toDotString == CommitCol).exists { col =>
-              val st = col.getStatistics
-              st != null && st.hasNonNullValue && st.getNumNulls == 0 && {
-                (st.genericGetMin, st.genericGetMax) match {
-                  case (mn: org.apache.parquet.io.api.Binary, mx: org.apache.parquet.io.api.Binary) =>
-                    val mnS = mn.toStringUsingUTF8
-                    val mxS = mx.toStringUsingUTF8
-                    start.forall(mnS > _) && mxS <= end
-                  case _ => false
-                }
-              }
+      graft.util.Parallel.map(files, parallelism)(f => FileStats.read(f.path, conf)).forall {
+        _.columns.get(graft.core.MetaField.CommitTime).exists(c =>
+          c.nullCount.contains(0L) && c.range.exists { case (mn, mx) =>
+            (mn: Any, mx: Any) match {
+              case (a: String, b: String) => start.forall(a > _) && b <= end
+              case _ => false
             }
-          }
-        } finally reader.close()
-      }.forall(identity)
+          })
+      }
     } catch { case _: Exception => false }
 }
 
@@ -397,34 +255,12 @@ object CommitRangeStats {
   * counts for any file from its on-disk size.
   */
 object FileStatsEstimator {
-  /** (totalRows, rowsPerByte) from one sampled footer; None on failure. */
+  /** Rows per stored byte from one file's footer; None on failure. */
   def sample(path: String, conf: Configuration): Option[Double] =
     try {
-      if (path.endsWith(".lance")) {
-        val lf = graft.lance.LanceFormat.readMetadata(path, conf)
-        val size = new Path(path).getFileSystem(conf).getFileStatus(new Path(path)).getLen
-        return if (size > 0) Some(lf.numRows.toDouble / size) else None
-      }
-      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(path), conf))
-      try {
-        val rows = reader.getFooter.getBlocks.asScala.map(_.getRowCount).sum
-        val size = reader.getFooter.getBlocks.asScala.map(_.getCompressedSize).sum
-        if (size > 0) Some(rows.toDouble / size) else None
-      } finally reader.close()
+      val s = FileStats.read(path, conf)
+      if (s.bytes > 0) s.rowCount.map(_.toDouble / s.bytes) else None
     } catch { case _: Exception => None }
-
-  /** EXACT row count from one parquet footer (the COUNT(*) pushdown's
-    * unit of work — one small ranged read per file, issued in parallel
-    * by the caller). Throws on unreadable footers: an exact count must
-    * never silently fall back to an estimate.
-    */
-  def exactRowCount(path: String, conf: Configuration): Long = {
-    if (path.endsWith(".lance"))
-      return graft.lance.LanceFormat.rowCount(path, conf)
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(path), conf))
-    try reader.getFooter.getBlocks.asScala.map(_.getRowCount).sum
-    finally reader.close()
-  }
 
   /** Estimated (rows, bytes) for a planned slice set — the single source
     * for `HudiTable.tableStats` (C3) and DSv2 `estimateStatistics` (C2).

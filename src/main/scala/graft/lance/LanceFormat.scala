@@ -177,7 +177,7 @@ object LanceFormat {
     def rows: Long = pages.map(_.rows).sum
   }
 
-  final case class LanceFile(columns: Seq[Column], numRows: Long) {
+  final case class LanceFile(columns: Seq[Column], numRows: Long, fileLen: Long) {
     def topLevel: Seq[Column] = columns.filter(_.field.parentId == -1L)
     def childOf(parent: Column): Column =
       columns.find(_.field.parentId == parent.field.id).getOrElse(
@@ -363,7 +363,7 @@ object LanceFormat {
     val fileRows =
       if (numRows > 0) numRows
       else columns.find(_.field.parentId == -1L).map(_.rows).getOrElse(0L)
-    LanceFile(columns, fileRows)
+    LanceFile(columns, fileRows, fileLen)
   }
 
   // ------------------------------------------------------------------

@@ -963,7 +963,7 @@ object HudiQueries {
         |ORDER BY n_nationkey""".stripMargin),
 
     // COUNT(*) over LANCE is metadata-only: the footer-agg tier serves
-    // row counts from the Lance file descriptor (readFacts' lance branch)
+    // row counts from the Lance file descriptor (`FileStats.read`)
     "hudi_lance_count_pushdown" -> QueryDef(
       (s, d) => {
         HudiFixtureBuilder.ensure(s, d)
@@ -1024,7 +1024,7 @@ object HudiQueries {
         |FROM nation ORDER BY n_nationkey""".stripMargin),
 
     // COUNT(col) over nullable LANCE serves from metadata + validity
-    // bitmap popcounts (readFacts' exact per-column null counts) — the
+    // bitmap popcounts (`FileStats.read`'s exact per-column null counts) — the
     // plan-shape guard proves no row scan ran
     "hudi_lance_null_counts" -> QueryDef(
       (s, d) => {
@@ -1189,7 +1189,7 @@ object HudiQueries {
     // --- R2 via the MDT column_stats partition at oracle level: a
     // key-range filter over the range-split COW fixture prunes file
     // groups from ONE indexed metadata read (HudiTable
-    // .columnStatsForPruning short-circuits every footer fetch; the
+    // .columnStats short-circuits every footer fetch; the
     // quartile split makes the skipped groups carry most of the rows, so
     // a pruning regression that reads a wrong group duplicates/loses
     // rows and fails the hash loudly). ------------------------------------
@@ -1738,7 +1738,7 @@ object HudiQueries {
     // Decimal MIN/MAX metadata pushdown: the sidx fixture's
     // DECIMAL(14,2) o_decprice is written INT64-decimal by Spark's
     // non-legacy writer; the footer tier normalizes the chunk stats to
-    // BigDecimal (FilePruner.normalizeStat) and serves the extremes
+    // BigDecimal (FileStats.normalizeStat) and serves the extremes
     // without reading data. The oracle re-derives the same decimal from
     // o_orderkey, so values must match bit-exactly at the fixed scale.
     "hudi_minmax_decimal_pushdown" -> QueryDef(

@@ -798,25 +798,6 @@ object GraftFooterAggScan {
     */
   final case class CountSpec(field: StructField) extends AggSpec
 
-  /** Observability: total parquet footers opened by the aggregate
-    * pushdown planner (driver-side, monotonic). The index fast path's
-    * contract — "zero footer fetches when the MDT covers the plan" — is
-    * asserted against this in `FooterAggSpec`.
-    */
-  val footerReads = new java.util.concurrent.atomic.AtomicLong(0L)
-
-  /** Per-file footer facts for one planned base file. */
-  private final case class FileFacts(
-      rowCount: Long,
-      // column -> (min, max) when usable; absent when the chunk carries
-      // no usable stats; columns that are ALL-NULL in the file map to
-      // None-but-benign via allNull
-      stats: Map[String, (Any, Any)],
-      allNull: Set[String],
-      // column -> PROVEN total null count (every row group's numNulls
-      // set, or the column absent from the file schema -> rowCount)
-      nulls: Map[String, Long] = Map.empty)
-
   /** Plan + serve the aggregates from metadata; None (fall back to a
     * normal scan) on any gap: log-carrying slice, missing stats for a
     * needed column, unparseable partition path for a grouped plan, or
@@ -913,124 +894,70 @@ object GraftFooterAggScan {
         case s: String => org.apache.spark.unsafe.types.UTF8String.fromString(s)
         case other => other
       }
-      def injectPartitionFacts(facts: Seq[FileFacts], paths: Seq[String]): Seq[FileFacts] =
-        if (pvFields.isEmpty) facts
-        else facts.zip(paths).map { case (ff, p) =>
-          val vals = partVals(p)
-          val addStats: Map[String, (Any, Any)] =
-            if (ff.rowCount > 0)
-              partitionValuedMinMax.iterator.map { f =>
-                val v = pathInternal(vals(f)); f -> (v, v)
-              }.toMap
-            else Map.empty
-          ff.copy(stats = ff.stats ++ addStats,
-            nulls = ff.nulls ++ partitionValuedCount.iterator.map(_ -> 0L))
-        }
 
-      // Index-only fast tier: serve EVERY requested aggregate from the
-      // ONE MDT column_stats read — zero footer fetches. COUNT(*) sums
-      // the index's exact per-file row counts (the nullCount==0
-      // soundness rule, ColumnStatsLookup.rowCounts); COUNT(col) also
-      // needs the per-column nullCount; MIN/MAX require TIGHT
-      // (exact-extreme) typed bounds for every planned file — loose
-      // bounds only prune, never answer. Any gap (uncovered file, type
-      // mismatch, loose bound) falls to the footer tier.
-      def indexFacts(files: Vector[graft.fs.BaseFile]): Option[Seq[FileFacts]] = {
-        val tight = hudi.columnStatsTight
-        val counts = hudi.columnStatsRowCounts
-        def typed(v: Any, dt: org.apache.spark.sql.types.DataType): Boolean = dt match {
-          case org.apache.spark.sql.types.IntegerType => v.isInstanceOf[java.lang.Integer]
-          case org.apache.spark.sql.types.LongType => v.isInstanceOf[java.lang.Long]
-          case org.apache.spark.sql.types.FloatType => v.isInstanceOf[java.lang.Float]
-          case org.apache.spark.sql.types.DoubleType => v.isInstanceOf[java.lang.Double]
-          // Date/LocalDateWrapper decode to epoch-day Ints,
-          // Timestamp(Micros)Wrapper to epoch-micros Longs, DecimalWrapper
-          // to java BigDecimals (ColumnStatsIndex.unwrap) — the same
-          // representations the footer tier normalizes to
-          case org.apache.spark.sql.types.DateType => v.isInstanceOf[java.lang.Integer]
-          case org.apache.spark.sql.types.TimestampType |
-               org.apache.spark.sql.types.TimestampNTZType => v.isInstanceOf[java.lang.Long]
-          case _: org.apache.spark.sql.types.DecimalType =>
-            v.isInstanceOf[java.math.BigDecimal]
-          // StringWrapper decodes to java String (ColumnStatsIndex
-          // .unwrap); only TIGHT entries reach here, so the bound is the
-          // exact extreme value
-          case org.apache.spark.sql.types.StringType => v.isInstanceOf[String]
-          case _ => false
-        }
-        val minMaxCovered = needed.isEmpty ||
-          files.forall(bf => tight.get(bf.fileName).exists(m =>
-            needed.forall(c => m.get(c).exists { case (mn, mx) =>
-              typed(mn, fieldType(c)) && typed(mx, fieldType(c)) })))
-        // partition-valued MIN/MAX needs PROVEN per-file row counts too
-        // (the rows>0 gate on each file's injected stat)
-        val needRows = specs.contains(CountStarSpec) || countCols.nonEmpty ||
-          partitionValuedMinMax.nonEmpty
-        val countCovered = !needRows || files.forall(bf => counts.contains(bf.fileName))
-        val idxNulls = hudi.columnStatsNullCounts
-        val nullsCovered = statCountCols.isEmpty || files.forall(bf =>
-          idxNulls.get(bf.fileName).exists(m => statCountCols.forall(m.contains)))
-        if (minMaxCovered && countCovered && nullsCovered)
-          Some(files.map { bf =>
-            // string bounds fold and answer in catalyst-internal form:
-            // UTF8String's byte-wise comparison IS Spark's string order
-            // (java String.compareTo diverges on supplementary chars —
-            // UTF-16 code-unit order vs code-point order)
-            // pathInternal: the one shared parse/decoded → catalyst-
-            // internal mapping (String → UTF8String; index values never
-            // surface LocalDate, which decodes to epoch-day Int already)
-            FileFacts(counts.getOrElse(bf.fileName, 0L),
-              tight.getOrElse(bf.fileName, Map.empty).view.filterKeys(needed)
-                .mapValues { case (mn, mx) => (pathInternal(mn), pathInternal(mx)) }.toMap,
-              Set.empty,
-              idxNulls.getOrElse(bf.fileName, Map.empty).view.filterKeys(statCountCols).toMap)
-          })
-        else None
-      }
-
-      // Footer soundness: MIN/MAX need usable stats or an all-null proof
-      // per file; COUNT(col) needs a proven null count per file.
-      def soundFooterFacts(read: Seq[FileFacts]): Option[Seq[FileFacts]] =
-        if (needed.exists(c =>
-            read.exists(f => !f.stats.contains(c) && !f.allNull.contains(c))) ||
-            statCountCols.exists(c => read.exists(f => !f.nulls.contains(c)))) None
-        else Some(read)
+      // MIN/MAX answers need tight bounds (loose ones only prune); an
+      // all-null file contributes nothing. COUNT(*) needs exact row counts
+      // — partition-valued MIN/MAX too, to skip empty files — and
+      // COUNT(col) proven null counts.
+      val needRows = specs.contains(CountStarSpec) || countCols.nonEmpty ||
+        partitionValuedMinMax.nonEmpty
+      def answers(s: graft.fs.FileStats): Boolean =
+        (!needRows || s.rowCount.isDefined) &&
+          statCountCols.forall(c => s.column(c).exists(_.nullCount.isDefined)) &&
+          needed.forall(c => s.column(c).exists(cs => cs.allNull || cs.tight && cs.range.isDefined))
 
       // MIN/MAX values fold in the normalized stat representation and
       // convert to catalyst-internal at the end: epoch-day Int and
       // epoch-micros Long ARE internal already; BigDecimal wraps to a
       // Decimal at the column's declared precision/scale — a value that
-      // doesn't fit (shouldn't happen for stats of stored values) throws
-      // and rejects the whole pushdown.
-      def toInternal(v: Any, dt: org.apache.spark.sql.types.DataType): Any = (v, dt) match {
-        case (null, _) => null
-        case (bd: java.math.BigDecimal, d: org.apache.spark.sql.types.DecimalType) =>
-          val dec = org.apache.spark.sql.types.Decimal(bd)
-          if (!dec.changePrecision(d.precision, d.scale))
-            throw new IllegalStateException(s"decimal stat $bd exceeds $d")
-          dec
-        case _ => v
+      // doesn't fit (shouldn't happen for stats of stored values) throws.
+      // The Literal checks the value's class against the column type:
+      // stats of another type (an evolved column) throw too, and the
+      // tier that produced them stands down.
+      def toInternal(v: Any, dt: org.apache.spark.sql.types.DataType): Any = {
+        val internal = (v, dt) match {
+          case (bd: java.math.BigDecimal, d: org.apache.spark.sql.types.DecimalType) =>
+            val dec = org.apache.spark.sql.types.Decimal(bd)
+            if (!dec.changePrecision(d.precision, d.scale))
+              throw new IllegalStateException(s"decimal stat $bd exceeds $d")
+            dec
+          case _ => v
+        }
+        if (internal != null) org.apache.spark.sql.catalyst.expressions.Literal(internal, dt)
+        internal
       }
-      def foldValues(fs: Seq[FileFacts]): Seq[Any] = specs.map {
-        case CountStarSpec => fs.map(_.rowCount).sum
-        case CountSpec(f) => fs.map(ff => ff.rowCount - ff.nulls(f.name)).sum
-        case MinSpec(f) => toInternal(fold(fs, f.name, min = true), f.dataType)
-        case MaxSpec(f) => toInternal(fold(fs, f.name, min = false), f.dataType)
-      }
-
-      /** Aggregate values over one (partitionPath, baseFile) set, index
-        * tier first; partition-valued facts injected after either tier.
-        * None on any coverage gap.
-        */
-      def aggValues(files: Vector[(String, graft.fs.BaseFile)]): Option[Seq[Any]] =
-        indexFacts(files.map(_._2))
-          .orElse {
-            if (stringNeeded.nonEmpty) None // index-tier-only, never footers
-            else soundFooterFacts(graft.util.Parallel.map(files.map(_._2), 16) { bf =>
-              readFacts(bf.path, hudi.hadoopConf, needed, statCountCols)
-            })
+      def rowsOf(s: graft.fs.FileStats): Long = s.rowCount.getOrElse(0L)
+      // (min, max) per file with a value; a partition-valued field's
+      // path value is every row's value, so an empty file has none.
+      // String bounds fold and answer as UTF8String (pathInternal), whose
+      // byte-wise comparison IS Spark's string order (java
+      // String.compareTo diverges on supplementary chars).
+      def extremes(files: Seq[(String, graft.fs.FileStats)], c: String): Seq[(Any, Any)] =
+        if (partitionValuedMinMax(c))
+          files.collect { case (p, s) if rowsOf(s) > 0 =>
+            val v = pathInternal(partVals(p)(c)); (v, v)
           }
-          .map(facts => foldValues(injectPartitionFacts(facts, files.map(_._1))))
+        else files.flatMap { case (_, s) =>
+          s.column(c).filterNot(_.allNull).flatMap(_.range)
+            .map { case (mn, mx) => (pathInternal(mn), pathInternal(mx)) }
+        }
+      def foldValues(files: Seq[(String, graft.fs.FileStats)]): Seq[Any] = specs.map {
+        case CountStarSpec => files.map(f => rowsOf(f._2)).sum
+        case CountSpec(f) if partitionValuedCount(f.name) => files.map(f => rowsOf(f._2)).sum
+        case CountSpec(f) =>
+          files.map { case (_, s) => rowsOf(s) - s.column(f.name).flatMap(_.nullCount).get }.sum
+        case MinSpec(f) => toInternal(fold(extremes(files, f.name).map(_._1), min = true), f.dataType)
+        case MaxSpec(f) => toInternal(fold(extremes(files, f.name).map(_._2), min = false), f.dataType)
+      }
+      /** One group's aggregate values from one stats tier; None on any
+        * coverage gap.
+        */
+      def values(
+          files: Vector[(String, graft.fs.BaseFile)],
+          tier: graft.fs.BaseFile => Option[graft.fs.FileStats]): Option[Seq[Any]] = {
+        val got = files.map { case (p, bf) => tier(bf).filter(answers).map(p -> _) }
+        if (got.forall(_.isDefined)) scala.util.Try(foldValues(got.flatten)).toOption else None
+      }
 
       val aggFields = specs.zipWithIndex.map {
         case (CountStarSpec, i) =>
@@ -1041,192 +968,77 @@ object GraftFooterAggScan {
         case (MaxSpec(f), i) => StructField(s"agg_$i", f.dataType, nullable = true)
       }
 
-      if (groupBy.isEmpty) {
-        aggValues(slices.flatMap(sl => sl.baseFile.map(sl.partitionPath -> _)))
-          .map(values =>
-            new GraftFooterAggScan(StructType(aggFields),
-              Array(org.apache.spark.sql.catalyst.InternalRow.fromSeq(values))))
-      } else {
-        // one row per distinct tuple of the grouped partition fields'
-        // PARSED path values (grouping on a subset of a multi-field
-        // partitioning merges the matching partitions' files); any
-        // unparseable path or missing field rejects the whole plan.
-        // Path values must equal COLUMN values for the rows to be
-        // correct as final answers: a timestamp-keygen table's paths are
-        // a FORMATTED rendering of the source column (date buckets, not
-        // values), and the hive default-partition sentinel stands in for
-        // NULL — both reject the pushdown.
-        if (graft.fs.TimestampKeyGen.fromConfig(hudi.config).isDefined) return None
-        val groupSchema = groupBy.map(g =>
-          hudi.tableSchema.fields.find(_.name == g).getOrElse(return None))
-        val converters = groupSchema.map(f =>
-          org.apache.spark.sql.catalyst.CatalystTypeConverters
-            .createToCatalystConverter(f.dataType))
-        val parsed: Vector[(Seq[Any], graft.fs.FileSlice)] = slices.map { sl =>
-          val vals = pruner.parseSegments(sl.partitionPath).getOrElse(return None)
-          (groupBy.map { g =>
-            val v = vals.getOrElse(g, return None)
-            // null-partition sentinels are NOT column values: hive-style
-            // writes __HIVE_DEFAULT_PARTITION__, non-hive writes the
-            // PartitionPathEncodeUtils DEFAULT_PARTITION_PATH "default"
-            // (and older writers an empty segment) for null/empty values
-            // — serving any of them, or the v4+ ambiguous 'default', as
-            // a group literal under complete pushdown would be a
-            // silently wrong final answer
-            if (GraftScanBuilder.isUntrustedPathValue(v, hudi.config)) return None
-            v
-          }, sl)
-        }
-        // index coverage decides per group, but footer reads batch into
-        // ONE parallel sweep across every uncovered group — per-group
-        // sweeps would serialize object-store round-trips by partition
-        // count at pushdown time
-        val groups: Seq[(Seq[Any], Vector[(String, graft.fs.BaseFile)])] =
-          parsed.groupBy(_._1).toSeq.map { case (k, g) =>
-            (k, g.map(_._2).flatMap(sl => sl.baseFile.map(sl.partitionPath -> _)))
+      // a global aggregate is one group keyed by no field
+      val (groupSchema, groups): (Seq[StructField],
+          Seq[(Seq[Any], Vector[(String, graft.fs.BaseFile)])]) =
+        if (groupBy.isEmpty)
+          (Nil, Seq(Nil -> slices.flatMap(sl => sl.baseFile.map(sl.partitionPath -> _))))
+        else {
+          // one row per distinct tuple of the grouped partition fields'
+          // PARSED path values (grouping on a subset of a multi-field
+          // partitioning merges the matching partitions' files); any
+          // unparseable path or missing field rejects the whole plan.
+          // Path values must equal COLUMN values for the rows to be
+          // correct as final answers: a timestamp-keygen table's paths are
+          // a FORMATTED rendering of the source column (date buckets, not
+          // values), and the hive default-partition sentinel stands in for
+          // NULL — both reject the pushdown.
+          if (graft.fs.TimestampKeyGen.fromConfig(hudi.config).isDefined) return None
+          val parsed: Vector[(Seq[Any], graft.fs.FileSlice)] = slices.map { sl =>
+            val vals = pruner.parseSegments(sl.partitionPath).getOrElse(return None)
+            (groupBy.map { g =>
+              val v = vals.getOrElse(g, return None)
+              // null-partition sentinels are NOT column values: hive-style
+              // writes __HIVE_DEFAULT_PARTITION__, non-hive writes the
+              // PartitionPathEncodeUtils DEFAULT_PARTITION_PATH "default"
+              // (and older writers an empty segment) for null/empty values
+              // — serving any of them, or the v4+ ambiguous 'default', as
+              // a group literal under complete pushdown would be a
+              // silently wrong final answer
+              if (GraftScanBuilder.isUntrustedPathValue(v, hudi.config)) return None
+              v
+            }, sl)
           }
-        val idxByKey: Map[Seq[Any], Option[Seq[FileFacts]]] =
-          groups.map { case (k, fs) => k -> indexFacts(fs.map(_._2)) }.toMap
-        val uncovered = groups.filter { case (k, _) => idxByKey(k).isEmpty }
-        // string extremes never come from footers: any index-uncovered
-        // group rejects the whole grouped pushdown
-        if (stringNeeded.nonEmpty && uncovered.nonEmpty) return None
-        val footerByPath: Map[String, FileFacts] = {
-          val files = uncovered.flatMap(_._2.map(_._2))
-          graft.util.Parallel.map(files, 16) { bf =>
-            bf.path -> readFacts(bf.path, hudi.hadoopConf, needed, statCountCols)
-          }.toMap
+          (groupBy.map(g => hudi.tableSchema.fields.find(_.name == g).getOrElse(return None)),
+            parsed.groupBy(_._1).toSeq.map { case (k, g) =>
+              (k, g.map(_._2).flatMap(sl => sl.baseFile.map(sl.partitionPath -> _)))
+            })
         }
-        val rows = groups.map { case (key, fs) =>
-          val facts = idxByKey(key)
-            .orElse(soundFooterFacts(fs.map { case (_, bf) => footerByPath(bf.path) }))
-            .getOrElse(return None)
-          val values = foldValues(injectPartitionFacts(facts, fs.map(_._1)))
-          val groupInternal = key.zip(converters).map { case (v, conv) =>
-            // partition paths encode dates as LocalDate, which the
-            // converter for DateType accepts directly
-            conv(v)
-          }
-          org.apache.spark.sql.catalyst.InternalRow.fromSeq(groupInternal ++ values)
-        }
-        // complete-pushdown row contract: group columns first, then the
-        // aggregate columns, one row per group
-        Some(new GraftFooterAggScan(
-          StructType(groupSchema.map(f => f.copy(nullable = true)) ++ aggFields),
-          rows.toArray))
+
+      // Index tier first: a group the ONE MDT column_stats read answers
+      // opens no footer. Footers serve the rest, batched into ONE
+      // parallel sweep across every uncovered group — per-group sweeps
+      // would serialize object-store round-trips by partition count at
+      // pushdown time.
+      val index = hudi.columnStats
+      val fromIndex = groups.map { case (k, fs) => k -> values(fs, bf => index.get(bf.fileName)) }.toMap
+      val uncovered = groups.filter { case (k, _) => fromIndex(k).isEmpty }
+      if (stringNeeded.nonEmpty && uncovered.nonEmpty) return None
+      val footers: Map[String, graft.fs.FileStats] =
+        graft.util.Parallel.map(uncovered.flatMap(_._2.map(_._2)), 16) { bf =>
+          bf.path -> graft.fs.FileStats.read(bf.path, hudi.hadoopConf, statCountCols)
+        }.toMap
+      val converters = groupSchema.map(f =>
+        org.apache.spark.sql.catalyst.CatalystTypeConverters.createToCatalystConverter(f.dataType))
+      val rows = groups.map { case (key, fs) =>
+        val vs = fromIndex(key).orElse(values(fs, bf => footers.get(bf.path))).getOrElse(return None)
+        // partition paths encode dates as LocalDate, which the converter
+        // for DateType accepts directly
+        org.apache.spark.sql.catalyst.InternalRow.fromSeq(
+          key.zip(converters).map { case (v, conv) => conv(v) } ++ vs)
       }
+      // complete-pushdown row contract: group columns first, then the
+      // aggregate columns, one row per group
+      Some(new GraftFooterAggScan(
+        StructType(groupSchema.map(f => f.copy(nullable = true)) ++ aggFields), rows.toArray))
     } catch { case scala.util.control.NonFatal(_) => None }
 
-  private def fold(facts: Seq[FileFacts], col: String, min: Boolean): Any = {
-    val vs = facts.flatMap(_.stats.get(col).map(s => if (min) s._1 else s._2))
+  private def fold(vs: Seq[Any], min: Boolean): Any =
     if (vs.isEmpty) null // every file all-null -> SQL MIN/MAX = NULL
     else vs.reduce { (a, b) =>
       val c = a.asInstanceOf[Comparable[Any]].compareTo(b)
       if ((min && c <= 0) || (!min && c >= 0)) a else b
     }
-  }
-
-  private def readFacts(
-      path: String,
-      conf: org.apache.hadoop.conf.Configuration,
-      needed: Set[String],
-      countCols: Set[String] = Set.empty): FileFacts = {
-    footerReads.incrementAndGet()
-    if (path.endsWith(".lance")) {
-      // Lance metadata tier: exact row counts from the file descriptor
-      // (COUNT(*) pushdown works without parquet). Null proofs (r12):
-      // per-column EXACT null counts from the page encodings — all-valid
-      // pages prove 0, all-null pages their row count, some-null pages
-      // the popcount complement of their validity bitmap (a ceil(n/8)-
-      // byte ranged read, still metadata-scale). A column absent from
-      // the file is all-null by the widen contract. Unknown encodings
-      // still throw inside fileNullCounts -> tryPlan's catch declines
-      // the pushdown. Lance files carry no min/max stats — those columns
-      // stay unproven and the MIN/MAX pushdown rejects (scan stays
-      // authoritative).
-      val (lf, present) =
-        graft.lance.LanceFormat.fileNullCounts(path, conf, countCols)
-      val names = lf.topLevel.map(_.field.name).toSet
-      val nulls = countCols.iterator
-        .map(c => c -> present.getOrElse(c, if (names.contains(c)) 0L else lf.numRows)).toMap
-      return FileFacts(lf.numRows, Map.empty, needed.filterNot(names.contains), nulls)
-    }
-    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new org.apache.hadoop.fs.Path(path), conf))
-    try {
-      val blocks = reader.getFooter.getBlocks.asScala
-      val rowCount = blocks.map(_.getRowCount).sum
-      // COUNT(col) null proofs: numNulls must be set in EVERY row group's
-      // chunk; a column absent from the file's schema entirely is
-      // all-null by definition (pre-evolution file)
-      val nullTotals = scala.collection.mutable.Map.empty[String, Long]
-      val nullChunks = scala.collection.mutable.Map.empty[String, Int]
-      val nullKnown = scala.collection.mutable.Map.empty[String, Boolean]
-      if (countCols.nonEmpty)
-        for (block <- blocks; colMeta <- block.getColumns.asScala) {
-          val name = colMeta.getPath.toDotString
-          if (countCols.contains(name)) {
-            nullChunks(name) = nullChunks.getOrElse(name, 0) + 1
-            val st = colMeta.getStatistics
-            val known = st != null && st.isNumNullsSet
-            nullKnown(name) = nullKnown.getOrElse(name, true) && known
-            if (known) nullTotals(name) = nullTotals.getOrElse(name, 0L) + st.getNumNulls
-          }
-        }
-      val nulls: Map[String, Long] = countCols.iterator.flatMap { c =>
-        val seen = nullChunks.getOrElse(c, 0)
-        if (seen == 0) Some(c -> rowCount) // column not in this file
-        else if (seen == blocks.size && nullKnown.getOrElse(c, false))
-          Some(c -> nullTotals(c))
-        else None // unproven: reject the pushdown for this file
-      }.toMap
-      // FP min/max ordering is writer policy: parquet-mr orders NaN
-      // greatest (matching Spark) or drops stats entirely on NaN pages;
-      // other writers (parquet-cpp) may EXCLUDE NaN from min/max, which
-      // would answer MAX with a non-NaN value where a real scan returns
-      // NaN. Trust float/double chunk stats only from parquet-mr.
-      val fpTrusted = Option(reader.getFooter.getFileMetaData.getCreatedBy)
-        .exists(_.contains("parquet-mr"))
-      val acc = scala.collection.mutable.Map.empty[String, (Any, Any)]
-      val sawValue = scala.collection.mutable.Set.empty[String]
-      val sawUnusable = scala.collection.mutable.Set.empty[String]
-      for (block <- blocks; colMeta <- block.getColumns.asScala) {
-        val name = colMeta.getPath.toDotString
-        if (needed.contains(name)) {
-          val st = colMeta.getStatistics
-          if (st != null && st.hasNonNullValue) {
-            sawValue += name
-            val fp = st.genericGetMin().isInstanceOf[java.lang.Float] ||
-              st.genericGetMin().isInstanceOf[java.lang.Double]
-            // logical-type normalization (shared with R2 pruning):
-            // date → epoch-day Int, timestamp → epoch-micros Long (NANOS
-            // fails to null → unusable), decimal → java BigDecimal; an
-            // un-normalizable stat (raw binary, INT96) rejects the column
-            if (fp && !fpTrusted) sawUnusable += name
-            else (graft.fs.FilePruner.normalizeStat(st.genericGetMin(), colMeta.getPrimitiveType),
-                graft.fs.FilePruner.normalizeStat(st.genericGetMax(), colMeta.getPrimitiveType)) match {
-              case (mnA, mxA) if mnA != null && mxA != null =>
-                val m0 = acc.get(name)
-                acc(name) = m0 match {
-                  case Some((pm, px)) =>
-                    (if (mnA.compareTo(pm) < 0) mnA else pm,
-                      if (mxA.compareTo(px) > 0) mxA else px)
-                  case None => (mnA, mxA)
-                }
-              case _ => sawUnusable += name
-            }
-          } else if (st == null || !st.isNumNullsSet || st.getNumNulls != block.getRowCount) {
-            // can't prove the chunk is all-null -> stats unusable
-            sawUnusable += name
-          }
-        }
-      }
-      val usable = acc.view.filterKeys(k => !sawUnusable.contains(k)).toMap
-      val allNull = needed.filterNot(c => sawValue.contains(c) || sawUnusable.contains(c))
-      FileFacts(rowCount, usable, allNull, nulls)
-    } finally reader.close()
-  }
 }
 
 object GraftScan {
@@ -1463,12 +1275,7 @@ class GraftScan(
       // IMMUTABLE files, so a data-column predicate that disproves a
       // base file skips it at any commit range (the reference prunes
       // only snapshots, read_options.rs:75-80 — this is strictly more).
-      // Same base-only safety gate as the snapshot branch.
-      if (planned1.forall(s => !s.hasLogFiles && s.baseFile.isDefined) && simpleFilters.nonEmpty) {
-        val filePruner = new graft.fs.FilePruner(simpleFilters, hudi.tableSchema,
-          hudi.hadoopConf, hudi.columnStatsForPruning, hudi.columnStatsZeroNulls)
-        filePruner.filterIncluded(planned1)(_.baseFile.get).toVector
-      } else planned1
+      filePruned(planned1)
     } else asOf.orElse(hudi.timeline.latestCommitTimestamp) match {
       case None => Vector.empty
       case Some(ts) =>
@@ -1499,16 +1306,20 @@ class GraftScan(
           else if (asOfIndexGate(ts))
             bloomRestricted(indexRestricted(keyRestricted(planned1, asOf), asOf), asOf)
           else planned1
-        // R2: footer min/max file skipping — only when every planned slice
-        // is base-file-only (log files can resurrect out-of-range values,
-        // the reference's safety gate at table/mod.rs:486-491)
-        if (planned.forall(s => !s.hasLogFiles && s.baseFile.isDefined) && simpleFilters.nonEmpty) {
-          val filePruner = new graft.fs.FilePruner(simpleFilters, hudi.tableSchema,
-            hudi.hadoopConf, hudi.columnStatsForPruning, hudi.columnStatsZeroNulls)
-          filePruner.filterIncluded(planned)(_.baseFile.get).toVector
-        } else planned
+        filePruned(planned)
     }
   }
+
+  /** R2: file skipping from index or footer stats — only when every
+    * planned slice is base-file-only (log files can resurrect
+    * out-of-range values, the reference's safety gate at
+    * table/mod.rs:486-491).
+    */
+  private def filePruned(planned: Vector[FileSlice]): Vector[FileSlice] =
+    if (simpleFilters.nonEmpty && planned.forall(s => !s.hasLogFiles && s.baseFile.isDefined))
+      new graft.fs.FilePruner(simpleFilters, hudi.tableSchema, hudi.hadoopConf, hudi.columnStats)
+        .filterIncluded(planned)(_.baseFile.get).toVector
+    else planned
 
   /** Needle-in-haystack planning from the MDT secondary index: an
     * equality/IN predicate on a secondary-indexed column resolves to

@@ -35,75 +35,41 @@ final case class ColumnStatsLookup(
     entries: Vector[ColumnStatEntry]
 ) {
 
-  /** fileName → columnName → (min, max) with both bounds present and
-    * mutually comparable — the shape [[graft.fs.FilePruner]] consumes.
-    * Loose (non-tight) bounds are still conservative ranges, so they
-    * prune safely; entries lacking either bound are dropped (fail-open
-    * at the pruner).
+  /** fileName → the file's statistics as the index records them, the
+    * shape [[graft.fs.FilePruner]] and the aggregate pushdown consume.
+    * A range needs both bounds present and mutually comparable (else the
+    * pruner fails open); loose (non-tight) bounds are still conservative,
+    * so they prune, but only tight ones answer. The index never claims a
+    * column all-null: its valueCount/nullCount pair can't tell all-null
+    * apart under every writer interpretation.
+    *
+    * The row count is exact when some column of the file has
+    * `nullCount == 0`: its `valueCount` then equals the row count under
+    * EITHER public interpretation of valueCount (parquet's chunk value
+    * count includes nulls — verified == footer row count on the
+    * reference's real v8 trips bytes — and a nulls-excluded writer agrees
+    * exactly when the column has no nulls). On populated-meta tables
+    * `_hoodie_record_key` is never null, so coverage is the norm. When
+    * qualifying columns DISAGREE the count stays unproven — counts are
+    * answers, never guesses.
     */
-  lazy val pruningStats: Map[String, Map[String, (Comparable[Any], Comparable[Any])]] =
-    statsMap(entries)
+  lazy val files: Map[String, graft.fs.FileStats] =
+    entries.groupBy(_.fileName).view.mapValues { es =>
+      val counts = es.filter(_.nullCount.contains(0L)).flatMap(_.valueCount).distinct
+      graft.fs.FileStats(
+        if (counts.size == 1) counts.headOption else None,
+        bytes = 0L,
+        es.map(e => e.columnName ->
+          graft.fs.ColumnStats(range(e), e.isTightBound, e.nullCount, allNull = false, present = true)).toMap,
+        complete = false)
+    }.toMap
 
-  /** Like [[pruningStats]] but ONLY tight-bound entries — bounds that
-    * are exact extremes, usable as ANSWERS (MIN/MAX pushdown), not just
-    * conservative ranges. Loose bounds prune safely but may lie outside
-    * the true extremes, so they must never be served as results.
-    */
-  lazy val tightStats: Map[String, Map[String, (Comparable[Any], Comparable[Any])]] =
-    statsMap(entries.filter(_.isTightBound))
-
-  /** fileName → EXACT row count, derivable when some column of the file
-    * has `nullCount == 0`: its `valueCount` then equals the row count
-    * under EITHER public interpretation of valueCount (parquet's
-    * chunk value count includes nulls — verified == footer row count on
-    * the reference's real v8 trips bytes — and a nulls-excluded writer
-    * agrees exactly when the column has no nulls). On populated-meta
-    * tables `_hoodie_record_key` is never null, so coverage is the norm.
-    * Files whose qualifying columns DISAGREE are dropped (fail-open to
-    * the footer path) — counts are answers, never guesses.
-    */
-  lazy val rowCounts: Map[String, Long] =
-    entries.iterator
-      .filter(e => e.nullCount.contains(0L) && e.valueCount.isDefined)
-      .map(e => e.fileName -> e.valueCount.get)
-      .toVector.groupBy(_._1)
-      .collect { case (f, vs) if vs.map(_._2).distinct.size == 1 => f -> vs.head._2 }
-
-  /** fileName → columns with PROVEN zero nulls (`nullCount == 0` —
-    * unambiguous under every public valueCount interpretation). Feeds
-    * `IS NULL` pruning: such a file cannot contain a matching row. A
-    * file appears as a key even when no column qualifies, marking it
-    * index-COVERED so the pruner skips the footer read for it.
-    */
-  lazy val zeroNullCols: Map[String, Set[String]] =
-    entries.groupBy(_.fileName).view.mapValues(es =>
-      es.filter(_.nullCount.contains(0L)).map(_.columnName).toSet).toMap
-
-  /** fileName → columnName → nullCount where recorded — with
-    * [[rowCounts]] this serves `COUNT(col)` pushdown as
-    * rows − nulls per file.
-    */
-  lazy val nullCounts: Map[String, Map[String, Long]] =
-    entries.groupBy(_.fileName).view.mapValues(es =>
-      es.flatMap(e => e.nullCount.map(e.columnName -> _)).toMap).toMap
-
-  private def statsMap(
-      es: Vector[ColumnStatEntry]
-  ): Map[String, Map[String, (Comparable[Any], Comparable[Any])]] =
-    es.iterator
-      .flatMap { e =>
-        (e.min, e.max) match {
-          case (Some(mn: Comparable[_]), Some(mx: Comparable[_]))
-              if mn.getClass == mx.getClass =>
-            Some((e.fileName, e.columnName,
-              mn.asInstanceOf[Comparable[Any]], mx.asInstanceOf[Comparable[Any]]))
-          case _ => None
-        }
-      }
-      .toVector
-      .groupBy(_._1)
-      .view.mapValues(_.map(t => t._2 -> (t._3, t._4)).toMap)
-      .toMap
+  private def range(e: ColumnStatEntry): Option[(Comparable[Any], Comparable[Any])] =
+    (e.min, e.max) match {
+      case (Some(mn: Comparable[_]), Some(mx: Comparable[_])) if mn.getClass == mx.getClass =>
+        Some((mn.asInstanceOf[Comparable[Any]], mx.asInstanceOf[Comparable[Any]]))
+      case _ => None
+    }
 }
 
 /** Reader for the metadata table's `column_stats` partition: per
@@ -303,5 +269,10 @@ object PartitionStatsIndex {
       dataTableBase: String,
       hadoopConf: Configuration
   ): Map[String, Map[String, (Comparable[Any], Comparable[Any])]] =
-    ColumnStatsIndex.load(dataTableBase, hadoopConf, PartitionName).pruningStats
+    ranges(ColumnStatsIndex.load(dataTableBase, hadoopConf, PartitionName))
+
+  /** A partition_stats lookup's ranges per partition path. */
+  private[graft] def ranges(
+      l: ColumnStatsLookup): Map[String, Map[String, (Comparable[Any], Comparable[Any])]] =
+    l.files.view.mapValues(_.ranges).toMap
 }

@@ -92,47 +92,17 @@ final class HudiTable(
     */
   private def fingerprint: String = s"${timeline.signature}|props=$propsStatus"
 
-  /** Data-skipping ranges from the MDT `column_stats` partition when the
-    * table advertises it (fileName → column → (min, max)), loaded once
+  /** Per-file statistics from the MDT `column_stats` partition when the
+    * table advertises it (fileName → [[graft.fs.FileStats]]), loaded once
     * per table generation (the open-table cache keeps the instance while
-    * the timeline is unchanged). Empty — footer fallback at the pruner —
-    * when absent or unreadable.
+    * the timeline is unchanged). Empty — footers serve instead — when
+    * absent or unreadable.
     */
-  private lazy val columnStatsLookup: Option[ColumnStatsLookup] =
-    if (!ColumnStatsIndex.isAvailable(config)) None
+  lazy val columnStats: Map[String, graft.fs.FileStats] =
+    if (!ColumnStatsIndex.isAvailable(config)) Map.empty
     else
-      try Some(ColumnStatsIndex.load(basePath, hadoopConf))
-      catch { case scala.util.control.NonFatal(_) => None }
-
-  lazy val columnStatsForPruning: Map[String, Map[String, (Comparable[Any], Comparable[Any])]] =
-    columnStatsLookup.map(_.pruningStats).getOrElse(Map.empty)
-
-  /** Tight-bound index ranges only — exact extremes a MIN/MAX pushdown
-    * may serve as ANSWERS (loose bounds prune but never answer).
-    */
-  lazy val columnStatsTight: Map[String, Map[String, (Comparable[Any], Comparable[Any])]] =
-    columnStatsLookup.map(_.tightStats).getOrElse(Map.empty)
-
-  /** Exact per-file row counts from the index (fileName → rows) — lets
-    * `COUNT(*)` pushdown answer from the ONE MDT read instead of a
-    * footer fetch per planned file (see [[ColumnStatsLookup.rowCounts]]
-    * for the exactness argument). Empty when the index is absent.
-    */
-  lazy val columnStatsRowCounts: Map[String, Long] =
-    columnStatsLookup.map(_.rowCounts).getOrElse(Map.empty)
-
-  /** fileName → zero-null-proven columns from the index — `IS NULL`
-    * file pruning without footer reads (see
-    * [[ColumnStatsLookup.zeroNullCols]]).
-    */
-  lazy val columnStatsZeroNulls: Map[String, Set[String]] =
-    columnStatsLookup.map(_.zeroNullCols).getOrElse(Map.empty)
-
-  /** fileName → column → nullCount from the index — `COUNT(col)`
-    * pushdown (rows − nulls) without footer reads.
-    */
-  lazy val columnStatsNullCounts: Map[String, Map[String, Long]] =
-    columnStatsLookup.map(_.nullCounts).getOrElse(Map.empty)
+      try ColumnStatsIndex.load(basePath, hadoopConf).files
+      catch { case scala.util.control.NonFatal(_) => Map.empty }
 
   /** Partition-level ranges from the MDT `partition_stats` partition
     * (partitionPath → column → (min, max)) when advertised — feeds
@@ -254,17 +224,14 @@ final class HudiTable(
       val fresh = paths.filterNot(longWidenCache.containsKey)
       graft.util.Parallel.map(fresh, 16) { path =>
         val verdict: Boolean = try {
-          val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-            org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-              new org.apache.hadoop.fs.Path(path), hadoopConf))
-          try {
-            val msg = reader.getFooter.getFileMetaData.getSchema
+          graft.fs.FileStats.footer(path, hadoopConf) { footer =>
+            val msg = footer.getFileMetaData.getSchema
             longWidenFields.forall(f => msg.containsField(f) && {
               val t = msg.getType(Seq(f): _*)
               t.isPrimitive && t.asPrimitiveType().getPrimitiveTypeName ==
                 org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.INT64
             })
-          } finally reader.close()
+          }
         } catch { case scala.util.control.NonFatal(_) => false }
         longWidenCache.put(path, verdict)
       }
@@ -346,7 +313,7 @@ final class HudiTable(
             basePath, hadoopConf, PartitionStatsIndex.PartitionName, Some(ts))
           if (lookup.asOf < dataAt) base
           else new graft.fs.StatsPartitionPruner(
-            base, dataFilters, tableSchema, lookup.pruningStats)
+            base, dataFilters, tableSchema, PartitionStatsIndex.ranges(lookup))
       }
     } catch { case scala.util.control.NonFatal(_) => base }
   }

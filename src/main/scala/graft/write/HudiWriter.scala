@@ -1094,17 +1094,13 @@ object HudiWriter {
       rows: RDD[Loc],
       dataSchema: StructType,
       deletes: Boolean): Seq[LogWrite] = {
-    // per touched group: (partition, log name ts, next version) — v6 logs
-    // name the slice's BASE instant (the association key FileGroup
-    // .assemble anchors on), v8+ their OWN instant
-    val v8 = t.config.tableVersion >= 8
+    // per touched group: (partition, log name)
     val instant = c.instant
     val naming = c.slices.map { sl =>
-      sl.fileId -> ((sl.partitionPath,
-        if (v8) instant else sl.commitTimestamp,
-        sl.logFiles.map(_.version).maxOption.getOrElse(0) + 1))
+      sl.fileId ->
+        ((sl.partitionPath, graft.fs.LogFile.nextName(sl, instant, t.config.tableVersion)))
     }.toMap
-    val (basePath, token, conf) = (c.basePath, Token, c.conf)
+    val (basePath, conf) = (c.basePath, c.conf)
     // full meta-prefixed record rows, stamped with the NEW instant so the
     // MOR merge's (ordering, commit-time) comparison picks them
     val rowStruct = StructType(Seq(MetaField.CommitTime, MetaField.CommitSeqno,
@@ -1130,11 +1126,10 @@ object HudiWriter {
         lazy val avro = graft.log.SparkToAvro.toAvroSchema(rowStruct, "graft_mor_record")
         val storage = Storage(conf.value.value)
         it.map(_._2).toVector.groupBy(_.fid).iterator.map { case (fid, rs0) =>
-          val (part, nameTs, version) = naming.getOrElse(fid,
+          val (part, name) = naming.getOrElse(fid,
             throw new IllegalStateException(
               s"hudi-graft: file group $fid (from $prober) has no slice as of " +
                 s"this write — $prober points at uncommitted state"))
-          val name = s".${fid}_$nameTs.log.${version}_$token"
           val dir = if (part.isEmpty) new Path(basePath) else new Path(basePath, part)
           val rs = rs0.sortBy(_.key)
           val out = storage.create(new Path(dir, name), overwrite = false)

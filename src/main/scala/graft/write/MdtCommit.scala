@@ -1,7 +1,7 @@
 package graft.write
 
 import graft.core.Timeline
-import graft.fs.FileSlice
+import graft.fs.{FileSlice, LogFile}
 import graft.io.Storage
 import graft.table.{ColumnStatsIndex, FilesPartitionRecord, MetadataTable, RecordIndex}
 import org.apache.avro.Schema
@@ -64,18 +64,14 @@ final class MdtCommit(val dataTableBase: String, conf: Configuration, val instan
 
   /** The `partition_stats` bounds as of the MDT's latest commit. */
   def partitionStats: Map[String, Map[String, (Comparable[Any], Comparable[Any])]] =
-    ColumnStatsIndex.load(mdt, graft.table.PartitionStatsIndex.PartitionName, conf).pruningStats
+    graft.table.PartitionStatsIndex.ranges(
+      ColumnStatsIndex.load(mdt, graft.table.PartitionStatsIndex.PartitionName, conf))
 
-  /** The next log of `slice` in `partition` — the one MDT log-name rule:
-    * v6 MDTs name logs after the slice's BASE instant, v8+ after the
-    * delta's own instant; the version follows the slice's newest log;
-    * the write token is `0-0-0`.
-    */
+  /** The next log of `slice` in `partition`, named by [[LogFile.nextName]]. */
   def log(partition: String, slice: FileSlice, schema: Schema): MdtCommit.Log = {
-    val nameTs = if (mdt.config.tableVersion >= 8) instant else slice.commitTimestamp
-    val version = slice.logFiles.map(_.version).maxOption.getOrElse(0) + 1
     val dir = new Path(new Path(mdt.path), partition)
-    MdtCommit.Log(new Path(dir, s".${slice.fileId}_$nameTs.log.${version}_0-0-0").toString,
+    MdtCommit.Log(
+      new Path(dir, LogFile.nextName(slice, instant, mdt.config.tableVersion)).toString,
       instant, schema.toString)
   }
 

@@ -146,12 +146,44 @@ class FilePrunerSpec extends AnyFunSuite {
       pruneSchema, conf).shouldInclude(bf))
     // index-covered IS NULL decides without touching the (nonexistent) file
     val ghost = BaseFile("g1", "0-0-0", "t1", None, "parquet", "/nonexistent/g.parquet", 0L)
+    val index = Map(ghost.fileName -> FileStats(None, 0L, Map("full" ->
+      ColumnStats(None, tight = false, Some(0L), allNull = false, present = true)), complete = false))
     assert(!new FilePruner(Seq(PartitionFilter("full", "isnull", Nil)),
-      pruneSchema, conf, preZeroNulls = Map(ghost.fileName -> Set("full")))
-      .shouldInclude(ghost))
+      pruneSchema, conf, index).shouldInclude(ghost))
     assert(new FilePruner(Seq(PartitionFilter("empty", "isnull", Nil)),
-      pruneSchema, conf, preZeroNulls = Map(ghost.fileName -> Set("full")))
-      .shouldInclude(ghost))
+      pruneSchema, conf, index).shouldInclude(ghost))
+  }
+
+  test("FilePruner: a row group without min/max keeps the file for every range") {
+    val dir = java.nio.file.Files.createTempDirectory("statgap").toFile
+    dir.deleteOnExit()
+    val conf = new org.apache.hadoop.conf.Configuration()
+    val sch = new org.apache.parquet.schema.MessageType("r",
+      org.apache.parquet.schema.Types.optional(
+        org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName.BINARY)
+        .as(org.apache.parquet.schema.LogicalTypeAnnotation.stringType()).named("s"))
+    val path = new org.apache.hadoop.fs.Path(dir.getAbsolutePath, "f1_0-0-0_t1.parquet")
+    val gc = new org.apache.parquet.example.data.simple.SimpleGroupFactory(sch)
+    val w = org.apache.parquet.hadoop.example.ExampleParquetWriter.builder(
+      org.apache.parquet.hadoop.util.HadoopOutputFile.fromPath(path, conf))
+      .withType(sch).withRowGroupSize(1024L).build()
+    (0 until 2000).foreach(i => w.write(gc.newGroup().append("s", f"a$i%05d")))
+    // parquet-mr leaves min/max out of a chunk whose values pass 4 KB
+    val big = "z" * 5000
+    w.write(gc.newGroup().append("s", big))
+    w.close()
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(path, conf))
+    val blocks = try reader.getFooter.getBlocks finally reader.close()
+    assert(blocks.size > 1, s"${blocks.size} row groups")
+    assert(!blocks.get(blocks.size - 1).getColumns.get(0).getStatistics.hasNonNullValue)
+    assert(blocks.get(0).getColumns.get(0).getStatistics.hasNonNullValue)
+    val bf = BaseFile("f1", "0-0-0", "t1", None, "parquet", path.toString, 0L)
+    val strSchema = StructType(Seq(StructField("s", StringType)))
+    assert(new FilePruner(Seq(PartitionFilter("s", "=", Seq(big))), strSchema, conf)
+      .shouldInclude(bf))
+    assert(new FilePruner(Seq(PartitionFilter("s", ">", Seq("m"))), strSchema, conf)
+      .shouldInclude(bf))
   }
 
   test("cross-type comparisons fail open, never throw") {

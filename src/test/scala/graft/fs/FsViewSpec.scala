@@ -50,6 +50,21 @@ class FsViewSpec extends AnyFunSuite {
       "collect must emit deterministic partition order")
   }
 
+  test("LogFile.nextName: parse recovers the file id, instant and version") {
+    val base = "20240101000000000"
+    val delta = "20240102000000000"
+    def log(v: Int) = LogFile("fg1", base, None, "log", v, "0-0-0", "", 0L)
+    val slice = FileSlice("p", "fg1", base, None, Vector(log(1), log(3)))
+    def parsed(name: String) = {
+      val l = LogFile.parse(name, "", 0L).getOrElse(fail(s"unparseable $name"))
+      (l.fileId, l.timestamp, l.version, l.writeToken)
+    }
+    // v6 names the slice's base instant, v8+ the delta's own
+    assert(parsed(LogFile.nextName(slice, delta, 6)) == (("fg1", base, 4, "0-0-0")))
+    assert(parsed(LogFile.nextName(slice, delta, 8)) == (("fg1", delta, 4, "0-0-0")))
+    assert(parsed(LogFile.nextName(slice.withoutLogs, delta, 8)) == (("fg1", delta, 1, "0-0-0")))
+  }
+
   test("nullable segment parse surfaces sentinel partitions of typed columns") {
     val sentinel = Set("__HIVE_DEFAULT_PARTITION__", "default")
     val p = new PartitionPruner(

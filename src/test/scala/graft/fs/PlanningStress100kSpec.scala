@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions.{col, count, lit}
   *   - R2 pruning served from the ONE indexed metadata read (a footer
   *     fallback here would be 100k ranged reads — the budget catches it);
   *   - COUNT(*) aggregate pushdown from index row counts, asserted
-  *     zero-footer via the [[graft.sources.GraftFooterAggScan.footerReads]]
+  *     zero-footer via the [[graft.fs.FileStats.footerReads]]
   *     counter, not just time;
   *   - the bloom tier's planned-file cap (stands down above
   *     `graft.bloom.index.max.files` instead of sweeping the driver).
@@ -262,13 +262,13 @@ class PlanningStress100kSpec extends SparkTestBase {
   }
 
   test("COUNT(*) over 100k files is metadata-only and zero-footer") {
-    val before = graft.sources.GraftFooterAggScan.footerReads.get()
+    val before = graft.fs.FileStats.footerReads.get()
     val (n, wallMs) = timed {
       spark.read.format("hudi-graft").load(path)
         .agg(count(col("*")).as("n")).head.getLong(0)
     }
     assert(n == TotalFiles.toLong)
-    assert(graft.sources.GraftFooterAggScan.footerReads.get() == before,
+    assert(graft.fs.FileStats.footerReads.get() == before,
       "COUNT(*) with full index coverage must not open any footer")
     assert(wallMs < 60000, s"indexed COUNT(*) at 100k files took ${wallMs}ms")
     // repeat planning must also skip the 100k-record avro decode — the
@@ -286,14 +286,14 @@ class PlanningStress100kSpec extends SparkTestBase {
   }
 
   test("GROUP BY partition COUNT(*) over 100k files / 2000 groups is metadata-only") {
-    val before = graft.sources.GraftFooterAggScan.footerReads.get()
+    val before = graft.fs.FileStats.footerReads.get()
     val (rows, wallMs) = timed {
       spark.read.format("hudi-graft").load(path)
         .groupBy(col("p")).agg(count(col("*")).as("n")).collect()
     }
     assert(rows.length == Partitions)
     assert(rows.forall(_.getLong(1) == FilesPerPartition.toLong))
-    assert(graft.sources.GraftFooterAggScan.footerReads.get() == before,
+    assert(graft.fs.FileStats.footerReads.get() == before,
       "grouped COUNT(*) with full index coverage must not open any footer")
     assert(wallMs < 60000, s"grouped metadata COUNT(*) at 2000 partitions took ${wallMs}ms")
   }
@@ -339,14 +339,14 @@ class PlanningStress100kSpec extends SparkTestBase {
   }
 
   test("COUNT(*) on the MDT-listed variant is metadata-only end to end") {
-    val before = graft.sources.GraftFooterAggScan.footerReads.get()
+    val before = graft.fs.FileStats.footerReads.get()
     val (n, wallMs) = timed {
       spark.read.format("hudi-graft").load(mdtPath)
         .agg(count(col("*")).as("n")).head.getLong(0)
     }
     assert(n == TotalFiles.toLong,
       "indexed COUNT(*) must count the MDT-listed files (orphan excluded)")
-    assert(graft.sources.GraftFooterAggScan.footerReads.get() == before,
+    assert(graft.fs.FileStats.footerReads.get() == before,
       "MDT listing + column_stats coverage must serve COUNT(*) with zero footers")
     assert(wallMs < 60000, s"MDT-listed COUNT(*) took ${wallMs}ms")
   }

@@ -17,7 +17,8 @@ import scala.jdk.CollectionConverters._
   * And the metadata table has one write-side handle,
   * `graft/write/MdtCommit.scala`: no other source under `graft/write`
   * writes an HFile or an HFile log block, loads the MDT's
-  * `hoodie.properties` or names an MDT log file.
+  * `hoodie.properties` or names an MDT log file. And parquet footers have
+  * one reader, `graft/fs/FileStats.scala`: no other main source opens one.
   */
 class CreateSeamSpec extends AnyFunSuite {
 
@@ -140,12 +141,12 @@ class CreateSeamSpec extends AnyFunSuite {
       (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
       if mdtWrite.findFirstIn(line).isDefined
     } yield s"${root.relativize(f)}:${i + 1}: ${line.trim}"
-    // the data table's own log names are the data writer's: exactly
-    // two, the MOR log and the CDC sidecar
+    // the data table's MOR logs are named by LogFile.nextName, like the
+    // MDT's; the data writer spells one name of its own, the CDC sidecar
     val (dataLogs, offenders) = hits.partition(h =>
       h.startsWith("graft/write/HudiWriter.scala:") && h.contains("val name = s\".${fid}_"))
     assert(offenders.isEmpty, offenders.mkString("\n", "\n", ""))
-    assert(dataLogs.size == 2, dataLogs.mkString("data log names:\n", "\n", ""))
+    assert(dataLogs.size == 1, dataLogs.mkString("data log names:\n", "\n", ""))
   }
 
   test("the scan tells MDT write decisions from other code") {
@@ -163,5 +164,37 @@ class CreateSeamSpec extends AnyFunSuite {
       "* `.{fid}_{ts}.log.{v}_{token}` — strip the leading dot",
       "HFileWriter.scala").foreach(c =>
       assert(mdtWrite.findFirstIn(c).isEmpty, c))
+  }
+
+  /** A parquet footer open: `ParquetFileReader.open`, its deprecated
+    * `readFooter` or its constructor.
+    */
+  private val footerOpen =
+    """(\bParquetFileReader\s*\.\s*(open|readFooter)\b|\bnew\s+ParquetFileReader\b)""".r
+
+  test("src/main opens parquet footers only in graft/fs/FileStats.scala, once") {
+    val files = Files.walk(root).iterator.asScala.filter(_.toString.endsWith(".scala")).toVector
+    assert(files.size > 50, s"only ${files.size} sources found")
+    val hits = for {
+      f <- files
+      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
+      if footerOpen.findFirstIn(line).isDefined
+    } yield s"${root.relativize(f)}:${i + 1}: ${line.trim}"
+    val (reader, offenders) = hits.partition(_.startsWith("graft/fs/FileStats.scala:"))
+    assert(offenders.isEmpty, offenders.mkString("\n", "\n", ""))
+    assert(reader.size == 1, reader.mkString("footer opens:\n", "\n", ""))
+  }
+
+  test("the scan tells footer opens from other parquet calls") {
+    Seq("val reader = ParquetFileReader.open(HadoopInputFile.fromPath(p, conf))",
+      "org.apache.parquet.hadoop.ParquetFileReader.open(",
+      "ParquetFileReader.readFooter(conf, path)",
+      "new ParquetFileReader(conf, path, footer)").foreach(c =>
+      assert(footerOpen.findFirstIn(c).isDefined, c))
+    Seq("import org.apache.parquet.hadoop.ParquetFileReader",
+      "graft.fs.FileStats.footer(path, conf) { f => f.getBlocks }",
+      "spark.read.parquet(path)",
+      "ParquetFileReaderSpec.open(x)").foreach(c =>
+      assert(footerOpen.findFirstIn(c).isEmpty, c))
   }
 }

@@ -598,7 +598,7 @@ class DataSourceV2Spec extends SparkTestBase {
     val range = graft.fixtures.HudiFixtureBuilder.rangePath(sfDir)
     // the fixture's index is tight per file group -> index-only path
     val t = graft.table.HudiTable(spark, range)
-    assert(t.columnStatsTight.nonEmpty)
+    assert(t.columnStats.values.exists(_.columns.values.exists(c => c.tight && c.range.isDefined)))
     val agg = spark.read.format("hudi-graft").load(range)
       .agg(min(col("o_orderkey")).as("mn"), max(col("o_orderkey")).as("mx"))
     assert(agg.queryExecution.executedPlan.toString().contains("LocalTableScan"))
@@ -635,8 +635,8 @@ class DataSourceV2Spec extends SparkTestBase {
     val t = graft.table.HudiTable(spark, range)
     // the fixture's index carries one exact (nullCount==0) row count per
     // file group — the COUNT(*) coverage precondition
-    assert(t.columnStatsRowCounts.size == 4, s"row counts: ${t.columnStatsRowCounts}")
-    val before = graft.sources.GraftFooterAggScan.footerReads.get()
+    assert(t.columnStats.values.count(_.rowCount.isDefined) == 4, s"stats: ${t.columnStats}")
+    val before = graft.fs.FileStats.footerReads.get()
     val agg = spark.read.format("hudi-graft").load(range)
       .agg(count(col("*")).as("n"), min(col("o_orderkey")).as("mn"),
         max(col("o_orderkey")).as("mx"))
@@ -646,14 +646,14 @@ class DataSourceV2Spec extends SparkTestBase {
     val got = agg.head
     assert(got.getLong(0) == exp.getLong(0) && got.getLong(1) == exp.getLong(1) &&
       got.getLong(2) == exp.getLong(2))
-    assert(graft.sources.GraftFooterAggScan.footerReads.get() == before,
+    assert(graft.fs.FileStats.footerReads.get() == before,
       "index-covered aggregates must be served without opening any parquet footer")
     // pure COUNT(*) too — previously always a footer sweep
-    val b2 = graft.sources.GraftFooterAggScan.footerReads.get()
+    val b2 = graft.fs.FileStats.footerReads.get()
     val cnt = spark.read.format("hudi-graft").load(range).agg(count(col("*")).as("n"))
     assert(cnt.queryExecution.executedPlan.toString().contains("LocalTableScan"))
     assert(cnt.head.getLong(0) == exp.getLong(0))
-    assert(graft.sources.GraftFooterAggScan.footerReads.get() == b2)
+    assert(graft.fs.FileStats.footerReads.get() == b2)
   }
 
   test("string MIN/MAX serves from TIGHT index bounds only, zero footers") {
@@ -662,7 +662,7 @@ class DataSourceV2Spec extends SparkTestBase {
     val range = graft.fixtures.HudiFixtureBuilder.rangePath(sfDir)
     // tight-bound string column (o_orderpriority): index-served, zero
     // footer reads, exact extremes
-    val before = graft.sources.GraftFooterAggScan.footerReads.get()
+    val before = graft.fs.FileStats.footerReads.get()
     val agg = spark.read.format("hudi-graft").load(range)
       .agg(min(col("o_orderpriority")).as("mn"), max(col("o_orderpriority")).as("mx"))
     assert(agg.queryExecution.executedPlan.toString().contains("LocalTableScan"),
@@ -671,7 +671,7 @@ class DataSourceV2Spec extends SparkTestBase {
       .agg(min(col("o_orderpriority")), max(col("o_orderpriority"))).head
     val got = agg.collect().head
     assert(got.getString(0) == exp.getString(0) && got.getString(1) == exp.getString(1))
-    assert(graft.sources.GraftFooterAggScan.footerReads.get() == before,
+    assert(graft.fs.FileStats.footerReads.get() == before,
       "string MIN/MAX must never open a parquet footer")
     // LOOSE-bound string column (o_orderstatus): bounds prune but are
     // not exact extremes — MIN/MAX must fall back to a real scan (and
@@ -833,12 +833,12 @@ class DataSourceV2Spec extends SparkTestBase {
     // range fixture: the index's per-column nullCount covers COUNT(col)
     // with zero footer reads
     val range = graft.fixtures.HudiFixtureBuilder.rangePath(sfDir)
-    val before = graft.sources.GraftFooterAggScan.footerReads.get()
+    val before = graft.fs.FileStats.footerReads.get()
     val cnt2 = spark.read.format("hudi-graft").load(range)
       .agg(count(col("o_orderkey")).as("n"))
     assert(cnt2.queryExecution.executedPlan.toString().contains("LocalTableScan"))
     assert(cnt2.head.getLong(0) == spark.read.parquet(s"$sfDir/orders.parquet").count())
-    assert(graft.sources.GraftFooterAggScan.footerReads.get() == before,
+    assert(graft.fs.FileStats.footerReads.get() == before,
       "index-covered COUNT(col) must not open footers")
   }
 
@@ -996,7 +996,7 @@ class DataSourceV2Spec extends SparkTestBase {
     // filtered COUNT(*): the filter is consumed by partition pruning and
     // the count serves from the SURVIVING partition's footer only — one
     // footer read (the fixture holds one file per region, 5 total)
-    val before = graft.sources.GraftFooterAggScan.footerReads.get()
+    val before = graft.fs.FileStats.footerReads.get()
     val cnt = spark.read.format("hudi-graft").load(p)
       .filter(col("n_regionkey") === 2)
       .agg(count(col("*")).as("n"))
@@ -1005,7 +1005,7 @@ class DataSourceV2Spec extends SparkTestBase {
     // exactly ONE footer opened for this plan: pruning ran BEFORE the
     // sweep (1 surviving file of 5). Asserted before any further action
     // (each new action replans and re-reads).
-    assert(graft.sources.GraftFooterAggScan.footerReads.get() == before + 1,
+    assert(graft.fs.FileStats.footerReads.get() == before + 1,
       "pruning must run BEFORE the footer sweep (1 surviving file of 5)")
     assert(cnt.collect().head.getLong(0) == nation.filter(col("n_regionkey") === 2).count())
     // IN-filtered + GROUP BY partition column: still metadata-only, one
@@ -1035,15 +1035,15 @@ class DataSourceV2Spec extends SparkTestBase {
     import org.apache.spark.sql.functions.{col, max, min, to_date}
     val p = graft.fixtures.HudiFixtureBuilder.datePath(sfDir)
     val t = graft.table.HudiTable(spark, p)
-    val before = graft.sources.GraftFooterAggScan.footerReads.get()
+    val before = graft.fs.FileStats.footerReads.get()
     val agg = spark.read.format("hudi-graft").load(p)
       .agg(min(col("o_date")).as("mn"), max(col("o_date")).as("mx"))
     assert(agg.queryExecution.executedPlan.toString().contains("LocalTableScan"),
       s"date MIN/MAX not metadata-served: ${agg.queryExecution.executedPlan}")
     // zero-footer contract holds whenever the index covers every file
     // (a sparse-date quartile may have no entry and fall to footers)
-    if (t.columnStatsTight.size == 4)
-      assert(graft.sources.GraftFooterAggScan.footerReads.get() == before,
+    if (t.columnStats.values.count(_.columns.values.exists(c => c.tight && c.range.isDefined)) == 4)
+      assert(graft.fs.FileStats.footerReads.get() == before,
         "index-covered date MIN/MAX must not open footers")
     val exp = spark.read.parquet(s"$sfDir/orders.parquet")
       .select(to_date(col("o_orderdate")).as("o_date"))
@@ -1053,17 +1053,17 @@ class DataSourceV2Spec extends SparkTestBase {
       s"got $got, expected $exp")
   }
 
-  test("decimal and timestamp MIN/MAX push down through footer logical types") {
+  /** A one-file unpartitioned COW table (v6, no meta fields) under
+    * `target/fixtures/<name>` holding `df`, committed at one instant.
+    */
+  private def oneFileTable(name: String, df: org.apache.spark.sql.DataFrame): String = {
     import org.apache.hadoop.fs.{FileSystem, Path}
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.functions.{col, max, min}
-    import org.apache.spark.sql.types._
-    val base = new Path(graft.fixtures.HudiFixtureBuilder.targetPath("fixtures/minmax_dec_ts"))
+    val base = new Path(graft.fixtures.HudiFixtureBuilder.targetPath(s"fixtures/$name"))
     val fs = FileSystem.get(spark.sessionState.newHadoopConf())
     fs.delete(base, true)
     fs.mkdirs(new Path(base, ".hoodie"))
     val props =
-      """hoodie.table.name=minmax_dec_ts
+      s"""hoodie.table.name=$name
         |hoodie.table.type=COPY_ON_WRITE
         |hoodie.table.version=6
         |hoodie.table.recordkey.fields=id
@@ -1072,25 +1072,46 @@ class DataSourceV2Spec extends SparkTestBase {
     val o = fs.create(new Path(base, ".hoodie/hoodie.properties"), true)
     o.write(props.getBytes("UTF-8")); o.close()
     val t1 = "20240101000000000"
+    val fid = "00000000-0000-0000-0000-000000000000-0"
+    val file = s"${fid}_0-0-0_$t1.parquet"
+    val tmp = new Path(base, ".tmp")
+    df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+    val part = fs.listStatus(tmp).map(_.getPath).find(_.getName.startsWith("part-")).get
+    fs.rename(part, new Path(base, file)); fs.delete(tmp, true)
+    val c1 = fs.create(new Path(base, s".hoodie/$t1.commit"), true)
+    c1.write(s"""{"partitionToWriteStats":{"":[{"fileId":"$fid","path":"$file"}]}}"""
+      .getBytes("UTF-8")); c1.close()
+    base.toString
+  }
+
+  test("COUNT of a struct column is never read as all-null from its footer") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.functions.{col, count}
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(StructField("id", IntegerType),
+      StructField("st", StructType(Seq(StructField("a", IntegerType))))))
+    val base = oneFileTable("count_struct", spark.createDataFrame(
+      java.util.List.of(Row(1, Row(10)), Row(2, null), Row(3, Row(30))), schema))
+    // the struct has leaf chunks (st.a) but none of its own: its null
+    // count is unproven, so the count scans rather than answering 0
+    val agg = spark.read.format("hudi-graft").load(base).agg(count(col("st")))
+    assert(agg.head.getLong(0) == 2L, agg.queryExecution.executedPlan.toString())
+  }
+
+  test("decimal and timestamp MIN/MAX push down through footer logical types") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.functions.{col, max, min}
+    import org.apache.spark.sql.types._
     val schema = StructType(Seq(
       StructField("id", IntegerType),
       StructField("amount", DecimalType(12, 2)),
       StructField("ts", TimestampType)))
     def ts(s: String) = java.sql.Timestamp.valueOf(s)
-    val df = spark.createDataFrame(java.util.List.of(
+    val base = oneFileTable("minmax_dec_ts", spark.createDataFrame(java.util.List.of(
       Row(1, new java.math.BigDecimal("10.25"), ts("2024-01-01 10:00:00")),
       Row(2, new java.math.BigDecimal("-3.50"), ts("2024-03-05 23:59:59")),
-      Row(3, new java.math.BigDecimal("999.99"), ts("2023-12-31 00:00:01"))), schema)
-    val fid = "00000000-0000-0000-0000-000000000000-0"
-    val name = s"${fid}_0-0-0_$t1.parquet"
-    val tmp = new Path(base, ".tmp")
-    df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    val part = fs.listStatus(tmp).map(_.getPath).find(_.getName.startsWith("part-")).get
-    fs.rename(part, new Path(base, name)); fs.delete(tmp, true)
-    val c1 = fs.create(new Path(base, s".hoodie/$t1.commit"), true)
-    c1.write(s"""{"partitionToWriteStats":{"":[{"fileId":"$fid","path":"$name"}]}}"""
-      .getBytes("UTF-8")); c1.close()
-    val agg = spark.read.format("hudi-graft").load(base.toString)
+      Row(3, new java.math.BigDecimal("999.99"), ts("2023-12-31 00:00:01"))), schema))
+    val agg = spark.read.format("hudi-graft").load(base)
       .agg(min(col("amount")).as("mn_a"), max(col("amount")).as("mx_a"),
         min(col("ts")).as("mn_t"), max(col("ts")).as("mx_t"))
     assert(agg.queryExecution.executedPlan.toString().contains("LocalTableScan"),
@@ -1102,7 +1123,7 @@ class DataSourceV2Spec extends SparkTestBase {
     assert(r.getTimestamp(3) == ts("2024-03-05 23:59:59"))
     // strings stay excluded (writer-truncatable chunk stats): a MIN on a
     // string column must keep the real scan
-    val s2 = spark.read.format("hudi-graft").load(base.toString)
+    val s2 = spark.read.format("hudi-graft").load(base)
       .agg(min(col("id").cast("string")).as("mn"))
     assert(!s2.queryExecution.executedPlan.toString().contains("LocalTableScan"))
   }

@@ -1,7 +1,7 @@
 package graft.table
 
 import graft.SparkTestBase
-import graft.fs.{BaseFile, FilePruner, PartitionFilter}
+import graft.fs.{BaseFile, ColumnStats, FilePruner, FileStats, PartitionFilter}
 import org.apache.spark.sql.types._
 
 /** Column-stats index reader against the reference's REAL v8 trips
@@ -30,9 +30,9 @@ class ColumnStatsIndexSpec extends SparkTestBase {
       e.min.get.asInstanceOf[String].startsWith("driver-") &&
         e.min.get.asInstanceOf[String] <= e.max.get.asInstanceOf[String]
     })
-    // pruningStats keeps only comparable pairs, keyed by file name
-    assert(lookup.pruningStats.nonEmpty)
-    assert(lookup.pruningStats.keys.forall(f =>
+    // per-file stats carry comparable ranges, keyed by file name
+    assert(lookup.files.values.exists(_.ranges.nonEmpty))
+    assert(lookup.files.keys.forall(f =>
       f.endsWith(".parquet") || f.contains(".log.")))
   }
 
@@ -41,7 +41,7 @@ class ColumnStatsIndexSpec extends SparkTestBase {
     val conf = new org.apache.hadoop.conf.Configuration()
     val t = HudiTable(spark, trips.get)
     assert(ColumnStatsIndex.isAvailable(t.config))
-    assert(t.columnStatsForPruning.nonEmpty)
+    assert(t.columnStats.nonEmpty)
   }
 
   // ---- pruner stats-first contract (no fixture needed) -----------------
@@ -50,9 +50,10 @@ class ColumnStatsIndexSpec extends SparkTestBase {
   private def bf(path: String) =
     BaseFile("f1x", "0-0-0", "t1", None, "parquet", path, 0L)
   private val statsKey = bf("ignored").fileName
-  private val pre: Map[String, Map[String, (Comparable[Any], Comparable[Any])]] =
-    Map(statsKey -> Map("v" ->
-      (10L.asInstanceOf[Comparable[Any]], 100L.asInstanceOf[Comparable[Any]])))
+  private val pre: Map[String, FileStats] =
+    Map(statsKey -> FileStats(None, 0L, Map("v" -> ColumnStats(
+      Some((10L.asInstanceOf[Comparable[Any]], 100L.asInstanceOf[Comparable[Any]])),
+      tight = true, None, allNull = false, present = true)), complete = false))
 
   test("preStats serve pruning without touching the file") {
     // the path does not exist: any footer read would throw -> fail-open
@@ -68,7 +69,7 @@ class ColumnStatsIndexSpec extends SparkTestBase {
   test("range fixture: stats cover every group and serve prune decisions statless") {
     graft.fixtures.HudiFixtureBuilder.ensure(spark, sfDir)
     val t = HudiTable(spark, graft.fixtures.HudiFixtureBuilder.rangePath(sfDir))
-    val stats = t.columnStatsForPruning
+    val stats = t.columnStats.view.mapValues(_.ranges).toMap
     assert(stats.size == 4, s"expected 4 file-group entries, got ${stats.keys}")
     val ranges = stats.values.map(_("o_orderkey")).toVector
     // contiguous quartiles: every file has a range, ranges are disjoint
@@ -86,7 +87,7 @@ class ColumnStatsIndexSpec extends SparkTestBase {
     val topMin = stats(topFile)("o_orderkey")._1.asInstanceOf[Long]
     val pruner = new FilePruner(
       Seq(PartitionFilter("o_orderkey", "<", Seq((topMin - 1).toString))),
-      t.tableSchema, new org.apache.hadoop.conf.Configuration(), stats)
+      t.tableSchema, new org.apache.hadoop.conf.Configuration(), t.columnStats)
     // reconstruct a BaseFile whose fileName matches the stats key
     val Array(fid, tok, rest) = topFile.split("_", 3)
     val ts = rest.stripSuffix(".parquet")

@@ -11,11 +11,11 @@ class LanceMdtProbeSpec extends SparkTestBase {
     println("PROBE isAvailable: " + ColumnStatsIndex.isAvailable(t.config))
     try {
       val lookup = ColumnStatsIndex.load(nonPart.get, t.hadoopConf)
-      println("PROBE pruningStats files: " + lookup.pruningStats.size)
-      lookup.pruningStats.take(2).foreach { case (f, m) =>
-        println(s"PROBE file $f cols ${m.keySet}")
+      println("PROBE stats files: " + lookup.files.size)
+      lookup.files.take(2).foreach { case (f, s) =>
+        println(s"PROBE file $f cols ${s.ranges.keySet}")
       }
-      println("PROBE colStatsForPruning: " + t.columnStatsForPruning.size)
+      println("PROBE columnStats: " + t.columnStats.size)
     } catch { case e: Throwable => println("PROBE LOAD FAILED: " + e) }
   }
 }

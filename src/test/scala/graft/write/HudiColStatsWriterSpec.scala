@@ -44,10 +44,10 @@ class HudiColStatsWriterSpec extends SparkTestBase {
     assert(newFiles.nonEmpty, "the upsert must have rewritten groups")
 
     val lookup = ColumnStatsIndex.load(path, spark.sessionState.newHadoopConf())
-    val byFile = lookup.pruningStats
     newFiles.foreach { bf =>
-      val stats = byFile.getOrElse(bf.fileName,
+      val file = lookup.files.getOrElse(bf.fileName,
         fail(s"no column_stats entry for rewritten file ${bf.fileName}"))
+      val stats = file.ranges
       assert(stats.contains("o_orderkey"), stats.keySet.toString)
       // bounds are EXACT: recompute from the file itself
       val actual = spark.read.parquet(bf.path)
@@ -56,8 +56,8 @@ class HudiColStatsWriterSpec extends SparkTestBase {
       assert(mn == actual.getLong(0) && mx == actual.getLong(1),
         s"${bf.fileName}: index ($mn,$mx) vs actual (${actual.getLong(0)},${actual.getLong(1)})")
       // tight + counted: the aggregate tiers can ANSWER from these
-      assert(lookup.tightStats.get(bf.fileName).exists(_.contains("o_orderkey")))
-      assert(lookup.rowCounts.contains(bf.fileName))
+      assert(file.columns.get("o_orderkey").exists(_.tight))
+      assert(file.rowCount.isDefined)
     }
 
     // the key-range pruned read stays correct over the mixed old/new index

@@ -286,7 +286,7 @@ class HudiCompactionSpec extends SparkTestBase {
         assert(e.nullCount.contains(a.getLong(2)) && e.valueCount.contains(rows) &&
           e.isTightBound, e.toString)
       }
-      assert(lookup.rowCounts.get(bf.fileName).contains(rows))
+      assert(lookup.files.get(bf.fileName).flatMap(_.rowCount).contains(rows))
     }
   }
 
@@ -295,8 +295,7 @@ class HudiCompactionSpec extends SparkTestBase {
     * the pruner nor by the aggregate pushdown planner.
     */
   private def prunedWithoutFooters(path: String, filter: org.apache.spark.sql.Column): Long = {
-    def footers = graft.fs.FilePruner.footerReads.get() +
-      graft.sources.GraftFooterAggScan.footerReads.get()
+    def footers = graft.fs.FileStats.footerReads.get()
     val before = footers
     val n = spark.read.format("hudi-graft").load(path).filter(filter).count()
     assert(footers == before, s"${footers - before} footer reads for an indexed table")
